@@ -36,7 +36,8 @@ import pandas as pd
 _HASH_KEY_1 = "bloomsearchspark"
 _HASH_KEY_2 = "sparkhierarchy42"
 
-# Cap on how many (token, k) position pairs we materialize at once.
+# Cap on how many (token, k) position pairs — or probe gathers — we
+# materialize at once.
 _CHUNK_TOKENS = 1 << 20
 
 
@@ -151,36 +152,76 @@ def probe(bitset: np.ndarray, tokens: np.ndarray | list, params: BloomParams) ->
     return bits.all(axis=1)
 
 
-def probe_many(
-    bitsets_bytes: pd.Series | list, token: str | list[str], params: BloomParams
+def bitset_matrix(bitsets, nbytes: int) -> tuple[np.ndarray, np.ndarray]:
+    """Gather serialized bitsets of one ``(m, k)`` into a single
+    ``(rows, nbytes)`` uint8 matrix.  Returns ``(have, mat)``: ``have``
+    marks the rows holding a non-empty bitset (a null/empty one cannot
+    disqualify), ``mat`` holds those rows in order.
+
+    ``bitsets``: a pyarrow binary array — read in place from its value
+    buffer, no per-row objects — or a sequence of bytes / None."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if isinstance(bitsets, pa.ChunkedArray):
+        bitsets = bitsets.combine_chunks()
+    if isinstance(bitsets, pa.Array):
+        lens = pc.fill_null(pc.binary_length(bitsets), 0).to_numpy(zero_copy_only=False)
+        have = lens > 0
+        if (lens[have] != nbytes).any():
+            raise ValueError(f"bitset lengths do not match the params' {nbytes} bytes")
+        live = bitsets if have.all() else bitsets.filter(pa.array(have))
+        if len(live) == 0:
+            return have, np.empty((0, nbytes), dtype=np.uint8)
+        off = np.int64 if pa.types.is_large_binary(live.type) else np.int32
+        offs = np.frombuffer(live.buffers()[1], off)[live.offset : live.offset + len(live) + 1]
+        data = np.frombuffer(live.buffers()[2], dtype=np.uint8)[offs[0] : offs[-1]]
+        return have, data.reshape(-1, nbytes)
+    raws = list(bitsets)
+    have = np.fromiter(
+        (raw is not None and len(raw) > 0 for raw in raws), dtype=bool, count=len(raws)
+    )
+    buf = b"".join(raw for raw, h in zip(raws, have) if h)
+    if len(buf) != int(have.sum()) * nbytes:
+        raise ValueError(f"bitset lengths do not match the params' {nbytes} bytes")
+    return have, np.frombuffer(buf, dtype=np.uint8).reshape(-1, nbytes)
+
+
+def probe_matrix(
+    mat: np.ndarray, tokens: list[str], params: BloomParams, any_key: bool = False
 ) -> np.ndarray:
+    """Probe every row of a :func:`bitset_matrix` for ``tokens`` -> one
+    bool per row: all tokens maybe present (AND), or with ``any_key`` at
+    least one (OR).  One gather over the matrix per chunk of rows."""
+    pos = leaf_positions(tokens, params)  # (t, k)
+    byte_idx = (pos >> np.uint64(3)).astype(np.int64)
+    bit = (pos & np.uint64(7)).astype(np.uint8)
+    out = np.empty(len(mat), dtype=bool)
+    step = max(1, _CHUNK_TOKENS // max(1, pos.size))
+    for lo in range(0, len(mat), step):
+        hit = (((mat[lo : lo + step, byte_idx] >> bit) & np.uint8(1)) != 0).all(axis=2)
+        out[lo : lo + step] = hit.any(axis=1) if any_key else hit.all(axis=1)
+    return out
+
+
+def probe_many(bitsets_bytes, token: str | list[str], params: BloomParams) -> np.ndarray:
     """Probe one token (or AND of several tokens) against MANY bitsets.
 
     This is the query-side shape: the manifest holds one serialized bitset
     per block/file and we test the same query token against each.  Returns
     a bool array, one per bitset; a null/empty bitset cannot disqualify and
     yields True (nil-filter semantics, bloom_tree_engine.go:885-907).
+    ``bitsets_bytes`` takes what :func:`bitset_matrix` takes.
     """
     tokens = [token] if isinstance(token, str) else list(token)
-    m, k = params.mk
-    h1, h2 = _base_hashes(np.asarray(tokens, dtype=object))
-    pos = _positions(h1, h2, m, k)  # (t, k)
-    byte_idx = (pos >> np.uint64(3)).astype(np.int64).reshape(-1)
-    bit = (pos & np.uint64(7)).astype(np.uint8).reshape(-1)
-    out = np.empty(len(bitsets_bytes), dtype=bool)
-    for i, raw in enumerate(bitsets_bytes):
-        if raw is None or len(raw) == 0:
-            out[i] = True
-            continue
-        bs = np.frombuffer(raw, dtype=np.uint8)
-        out[i] = bool((((bs[byte_idx] >> bit) & np.uint8(1)) != 0).all())
+    have, mat = bitset_matrix(bitsets_bytes, params.nbytes)
+    out = np.ones(len(have), dtype=bool)
+    out[have] = probe_matrix(mat, tokens, params)
     return out
 
 
 def leaf_positions(key: str | list[str], params: BloomParams) -> np.ndarray:
-    """(t, k) bit positions for query key(s) under ``params`` — computable
-    at PLAN time on the driver, which lets the query probe compile to pure
-    Catalyst byte tests (no bloom bytes ever reach Python)."""
+    """(t, k) bit positions for query key(s) under ``params``."""
     keys = [key] if isinstance(key, str) else list(key)
     m, k = params.mk
     h1, h2 = _base_hashes(np.asarray(keys, dtype=object))

@@ -922,14 +922,14 @@ def delete_where(
     if use_deletion_vectors:
         return _delete_where_dv(spark, index, query)
     _refuse_shallow_clone(index, "delete_where")
-    from .search import prune_blocks, scan_blocks
+    from .search import candidate_blocks, scan_blocks
 
     stats = DeleteStats()
     blocks = index.blocks()
     stats.blocks_before = _manifest_count(index, "blocks")
     stats.files_before = _manifest_count(index, "files")
 
-    surviving = prune_blocks(index, query)
+    surviving = candidate_blocks(index, query)
     data = scan_blocks(index, surviving)
     pred = _delete_pred(index, data, query)
 
@@ -987,14 +987,14 @@ def _delete_where_dv(
     block; the commit references the parent's blocks/files segments
     verbatim and appends ONE dvs segment + a lineage delta — zero data
     bytes move at any table size."""
-    from .search import prune_blocks, scan_blocks
+    from .search import candidate_blocks, scan_blocks
 
     stats = DeleteStats()
     blocks = index.blocks()
     stats.blocks_before = stats.blocks_after = _manifest_count(index, "blocks")
     stats.files_before = stats.files_after = _manifest_count(index, "files")
 
-    surviving = prune_blocks(index, query)
+    surviving = candidate_blocks(index, query)
     data = scan_blocks(index, surviving, with_pos=True)
     if "block_id" not in data.columns:
         return index, stats  # fully-empty index: nothing can match
@@ -1649,7 +1649,7 @@ def _upsert_keys_impl(
         raise_on_failures,
     )
     from .build import STAGING_SCHEMA, _make_map_build_fn
-    from .search import prune_blocks, scan_blocks
+    from .search import candidate_blocks, scan_blocks
 
     # the table's CHECK constraints gate the inserts; a drop-action
     # violating row also loses its DELETE (its key comes from the
@@ -1685,7 +1685,7 @@ def _upsert_keys_impl(
         else None
     )
     surviving = (
-        prune_blocks(index, prune_q) if prune_q is not None else blocks
+        candidate_blocks(index, prune_q) if prune_q is not None else blocks
     )
     data = scan_blocks(index, surviving, with_pos=use_deletion_vectors)
     version_guess, _ = mf.next_version_dir(index.root)

@@ -7,14 +7,12 @@ single query tree); running N needles as N searches costs N manifest
 probes and re-reads every block that matches more than one needle.  This
 plan amortizes both:
 
-1. **Probe once.** All needle keys hash to bit positions at plan time
-   (one ``leaf_positions`` call); a vectorized Arrow-batched UDF tests
-   every needle against each manifest bitset in one numpy pass — the
-   needle list ships to executors as a Spark broadcast (once per
-   executor, never per task).  Hierarchical (file blooms first) exactly
-   like the single-query path, with the same FP-budget flat-probe gate —
-   scaled by the needle count, since each needle contributes its own
-   expected false-positive blocks.
+1. **Probe once.**  The needles become one ``Or`` of token leaves and run
+   through the single driver-side prune walk (operators/probe.py):
+   file blooms first, then the block blooms of surviving files.  The
+   walk probes a wide OR of same-filter leaves in one pass — every
+   needle key hashes in one call, and each bitset answers every needle
+   with one gather.  No Spark job.
 2. **Scan once.** The surviving block set is the UNION over needles;
    each block directory is read exactly once no matter how many needles
    hit it.
@@ -28,11 +26,12 @@ plan amortizes both:
    for all needles.
 
 100 TB shape: probe cost is O(blocks x needles) bit-tests inside numpy
-(k ANDs per pair) behind the file-level funnel; scan cost is bounded by
-the union of true-match blocks + the FP budget; verify explodes only
-SCANNED rows' tokens and joins a broadcast-sized needle table — the
-corpus never shuffles.  The needle list itself is the QUERY, collected
-once on the driver (bounded by ``max_needles``, loud error beyond).
+(k ANDs per pair) behind the file-level funnel, streamed in manifest
+batches; scan cost is bounded by the union of true-match blocks + their
+bloom false positives; verify explodes only SCANNED rows' tokens and
+joins a broadcast-sized needle table — the corpus never shuffles.  The
+needle list itself is the QUERY, collected once on the driver (bounded
+by ``max_needles``, loud error beyond).
 
 Semantics notes (match search()):
 - needles are caller-lowercased, like every query token (CLAUDE.md).
@@ -51,13 +50,11 @@ from __future__ import annotations
 import json
 from typing import Iterable, Optional
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .. import bloom as bloomlib
-from ..query import FIELD_TOKEN_SEP
+from ..query import FieldToken, Or, Query, Token
 from ..sources.manifest import BloomIndex
 from ..tokenizer import (
     Tokenizer,
@@ -108,47 +105,6 @@ def _needle_list(needles, max_needles: int) -> list[str]:
     return out
 
 
-def _any_hit_udf(bc_keys):
-    """(expected_items, fpr, bitset) -> bool "any needle might match".
-
-    One numpy pass per Arrow batch: positions for ALL needles computed
-    once per (n, p) param group (heterogeneous post-merge manifests group
-    by row params exactly like operators/probe.py's fallback), then each
-    bitset answers every needle with one gather + AND-reduce."""
-
-    @F.pandas_udf("boolean")
-    def hit(
-        expected_items: pd.Series, fpr: pd.Series, bitset: pd.Series
-    ) -> pd.Series:
-        keys = bc_keys.value
-        out = np.ones(len(bitset), dtype=bool)
-        groups = pd.DataFrame({"n": expected_items.values, "p": fpr.values})
-        cache: dict[tuple[int, int], tuple[np.ndarray, np.ndarray]] = {}
-        for (ni, pi), grp in groups.groupby(["n", "p"], sort=False):
-            params = bloomlib.BloomParams(int(ni), float(pi))
-            mk = params.mk
-            if mk not in cache:
-                pos = bloomlib.leaf_positions(keys, params)  # (N, k)
-                cache[mk] = (
-                    (pos >> np.uint64(3)).astype(np.int64),
-                    (pos & np.uint64(7)).astype(np.uint8),
-                )
-            byte_idx, bit = cache[mk]
-            for i in grp.index:
-                raw = bitset.iloc[i]
-                if raw is None or len(raw) == 0:
-                    continue  # nil filter cannot disqualify -> stays True
-                bs = np.frombuffer(raw, dtype=np.uint8)
-                out[i] = bool(
-                    (((bs[byte_idx] >> bit) & np.uint8(1)) != 0)
-                    .all(axis=1)
-                    .any()
-                )
-        return pd.Series(out)
-
-    return hit
-
-
 def _json_tokens_udf(tokenizer: Tokenizer, field: Optional[str]):
     """Schemaless path: per-doc token set via the BUILD-side walkers, so
     join tokens equal inserted tokens exactly (same discipline as
@@ -179,7 +135,7 @@ def _json_tokens_udf(tokenizer: Tokenizer, field: Optional[str]):
 
 
 def _empty_result(index: BloomIndex) -> DataFrame:
-    data = scan_blocks(index, index.blocks().limit(0))
+    data = scan_blocks(index, [])
     data = data.select(
         F.lit(None).cast("string").alias("needle"), *data.columns
     )
@@ -230,34 +186,8 @@ def search_needles(
         # never indexed -> deterministically cannot match (verify.py rule)
         return _empty_result(index)
 
-    if field is not None:
-        probe_keys = [f"{field}{FIELD_TOKEN_SEP}{k}" for k in keys]
-        bloom_col = "fieldtoken_bloom"
-    else:
-        probe_keys = keys
-        bloom_col = "token_bloom"
-    bc = spark.sparkContext.broadcast(probe_keys)
-    hit = _any_hit_udf(bc)
-
-    # the single-query flat-probe FP budget, scaled by the needle count:
-    # each needle contributes its own expected false-positive blocks
-    # (module attrs read at call time — tests force either path)
-    nb = index.n_blocks()
-    flat = (
-        nb <= _search.FLAT_PROBE_MAX_BLOCKS
-        and nb * cfg.block_fpr * len(keys) <= _search.FLAT_PROBE_FP_BUDGET
-    )
-    blocks = index.probe_view("blocks", frozenset({bloom_col}))
-    if not flat:
-        files = index.probe_view("files", frozenset({bloom_col}))
-        files_f = files.filter(
-            hit(F.col("expected_items"), F.col("fpr"), F.col(bloom_col))
-        ).select("file_id")
-        blocks = blocks.join(F.broadcast(files_f), "file_id", "left_semi")
-    surviving = blocks.filter(
-        hit(F.col("expected_items"), F.col("fpr"), F.col(bloom_col))
-    )
-
+    leaves = [FieldToken(field, k) if field is not None else Token(k) for k in keys]
+    surviving = _search.candidate_blocks(index, Query(bloom=Or(*leaves)))
     data = scan_blocks(index, surviving)
     tok = get_tokenizer(cfg.tokenizer)
     if cfg.json_col is not None:

@@ -1,31 +1,36 @@
-"""Query execution plan — top-down hierarchical pruning, then exact scan.
+"""Query execution plan — hierarchical pruning on the driver, then an
+exact scan.
 
-Mirrors the reference read path (SURVEY.md §3.2; bloom_tree_engine.go:910-1204)
-as one declarative pipeline:
+Mirrors the reference read path (SURVEY.md §3.2; bloom_tree_engine.go:910-1204):
 
-    manifest blocks --(prefilter: partition/minmax Columns)-->   Q3-Q6
-    manifest files  --(file-level bloom probe UDF)------------>  Q9
-    blocks ∩ surviving files --(block-level probe UDF)-------->  Q10
+    manifest files  --(file-level bloom probe)---------------->  Q9
+    manifest blocks --(surviving files, prefilter: partition /
+                       minmax, block-level bloom probe)------->  Q3-Q6, Q10
     pruned Parquet scan of surviving (file_id, block_id) dirs -> Q11
     exact verify predicate ∧ final regex filter --------------->  Q12-Q13
 
-The regex field-guard rewrite (Q14) is applied when building the prune
-tree (Query.prune_bloom).  The surviving-block list is collected to the
-driver when small (the reference's MetaStore "MaybeFile" contract,
-meta_store.go:33-41) and turned into an explicit path-list scan — zero
-wasted I/O; above a threshold it falls back to a broadcast semi-join
-against the full data root so the plan never materializes an unbounded
-driver list.
+The prune is the one driver walk of operators/probe.py: the manifest
+streams through the driver in arrow batches and the surviving-block list
+(the reference's MetaStore "MaybeFile" contract, meta_store.go:33-41)
+becomes an explicit path-list scan — zero Spark jobs before the caller's
+action, zero wasted I/O.  The regex field-guard rewrite (Q14) is applied
+when building the prune tree (Query.prune_bloom).  Past
+``MAX_COLLECTED_BLOCKS`` survivors the scan falls back to a broadcast
+semi-join of the full data root against the prefilter slice of the
+manifest, so the driver never holds an unbounded list; blooms only
+disqualify and verify is exact, so the rows are the same.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.probe import probe_filter
+from ..operators.probe import DriverPruneOverflow, _manifest_batches, prune_blocks_driver
 from ..operators.verify import compile_bloom_verify, compile_regex_verify, json_verify_udf
 from ..query import Query, compile_prefilter
 from ..sources.manifest import BloomIndex
@@ -35,107 +40,20 @@ from ..tokenizer import get_tokenizer
 # to a broadcast semi-join (keeps the driver list bounded at huge scale)
 MAX_COLLECTED_BLOCKS = 100_000
 
-# Flat-vs-hierarchical probe choice, MEASURED in r04
-# (scripts/probe_scale_bench.py, PROBE_SCALE*.json; synthetic manifests
-# with realistic ~50%-fill bitsets up to 10^6 blocks):
-#
-# - the warm MANIFEST-probe cost alone favors flat at every size ≤ 10^6
-#   blocks on this hardware (the file level adds a ~0.07-0.15 s second
-#   Spark job; scanning even 10^6 cached small bitsets costs ~0.1-0.2 s);
-# - what actually decides the crossover is DOWNSTREAM: the flat probe
-#   admits ≈ block_fpr × n_blocks false-positive blocks, and every
-#   survivor costs a data-block directory read (~2-3 ms here).  Measured
-#   end-to-end (survivor dirs materialized): flat wins at 2k blocks,
-#   loses from ~10k up — 13.5 s vs 0.86 s at 10^6 blocks (p=0.01).
-#
-# So the rule is an FP BUDGET, not a raw block count: go flat only while
-# the expected spurious data reads (n_blocks × block_fpr) cost less than
-# the hierarchy's extra probe job.  50 expected FP blocks ≈ 0.1-0.15 s of
-# directory reads ≈ that job's latency.  FLAT_PROBE_MAX_BLOCKS remains as
-# a hard cap (and the tests' forcing knob).  Final query ROWS are
-# identical either way — blooms only disqualify, verify is exact; the
-# hierarchy's survivor set is a subset of the flat probe's.  Stats-mode
-# queries always run the full hierarchy so the funnel counters stay
-# meaningful.
-FLAT_PROBE_MAX_BLOCKS = 50_000
-FLAT_PROBE_FP_BUDGET = 50.0
-
-_AQE_EMPTY_RULE = "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation"
-
-
-class _keep_observations:
-    """Context manager: exclude AQE empty-relation propagation for the
-    duration of a stats-mode collect, so fully-pruned funnels still execute
-    their CollectMetrics nodes (otherwise AQE folds the plan to an empty
-    relation and the Observations never fill)."""
-
-    def __init__(self, spark: SparkSession):
-        self.spark = spark
-
-    def __enter__(self):
-        conf = self.spark.conf
-        self.prev = conf.get("spark.sql.adaptive.optimizer.excludedRules", None)
-        rules = [r for r in (self.prev or "").split(",") if r]
-        if _AQE_EMPTY_RULE not in rules:
-            rules.append(_AQE_EMPTY_RULE)
-        conf.set("spark.sql.adaptive.optimizer.excludedRules", ",".join(rules))
-
-    def __exit__(self, *exc):
-        if self.prev is None:
-            self.spark.conf.unset("spark.sql.adaptive.optimizer.excludedRules")
-        else:
-            self.spark.conf.set("spark.sql.adaptive.optimizer.excludedRules", self.prev)
-
-
-def _observed(obs, timeout: float = 15.0) -> dict | None:
-    """``Observation.get`` guarded by a deadline WITHOUT parking a thread:
-    PySpark's ``get`` BLOCKS until the metrics fire, so if any optimizer
-    path elides the CollectMetrics node (or the triggering action never
-    ran) a bare call would hang forever instead of reaching the recompute
-    fallback.  Polls the JVM-side ``Observation.future.isCompleted`` (a
-    scala Future — non-blocking) and only calls the blocking ``get`` once
-    completion is visible; returns None on timeout/error.  Unlike the old
-    daemon-thread guard, a timed-out observation leaves NO permanently
-    blocked thread pinning the query plan (ADVICE r03)."""
-    import time as _t
-
-    jo = getattr(obs, "_jo", None)
-    if jo is None:  # never attached to a DataFrame
-        return None
-    deadline = _t.monotonic() + timeout
-    while True:
-        try:
-            done = jo.future().isCompleted()
-        except Exception:
-            return None
-        if done:
-            try:
-                return obs.get  # resolves immediately now
-            except Exception:
-                return None
-        if _t.monotonic() >= deadline:
-            return None
-        _t.sleep(0.02)
-
 
 @dataclass
 class QueryStats:
     """Prune-funnel + scan counters (the reference's BlockStats /
     BloomFilterSkipped, bloom_tree_engine.go:137-147, 1078-1095).
 
-    ONE-PASS collection: the funnel counters ride the query's own manifest
-    probe job as ``Observation`` metrics (CollectMetrics plan nodes over the
-    blocks/files manifests) plus the length of the surviving-path list the
-    scan collects anyway — zero extra Spark jobs, matching the reference's
-    stats-streamed-during-scan design (bloom_tree_engine.go:1078-1095).
+    The funnel counters are exact integers counted by the driver walk as
+    the manifest streams past — no Spark job.
 
-    SCAN counters (the per-block BlockStats analog) ride the data scan the
-    same way: ``rows_scanned`` / ``rows_matched`` / ``blocks_with_matches``
-    fill when the caller consumes the result; ``fp_blocks`` is then the
-    MEASURED count of bloom false-positive blocks (survived pruning, zero
-    verified rows) — the production FPR monitoring signal.  Read them via
-    ``finish()`` (or the ``fp_blocks`` property) after acting on the result
-    DataFrame; if no action ran, finish() recomputes with bounded jobs."""
+    The SCAN counters (the per-block BlockStats analog) ``rows_scanned`` /
+    ``rows_matched`` / ``blocks_with_matches`` fill on ``finish()``: one
+    exact aggregation job over the scanned frame.  ``fp_blocks`` is then
+    the MEASURED count of bloom false-positive blocks (survived pruning,
+    zero verified rows) — the production FPR monitoring signal."""
 
     total_files: int = 0
     total_blocks: int = 0
@@ -146,81 +64,26 @@ class QueryStats:
     rows_matched: int | None = None
     blocks_with_matches: int | None = None
     extra: dict = field(default_factory=dict)
-    _obs_blocks: object | None = field(default=None, repr=False)
-    _obs_files: object | None = field(default=None, repr=False)
-    _fallback: tuple | None = field(default=None, repr=False)
-    _obs_scan: object | None = field(default=None, repr=False)
-    _obs_out: object | None = field(default=None, repr=False)
-    _scan_fallback: tuple | None = field(default=None, repr=False)
+    _scan: tuple | None = field(default=None, repr=False)
 
-    def _finalize(self, force_fallback: bool = False) -> None:
-        """Pull the observed funnel metrics (the triggering action has
-        already run by the time search() returns).  ``force_fallback``
-        skips the observations entirely — used when the stats collect hit
-        the MAX_COLLECTED_BLOCKS bound, because a limited collect
-        short-circuits the scan and leaves the metrics PARTIAL.  Also taken
-        when the observation never fired (e.g. an optimizer path removed
-        the CollectMetrics node): counters recompute with count() jobs
-        (bounded — the manifests are cached and manifest-sized)."""
-        blocks, pre, files, fpred = self._fallback or (None, None, None, None)
-        if self._obs_blocks is not None:
-            m = None if force_fallback else _observed(self._obs_blocks)
-            if m is not None:
-                self.total_blocks = int(m["total_blocks"])
-                self.blocks_after_prefilter = int(m["blocks_after_prefilter"])
-            elif blocks is not None:
-                self.total_blocks = blocks.count()
-                self.blocks_after_prefilter = blocks.filter(pre).count()
-            self._obs_blocks = None
-        if self._obs_files is not None:
-            m = None if force_fallback else _observed(self._obs_files)
-            if m is not None:
-                self.total_files = int(m["total_files"])
-                self.files_after_file_bloom = int(m["files_after_file_bloom"])
-            elif files is not None:
-                self.total_files = files.count()
-                self.files_after_file_bloom = files.filter(fpred).count()
-            self._obs_files = None
-        self._fallback = None
-
-    def finish(self, timeout: float = 10.0) -> "QueryStats":
-        """Resolve the scan-side counters.  Call AFTER consuming the result
-        DataFrame (its action fills the observations for free); if the
-        metrics never fired, recompute them with two bounded jobs."""
-        if self._obs_scan is not None:
-            m = _observed(self._obs_scan, timeout)
-            if m is not None:
-                self.rows_scanned = int(m["rows_scanned"])
-            self._obs_scan = None
-        if self._obs_out is not None:
-            m = _observed(self._obs_out, timeout)
-            if m is not None:
-                self.rows_matched = int(m["rows_matched"])
-                self.blocks_with_matches = int(m["blocks_with_matches"])
-            self._obs_out = None
-        if self._scan_fallback is not None:
-            data, out, bcol = self._scan_fallback
-            if self.rows_scanned is None:
-                self.rows_scanned = data.count()
-            if self.rows_matched is None or self.blocks_with_matches is None:
-                row = out.agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.approx_count_distinct(bcol).alias("b"),
-                ).collect()[0]
-                self.rows_matched = int(row.n)
-                self.blocks_with_matches = int(row.b)
-            self._scan_fallback = None
+    def finish(self) -> "QueryStats":
+        """Resolve the scan-side counters (once; later calls are free)."""
+        if self._scan is not None:
+            data, pred, block = self._scan
+            self._scan = None
+            self.rows_scanned, self.rows_matched, self.blocks_with_matches = (
+                _scan_counts(data, pred, block)
+            )
         return self
 
     @property
     def fp_blocks(self) -> int | None:
         """Measured bloom false-positive blocks: survived all pruning but
-        verified to zero matching rows.  ``blocks_with_matches`` is an
-        approx_count_distinct (HLL), so clamp at 0."""
+        verified to zero matching rows."""
         self.finish()
         if self.blocks_with_matches is None:
             return None
-        return max(0, self.blocks_after_block_bloom - self.blocks_with_matches)
+        return self.blocks_after_block_bloom - self.blocks_with_matches
 
     @property
     def prune_ratio(self) -> float:
@@ -230,114 +93,60 @@ class QueryStats:
         return 1.0 - self.blocks_after_block_bloom / self.total_blocks
 
 
+def _scan_counts(data: DataFrame, pred: Column, block: Column) -> tuple[int, int, int]:
+    """(rows scanned, rows matching ``pred``, distinct ``block`` values
+    with a match) over ``data`` — exact, in ONE Spark job: each task
+    reduces its rows to a partial (count, count, block set) and the
+    driver merges them (a global aggregate would add a shuffle stage)."""
+
+    def partial(batches):
+        n = m = 0
+        hit_blocks: set = set()
+        for b in batches:
+            hit = pc.fill_null(b.column("_m"), False)
+            n += b.num_rows
+            m += pc.sum(hit.cast(pa.int64())).as_py() or 0
+            hit_blocks.update(b.column("_b").filter(hit).to_pylist())
+        yield pa.RecordBatch.from_pydict(
+            {"n": [n], "m": [m], "b": [sorted(hit_blocks)]},
+            schema=pa.schema([("n", pa.int64()), ("m", pa.int64()), ("b", pa.list_(pa.string()))]),
+        )
+
+    rows = (
+        data.select(block.alias("_b"), pred.alias("_m"))
+        .mapInArrow(partial, "n long, m long, b array<string>")
+        .collect()
+    )
+    hit_blocks = set().union(*(r.b for r in rows))
+    return sum(r.n for r in rows), sum(r.m for r in rows), len(hit_blocks)
+
+
 def prune_blocks(
     index: BloomIndex, query: Query, stats: QueryStats | None = None
-) -> DataFrame:
-    """Manifest-level pruning: prefilter -> file blooms -> block blooms.
+) -> list[tuple[str, str]]:
+    """Manifest-level pruning: prefilter -> file blooms -> block blooms,
+    on the driver.  Returns the surviving blocks' ``(data_path,
+    partition_id)`` pairs; ``stats`` receives the funnel counters.
+    Raises ``DriverPruneOverflow`` past ``MAX_COLLECTED_BLOCKS`` survivors
+    (see :func:`candidate_blocks`)."""
+    return prune_blocks_driver(
+        None, index.root, index.version, query, index.table_refs(),
+        MAX_COLLECTED_BLOCKS, stats,
+    )
 
-    Returns the surviving slice of the block manifest (still lazy unless
-    stats are requested).
-    """
-    pre = compile_prefilter(query.prefilter)
-    prune_tree = query.prune_bloom()
 
-    # column-pruned manifest views: read (and cache) only the bitset
-    # columns this query's tree tests — the bitsets are ~99% of manifest
-    # bytes, so a cold single-filter probe reads ~half the manifest.  The
-    # pandas-UDF fallback (heterogeneous params) touches all three columns,
-    # so it gets the full view.
-    from ..operators.probe import needed_bloom_cols
-
-    needed = needed_bloom_cols(prune_tree)
-    bcols = None if index.uniform_params("blocks") is None else needed
-    blocks = index.probe_view("blocks", bcols)
-    # flat probe on small manifests: one Spark job instead of two, and the
-    # (much larger) file-bloom manifest is never read at all — but only
-    # while the expected bloom-FP data reads stay inside the budget (see
-    # FLAT_PROBE_FP_BUDGET above; measured crossover ~10k blocks at p=0.01)
-    flat = False
-    if stats is None and prune_tree is not None:
-        n = index.n_blocks()
-        flat = (
-            n <= FLAT_PROBE_MAX_BLOCKS
-            and n * index.config.block_fpr <= FLAT_PROBE_FP_BUDGET
-        )
-    files = None
-    if not flat:
-        fcols = None if index.uniform_params("files") is None else needed
-        files = index.probe_view("files", fcols)
-
-    if stats is not None:
-        # funnel counters as CollectMetrics nodes: filled by whatever action
-        # executes this plan (the scan's path collect) — no extra jobs
-        from pyspark.sql import Observation
-
-        obs_b = Observation()
-        blocks_f = (
-            blocks.withColumn("_pre", pre)
-            .observe(
-                obs_b,
-                F.count(F.lit(1)).alias("total_blocks"),
-                F.coalesce(F.sum(F.col("_pre").cast("long")), F.lit(0)).alias(
-                    "blocks_after_prefilter"
-                ),
-            )
-            .filter(F.col("_pre"))
-            .drop("_pre")
-        )
-        stats._obs_blocks = obs_b
-    else:
-        blocks_f = blocks.filter(pre)
-
-    if prune_tree is not None and flat:
-        # small manifest: probe block blooms directly, single job
-        blocks_f = blocks_f.filter(
-            probe_filter(prune_tree, index.uniform_params("blocks"))
-        )
-    elif prune_tree is not None:
-        # param-homogeneous manifests (the common case) compile the bloom
-        # probe to pure-JVM byte tests — no bitset bytes reach Python
-        fpred = probe_filter(prune_tree, index.uniform_params("files"))
-        bparams = index.uniform_params("blocks")
-        if stats is not None:
-            obs_f = Observation()
-            files_f = (
-                files.withColumn("_fok", fpred)
-                .observe(
-                    obs_f,
-                    F.count(F.lit(1)).alias("total_files"),
-                    F.coalesce(F.sum(F.col("_fok").cast("long")), F.lit(0)).alias(
-                        "files_after_file_bloom"
-                    ),
-                )
-                .filter(F.col("_fok"))
-                .select("file_id")
-            )
-            stats._obs_files = obs_f
-        else:
-            files_f = files.filter(fpred).select("file_id")
-        # file manifest << block manifest: broadcast the survivors
-        blocks_f = blocks_f.join(F.broadcast(files_f), "file_id", "left_semi")
-        blocks_f = blocks_f.filter(probe_filter(prune_tree, bparams))
-    elif stats is not None:
-        # match-all: the files manifest is not part of the plan; one cheap
-        # count over the (cached, manifest-sized) files df
-        stats.total_files = files.count()
-        stats.files_after_file_bloom = stats.total_files
-    if stats is not None:
-        # the fallback file predicate must reference only columns present
-        # in the (possibly column-pruned) files view: compile it with the
-        # SAME params as the main path — heterogeneous params fall back to
-        # the pandas UDF, but then fcols was None and the view is full
-        stats._fallback = (
-            blocks,
-            pre,
-            files,
-            probe_filter(prune_tree, index.uniform_params("files"))
-            if prune_tree is not None
-            else None,
-        )
-    return blocks_f
+def candidate_blocks(
+    index: BloomIndex, query: Query, stats: QueryStats | None = None
+):
+    """What a query scans: :func:`prune_blocks`' survivor list, or — past
+    ``MAX_COLLECTED_BLOCKS`` survivors — the prefilter slice of the block
+    manifest, which :func:`scan_blocks` turns into a data-root broadcast
+    semi-join.  Blooms only disqualify and verify is exact, so both give
+    the same rows."""
+    try:
+        return prune_blocks(index, query, stats)
+    except DriverPruneOverflow:
+        return index.blocks().filter(compile_prefilter(query.prefilter))
 
 
 def _block_read_schema(index: BloomIndex):
@@ -391,59 +200,65 @@ def _apply_dv_mask(
     return data if with_pos else data.drop("_bs_pos")
 
 
+def _any_block_path(index: BloomIndex) -> str | None:
+    """One ``data_path`` of the block manifest (a footer-sized pyarrow
+    read, no Spark job), or None for a fully empty index."""
+    for batch in _manifest_batches(index.table_paths("blocks"), ["data_path"]):
+        if batch.num_rows:
+            return batch.column(0)[0].as_py()
+    return None
+
+
 def scan_blocks(
     index: BloomIndex,
-    surviving: DataFrame,
-    stats: QueryStats | None = None,
+    surviving,
     with_pos: bool = False,
     mask: bool = True,
+    with_block: bool = False,
 ) -> DataFrame:
     """Read only the surviving blocks' data directories (via ``data_path``,
     which stays valid across metadata-only merges).
 
-    The path collect is ALWAYS bounded at MAX_COLLECTED_BLOCKS (+1 overflow
-    sentinel), stats or not — a with_stats query over a huge index must not
-    OOM the driver.  When the bound trips in stats mode, the limited collect
-    short-circuited the manifest scan, so the funnel Observations are
-    partial: the counters recompute via bounded count() jobs instead
-    (``_finalize(force_fallback=True)``).
+    ``surviving`` is :func:`prune_blocks`' ``(data_path, partition_id)``
+    list, or a slice of the block manifest DataFrame (the maintenance
+    callers: analyze, compaction, DV purge, integrity checks).  A slice's
+    path collect is bounded at MAX_COLLECTED_BLOCKS (+1 overflow
+    sentinel); past it the scan reads the data root and prunes through a
+    broadcast semi-join instead.
 
     Deletion-vector positions are masked out of every returned row set
     (merge-on-read) — see :func:`_apply_dv_mask`; ``with_pos=True``
     additionally keeps the file-relative row position / file name columns
-    (internal: the dv-delete writer)."""
+    (internal: the dv-delete writer).  ``with_block=True`` keeps a
+    ``_bs_block`` block-identity column on external scans (internal: the
+    scan stats; internal blocks carry ``file_id`` / ``block_id``)."""
     spark = index.spark
     if index.meta().get("external", False):
         if with_pos:
             raise ValueError("with_pos is not supported on external indexes")
-        return _scan_external(index, surviving, stats)
+        return _scan_external(index, surviving, with_block)
     exp_schema = _block_read_schema(index)
 
     def _reader():
         r = spark.read.option("basePath", index.data_dir)
         return r.schema(exp_schema) if exp_schema is not None else r
 
-    keys_df = surviving.select("data_path")
-    if stats is not None:
-        with _keep_observations(spark):
-            keys = keys_df.limit(MAX_COLLECTED_BLOCKS + 1).collect()
-        overflow = len(keys) > MAX_COLLECTED_BLOCKS
-        stats.blocks_after_block_bloom = (
-            surviving.count() if overflow else len(keys)
-        )
-        stats._finalize(force_fallback=overflow)
+    if isinstance(surviving, DataFrame):
+        keys_df = surviving.select("data_path")
+        keys = [r.data_path for r in keys_df.limit(MAX_COLLECTED_BLOCKS + 1).collect()]
+        if len(keys) > MAX_COLLECTED_BLOCKS:
+            # huge survivor set: scan the data root, prune via broadcast
+            # semi-join on the relative path reconstructed from the hive
+            # partition dirs.  The DV mask goes first: ``_metadata`` only
+            # resolves on the bare file relation.
+            data = _apply_dv_mask(index, _reader().parquet(index.data_dir), with_pos, mask)
+            data = data.withColumn(
+                "data_path",
+                F.concat(F.lit("file_id="), "file_id", F.lit("/block_id="), "block_id"),
+            )
+            return data.join(F.broadcast(keys_df), ["data_path"], "left_semi").drop("data_path")
     else:
-        keys = keys_df.limit(MAX_COLLECTED_BLOCKS + 1).collect()
-    if len(keys) > MAX_COLLECTED_BLOCKS:
-        # huge survivor set: scan the data root, prune via broadcast semi-join
-        # on the relative path reconstructed from the hive partition dirs
-        data = _reader().parquet(index.data_dir)
-        data = data.withColumn(
-            "data_path",
-            F.concat(F.lit("file_id="), "file_id", F.lit("/block_id="), "block_id"),
-        )
-        data = data.join(F.broadcast(keys_df), ["data_path"], "left_semi")
-        return _apply_dv_mask(index, data, with_pos, mask)
+        keys = [p for p, _ in surviving]
     if not keys:
         # empty survivor set: derive the scan schema from ONE block dir —
         # listing the whole data root for a limit(0) costs seconds at 10^3+
@@ -456,9 +271,9 @@ def scan_blocks(
                 "_bs_fname", F.lit(None).cast("string")
             )
 
-        some = index.blocks().select("data_path").limit(1).collect()
-        if some:
-            one = index.block_paths([some[0].data_path])[0]
+        some = _any_block_path(index)
+        if some is not None:
+            one = index.block_paths([some])[0]
             return _pad_pos(_reader().parquet(one).limit(0))
         # FULLY empty index (empty build / expire-everything): the stored
         # source schema (meta, r04) yields a typed empty frame without
@@ -473,13 +288,11 @@ def scan_blocks(
                 spark.createDataFrame([], StructType.fromJson(_json.loads(sj)))
             )
         return _pad_pos(_reader().parquet(index.data_dir).limit(0))
-    paths = index.block_paths([r.data_path for r in keys])
+    paths = index.block_paths(keys)
     return _apply_dv_mask(index, _reader().parquet(*paths), with_pos, mask)
 
 
-def _scan_external(
-    index: BloomIndex, surviving: DataFrame, stats: QueryStats | None = None
-) -> DataFrame:
+def _scan_external(index: BloomIndex, surviving, with_block: bool = False) -> DataFrame:
     """Pruned scan for a zero-copy external index: read the surviving
     SOURCE files; since several partition-blocks can share one physical
     file, re-derive (data_path, partition_id) per row and semi-join against
@@ -487,39 +300,34 @@ def _scan_external(
     (plans/external.py module docstring)."""
     spark = index.spark
     cfg = index.config
-    pairs = surviving.select("data_path", "partition_id")
-    if stats is not None:
-        with _keep_observations(spark):
-            keys = pairs.limit(MAX_COLLECTED_BLOCKS + 1).collect()
-        overflow = len(keys) > MAX_COLLECTED_BLOCKS
-        stats.blocks_after_block_bloom = (
-            surviving.count() if overflow else len(keys)
-        )
-        stats._finalize(force_fallback=overflow)
-    else:
+    if isinstance(surviving, DataFrame):
+        pairs = surviving.select("data_path", "partition_id")
         keys = pairs.limit(MAX_COLLECTED_BLOCKS + 1).collect()
-    if len(keys) > MAX_COLLECTED_BLOCKS:
-        # scan the surviving blocks' PARENT DIRECTORIES (distinct dirnames
-        # — bounded by directory count, not block count) and let the
-        # semi-join below re-derive block membership; never collect the
-        # full per-block path list to the driver
-        paths = sorted(
-            r.d
-            for r in surviving.select(
-                F.regexp_replace("data_path", "/[^/]+$", "").alias("d")
+        if len(keys) > MAX_COLLECTED_BLOCKS:
+            # scan the surviving blocks' PARENT DIRECTORIES (distinct
+            # dirnames — bounded by directory count, not block count) and
+            # let the semi-join below re-derive block membership; never
+            # collect the full per-block path list to the driver
+            paths = sorted(
+                r.d
+                for r in surviving.select(
+                    F.regexp_replace("data_path", "/[^/]+$", "").alias("d")
+                )
+                .distinct()
+                .collect()
             )
-            .distinct()
-            .collect()
-        )
+        else:
+            paths = sorted({r.data_path for r in keys})
     else:
-        paths = sorted({r.data_path for r in keys})
+        pairs = spark.createDataFrame(
+            list(surviving), "data_path string, partition_id string"
+        )
+        paths = sorted({p for p, _ in surviving})
     if not paths:
-        all_paths = [
-            r.data_path for r in index.blocks().select("data_path").distinct().limit(1).collect()
-        ]
-        if not all_paths:
+        some = _any_block_path(index)
+        if some is None:
             raise ValueError("external index has no blocks")
-        return spark.read.parquet(all_paths[0]).limit(0)
+        return spark.read.parquet(some).limit(0)
     data = (
         spark.read.parquet(*paths)
         .withColumn("data_path", F.input_file_name())
@@ -529,7 +337,7 @@ def _scan_external(
         )
     )
     out = data.join(F.broadcast(pairs), ["data_path", "partition_id"], "left_semi")
-    if stats is not None:
+    if with_block:
         # block identity for the scan-side FP counters (external block =
         # (source file, partition value))
         out = out.withColumn(
@@ -556,54 +364,28 @@ def search(
 
     query = translate_query(index, query)
     stats = QueryStats() if with_stats else None
-    surviving = prune_blocks(index, query, stats)
-    data = scan_blocks(index, surviving, stats)
+    data = scan_blocks(index, candidate_blocks(index, query, stats), with_block=with_stats)
 
     tok = get_tokenizer(cfg.tokenizer)
     if cfg.json_col is not None:
         pred = json_verify_udf(query.bloom, query.regex, tok)(F.col(cfg.json_col))
     else:
-        cols = data.columns
+        cols = [c for c in data.columns if c != "_bs_block"]
         pred = compile_bloom_verify(query.bloom, cfg.indexed_fields, cols, tok) & (
             compile_regex_verify(query.regex, cols)
         )
 
     if stats is not None and stats.blocks_after_block_bloom == 0:
-        # nothing survived pruning: scan counters are exactly zero, no
-        # observation needed (and the limit(0) plan would fold them away)
-        stats.rows_scanned = 0
-        stats.rows_matched = 0
-        stats.blocks_with_matches = 0
+        # nothing survived pruning: scan counters are exactly zero
+        stats.rows_scanned = stats.rows_matched = stats.blocks_with_matches = 0
     elif stats is not None:
-        # per-block scan stats (the reference streams BlockStats per block
-        # during the scan, bloom_tree_engine.go:1078-1095): ride the data
-        # scan as Observations — filled by the caller's own action, zero
-        # extra jobs.  blocks_with_matches vs blocks_after_block_bloom
-        # yields the MEASURED bloom false-positive block count.
-        from pyspark.sql import Observation
-
-        if "_bs_block" not in data.columns:  # internal: hive partition cols
-            data = data.withColumn(
-                "_bs_block", F.concat_ws("/", "file_id", "block_id")
-            )
-        obs_scan = Observation()
-        data = data.observe(
-            obs_scan, F.count(F.lit(1)).alias("rows_scanned")
+        block = (
+            F.col("_bs_block")
+            if "_bs_block" in data.columns
+            else F.concat_ws("/", "file_id", "block_id")
         )
-        stats._obs_scan = obs_scan
-    out = data.filter(pred)
-    if stats is not None and "_bs_block" in out.columns:
-        from pyspark.sql import Observation
-
-        obs_out = Observation()
-        out_pre = out.observe(
-            obs_out,
-            F.count(F.lit(1)).alias("rows_matched"),
-            F.approx_count_distinct("_bs_block").alias("blocks_with_matches"),
-        )
-        stats._obs_out = obs_out
-        stats._scan_fallback = (data, out_pre, "_bs_block")
-        out = out_pre.drop("_bs_block")
+        stats._scan = (data, pred, block)
+    out = data.filter(pred).drop("_bs_block")
 
     source_columns = index.meta().get("source_columns")
     if source_columns:

@@ -26,17 +26,14 @@ How the pieces map:
   re-applies it after the scan** — the pushed form is used purely to
   prune, which is always sound (blooms and zone maps only disqualify;
   prefilter semantics are conservative supersets).
-- ``partitions()`` runs the hierarchical prune (Q6-Q10) ON THE DRIVER
-  over the manifest via pyarrow — structurally the reference's
-  single-node read path (``MetaStore.GetMaybeFilesForQuery`` + file/block
-  bloom walk, bloom_tree_engine.go:910-1118): stream the files manifest,
-  probe file blooms, stream only surviving files' block rows, apply
-  prefilter + block blooms; each surviving block becomes an
+- ``partitions()`` runs the library's one hierarchical prune (Q6-Q10,
+  operators/probe.py) ON THE DRIVER over the manifest via pyarrow — the
+  same walk ``search()`` uses; each surviving block becomes an
   ``InputPartition``.  Past ``max_driver_blocks`` survivors the planner
   switches to the DISTRIBUTED fallback: row-group ranges of the manifest
   part-files become the ``InputPartition``\\s (``slice_rows``) and the
-  executors run the (flat) prune + scan themselves — the driver never
-  holds a block list at any index size.
+  executors run the walk's per-batch prune (no file level) + scan
+  themselves — the driver never holds a block list at any index size.
 - ``read()`` runs on executors: CRC-verified block read through the fs
   layer + the EXACT verify stage (Q12/Q13) re-derived with the index's
   tokenizer — so the DataFrame contains exactly the query's matches, not
@@ -91,11 +88,9 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-from .. import bloom
 from ..query import (
     And,
     BloomExpr,
-    Condition,
     Eq,
     Field,
     FieldRegex,
@@ -116,133 +111,23 @@ from ..query import (
     and_bloom,
     validate_regexes,
 )
+from ..operators.probe import (
+    MAX_DRIVER_BLOCKS,
+    DriverPruneOverflow,
+    block_columns,
+    prune_batch,
+    prune_blocks_driver,
+    with_columns,
+)
 from . import fs as fsx
 from . import manifest as mf
 
-# driver-held surviving-block list bound; past this the convenience layer
-# refuses (the distributed search() has no such bound)
-MAX_DRIVER_BLOCKS = 1_000_000
-
-_BLOOM_COLS = ("field_bloom", "token_bloom", "fieldtoken_bloom")
-
-
 # ---------------------------------------------------------------------------
-# pandas twins of the Catalyst prefilter / verify compilers.  Semantics are
-# pinned 1:1 to query.compile_prefilter and verify.compile_bloom_verify
-# (strict missing-metadata exclusion, conservative NOT_IN, minmax overlap,
-# not-indexed-field => False) and proven equivalent against the Spark path
-# by tests/test_datasource.py's randomized equivalence sweep.
+# pandas twin of the Catalyst verify compiler.  Semantics are pinned 1:1 to
+# verify.compile_bloom_verify (not-indexed-field => False); the prune
+# kernels (prefilter, bloom probe, the manifest walk) live in
+# operators/probe.py.
 # ---------------------------------------------------------------------------
-
-
-def _cond_exact(s: pd.Series, c: Condition) -> np.ndarray:
-    if c.op == "EQ":
-        return (s == c.value).to_numpy()
-    if c.op == "NE":
-        return (s != c.value).to_numpy()
-    if c.op == "GT":
-        return (s > c.value).to_numpy()
-    if c.op == "GTE":
-        return (s >= c.value).to_numpy()
-    if c.op == "LT":
-        return (s < c.value).to_numpy()
-    if c.op == "LTE":
-        return (s <= c.value).to_numpy()
-    if c.op == "IN":
-        return s.isin(list(c.values)).to_numpy() if c.values else np.zeros(len(s), bool)
-    if c.op == "NOT_IN":
-        return (~s.isin(list(c.values))).to_numpy() if c.values else np.ones(len(s), bool)
-    if c.op == "BETWEEN":
-        return ((s >= c.lo) & (s <= c.hi)).to_numpy()
-    if c.op == "NOT_BETWEEN":
-        return ((s < c.lo) | (s > c.hi)).to_numpy()
-    raise AssertionError(c.op)
-
-
-def _cond_minmax(mn: pd.Series, mx: pd.Series, c: Condition) -> np.ndarray:
-    if c.op == "EQ":
-        return ((mn <= c.value) & (c.value <= mx)).to_numpy()
-    if c.op == "NE":
-        return ((mn != c.value) | (mx != c.value)).to_numpy()
-    if c.op == "GT":
-        return (mx > c.value).to_numpy()
-    if c.op == "GTE":
-        return (mx >= c.value).to_numpy()
-    if c.op == "LT":
-        return (mn < c.value).to_numpy()
-    if c.op == "LTE":
-        return (mn <= c.value).to_numpy()
-    if c.op == "IN":
-        out = np.zeros(len(mn), bool)
-        for v in c.values:
-            out |= ((mn <= v) & (v <= mx)).to_numpy()
-        return out
-    if c.op == "NOT_IN":
-        return np.ones(len(mn), bool)  # conservative (query.go:347-350)
-    if c.op == "BETWEEN":
-        return ((mn <= c.hi) & (c.lo <= mx)).to_numpy()
-    if c.op == "NOT_BETWEEN":
-        return ((mn < c.lo) | (mx > c.hi)).to_numpy()
-    raise AssertionError(c.op)
-
-
-def eval_prefilter_pdf(expr: PrefilterExpr | None, pdf: pd.DataFrame) -> np.ndarray:
-    """compile_prefilter's semantics over a pandas manifest batch
-    (``minmax_min``/``minmax_max`` as per-row dicts)."""
-    n = len(pdf)
-    if expr is None:
-        return np.ones(n, bool)
-    if expr.kind == "AND":
-        out = np.ones(n, bool)
-        for ch in expr.children:
-            out &= eval_prefilter_pdf(ch, pdf)
-        return out
-    if expr.kind == "OR":
-        out = np.zeros(n, bool)
-        for ch in expr.children:
-            out |= eval_prefilter_pdf(ch, pdf)
-        return out
-    if expr.kind == "PARTITION":
-        pc = pdf["partition_id"]
-        has = (pc.notna() & (pc != "")).to_numpy()
-        return has & _cond_exact(pc, expr.condition)
-    if expr.kind == "MINMAX":
-        f = expr.field
-        mn = pdf["minmax_min"].map(lambda d: (d or {}).get(f))
-        mx = pdf["minmax_max"].map(lambda d: (d or {}).get(f))
-        has = (mn.notna() & mx.notna()).to_numpy()
-        out = np.zeros(n, bool)
-        if has.any():
-            # compare on the object series (Python ints — exact), matching
-            # the Spark path's map<string,long> comparisons: a float64 cast
-            # would round |values| > 2^53 (hash ids, ns timestamps) and
-            # could DROP a block that contains matches (ADVICE r04)
-            out[has] = _cond_minmax(mn[has], mx[has], expr.condition)
-        return out
-    raise AssertionError(expr.kind)
-
-
-def _probe_pdf(expr: BloomExpr | None, pdf: pd.DataFrame) -> np.ndarray:
-    """Bloom-tree probe over a pandas manifest batch, grouped by (m,k) —
-    the driver-side twin of operators.probe.bloom_probe_udf."""
-    n = len(pdf)
-    if expr is None:
-        return np.ones(n, bool)
-    from ..operators.probe import _eval_tree
-
-    cols = [
-        pdf[c] if c in pdf.columns else pd.Series([None] * n)
-        for c in _BLOOM_COLS
-    ]
-    out = np.ones(n, bool)
-    key = pd.DataFrame(
-        {"n": pdf["expected_items"].values, "p": pdf["fpr"].values}
-    )
-    for (ni, pi), grp in key.groupby(["n", "p"], sort=False):
-        params = bloom.BloomParams(int(ni), float(pi))
-        idx = grp.index.to_numpy()
-        out[idx] = _eval_tree(expr, cols, params, idx)
-    return out
 
 
 def verify_pdf(
@@ -462,84 +347,6 @@ def regex_verify_pdf(
         ).to_numpy(dtype=bool)
 
     return ev(expr)
-
-
-# ---------------------------------------------------------------------------
-# driver-side hierarchical prune over the manifest (pyarrow, no Spark jobs)
-# ---------------------------------------------------------------------------
-
-
-def _manifest_batches(paths: list[str], columns: list[str]) -> Iterator[pd.DataFrame]:
-    import pyarrow.dataset as pads
-
-    for p in paths:
-        fs, local = fsx.resolve(p)
-        ds = pads.dataset(local, format="parquet", filesystem=fs)
-        avail = [c for c in columns if c in ds.schema.names]
-        for batch in ds.to_batches(columns=avail):
-            yield batch.to_pandas(maps_as_pydicts="strict")
-
-
-class DriverPruneOverflow(Exception):
-    """More blocks survived than the driver-held list may carry —
-    ``partitions()`` catches this and switches to the distributed
-    manifest-slice fallback (executors prune their own slice)."""
-
-
-def prune_blocks_driver(
-    spark_unused,
-    root: str,
-    version: str,
-    query: Query,
-    table_refs: dict[str, list[str]],
-    max_blocks: int = MAX_DRIVER_BLOCKS,
-) -> list[tuple[str, str]]:
-    """Hierarchical prune entirely on the driver: surviving block
-    ``(data_path, partition_id)`` pairs.  Streams the manifest in arrow
-    batches (memory bounded by batch size), file level first — the
-    reference's read walk (bloom_tree_engine.go:910-1118) without a
-    cluster.  Raises :class:`DriverPruneOverflow` past ``max_blocks``
-    survivors (the caller falls back to distributed pruning)."""
-    mdir = fsx.join(root, "manifest")
-    tree = query.prune_bloom()
-    from ..operators.probe import needed_bloom_cols
-
-    needed = list(needed_bloom_cols(tree))
-
-    surviving_files: set | None = None
-    if tree is not None:
-        surviving_files = set()
-        for pdf in _manifest_batches(
-            [fsx.join(mdir, rel) for rel in table_refs["files"]],
-            ["file_id", "expected_items", "fpr", *needed],
-        ):
-            keep = _probe_pdf(tree, pdf)
-            surviving_files.update(pdf["file_id"].to_numpy()[keep])
-        if not surviving_files:
-            return []
-
-    out: list[tuple[str, str]] = []
-    for pdf in _manifest_batches(
-        [fsx.join(mdir, rel) for rel in table_refs["blocks"]],
-        [
-            "file_id", "block_id", "partition_id", "data_path",
-            "minmax_min", "minmax_max", "expected_items", "fpr", *needed,
-        ],
-    ):
-        if surviving_files is not None:
-            pdf = pdf[pdf["file_id"].isin(surviving_files)]
-            if pdf.empty:
-                continue
-            pdf = pdf.reset_index(drop=True)
-        keep = eval_prefilter_pdf(query.prefilter, pdf)
-        if tree is not None:
-            keep &= _probe_pdf(tree, pdf)
-        out.extend(
-            zip(pdf["data_path"].to_numpy()[keep], pdf["partition_id"].to_numpy()[keep])
-        )
-        if len(out) > max_blocks:
-            raise DriverPruneOverflow(len(out))
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -1376,37 +1183,17 @@ class BloomSearchReader(DataSourceReader):
         return walk(expr)
 
     def _read_manifest_slice(self, sl: "_ManifestSlice"):
-        """Distributed-prune fallback task: stream one manifest part-file,
-        prune (prefilter + flat block-bloom probe), scan survivors."""
+        """Distributed-prune fallback task: stream one manifest part-file
+        range through the shared batch prune (prefilter + block blooms;
+        no file level), scan survivors."""
         import pyarrow.dataset as pads
 
         query = self._query()
-        tree = query.prune_bloom()
-        from ..operators.probe import needed_bloom_cols
-
-        needed = list(needed_bloom_cols(tree))
         fs, local = fsx.resolve(sl.part)
         frag = pads.ParquetFileFormat().make_fragment(
             local, filesystem=fs, row_groups=list(sl.row_groups)
         )
-
-        def has_minmax(e: PrefilterExpr | None) -> bool:
-            if e is None:
-                return False
-            if e.kind == "MINMAX":
-                return True
-            return any(has_minmax(ch) for ch in e.children)
-
-        # read (and pydict-convert) the map-typed zone-map columns only
-        # when the prefilter actually tests them — the conversion is the
-        # slice prune's dominant pandas cost
-        mm_cols = (
-            ["minmax_min", "minmax_max"] if has_minmax(query.prefilter) else []
-        )
-        cols = [
-            "partition_id", "data_path", *mm_cols, "expected_items", "fpr",
-            *needed,
-        ]
+        cols = block_columns(query)
         avail = [c for c in cols if c in frag.physical_schema.names]
         # external blocks sharing one source file group into a single read
         # — accumulated across ALL of the slice's batches, or a file whose
@@ -1416,20 +1203,12 @@ class BloomSearchReader(DataSourceReader):
         for batch in frag.to_batches(
             columns=avail, filter=self._pads_partition_filter(query.prefilter)
         ):
-            pdf = batch.to_pandas(
-                **({"maps_as_pydicts": "strict"} if mm_cols else {})
-            )
-            keep = eval_prefilter_pdf(query.prefilter, pdf)
-            if tree is not None:
-                keep &= _probe_pdf(tree, pdf)
+            surv = prune_batch(with_columns(batch, cols), query)
             if self.external:
-                for src, pid in zip(
-                    pdf["data_path"].to_numpy()[keep],
-                    pdf["partition_id"].to_numpy()[keep],
-                ):
+                for src, pid in zip(surv["data_path"], surv["partition_id"]):
                     by_src.setdefault(src, []).append(pid)
             else:
-                for src in pdf["data_path"].to_numpy()[keep]:
+                for src in surv["data_path"]:
                     yield from self._read_block(src)
         for src, pids in by_src.items():
             yield from self._read_external(src, pids)

@@ -718,11 +718,13 @@ def carried_meta(parent_meta: dict, for_append: bool = False) -> dict:
 class BloomIndex:
     """Handle to a committed index: root dir + resolved manifest version.
 
-    The blocks/files manifests are memoized (and Spark-cached) on the
-    handle: every query probes them, they are manifest-sized (1 row per
-    block/file), and a version is immutable — repeated queries skip the
-    parquet re-read.  Pass ``cache=False`` to ``blocks()``/``files()`` for
-    one-off reads (e.g. before a merge commit)."""
+    Queries prune by streaming the manifest through the driver
+    (operators/probe.py).  The blocks/files manifest DataFrames the
+    Spark-side plans use (mutations, maintenance, metadata queries) are
+    memoized (and Spark-cached) on the handle: they are manifest-sized
+    (1 row per block/file) and a version is immutable.  Pass
+    ``cache=False`` to ``blocks()``/``files()`` for one-off reads (e.g.
+    before a merge commit)."""
 
     spark: SparkSession
     root: str
@@ -809,24 +811,12 @@ class BloomIndex:
                 self._files_df = df
         return df
 
-    _BLOOM_COLS = ("field_bloom", "token_bloom", "fieldtoken_bloom")
-
     def n_blocks(self) -> int:
         """Block-manifest row count from parquet footers (no Spark job;
-        cached per handle — versions are immutable).  Drives the adaptive
-        flat-vs-hierarchical probe choice (plans/search.py).
-
-        If the DRIVER cannot read the root through pyarrow (e.g. an
-        s3a:// deployment where only Spark's Hadoop conf holds
-        credentials), returns a large sentinel so the query path falls
-        back to the hierarchical probe — correct on any root — instead of
-        failing the whole search."""
-        # do NOT cache the sentinel: a transient FS error must not pin the
-        # slow hierarchical path for the handle's lifetime (ADVICE r03) —
-        # table_rows returns None uncached on failure, so the next call
-        # retries the footer read
+        cached per handle — versions are immutable), or a ``count()`` job
+        when the driver cannot read the root through pyarrow."""
         n = self.table_rows("blocks")
-        return 2**62 if n is None else n
+        return self.blocks().count() if n is None else n
 
     def table_rows(self, name: str) -> int | None:
         """Exact row count of a manifest table from parquet FOOTERS (no
@@ -847,81 +837,6 @@ class BloomIndex:
                 return None
         return cache[name]
 
-    def probe_view(self, level: str, bloom_cols: frozenset | None) -> DataFrame:
-        """Column-pruned, independently cached slice of a manifest level
-        for the query probe: every scalar column plus ONLY the bloom bitset
-        columns the query's prune tree actually tests.  The bitsets are
-        ~99% of manifest bytes (token/fieldtoken split them roughly
-        evenly), so a cold probe needing one of the three reads ~half the
-        manifest — parquet column pruning does the skipping; each distinct
-        column set materializes its own cache once per handle (versions are
-        immutable).  ``bloom_cols=None`` -> the full blocks()/files() cache
-        (used by the pandas-UDF probe fallback, which reads all three)."""
-        if level not in ("blocks", "files"):
-            raise ValueError(level)
-        full = self.files if level == "files" else self.blocks
-        if bloom_cols is None or set(self._BLOOM_COLS) <= set(bloom_cols):
-            return full()
-        # an already-materialized full cache beats a fresh pruned read
-        if getattr(self, f"_{level}_df", None) is not None:
-            return full()
-        views = getattr(self, "_probe_views", None)
-        if views is None:
-            views = self._probe_views = {}
-        key = (level, tuple(sorted(bloom_cols)))
-        if key not in views:
-            schema = FILES_SCHEMA if level == "files" else BLOCKS_SCHEMA
-            df = self._read_table(level, schema)
-            keep = [
-                f.name
-                for f in df.schema.fields
-                if f.name not in self._BLOOM_COLS or f.name in bloom_cols
-            ]
-            views[key] = df.select(*keep).cache()
-        return views[key]
-
-    def uniform_params(self, level: str) -> "IndexConfig | None":
-        """The single (expected_items, fpr) of this level's manifest, or
-        None when rows mix params (heterogeneous appends).  Cached per
-        handle (a version is immutable); homogeneous params let the query
-        probe compile to pure-JVM byte tests instead of a pandas UDF."""
-        cache = getattr(self, "_uniform", None)
-        if cache is None:
-            cache = self._uniform = {}
-        if level not in cache:
-            from ..bloom import BloomParams as _BP
-
-            # builds/merges record uniformity in meta.json (zero jobs);
-            # absent/None (old manifests, heterogeneous appends) -> probe
-            # the manifest with one tiny distinct job
-            known = (self.meta().get("uniform_params") or {}).get(level)
-            if known:
-                cache[level] = _BP(int(known[0]), float(known[1]))
-                return cache[level]
-            # cache=False: this tiny scalar probe must not materialize the
-            # full (bitset-heavy) manifest cache — that would defeat the
-            # column-pruned probe_view for pre-r03 manifests
-            df = (
-                self.files(cache=False)
-                if level == "files"
-                else self.blocks(cache=False)
-            )
-            rows = (
-                df.select("expected_items", "fpr")
-                .filter("expected_items IS NOT NULL")
-                .distinct()
-                .limit(2)
-                .collect()
-            )
-            from ..bloom import BloomParams
-
-            cache[level] = (
-                BloomParams(int(rows[0].expected_items), float(rows[0].fpr))
-                if len(rows) == 1
-                else None
-            )
-        return cache[level]
-
     def unpersist(self) -> None:
         """Release cached manifest memory (e.g. before dropping the handle)."""
         for attr in ("_blocks_df", "_files_df", "_dvs_df", "_colstats_df"):
@@ -929,9 +844,6 @@ class BloomIndex:
             if df is not None:
                 df.unpersist()
                 setattr(self, attr, None)
-        for df in getattr(self, "_probe_views", {}).values():
-            df.unpersist()
-        self._probe_views = {}
 
     def lineage(self) -> DataFrame:
         return self._read_table("lineage", LINEAGE_SCHEMA)

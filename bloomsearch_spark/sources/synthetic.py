@@ -119,9 +119,8 @@ def synthesize_probe_manifest(
     hundred MB, production-size params (10k) measure the real per-block
     scan cost.  Committed as a normal manifest version — used by
     scripts/probe_scale_bench.py and tests/test_probe_scale.py to measure
-    the flat-vs-hierarchical probe crossover (plans/search.py
-    FLAT_PROBE_MAX_BLOCKS) at manifest scales the data-backed tests
-    cannot reach.  Returns the committed BloomIndex."""
+    the prune walk at manifest scales the data-backed tests cannot
+    reach.  Returns the committed BloomIndex."""
     import pyarrow as pa
 
     from .. import bloom
@@ -146,7 +145,7 @@ def synthesize_probe_manifest(
         """Per-row UNIQUE bitsets at ~50% bit fill (a correctly-sized bloom
         at capacity) — incompressible, so the cached/stored manifest costs
         what a real one costs (constant bitsets would let columnar
-        compression fake the flat-probe scan), and probe false positives
+        compression fake the manifest scan), and probe false positives
         occur at the real ~fill^k rate.  Planted rows get the token's k
         bits OR'd on top."""
         rng = np.random.default_rng(seed)
@@ -183,7 +182,7 @@ def synthesize_probe_manifest(
                 "fpr": pa.array([fpr] * n, pa.float64()),
                 # token_bloom is the probed column: unique realistic
                 # bitsets; the never-probed field/fieldtoken columns stay
-                # zeroed (column pruning drops them from the probe view)
+                # zeroed (the prune reads only the columns a query tests)
                 "field_bloom": pa.array([zero_b] * n, pa.binary()),
                 "token_bloom": _bitsets(
                     n, bp.nbytes, hit, b_pos, seed=int(ids[0]) + 1 if n else 1

@@ -284,8 +284,7 @@ CODE_IDENTIFIERS = register_tokenizer(
 # one UDF object per value_fn: a multi-leaf verify predicate calls
 # tokens_udf once per (leaf, column) — distinct pandas_udf objects would
 # each be a separate py4j registration and a separate Python-eval node
-# Catalyst cannot share (the same class of per-leaf plan-construction
-# overhead probe._jvm_leaf_sql eliminates on the bloom side)
+# Catalyst cannot share (per-leaf plan-construction overhead)
 _TOKENS_UDF_CACHE: dict = {}
 
 

@@ -1,22 +1,20 @@
-"""Flat-vs-hierarchical probe crossover at manifest scale (r04, VERDICT
-item 3).
+"""Driver prune latency at manifest scale.
 
-The query path picks a flat block-bloom probe on small manifests and the
-file->block hierarchy otherwise (plans/search.py FLAT_PROBE_MAX_BLOCKS +
-FLAT_PROBE_FP_BUDGET).  The r03 threshold was reasoned, not measured —
-data-backed tests top out at a few thousand blocks.  This script
-synthesizes manifest-only indexes
-(sources/synthetic.synthesize_probe_manifest: per-row unique ~50%-fill
-bitsets, token planted every `--match-every` blocks) at 10^3..10^6 blocks
-and measures, for both strategies, (a) warm manifest-probe latency and
-(b) with --end-to-end, full search() wall time after materializing
-exactly the survivor block dirs — the flat probe's p*n false-positive
-survivors each cost a data-dir read, which is what decides the crossover.
-Min of interleaved reps (host drift is 2-8x, BENCH.md §3); verifies
-hier survivors ⊆ flat survivors and planted ⊆ both.
+Synthesizes manifest-only indexes (sources/synthetic.synthesize_probe_manifest:
+per-row unique ~50%-fill bitsets, token planted every 100 000th block) at
+10^4..10^6 blocks and times ``plans.search.prune_blocks`` — the one prune
+engine, a driver-side pyarrow walk of the file blooms, then the block
+rows of surviving files — for a planted token and an absent one.  Prints
+one JSON line per size: min / median prune wall over ``--reps`` warm
+repetitions and the survivor counts with the funnel counters.  Verifies
+that every planted block survives.
 
-Usage: python scripts/probe_scale_bench.py [--sizes ...] [--reps 5]
-       [--block-expected 10000] [--end-to-end] [--out PROBE_SCALE.json]
+``--root DIR`` keeps the synthesized manifests under ``DIR/<n>`` and
+reuses them on the next run, so several runs (or another version of the
+library) can time the same bytes.
+
+Usage: python scripts/probe_scale_bench.py [--sizes 10000,60000,200000,1000000]
+       [--reps 5] [--block-expected 100] [--root DIR] [--out PROBE_SCALE.json]
 """
 
 from __future__ import annotations
@@ -25,6 +23,7 @@ import argparse
 import json
 import os
 import shutil
+import statistics
 import sys
 import tempfile
 import time
@@ -34,23 +33,15 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--sizes", default="10000,50000,200000,1000000")
+    ap.add_argument("--sizes", default="10000,60000,200000,1000000")
     ap.add_argument("--reps", type=int, default=5)
-    ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
+    ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "4")))
     ap.add_argument(
         "--block-expected", type=int, default=100,
         help="bloom expected_items per block: sets bitset bytes (~1.2 B/item "
-        "at p=0.01) — the crossover's real driver is bitset BYTES scanned "
-        "per block, so measure both a small-bitset series (reaches 10^6 "
-        "blocks) and a production-size one (10_000 -> ~12 KB/bloom)",
+        "at p=0.01); 100 reaches 10^6 blocks in ~120 MB of token bitsets",
     )
-    ap.add_argument(
-        "--end-to-end", action="store_true",
-        help="also materialize the survivor block DIRS (tiny parquet each "
-        "— only surviving dirs are ever read) and time full search(): the "
-        "flat probe's p*n false-positive survivors each cost a data-block "
-        "read downstream, which is what actually decides the crossover",
-    )
+    ap.add_argument("--root", default=None, help="keep/reuse manifests under DIR/<n>")
     ap.add_argument("--out", default="PROBE_SCALE.json")
     args = ap.parse_args()
     sizes = [int(s) for s in args.sizes.split(",")]
@@ -60,147 +51,73 @@ def main() -> None:
     spark = (
         SparkSession.builder.master(f"local[{args.cpus}]")
         .config("spark.sql.shuffle.partitions", str(args.cpus))
-        .config("spark.driver.memory", "16g")
+        .config("spark.driver.memory", "4g")
         .config("spark.ui.enabled", "false")
+        .config("spark.ui.showConsoleProgress", "false")
         .appName("probe-scale-bench")
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
 
     from bloomsearch_spark import new_query
-    from bloomsearch_spark.plans import search as search_mod
-    from bloomsearch_spark.plans.search import prune_blocks
+    from bloomsearch_spark.plans.search import QueryStats, prune_blocks
+    from bloomsearch_spark.sources.manifest import BloomIndex
     from bloomsearch_spark.sources.synthetic import synthesize_probe_manifest
 
-    q = new_query().token("needle").build()
+    queries = {
+        "hit": new_query().token("needle").build(),
+        "miss": new_query().token("zz_absent").build(),
+    }
     results = []
-    default_threshold = search_mod.FLAT_PROBE_MAX_BLOCKS
-    default_budget = search_mod.FLAT_PROBE_FP_BUDGET
     for n in sizes:
-        work = tempfile.mkdtemp(prefix=f"bs-probe-{n}-")
-        t0 = time.monotonic()
-        idx = synthesize_probe_manifest(
-            spark, work, n_blocks=n, block_expected=args.block_expected
+        work = (
+            os.path.join(args.root, str(n)) if args.root
+            else tempfile.mkdtemp(prefix=f"bs-probe-{n}-")
         )
+        t0 = time.monotonic()
+        if os.path.isdir(os.path.join(work, "manifest")):
+            idx = BloomIndex.load(spark, work)
+        else:
+            idx = synthesize_probe_manifest(
+                spark, work, n_blocks=n, block_expected=args.block_expected
+            )
         gen_s = time.monotonic() - t0
 
-        def _force(flat: bool):
-            search_mod.FLAT_PROBE_MAX_BLOCKS = 2**62 if flat else 0
-            search_mod.FLAT_PROBE_FP_BUDGET = float("inf") if flat else 0.0
-
-        def _restore():
-            search_mod.FLAT_PROBE_MAX_BLOCKS = default_threshold
-            search_mod.FLAT_PROBE_FP_BUDGET = default_budget
-
-        def probe_count(flat: bool) -> int:
-            _force(flat)
-            try:
-                return prune_blocks(idx, q).count()
-            finally:
-                _restore()
-
-        def survivors(flat: bool) -> list[str]:
-            _force(flat)
-            try:
-                return sorted(
-                    r.data_path for r in prune_blocks(idx, q).select("data_path").collect()
-                )
-            finally:
-                _restore()
-
-        # correctness first (also warms the manifest caches for both paths):
-        # the hierarchy's survivors are a SUBSET of the flat probe's (the
-        # file level additionally prunes block-bloom FPs whose file bloom
-        # rejects the token); final query ROWS are identical either way —
-        # the exact-verify stage discards FP blocks
-        s_flat, s_hier = set(survivors(True)), set(survivors(False))
-        assert s_hier <= s_flat, f"hier ⊄ flat at n={n}"
-        planted = {
-            f"file_id=f{i // 1000:08d}/block_id=b{i:09d}"
-            for i in range(0, n, 100_000)
-        }
-        assert planted <= s_hier, f"planted block missed at n={n}"
-        expected = len(planted)
-
-        times = {"flat": [], "hier": []}
-        for _ in range(args.reps):  # interleaved min-of-reps
-            for mode, flat in (("flat", True), ("hier", False)):
-                t0 = time.monotonic()
-                probe_count(flat)
-                times[mode].append(time.monotonic() - t0)
-        row = {
-            "n_blocks": n,
-            "block_expected": args.block_expected,
-            "flat_warm_s": round(min(times["flat"]), 4),
-            "hier_warm_s": round(min(times["hier"]), 4),
-            "survivors_flat": len(s_flat),
-            "survivors_hier": len(s_hier),
-            "planted": expected,
-            "gen_s": round(gen_s, 1),
-            "reps": args.reps,
-        }
-        row["winner"] = "flat" if row["flat_warm_s"] <= row["hier_warm_s"] else "hier"
-
-        if args.end_to_end:
-            # materialize ONLY the dirs any strategy can touch (s_flat ⊇
-            # s_hier); planted blocks carry the needle so verify also
-            # exercises its hit path
-            import pyarrow as pa
-
-            from bloomsearch_spark import search
-            from bloomsearch_spark.sources import fs as fsx
-
-            hit_tbl = pa.table({"text": ["filler needle filler"]})
-            miss_tbl = pa.table({"text": ["filler only"]})
-
-            def _write(rel):
-                fsx.write_parquet_atomic(
-                    fsx.join(idx.data_dir, rel),
-                    hit_tbl if rel in planted else miss_tbl,
-                    "part-0.parquet",
-                )
-
-            from concurrent.futures import ThreadPoolExecutor
-
-            t0 = time.monotonic()
-            with ThreadPoolExecutor(max_workers=16) as ex:
-                list(ex.map(_write, s_flat))
-            row["materialize_s"] = round(time.monotonic() - t0, 1)
-
-            def e2e(flat: bool) -> int:
-                _force(flat)
-                try:
-                    return search(spark, idx, q).count()
-                finally:
-                    _restore()
-
-            n_flat, n_hier = e2e(True), e2e(False)  # warm both paths
-            assert n_flat == n_hier == expected, (n_flat, n_hier, expected)
-            e2e_times = {"flat": [], "hier": []}
+        row = {"n_blocks": n, "block_expected": args.block_expected,
+               "gen_s": round(gen_s, 1), "reps": args.reps}
+        for name, q in queries.items():
+            stats = QueryStats()
+            surv = {p for p, _ in prune_blocks(idx, q, stats)}  # also warms the OS cache
+            if name == "hit":
+                planted = {
+                    f"file_id=f{i // 1000:08d}/block_id=b{i:09d}"
+                    for i in range(0, n, 100_000)
+                }
+                assert planted <= surv, f"planted block missed at n={n}"
+                row["planted"] = len(planted)
+            walls = []
             for _ in range(args.reps):
-                for mode, flat in (("flat", True), ("hier", False)):
-                    t0 = time.monotonic()
-                    e2e(flat)
-                    e2e_times[mode].append(time.monotonic() - t0)
-            row["flat_e2e_s"] = round(min(e2e_times["flat"]), 4)
-            row["hier_e2e_s"] = round(min(e2e_times["hier"]), 4)
-            row["winner_e2e"] = (
-                "flat" if row["flat_e2e_s"] <= row["hier_e2e_s"] else "hier"
-            )
-        print(json.dumps(row))
+                t0 = time.monotonic()
+                prune_blocks(idx, q)
+                walls.append(time.monotonic() - t0)
+            row[name] = {
+                "prune_min_s": round(min(walls), 4),
+                "prune_median_s": round(statistics.median(walls), 4),
+                "survivors": len(surv),
+                "files_after_file_bloom": stats.files_after_file_bloom,
+                "total_files": stats.total_files,
+            }
+        print(json.dumps(row), flush=True)
         results.append(row)
-        idx.unpersist()
-        shutil.rmtree(work, ignore_errors=True)
+        if not args.root:
+            shutil.rmtree(work, ignore_errors=True)
 
     with open(args.out, "w") as f:
         json.dump(
             {
-                "threshold_default": default_threshold,
-                "fp_budget_default": default_budget,
                 "cpus": args.cpus,
-                "note": "warm probe latency, min of interleaved reps; "
-                "hier survivors verified ⊆ flat survivors, planted blocks "
-                "⊆ both (final rows identical: verify discards FP blocks)",
+                "note": "warm driver prune wall (plans.search.prune_blocks), "
+                "min / median of reps; planted blocks verified to survive",
                 "results": results,
             },
             f,

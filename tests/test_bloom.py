@@ -121,6 +121,52 @@ def test_probe_many_and_of_tokens():
     assert bloom.probe_many([a.tobytes()], ["x", "zz_absent"], p).tolist() == [False]
 
 
+def test_probe_many_matches_per_row_probe():
+    """The vectorized probe_many (one gather over the concatenated
+    bitsets) answers exactly what a per-row ``bloom.probe`` answers —
+    under two param sets, for null/empty bitsets (always True), single
+    and multi-token AND keys, and a 64-key OR through the prune tree."""
+    import pandas as pd
+    import pyarrow as pa
+
+    from bloomsearch_spark.operators.probe import _eval_tree
+    from bloomsearch_spark.query import Or, Token
+
+    rng = np.random.default_rng(11)
+    for p in (BloomParams(100, 0.01), BloomParams(2_000, 0.05)):
+        raws = []
+        for i in range(300):
+            bs = bloom.new_bitset(p)
+            items = [f"w{j}" for j in rng.integers(0, 400, rng.integers(0, 120))]
+            bloom.insert(bs, np.array(items, dtype=object), p)
+            raws.append(bs.tobytes())
+        raws[5] = None
+        raws[17] = b""
+        live = [i for i, r in enumerate(raws) if r]
+
+        def per_row(keys, any_key=False):
+            out = np.ones(len(raws), dtype=bool)
+            for i in live:
+                hits = bloom.probe(np.frombuffer(raws[i], np.uint8), keys, p)
+                out[i] = hits.any() if any_key else hits.all()
+            return out
+
+        arrow = pa.array(raws, pa.binary())
+        for keys in (["w1"], ["zz_absent"], ["w2", "w3"], ["w4", "zz_absent"]):
+            key = keys[0] if len(keys) == 1 else keys
+            want = per_row(keys).tolist()
+            assert bloom.probe_many(pd.Series(raws, dtype=object), key, p).tolist() == want
+            # arrow input is read in place, sliced arrays included
+            assert bloom.probe_many(arrow, key, p).tolist() == want
+            assert bloom.probe_many(arrow.slice(3), key, p).tolist() == want[3:]
+            assert want[5] and want[17]
+        needles = [f"w{j}" for j in range(0, 640, 10)]  # half never inserted
+        tree = Or(*[Token(t) for t in needles])
+        got = _eval_tree(tree, pa.RecordBatch.from_pydict({"token_bloom": arrow}), p)
+        assert got.tolist() == per_row(needles, any_key=True).tolist()
+        assert 0 < got.sum() < len(raws)
+
+
 def test_fill_ratio():
     p = BloomParams(1_000, 0.01)
     bs = bloom.new_bitset(p)

@@ -3,10 +3,9 @@ with WHERE-clause pushdown pruning and exact verify.
 
 Covers: token-query exactness vs the library search() and the raw data;
 partition/minmax WHERE pushdown actually reduces planned partitions;
-zero-survivor queries; SQL temp views; and a randomized equivalence sweep
-pinning the driver-side pandas prune (prefilter + bloom tree) to the
-Spark prune_blocks path — the two implementations must select identical
-survivor sets for any query."""
+zero-survivor queries; SQL temp views; and a sweep pinning the driver
+prune (prefilter + bloom tree) to exact references: the blocks holding
+verified matches, the Spark prefilter slice and a per-row probe."""
 
 import os
 
@@ -146,10 +145,37 @@ def test_field_token_and_multi_token(spark, ds_root, docs_pdf):
     assert got == exp
 
 
+def _tree_per_row(expr, row, params) -> bool:
+    """Per-row reference probe of a bloom tree: one ``bloom.probe`` per
+    leaf over one manifest row's bitsets (null/empty cannot disqualify)."""
+    import numpy as np
+
+    from bloomsearch_spark import bloom
+
+    if expr.kind == "AND":
+        return all(_tree_per_row(ch, row, params) for ch in expr.children)
+    if expr.kind == "OR":
+        return any(_tree_per_row(ch, row, params) for ch in expr.children)
+    which, key = expr.probe_key()
+    raw = row[{"field": "field_bloom", "token": "token_bloom",
+               "fieldtoken": "fieldtoken_bloom"}[which]]
+    if raw is None or len(raw) == 0:
+        return True
+    return bool(bloom.probe(np.frombuffer(raw, np.uint8), [key], params)[0])
+
+
 def test_driver_prune_equivalent_to_spark_prune(spark, ds_root):
     """The semantic keystone: for a sweep of prefilter+bloom queries, the
-    driver-side pandas prune selects EXACTLY the block set the Spark
-    prune_blocks path selects."""
+    driver prune keeps every block that holds a verified match (a full
+    unpruned Spark scan + compile_bloom_verify over the Spark-computed
+    prefilter slice), keeps nothing outside that slice, and equals the
+    per-row reference hierarchy (file blooms, then block blooms, one
+    ``bloom.probe`` per leaf and row)."""
+    from bloomsearch_spark.bloom import BloomParams
+    from bloomsearch_spark.operators.verify import compile_bloom_verify
+    from bloomsearch_spark.plans.search import scan_blocks
+    from bloomsearch_spark.query import compile_prefilter
+
     idx = BloomIndex.load(spark, ds_root)
     queries = [
         new_query().token("stream").build(),
@@ -175,28 +201,43 @@ def test_driver_prune_equivalent_to_spark_prune(spark, ds_root):
     ]
     schema = spark.read.format("bloomsearch").option("root", ds_root).load().schema
     reader = BloomSearchReader({"root": ds_root}, schema)
-    # compare against the HIERARCHICAL Spark path (the driver prune is
-    # hierarchical by construction; the flat path is a superset that keeps
-    # block-bloom FPs whose file bloom rejects — see test_probe_scale)
-    from bloomsearch_spark.plans import search as search_mod
+    files_pdf = idx.files().toPandas()
+    blocks_pdf = idx.blocks().toPandas()
 
-    prev = search_mod.FLAT_PROBE_MAX_BLOCKS, search_mod.FLAT_PROBE_FP_BUDGET
-    search_mod.FLAT_PROBE_MAX_BLOCKS = 0
-    search_mod.FLAT_PROBE_FP_BUDGET = 0.0
-    try:
-        for q in queries:
-            driver_set = {
-                p
-                for p, _ in prune_blocks_driver(
-                    None, ds_root, idx.version, q, reader._table_refs()
-                )
-            }
-            spark_set = {
-                r.data_path for r in prune_blocks(idx, q).select("data_path").collect()
-            }
-            assert driver_set == spark_set, q
-    finally:
-        search_mod.FLAT_PROBE_MAX_BLOCKS, search_mod.FLAT_PROBE_FP_BUDGET = prev
+    def params(row):
+        return BloomParams(int(row["expected_items"]), float(row["fpr"]))
+
+    for q in queries:
+        tree = q.prune_bloom()
+        driver_set = {
+            p
+            for p, _ in prune_blocks_driver(
+                None, ds_root, idx.version, q, reader._table_refs()
+            )
+        }
+        assert driver_set == {p for p, _ in prune_blocks(idx, q)}, q
+        sliced = idx.blocks().filter(compile_prefilter(q.prefilter))
+        slice_set = {r.data_path for r in sliced.select("data_path").collect()}
+        data = scan_blocks(idx, sliced)
+        hit = data.filter(compile_bloom_verify(q.bloom, CFG.indexed_fields, data.columns))
+        matched = {
+            f"file_id={r.file_id}/block_id={r.block_id}"
+            for r in hit.select("file_id", "block_id").distinct().collect()
+        }
+        assert matched <= driver_set <= slice_set, q
+        if tree is None:
+            assert driver_set == slice_set, q
+            continue
+        live_files = {
+            r["file_id"] for _, r in files_pdf.iterrows()
+            if _tree_per_row(tree, r, params(r))
+        }
+        expect = {
+            r["data_path"] for _, r in blocks_pdf.iterrows()
+            if r["data_path"] in slice_set and r["file_id"] in live_files
+            and _tree_per_row(tree, r, params(r))
+        }
+        assert driver_set == expect, q
 
 
 # ---------------------------------------------------------------------------
@@ -928,9 +969,8 @@ def test_pads_partition_filter_all_ops_equivalence():
         Between, Eq, Gt, Gte, In, Lt, Lte, MinMax, Ne, NotBetween, NotIn,
         Partition, PrefilterAnd, PrefilterOr,
     )
-    from bloomsearch_spark.sources.datasource import (
-        BloomSearchReader, eval_prefilter_pdf,
-    )
+    from bloomsearch_spark.operators.probe import eval_prefilter_pdf
+    from bloomsearch_spark.sources.datasource import BloomSearchReader
 
     pids = [None, "", "9", "10", "apple", "z", "éclair", "Zebra", "a b"]
     tbl = pa.table({
@@ -988,9 +1028,8 @@ def test_pads_partition_filter_hypothesis_fuzz():
     from bloomsearch_spark.query import (
         Between, Eq, Gt, Gte, In, Lt, Lte, Ne, NotBetween, NotIn, Partition,
     )
-    from bloomsearch_spark.sources.datasource import (
-        BloomSearchReader, eval_prefilter_pdf,
-    )
+    from bloomsearch_spark.operators.probe import eval_prefilter_pdf
+    from bloomsearch_spark.sources.datasource import BloomSearchReader
 
     text = st.text(
         alphabet=st.characters(blacklist_categories=("Cs",)), max_size=6

@@ -372,48 +372,31 @@ def test_python_only_tokenizer_fallback(spark, tmp_path_factory):
     assert search(spark, idx, new_query().token("beta").build()).count() == 0
 
 
-def test_jvm_probe_equals_udf_probe(spark, index):
-    """The plan-time-compiled Catalyst bloom probe (param-homogeneous fast
-    path) must select exactly the same manifest rows as the generic pandas
-    UDF probe, for every leaf kind and tree shape."""
-    from bloomsearch_spark.operators.probe import probe_filter
-
-    queries = [
-        new_query().token("needle_alpha").build(),
-        new_query().field("lang").build(),
-        new_query().field_token("lang", "go").build(),
-        new_query().match(And(Token("needle_alpha"), FieldToken("lang", "py"))).build(),
-        new_query().match(Or(Token("needle_alpha"), Token("needle_beta"))).build(),
-        new_query().token("zz_absent").build(),
-    ]
-    blocks = index.blocks()
-    params = index.uniform_params("blocks")
-    assert params is not None
-    for q in queries:
-        tree = q.prune_bloom()
-        jvm = {r.block_id for r in blocks.filter(probe_filter(tree, params)).select("block_id").collect()}
-        udf = {r.block_id for r in blocks.filter(probe_filter(tree)).select("block_id").collect()}
-        assert jvm == udf, q
-
-
 def test_scan_stats_measured_fp_blocks(spark, index, oracle_pdf):
-    """Per-block scan stats (BlockStats analog): rows_scanned/rows_matched/
-    blocks_with_matches ride the caller's own action as Observations;
-    fp_blocks is the MEASURED bloom false-positive block count, ~0 at
-    p=0.01."""
+    """Per-block scan stats (BlockStats analog): finish() counts
+    rows_scanned/rows_matched/blocks_with_matches exactly; fp_blocks is
+    the MEASURED bloom false-positive block count, ~0 at p=0.01."""
+    from bloomsearch_spark.operators.verify import compile_bloom_verify
+    from bloomsearch_spark.plans.search import scan_blocks
+
     q = new_query().token("needle_alpha").build()
     got, stats = search(spark, index, q, with_stats=True)
-    n = got.count()  # the caller's action fills the scan observations
+    n = got.count()
     stats.finish()
     assert stats.rows_matched == n
     assert stats.rows_scanned >= n
-    assert 0 < stats.blocks_with_matches <= stats.blocks_after_block_bloom + 1
-    # measured false positives at p=0.01 (HLL approx => small tolerance)
+    # exact reference: the blocks holding a verified match, by full scan
+    full = scan_blocks(index, index.blocks())
+    hit = full.filter(compile_bloom_verify(q.bloom, CFG.indexed_fields, full.columns))
+    exact = hit.select("file_id", "block_id").distinct().count()
+    assert 0 < stats.blocks_with_matches == exact <= stats.blocks_after_block_bloom
+    assert stats.fp_blocks == stats.blocks_after_block_bloom - exact
+    # measured false positives at p=0.01
     assert stats.fp_blocks <= max(1, int(0.05 * stats.total_blocks))
 
 
 def test_scan_stats_miss_query(spark, index):
-    """A fully-pruned query reports exact zeros without any observation."""
+    """A fully-pruned query reports exact zeros without a scan job."""
     q = new_query().token("zz_completely_absent_token").build()
     got, stats = search(spark, index, q, with_stats=True)
     assert got.count() == 0
@@ -426,59 +409,13 @@ def test_scan_stats_miss_query(spark, index):
 
 
 def test_scan_stats_fallback_without_action(spark, index):
-    """If the caller never acts on the result, finish() must not hang
-    (Observation.get blocks forever) — it recomputes via bounded jobs."""
+    """finish() needs no prior action on the result: the scan counters
+    come from their own aggregation job."""
     q = new_query().token("needle_beta").build()
     got, stats = search(spark, index, q, with_stats=True)
-    stats.finish(timeout=0.5)  # observations never fired -> fallback
+    stats.finish()
     assert stats.rows_matched == got.count()
     assert stats.rows_scanned >= stats.rows_matched
-
-
-def test_flat_and_hierarchical_probe_agree(spark, index, oracle_pdf, monkeypatch):
-    """The adaptive flat probe (plans/search.py FLAT_PROBE_MAX_BLOCKS) must
-    return byte-identical results to the full file->block hierarchy — blooms
-    only disqualify, verify is exact, so the two plans differ in pruning
-    work only.  Also pins that stats mode always takes the hierarchy (its
-    funnel counters include the file level)."""
-    from bloomsearch_spark.plans import search as s
-
-    queries = [
-        new_query().token("needle_alpha").build(),
-        new_query().field_token("content", "needle_beta").build(),
-        new_query().token("zz_absent_zz").build(),
-        new_query().match(Or(FieldToken("content", "needle_alpha"),
-                             FieldToken("lang", "go"))).build(),
-    ]
-    assert index.n_blocks() <= s.FLAT_PROBE_MAX_BLOCKS  # default = flat
-    flat = [_result_keys(search(spark, index, q)) for q in queries]
-    monkeypatch.setattr(s, "FLAT_PROBE_MAX_BLOCKS", 0)  # force hierarchy
-    hier = [_result_keys(search(spark, index, q)) for q in queries]
-    assert flat == hier
-
-    # stats mode reports the file funnel regardless of manifest size
-    monkeypatch.undo()
-    _, st = search(spark, index, queries[0], with_stats=True)
-    st.finish()
-    assert st.total_files > 0 and st.files_after_file_bloom >= 0
-
-
-def test_stats_fallback_works_on_pruned_views(spark, index):
-    """r03 review fix: the funnel-counter fallback (taken when the
-    Observations never fire, e.g. overflow or optimizer elision) must
-    filter the COLUMN-PRUNED files view with a predicate that references
-    only its columns — the generic pandas-UDF probe touches all three
-    bitset columns and would raise UNRESOLVED_COLUMN."""
-    from bloomsearch_spark.plans.search import QueryStats, prune_blocks
-
-    q = new_query().token("needle_alpha").build()
-    stats = QueryStats()
-    surv = prune_blocks(index, q, stats)
-    surv.select("data_path").limit(10).collect()  # fire the plan
-    stats._finalize(force_fallback=True)  # recompute via counts on the views
-    assert stats.total_blocks > 0
-    assert stats.total_files > 0
-    assert 0 <= stats.files_after_file_bloom <= stats.total_files
 
 
 def test_clustered_build_null_partition_rows_searchable(spark, tmp_path):

@@ -257,8 +257,8 @@ def test_fold_and_vacuum_manifest(spark, tmp_root):
 
 def test_heterogeneous_param_append_across_segments(spark, tmp_root):
     """Config evolution: an append with DIFFERENT bloom params lands as
-    its own segment; uniform_params degrades to None, the probe falls back
-    to the per-(m,k) pandas UDF over the multi-segment union, and results
+    its own segment; the recorded uniform_params degrade to None, the
+    probe groups rows per (m,k) over the multi-segment union, and results
     stay exact."""
     cfg_b = IndexConfig(
         indexed_fields=("repo", "path", "lang", "content"),
@@ -275,8 +275,7 @@ def test_heterogeneous_param_append_across_segments(spark, tmp_root):
         spark, generate_df(spark, 300, seed=7).coalesce(1), tmp_root, cfg_b,
         mode="append", source_desc="evolved",
     )
-    assert idx.uniform_params("blocks") is None
-    assert idx.uniform_params("files") is None
+    assert idx.meta()["uniform_params"] == {"blocks": None, "files": None}
     got = {
         r.commit
         for r in search(spark, idx, new_query().token("needle_alpha").build()).collect()

@@ -1,8 +1,7 @@
 """Batched needle search (r06) — N tokens, one probe pass, one scan.
 
 Ground truth is the generator pandas frame re-tokenized the same way the
-build inserted tokens (lower + whitespace split); flat and hierarchical
-probe paths must return identical rows (blooms only disqualify)."""
+build inserted tokens (lower + whitespace split)."""
 
 import json
 
@@ -17,7 +16,6 @@ from bloomsearch_spark import (
     new_query,
     search_needles,
 )
-from bloomsearch_spark.plans import search as search_mod
 from bloomsearch_spark.sources.synthetic import generate_df, generate_pdf
 
 CFG = IndexConfig(
@@ -69,15 +67,6 @@ def test_field_scoped(spark, idx):
     assert got == exp and len(exp) > 0
     # a token that exists only in content must not match via lang
     assert {n for n, _ in got} <= {"go"}
-
-
-def test_flat_and_hierarchical_agree(spark, idx, monkeypatch):
-    base = _got(search_needles(spark, idx, NEEDLES))
-    monkeypatch.setattr(search_mod, "FLAT_PROBE_MAX_BLOCKS", 0)  # force hier
-    assert _got(search_needles(spark, idx, NEEDLES)) == base
-    monkeypatch.setattr(search_mod, "FLAT_PROBE_MAX_BLOCKS", 10**9)
-    monkeypatch.setattr(search_mod, "FLAT_PROBE_FP_BUDGET", 10.0**9)
-    assert _got(search_needles(spark, idx, NEEDLES)) == base
 
 
 def test_output_schema_and_duplicates(spark, idx):

@@ -1,20 +1,19 @@
-"""Probe-path behavior on a manifest-scale synthetic index (r04).
+"""Prune behavior on a manifest-scale synthetic index (r04).
 
 synthesize_probe_manifest writes a manifest-ONLY index (real bitsets, no
-data files) so the probe stage can be exercised above the
-FLAT_PROBE_MAX_BLOCKS threshold, where data-backed fixtures are too
-expensive.  Asserts the two probe strategies return IDENTICAL survivor
-sets and that the hierarchy delivers its point: the file level prunes the
-block-bloom workload to a small fraction of the manifest.  Wall-clock
-crossover numbers come from scripts/probe_scale_bench.py (BENCH.md) —
-timing asserts would be flaky under this VM's 2-8x host drift."""
+data files) so the driver prune walk can be exercised at tens of
+thousands of blocks, where data-backed fixtures are too expensive.
+Asserts that every planted block survives, that false-positive survivors
+stay within the configured fpr, and that the hierarchy delivers its
+point: the file level prunes the block-bloom workload to a small
+fraction of the manifest.  Wall-clock numbers come from
+scripts/probe_scale_bench.py — timing asserts would be flaky under host
+drift."""
 
 import pytest
 
 from bloomsearch_spark import new_query
-from bloomsearch_spark.operators.probe import probe_filter
-from bloomsearch_spark.plans import search as search_mod
-from bloomsearch_spark.plans.search import prune_blocks
+from bloomsearch_spark.plans.search import QueryStats, prune_blocks
 from bloomsearch_spark.sources.synthetic import synthesize_probe_manifest
 
 N_BLOCKS = 60_000
@@ -31,70 +30,46 @@ def probe_idx(spark, tmp_path_factory):
     )
 
 
-def _survivors(idx, q, flat: bool) -> list[str]:
-    prev = search_mod.FLAT_PROBE_MAX_BLOCKS, search_mod.FLAT_PROBE_FP_BUDGET
-    search_mod.FLAT_PROBE_MAX_BLOCKS = 2**62 if flat else 0
-    search_mod.FLAT_PROBE_FP_BUDGET = float("inf") if flat else 0.0
-    try:
-        return sorted(
-            r.data_path for r in prune_blocks(idx, q).select("data_path").collect()
-        )
-    finally:
-        search_mod.FLAT_PROBE_MAX_BLOCKS, search_mod.FLAT_PROBE_FP_BUDGET = prev
+def _survivors(idx, q) -> tuple[set, QueryStats]:
+    stats = QueryStats()
+    surv = {p for p, _ in prune_blocks(idx, q, stats)}
+    assert len(surv) == stats.blocks_after_block_bloom
+    return surv, stats
 
 
-def test_natural_path_is_hierarchical_above_threshold(probe_idx):
+def test_planted_blocks_survive_within_fp_bound(probe_idx):
+    """Every planted block survives (no false negatives); the FP overhead
+    is bounded by the configured fpr.  Final query ROWS are exact either
+    way — verify discards FP blocks."""
     assert probe_idx.n_blocks() == N_BLOCKS
-    # both gates exclude the flat probe here: the hard cap and the
-    # measured FP budget (expected spurious reads = n * p = 600 >> 50)
-    assert N_BLOCKS > search_mod.FLAT_PROBE_MAX_BLOCKS
-    assert (
-        N_BLOCKS * probe_idx.config.block_fpr > search_mod.FLAT_PROBE_FP_BUDGET
-    )
-
-
-def test_flat_and_hierarchical_probes_agree(probe_idx):
-    """hier survivors ⊆ flat survivors (the file level additionally prunes
-    block-bloom FPs in non-matching files); every planted block survives
-    both (no false negatives); FP overhead bounded by the configured fpr.
-    Final query ROWS are identical either way — verify discards FP blocks."""
-    q = new_query().token("needle").build()
-    flat = set(_survivors(probe_idx, q, flat=True))
-    hier = set(_survivors(probe_idx, q, flat=False))
-    assert hier <= flat
+    surv, _ = _survivors(probe_idx, new_query().token("needle").build())
     planted = {
         f"file_id=f{i // BPF:08d}/block_id=b{i:09d}"
         for i in range(0, N_BLOCKS, MATCH_EVERY)
     }
-    assert planted <= hier
-    assert len(flat) <= len(planted) + int(0.02 * N_BLOCKS) + 10
+    assert planted <= surv
+    assert len(surv) <= len(planted) + int(0.02 * N_BLOCKS) + 10
 
 
 def test_file_level_prunes_block_workload(probe_idx):
     """The hierarchy's point: block blooms are only evaluated for blocks
     of files that survived the file probe — a small fraction of the
     manifest (sub-linear block-probe work at 10^7+ blocks)."""
-    q = new_query().token("needle").build()
-    fsurv = (
-        probe_idx.files()
-        .filter(probe_filter(q.prune_bloom(), probe_idx.uniform_params("files")))
-        .count()
-    )
+    _, st = _survivors(probe_idx, new_query().token("needle").build())
     planted_files = len(range(0, N_BLOCKS, MATCH_EVERY))
-    assert fsurv >= planted_files
+    assert st.total_files == N_BLOCKS // BPF
+    assert st.total_blocks == st.blocks_after_prefilter == N_BLOCKS
+    assert planted_files <= st.files_after_file_bloom < st.total_files
     # block blooms evaluated under the hierarchy <= fsurv * blocks_per_file
-    assert fsurv * BPF <= 0.25 * N_BLOCKS
+    assert st.files_after_file_bloom * BPF <= 0.25 * N_BLOCKS
+    assert st.blocks_after_block_bloom <= st.files_after_file_bloom * BPF
 
 
 def test_miss_token_prunes_to_fp_floor(probe_idx):
     """An absent token survives only at the bloom false-positive rate
     (bitsets are realistic ~50%-fill randoms, so FPs are nonzero by
-    design), and both probe strategies agree exactly."""
-    q = new_query().token("zz_absent").build()
-    flat = set(_survivors(probe_idx, q, flat=True))
-    hier = set(_survivors(probe_idx, q, flat=False))
-    assert hier <= flat
-    assert len(flat) <= int(0.02 * N_BLOCKS) + 10
-    # the file level earns its keep on misses too: it prunes most of the
-    # block-level FPs (a block FP rarely co-occurs with a file FP)
-    assert len(hier) <= len(flat)
+    design) — and the file level prunes most of the block-level FPs (a
+    block FP rarely co-occurs with a file FP)."""
+    surv, st = _survivors(probe_idx, new_query().token("zz_absent").build())
+    assert len(surv) <= int(0.02 * N_BLOCKS) + 10
+    assert st.files_after_file_bloom <= int(0.05 * st.total_files) + 1

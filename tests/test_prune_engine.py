@@ -1,0 +1,119 @@
+"""The one prune engine: the driver walk behind search(), deletes, upserts
+and needle batches.
+
+Pins two properties of the read path:
+
+- past ``MAX_COLLECTED_BLOCKS`` survivors, search() scans the data root
+  through a broadcast semi-join against the prefilter slice of the
+  manifest — and returns exactly the rows of the path-list scan,
+  deletion-vector masking included;
+- building a read plan on a warm handle starts no Spark job (the prune
+  runs on the driver), and ``QueryStats.finish()`` starts exactly one.
+"""
+
+import pytest
+from pyspark.sql import DataFrame
+
+from bloomsearch_spark import (
+    And,
+    Eq,
+    FieldToken,
+    IndexConfig,
+    Partition,
+    Token,
+    build_index,
+    delete_where,
+    new_query,
+    search,
+    search_needles,
+)
+from bloomsearch_spark.plans import search as search_mod
+from bloomsearch_spark.plans.search import candidate_blocks, scan_blocks
+from bloomsearch_spark.sources.synthetic import generate_df
+
+CFG = IndexConfig(
+    indexed_fields=("repo", "path", "lang", "content"),
+    partition_expr="lang",
+    max_block_rows=100,
+    blocks_per_file=4,
+    sha_col="content",
+)
+
+QUERIES = [
+    new_query().token("needle_alpha").build(),
+    new_query().token("zz_absent_token").build(),
+    new_query().match(And(Token("needle_alpha"), FieldToken("lang", "js"))).build(),
+    new_query().match_prefilter(Partition(Eq("go"))).token("needle_alpha").build(),
+]
+
+
+@pytest.fixture(scope="module")
+def idx(spark, tmp_path_factory):
+    root = str(tmp_path_factory.mktemp("prune-engine"))
+    return build_index(spark, generate_df(spark, 2_000), root, CFG)
+
+
+@pytest.fixture(scope="module")
+def dv_idx(spark, idx):
+    """The same table after a merge-on-read delete of some needle rows."""
+    q = new_query().token("needle_alpha").field_token("lang", "py").build()
+    out, stats = delete_where(spark, idx, q, use_deletion_vectors=True)
+    assert stats.rows_deleted > 0 and out.dvs_refs()
+    return out
+
+
+def _rows(df) -> list:
+    return sorted(tuple(r) for r in df.collect())
+
+
+@pytest.mark.parametrize("which", ["idx", "dv_idx"])
+def test_large_survivor_branch_returns_same_rows(spark, request, monkeypatch, which):
+    index = request.getfixturevalue(which)
+    want = [_rows(search(spark, index, q)) for q in QUERIES]
+    stats_want = search(spark, index, QUERIES[0], with_stats=True)[1].finish()
+    assert want[0] and not want[1] and want[2] and want[3]
+
+    monkeypatch.setattr(search_mod, "MAX_COLLECTED_BLOCKS", 2)
+    # the cap is really crossed: the candidates are a manifest slice
+    assert isinstance(candidate_blocks(index, QUERIES[0]), DataFrame)
+    assert [_rows(search(spark, index, q)) for q in QUERIES] == want
+    # the funnel still counts the whole walk past the cap
+    got, st = search(spark, index, QUERIES[0], with_stats=True)
+    st.finish()
+    for name in ("total_files", "total_blocks", "blocks_after_prefilter",
+                 "files_after_file_bloom", "blocks_after_block_bloom",
+                 "rows_matched", "blocks_with_matches"):
+        assert getattr(st, name) == getattr(stats_want, name), name
+    assert st.rows_matched == got.count()
+
+
+def _job_counter(spark):
+    sc = spark.sparkContext._jsc.sc()
+
+    def last_id() -> int:
+        sc.listenerBus().waitUntilEmpty()
+        jobs = sc.statusStore().jobsList(None)  # newest first
+        return int(jobs.apply(0).jobId()) if jobs.size() else -1
+
+    return last_id
+
+
+def test_read_plans_start_no_jobs_and_finish_one(spark, idx):
+    last_id = _job_counter(spark)
+    q = QUERIES[0]
+    # warm the handle (meta, source schema, compiled paths)
+    search(spark, idx, q).count()
+    search_needles(spark, idx, ["needle_alpha", "needle_beta"]).count()
+
+    before = last_id()
+    out = search(spark, idx, q)
+    needles = search_needles(spark, idx, ["needle_alpha", "needle_beta"])
+    cand = scan_blocks(idx, candidate_blocks(idx, q), with_pos=True)
+    _, stats = search(spark, idx, q, with_stats=True)
+    assert last_id() == before
+    assert out.count() > 0 and needles.count() > 0 and cand.count() > 0
+
+    before = last_id()
+    stats.finish()
+    assert last_id() == before + 1
+    assert stats.rows_matched > 0 and stats.fp_blocks >= 0
