@@ -19,6 +19,12 @@ when building the prune tree (Query.prune_bloom).  Past
 semi-join of the full data root against the prefilter slice of the
 manifest, so the driver never holds an unbounded list; blooms only
 disqualify and verify is exact, so the rows are the same.
+
+Scan planning costs follow the survivors, not the index: the deletion-
+vector anti-join runs only when a surviving block carries DVs (the
+handle's ``dv_data_paths()``; against DV-free blocks it is the
+identity), and the survivor dirs are listed with at most one Spark task
+per core (``sources.manifest.read_parquet``).
 """
 
 from __future__ import annotations
@@ -33,7 +39,7 @@ from pyspark.sql import functions as F
 from ..operators.probe import DriverPruneOverflow, _manifest_batches, prune_blocks_driver
 from ..operators.verify import compile_bloom_verify, compile_regex_verify, json_verify_udf
 from ..query import Query, compile_prefilter
-from ..sources.manifest import BloomIndex
+from ..sources.manifest import BloomIndex, read_parquet
 from ..tokenizer import get_tokenizer
 
 # above this many surviving blocks, switch from an explicit path-list scan
@@ -176,27 +182,38 @@ def _block_read_schema(index: BloomIndex):
 
 
 def _apply_dv_mask(
-    index: BloomIndex, data: DataFrame, with_pos: bool, mask: bool = True
+    index: BloomIndex,
+    data: DataFrame,
+    with_pos: bool,
+    mask: bool = True,
+    keys: list[str] | None = None,
 ) -> DataFrame:
     """Mask deletion-vector positions out of a hive-partitioned block scan
     (``block_id`` partition column present): one anti-join on
     ``(block_id, _metadata.row_index)`` against the exploded DV table —
-    JVM-side, broadcast when small, a no-op frame-identity when the
-    version has no DVs.  ``with_pos=True`` keeps ``_bs_pos`` (the
+    JVM-side, broadcast when small — run only when a scanned block
+    carries DVs.  ``keys`` are the scanned blocks' ``data_path``s when
+    known (the path-list scans): if none of them is in
+    ``index.dv_data_paths()`` the anti-join would be the identity and is
+    skipped; ``keys=None`` (the data-root semi-join scan) masks whenever
+    the version has DVs.  ``with_pos=True`` keeps ``_bs_pos`` (the
     file-relative row position) and ``_bs_fname`` on the output — the
     dv-delete write path needs them to mint new deltas.  ``mask=False``
     skips the anti-join (internal: the DV PURGE rewrite needs the dead
     rows in-frame to subtract them itself)."""
-    dv = index.dv_positions() if mask else None
+    dv = None
+    if mask and (keys is None or not index.dv_data_paths().isdisjoint(keys)):
+        dv = index.dv_positions()
     if dv is None and not with_pos:
         return data
     data = data.withColumn("_bs_pos", F.col("_metadata.row_index"))
     if with_pos:
         data = data.withColumn("_bs_fname", F.col("_metadata.file_name"))
     if dv is not None:
+        # the join moves its keys first; keep the unmasked column order
         data = data.join(
             dv.select("block_id", "_bs_pos"), ["block_id", "_bs_pos"], "left_anti"
-        )
+        ).select(*data.columns)
     return data if with_pos else data.drop("_bs_pos")
 
 
@@ -226,8 +243,10 @@ def scan_blocks(
     sentinel); past it the scan reads the data root and prunes through a
     broadcast semi-join instead.
 
-    Deletion-vector positions are masked out of every returned row set
-    (merge-on-read) — see :func:`_apply_dv_mask`; ``with_pos=True``
+    The block dirs are listed through :func:`read_parquet` (at most one
+    listing task per core).  Deletion-vector positions are masked out of
+    every returned row set (merge-on-read) — by an anti-join only when a
+    scanned block carries DVs, see :func:`_apply_dv_mask`; ``with_pos=True``
     additionally keeps the file-relative row position / file name columns
     (internal: the dv-delete writer).  ``with_block=True`` keeps a
     ``_bs_block`` block-identity column on external scans (internal: the
@@ -239,9 +258,9 @@ def scan_blocks(
         return _scan_external(index, surviving, with_block)
     exp_schema = _block_read_schema(index)
 
-    def _reader():
+    def _read(*paths) -> DataFrame:
         r = spark.read.option("basePath", index.data_dir)
-        return r.schema(exp_schema) if exp_schema is not None else r
+        return read_parquet(spark, paths, r.schema(exp_schema) if exp_schema is not None else r)
 
     if isinstance(surviving, DataFrame):
         keys_df = surviving.select("data_path")
@@ -251,7 +270,7 @@ def scan_blocks(
             # semi-join on the relative path reconstructed from the hive
             # partition dirs.  The DV mask goes first: ``_metadata`` only
             # resolves on the bare file relation.
-            data = _apply_dv_mask(index, _reader().parquet(index.data_dir), with_pos, mask)
+            data = _apply_dv_mask(index, _read(index.data_dir), with_pos, mask)
             data = data.withColumn(
                 "data_path",
                 F.concat(F.lit("file_id="), "file_id", F.lit("/block_id="), "block_id"),
@@ -274,7 +293,7 @@ def scan_blocks(
         some = _any_block_path(index)
         if some is not None:
             one = index.block_paths([some])[0]
-            return _pad_pos(_reader().parquet(one).limit(0))
+            return _pad_pos(_read(one).limit(0))
         # FULLY empty index (empty build / expire-everything): the stored
         # source schema (meta, r04) yields a typed empty frame without
         # touching the (possibly nonexistent) data root
@@ -287,9 +306,8 @@ def scan_blocks(
             return _pad_pos(
                 spark.createDataFrame([], StructType.fromJson(_json.loads(sj)))
             )
-        return _pad_pos(_reader().parquet(index.data_dir).limit(0))
-    paths = index.block_paths(keys)
-    return _apply_dv_mask(index, _reader().parquet(*paths), with_pos, mask)
+        return _pad_pos(_read(index.data_dir).limit(0))
+    return _apply_dv_mask(index, _read(*index.block_paths(keys)), with_pos, mask, keys)
 
 
 def _scan_external(index: BloomIndex, surviving, with_block: bool = False) -> DataFrame:
@@ -327,9 +345,9 @@ def _scan_external(index: BloomIndex, surviving, with_block: bool = False) -> Da
         some = _any_block_path(index)
         if some is None:
             raise ValueError("external index has no blocks")
-        return spark.read.parquet(some).limit(0)
+        return read_parquet(spark, [some]).limit(0)
     data = (
-        spark.read.parquet(*paths)
+        read_parquet(spark, paths)
         .withColumn("data_path", F.input_file_name())
         .withColumn(
             "partition_id",

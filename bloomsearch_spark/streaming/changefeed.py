@@ -456,9 +456,13 @@ class BloomSearchStreamReader(DataSourceStreamReader):
         touched segment, cached on the version's plan entry and pruned
         with it.  Units whose segment has no byte_size column (dv delta
         slices) count as 0 bytes: they cannot stall the feed — the
-        version/block caps still bound them."""
+        version/block caps still bound them.  An unreadable segment
+        raises: counting it as 0 bytes would silently over-admit."""
         import numpy as np
+        import pyarrow as pa
         import pyarrow.compute as pc
+
+        from ..operators.probe import _manifest_batches
 
         info = self._vinfo(n)
         arr = info.get("bytes")
@@ -467,17 +471,19 @@ class BloomSearchStreamReader(DataSourceStreamReader):
             for _kind, ref, nrows, _sub, _dv in info["units"]:
                 if nrows == 0:
                     continue
-                try:
-                    t = fsx.read_parquet_dir(
-                        fsx.join(self.root, "manifest", ref),
-                        columns=["byte_size"],
+                # a missing column reads as nulls (operators.probe.with_columns)
+                batches = _manifest_batches(
+                    [fsx.join(self.root, "manifest", ref)], ["byte_size"]
+                )
+                col = pa.chunked_array(
+                    [b.column(0).cast(pa.int64()) for b in batches], pa.int64()
+                )
+                if len(col) != nrows:
+                    raise FileNotFoundError(
+                        f"manifest segment {ref} holds {len(col)} rows, its "
+                        f"footers counted {nrows}"
                     )
-                    a = np.asarray(
-                        pc.fill_null(t.column("byte_size"), 0), dtype=np.float64
-                    )[:nrows]
-                except Exception:
-                    a = np.zeros(nrows, dtype=np.float64)
-                parts.append(a)
+                parts.append(pc.fill_null(col, 0).to_numpy().astype(np.float64))
             arr = np.concatenate(parts) if parts else np.zeros(0, dtype=np.float64)
             info["bytes"] = arr
         return arr

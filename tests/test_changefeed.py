@@ -950,3 +950,38 @@ def test_changefeed_max_bytes_per_trigger_splits_one_commit(spark, tmp_root):
     )
     o1 = r_both.latestOffset()
     assert (o1["version"], o1["cursor"]) == (1, 2)
+
+
+def test_slot_bytes_reads_dv_slices_as_zero_and_raises_when_unreadable(spark, tmp_root):
+    """max_bytes_per_trigger admission: a dv delta slice has no byte_size
+    column and counts 0 bytes; an unreadable segment raises instead of
+    counting 0 bytes (which would silently over-admit)."""
+    from bloomsearch_spark import delete_where, new_query
+    from bloomsearch_spark.sources import fs as fsx
+    from bloomsearch_spark.streaming.changefeed import BloomSearchStreamReader
+
+    spark.dataSource.register(BloomSearchDataSource)
+    idx = build_index(spark, generate_df(spark, 200), tmp_root, CFG)  # v1
+    q = new_query().token("needle_alpha").build()
+    _, st = delete_where(spark, idx, q, use_deletion_vectors=True)  # v2
+    assert st.rows_deleted > 0
+    schema = (
+        spark.readStream.format("bloomsearch").option("root", tmp_root)
+        .option("change_events", "true").load().schema
+    )
+    opts = {"root": tmp_root, "change_events": "true", "max_bytes_per_trigger": "1000000"}
+
+    r = BloomSearchStreamReader(opts, schema)
+    assert [u[0] for u in r._vinfo(2)["units"]] == ["dvdel"]
+    dv = r._slot_bytes(2)
+    assert len(dv) == r._vinfo(2)["total"] > 0 and not dv.any()
+    v1 = r._slot_bytes(1)
+    assert len(v1) == r._vinfo(1)["total"] and (v1 > 0).all()
+
+    r = BloomSearchStreamReader(opts, schema)
+    ref = r._vinfo(1)["units"][0][1]  # planned: footer row counts cached
+    part = fsx.list_parquet_files(fsx.join(tmp_root, "manifest", ref))[0]
+    with open(fsx.resolve(part)[1], "wb") as f:
+        f.write(b"not parquet")
+    with pytest.raises(Exception, match="[Pp]arquet"):
+        r._slot_bytes(1)

@@ -596,3 +596,31 @@ def test_driver_segment_writes_match_spark_path(spark, tmp_root, tmp_path):
     a2 = BloomIndex.load(spark, r1)
     assert a2.blocks().count() > n_before
     assert search(spark, a2, q).count() >= search(spark, a, q).count()
+
+
+def test_table_rows_falls_back_only_when_the_driver_cannot_read(spark, tmp_root, monkeypatch):
+    """Footer counts return None (the count() fallback) only for a root
+    the driver has no pyarrow filesystem for, or a store error; a corrupt
+    footer or any other error raises instead of silently hiding."""
+    build_index(spark, generate_df(spark, 200), tmp_root, CFG)
+    assert mf.BloomIndex.load(spark, tmp_root).table_rows("blocks") > 0
+    assert mf.BloomIndex(spark, "nosuch://bucket/idx", "v00000001").table_rows("blocks") is None
+
+    def raising(exc):
+        def f(_):
+            raise exc
+        return f
+
+    monkeypatch.setattr(fsx, "parquet_dir_rows", raising(PermissionError("denied")))
+    assert mf.BloomIndex.load(spark, tmp_root).table_rows("blocks") is None
+    monkeypatch.setattr(fsx, "parquet_dir_rows", raising(RuntimeError("a bug")))
+    with pytest.raises(RuntimeError, match="a bug"):
+        mf.BloomIndex.load(spark, tmp_root).table_rows("blocks")
+    monkeypatch.undo()
+
+    idx = mf.BloomIndex.load(spark, tmp_root)
+    (part,) = fsx.list_parquet_files(idx.table_paths("files")[0])
+    with open(fsx.resolve(part)[1], "wb") as f:
+        f.write(b"not parquet")
+    with pytest.raises(Exception, match="[Pp]arquet"):
+        idx.table_rows("files")

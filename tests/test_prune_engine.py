@@ -117,3 +117,67 @@ def test_read_plans_start_no_jobs_and_finish_one(spark, idx):
     stats.finish()
     assert last_id() == before + 1
     assert stats.rows_matched > 0 and stats.fp_blocks >= 0
+
+
+# -- deletion-vector mask scoped to the survivors ---------------------------
+
+GO_NEEDLE = QUERIES[3]  # survivors in the go partition; the DVs are in py
+PY_NEEDLE = new_query().token("needle_alpha").field_token("lang", "py").build()
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def _force_mask(monkeypatch, index):
+    """Make every block look DV'd: scan_blocks then runs the anti-join."""
+    monkeypatch.setattr(type(index), "dv_data_paths", lambda self: frozenset(
+        p for p, _ in search_mod.prune_blocks(self, new_query().build())
+    ))
+
+
+def test_dv_free_survivors_skip_the_anti_join(spark, dv_idx, monkeypatch):
+    surv = search_mod.prune_blocks(dv_idx, GO_NEEDLE)
+    assert surv and dv_idx.dv_data_paths().isdisjoint(p for p, _ in surv)
+    got = scan_blocks(dv_idx, surv)
+    assert "LeftAnti" not in _plan(got)
+    assert "LeftAnti" not in _plan(search(spark, dv_idx, GO_NEEDLE))
+
+    _force_mask(monkeypatch, dv_idx)
+    want = scan_blocks(dv_idx, surv)
+    assert "LeftAnti" in _plan(want)
+    assert _rows(got) == _rows(want)
+
+
+def test_dv_carrying_survivors_still_drop_deleted_rows(spark, idx, dv_idx):
+    surv = search_mod.prune_blocks(dv_idx, PY_NEEDLE)
+    assert not dv_idx.dv_data_paths().isdisjoint(p for p, _ in surv)
+    assert search(spark, idx, PY_NEEDLE).count() > 0
+    out = search(spark, dv_idx, PY_NEEDLE)
+    assert "LeftAnti" in _plan(out)
+    assert out.count() == 0
+
+
+def test_with_pos_on_dv_free_survivors_keeps_position_columns(dv_idx, monkeypatch):
+    surv = search_mod.prune_blocks(dv_idx, GO_NEEDLE)
+    got = scan_blocks(dv_idx, surv, with_pos=True)
+    assert "LeftAnti" not in _plan(got)
+    cols = ["file_id", "block_id", "_bs_pos", "_bs_fname"]
+    rows = got.select(*cols).collect()
+    assert rows and all(r._bs_pos is not None and r._bs_fname for r in rows)
+
+    _force_mask(monkeypatch, dv_idx)
+    want = scan_blocks(dv_idx, surv, with_pos=True).select(*cols)
+    assert sorted(map(tuple, rows)) == _rows(want)
+
+
+def test_time_travel_before_the_dv_commit_reads_the_deleted_rows(spark, idx, dv_idx):
+    from bloomsearch_spark.sources.manifest import BloomIndex
+
+    before = BloomIndex.load(spark, idx.root, version=idx.version)
+    current = BloomIndex.load(spark, idx.root)
+    assert current.version == dv_idx.version != before.version
+    assert not before.dv_data_paths() and current.dv_data_paths()
+    assert _rows(search(spark, before, PY_NEEDLE)) == _rows(search(spark, idx, PY_NEEDLE))
+    assert search(spark, before, PY_NEEDLE).count() > 0
+    assert search(spark, current, PY_NEEDLE).count() == 0
