@@ -22,7 +22,9 @@ distinction matters).
 
 from __future__ import annotations
 
+import functools
 import json
+import operator
 import re
 from typing import Optional, Sequence
 
@@ -43,20 +45,108 @@ from ..tokenizer import (
 )
 
 
-def _token_in_col(col: str, token: str, tokenizer: Tokenizer) -> Column:
-    """token-membership test using the INDEX's configured tokenizer — the
-    verify stage must re-derive tokens exactly as the build inserted them
-    (the reference stores one ValueTokenizerFunc on the engine config).
-    Prefers the tokenizer's Catalyst face (whole-stage codegen); falls back
-    to an Arrow-batched pandas UDF over value_fn for python-only custom
-    tokenizers."""
-    c = F.col(col).cast("string")
-    toks = (
-        tokenizer.sql_tokens(c)
-        if tokenizer.sql_tokens is not None
-        else tokens_udf(tokenizer)(c)
-    )
-    return F.coalesce(F.array_contains(toks, token), F.lit(False))
+class VerifyColumns:
+    """Compiles bloom and regex trees to exact Catalyst predicates over
+    the columns of one scan.
+
+    The Columns that do not depend on the query are built once per
+    instance and shared by every predicate it compiles: each column
+    reference and string cast, each indexed column's token array, and
+    the constant literals.  ``search()`` keeps one instance per index
+    handle and scan schema, so a warm point search builds only its
+    per-token leaves (each Column built is a py4j round trip).  A Column
+    holds a JVM reference that dies with the session that built it:
+    keep an instance on an object of that session, never at module
+    level.
+
+    Token tests use the INDEX's configured tokenizer — the verify stage
+    must re-derive tokens exactly as the build inserted them (the
+    reference stores one ValueTokenizerFunc on the engine config).  The
+    tokenizer's Catalyst face is preferred (whole-stage codegen); python-
+    only custom tokenizers fall back to an Arrow-batched pandas UDF over
+    value_fn."""
+
+    def __init__(
+        self,
+        indexed_fields: Sequence[str],
+        columns: Sequence[str],
+        tokenizer: Tokenizer = WHITESPACE_LOWER,
+    ):
+        self._columns = set(columns)
+        self._indexed = [c for c in indexed_fields if c in self._columns]
+        self._tokenizer = tokenizer
+        self._memo: dict = {}
+
+    def _memoized(self, key, build) -> Column:
+        col = self._memo.get(key)
+        if col is None:
+            col = self._memo[key] = build()
+        return col
+
+    def _lit(self, value: bool) -> Column:
+        return self._memoized(("lit", value), lambda: F.lit(value))
+
+    def _col(self, name: str) -> Column:
+        return self._memoized(("col", name), lambda: F.col(name))
+
+    def _string(self, name: str) -> Column:
+        return self._memoized(("string", name), lambda: self._col(name).cast("string"))
+
+    def _tokens(self, name: str) -> Column:
+        tok = self._tokenizer
+
+        def build() -> Column:
+            c = self._string(name)
+            return tok.sql_tokens(c) if tok.sql_tokens is not None else tokens_udf(tok)(c)
+
+        return self._memoized(("tokens", name), build)
+
+    def _token_in(self, name: str, token: str) -> Column:
+        # nvl(x, false) is Catalyst's coalesce(x, false): a NULL value
+        # holds no token
+        return F.nvl(F.array_contains(self._tokens(name), token), self._lit(False))
+
+    def _fold(self, op, parts: list, empty: bool) -> Column:
+        return functools.reduce(op, parts) if parts else self._lit(empty)
+
+    def _bloom(self, expr: BloomExpr) -> Column:
+        """Bloom tree -> exact predicate; see :func:`compile_bloom_verify`."""
+        if expr.kind == "AND":
+            return self._fold(operator.and_, [self._bloom(ch) for ch in expr.children], True)
+        if expr.kind == "OR":
+            return self._fold(operator.or_, [self._bloom(ch) for ch in expr.children], False)
+        if expr.kind == "FIELD":
+            if expr.field not in self._indexed:
+                return self._lit(False)
+            return self._col(expr.field).isNotNull()
+        if expr.kind == "TOKEN":
+            return self._fold(
+                operator.or_, [self._token_in(c, expr.token) for c in self._indexed], False
+            )
+        if expr.kind == "FIELD_TOKEN":
+            if expr.field not in self._indexed:
+                return self._lit(False)
+            return self._token_in(expr.field, expr.token)
+        raise AssertionError(expr.kind)
+
+    def _regex(self, expr: RegexExpr) -> Column:
+        """Regex tree -> predicate; see :func:`compile_regex_verify`."""
+        if expr.kind == "AND":
+            return self._fold(operator.and_, [self._regex(ch) for ch in expr.children], True)
+        if expr.kind == "OR":
+            return self._fold(operator.or_, [self._regex(ch) for ch in expr.children], False)
+        if expr.field not in self._columns:
+            return self._lit(False)
+        return F.nvl(self._string(expr.field).rlike(expr.pattern), self._lit(False))
+
+    def predicate(self, bloom: Optional[BloomExpr], regex: Optional[RegexExpr]) -> Column:
+        """``bloom`` AND ``regex`` (either may be None: no condition)."""
+        parts = []
+        if bloom is not None:
+            parts.append(self._bloom(bloom))
+        if regex is not None:
+            parts.append(self._regex(regex))
+        return self._fold(operator.and_, parts, True)
 
 
 def compile_bloom_verify(
@@ -80,54 +170,13 @@ def compile_bloom_verify(
     subset.  "Not indexed" deterministically means "cannot match" (the
     reference indexes every field, so the case has no Go analog).
     """
-    if expr is None:
-        return F.lit(True)
-    cols = set(columns)
-    indexed = set(indexed_fields) & cols
-    if expr.kind == "AND":
-        out = F.lit(True)
-        for ch in expr.children:
-            out = out & compile_bloom_verify(ch, indexed_fields, columns, tokenizer)
-        return out
-    if expr.kind == "OR":
-        out = F.lit(False)
-        for ch in expr.children:
-            out = out | compile_bloom_verify(ch, indexed_fields, columns, tokenizer)
-        return out
-    if expr.kind == "FIELD":
-        return F.col(expr.field).isNotNull() if expr.field in indexed else F.lit(False)
-    if expr.kind == "TOKEN":
-        out = F.lit(False)
-        for c in indexed_fields:
-            if c in cols:
-                out = out | _token_in_col(c, expr.token, tokenizer)
-        return out
-    if expr.kind == "FIELD_TOKEN":
-        if expr.field not in indexed:
-            return F.lit(False)
-        return _token_in_col(expr.field, expr.token, tokenizer)
-    raise AssertionError(expr.kind)
+    return VerifyColumns(indexed_fields, columns, tokenizer).predicate(expr, None)
 
 
 def compile_regex_verify(expr: Optional[RegexExpr], columns: Sequence[str]) -> Column:
     """Regex tree -> Catalyst predicate on full field value strings
     (final-stage AND after bloom verification, README.md:140-166)."""
-    if expr is None:
-        return F.lit(True)
-    cols = set(columns)
-    if expr.kind == "AND":
-        out = F.lit(True)
-        for ch in expr.children:
-            out = out & compile_regex_verify(ch, columns)
-        return out
-    if expr.kind == "OR":
-        out = F.lit(False)
-        for ch in expr.children:
-            out = out | compile_regex_verify(ch, columns)
-        return out
-    if expr.field not in cols:
-        return F.lit(False)
-    return F.coalesce(F.col(expr.field).cast("string").rlike(expr.pattern), F.lit(False))
+    return VerifyColumns((), columns).predicate(None, expr)
 
 
 # ---------------------------------------------------------------------------

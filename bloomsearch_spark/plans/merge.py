@@ -922,7 +922,7 @@ def delete_where(
     if use_deletion_vectors:
         return _delete_where_dv(spark, index, query)
     _refuse_shallow_clone(index, "delete_where")
-    from .search import candidate_blocks, scan_blocks
+    from .search import candidate_blocks, scan_blocks, verify_predicate
 
     stats = DeleteStats()
     blocks = index.blocks()
@@ -931,7 +931,7 @@ def delete_where(
 
     surviving = candidate_blocks(index, query)
     data = scan_blocks(index, surviving)
-    pred = _delete_pred(index, data, query)
+    pred = verify_predicate(index, query, data.columns)
 
     marked = data.select(
         *[c for c in data.columns if c != "data_path"]
@@ -951,27 +951,6 @@ def delete_where(
     return out
 
 
-def _delete_pred(index: BloomIndex, data: DataFrame, query) -> Column:
-    """EXACT row-match predicate for ``query`` over a candidate scan — the
-    same truth stage search uses (Catalyst expressions; the pandas twin
-    for schemaless json_col indexes)."""
-    from ..operators.verify import (
-        compile_bloom_verify,
-        compile_regex_verify,
-        json_verify_udf,
-    )
-    from ..tokenizer import get_tokenizer
-
-    cfg = index.config
-    tok = get_tokenizer(cfg.tokenizer)
-    if cfg.json_col is not None:
-        return json_verify_udf(query.bloom, query.regex, tok)(F.col(cfg.json_col))
-    cols = data.columns
-    return compile_bloom_verify(query.bloom, cfg.indexed_fields, cols, tok) & (
-        compile_regex_verify(query.regex, cols)
-    )
-
-
 def _delete_where_dv(
     spark: SparkSession, index: BloomIndex, query
 ) -> tuple[BloomIndex, DeleteStats]:
@@ -987,7 +966,7 @@ def _delete_where_dv(
     block; the commit references the parent's blocks/files segments
     verbatim and appends ONE dvs segment + a lineage delta — zero data
     bytes move at any table size."""
-    from .search import candidate_blocks, scan_blocks
+    from .search import candidate_blocks, scan_blocks, verify_predicate
 
     stats = DeleteStats()
     blocks = index.blocks()
@@ -998,7 +977,7 @@ def _delete_where_dv(
     data = scan_blocks(index, surviving, with_pos=True)
     if "block_id" not in data.columns:
         return index, stats  # fully-empty index: nothing can match
-    pred = _delete_pred(index, data, query)
+    pred = verify_predicate(index, query, data.columns)
     matched = data.filter(pred).select("block_id", "_bs_pos", "_bs_fname")
 
     version_guess, _ = mf.next_version_dir(index.root)

@@ -25,10 +25,24 @@ vector anti-join runs only when a surviving block carries DVs (the
 handle's ``dv_data_paths()``; against DV-free blocks it is the
 identity), and the survivor dirs are listed with at most one Spark task
 per core (``sources.manifest.read_parquet``).
+
+A point search's cost is fixed per query, so it is kept small.  The
+query-independent Columns of the plan (each indexed column's token
+array, the literals, the output projection) are built once per index
+handle and scan schema (``_plan_pieces``); a warm search builds only its
+per-token leaves.  When exactly one block of an internal index survives,
+the result is single-partition (``coalesce(1)``): Spark then plans
+``count()`` and other global aggregates over it as one stage, one job
+instead of a scan job plus a shuffle stage.  No parallelism is lost: a
+block holds at most ``max_block_rows`` rows, far below pyarrow's
+1,048,576-row row group, so its file is one row group, which one task
+reads anyway.  External blocks (whole source files, possibly many row
+groups) and multi-block results keep Spark's partitioning.
 """
 
 from __future__ import annotations
 
+from contextlib import nullcontext
 from dataclasses import dataclass, field
 
 import pyarrow as pa
@@ -37,9 +51,9 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.probe import DriverPruneOverflow, _manifest_batches, prune_blocks_driver
-from ..operators.verify import compile_bloom_verify, compile_regex_verify, json_verify_udf
+from ..operators.verify import VerifyColumns, json_verify_udf
 from ..query import Query, compile_prefilter
-from ..sources.manifest import BloomIndex, read_parquet
+from ..sources.manifest import BloomIndex, capped_listing, read_parquet
 from ..tokenizer import get_tokenizer
 
 # above this many surviving blocks, switch from an explicit path-list scan
@@ -270,7 +284,9 @@ def scan_blocks(
             # semi-join on the relative path reconstructed from the hive
             # partition dirs.  The DV mask goes first: ``_metadata`` only
             # resolves on the bare file relation.
-            data = _apply_dv_mask(index, _read(index.data_dir), with_pos, mask)
+            with capped_listing(spark):
+                root = _read(index.data_dir)
+            data = _apply_dv_mask(index, root, with_pos, mask)
             data = data.withColumn(
                 "data_path",
                 F.concat(F.lit("file_id="), "file_id", F.lit("/block_id="), "block_id"),
@@ -306,7 +322,8 @@ def scan_blocks(
             return _pad_pos(
                 spark.createDataFrame([], StructType.fromJson(_json.loads(sj)))
             )
-        return _pad_pos(_read(index.data_dir).limit(0))
+        with capped_listing(spark):
+            return _pad_pos(_read(index.data_dir).limit(0))
     return _apply_dv_mask(index, _read(*index.block_paths(keys)), with_pos, mask, keys)
 
 
@@ -318,6 +335,7 @@ def _scan_external(index: BloomIndex, surviving, with_block: bool = False) -> Da
     (plans/external.py module docstring)."""
     spark = index.spark
     cfg = index.config
+    dirs = False
     if isinstance(surviving, DataFrame):
         pairs = surviving.select("data_path", "partition_id")
         keys = pairs.limit(MAX_COLLECTED_BLOCKS + 1).collect()
@@ -326,6 +344,7 @@ def _scan_external(index: BloomIndex, surviving, with_block: bool = False) -> Da
             # dirnames — bounded by directory count, not block count) and
             # let the semi-join below re-derive block membership; never
             # collect the full per-block path list to the driver
+            dirs = True
             paths = sorted(
                 r.d
                 for r in surviving.select(
@@ -346,9 +365,11 @@ def _scan_external(index: BloomIndex, surviving, with_block: bool = False) -> Da
         if some is None:
             raise ValueError("external index has no blocks")
         return read_parquet(spark, [some]).limit(0)
+    # a directory may hold more subdirectories than Spark lists serially
+    with capped_listing(spark) if dirs else nullcontext():
+        data = read_parquet(spark, paths)
     data = (
-        read_parquet(spark, paths)
-        .withColumn("data_path", F.input_file_name())
+        data.withColumn("data_path", F.input_file_name())
         .withColumn(
             "partition_id",
             F.coalesce(F.expr(cfg.partition_expr).cast("string"), F.lit("")),
@@ -364,6 +385,45 @@ def _scan_external(index: BloomIndex, surviving, with_block: bool = False) -> Da
     return out.drop("data_path", "partition_id")
 
 
+def _plan_pieces(index: BloomIndex, columns: list[str]) -> tuple[VerifyColumns, list[Column]]:
+    """The query-independent pieces of a read plan over a scan of
+    ``index`` with ``columns``: the verify compiler (its column token
+    arrays and literals) and the output projection (source columns in
+    stored order, physical -> logical names, engine columns dropped).
+
+    Memoized on the handle next to ``meta()``: a version is immutable,
+    and a Column holds a JVM reference of the handle's session, so the
+    memo lives and dies with the handle."""
+    memo = getattr(index, "_plan_pieces", None)
+    if memo is None:
+        memo = index._plan_pieces = {}
+    key = tuple(columns)
+    pieces = memo.get(key)
+    if pieces is None:
+        cfg = index.config
+        data = [c for c in columns if c != "_bs_block"]
+        verify = VerifyColumns(cfg.indexed_fields, data, get_tokenizer(cfg.tokenizer))
+        out = data
+        source_columns = index.meta().get("source_columns")
+        if source_columns:
+            present = set(data)
+            out = [c for c in source_columns if c in present]
+        pieces = memo[key] = (verify, index.logical_projection(out))
+    return pieces
+
+
+def verify_predicate(index: BloomIndex, query: Query, columns: list[str]) -> Column:
+    """The exact row-match predicate of a (physical-named) ``query`` over
+    a scan of ``index`` with ``columns`` — the truth stage of search(),
+    deletes and upserts: Catalyst expressions, or the pandas walker for
+    schemaless ``json_col`` indexes."""
+    cfg = index.config
+    if cfg.json_col is not None:
+        tok = get_tokenizer(cfg.tokenizer)
+        return json_verify_udf(query.bloom, query.regex, tok)(F.col(cfg.json_col))
+    return _plan_pieces(index, columns)[0].predicate(query.bloom, query.regex)
+
+
 def search(
     spark: SparkSession,
     index: BloomIndex,
@@ -374,24 +434,26 @@ def search(
 
     Returns the matching source rows as a DataFrame (original columns
     only), optionally with a QueryStats prune funnel.
+
+    When exactly one block of an internal index survives, the result is
+    one partition (``coalesce(1)``), so Spark plans ``count()`` and other
+    global aggregates over it as one stage — one job, no Exchange.  That
+    loses no parallelism: a block file is one parquet row group (blocks
+    hold at most ``max_block_rows`` rows, far below the writer's
+    1,048,576-row group), which one task reads anyway.  External blocks
+    (whole source files) and multi-block results keep Spark's
+    partitioning.
     """
-    cfg = index.config
     # column mapping (r06): queries arrive in LOGICAL names; everything
     # stored (bloom keys, zone maps, parquet columns) is physical
     from .colmap import translate_query
 
     query = translate_query(index, query)
     stats = QueryStats() if with_stats else None
-    data = scan_blocks(index, candidate_blocks(index, query, stats), with_block=with_stats)
-
-    tok = get_tokenizer(cfg.tokenizer)
-    if cfg.json_col is not None:
-        pred = json_verify_udf(query.bloom, query.regex, tok)(F.col(cfg.json_col))
-    else:
-        cols = [c for c in data.columns if c != "_bs_block"]
-        pred = compile_bloom_verify(query.bloom, cfg.indexed_fields, cols, tok) & (
-            compile_regex_verify(query.regex, cols)
-        )
+    surviving = candidate_blocks(index, query, stats)
+    data = scan_blocks(index, surviving, with_block=with_stats)
+    columns = data.columns
+    pred = verify_predicate(index, query, columns)
 
     if stats is not None and stats.blocks_after_block_bloom == 0:
         # nothing survived pruning: scan counters are exactly zero
@@ -399,17 +461,14 @@ def search(
     elif stats is not None:
         block = (
             F.col("_bs_block")
-            if "_bs_block" in data.columns
+            if "_bs_block" in columns
             else F.concat_ws("/", "file_id", "block_id")
         )
         stats._scan = (data, pred, block)
-    out = data.filter(pred).drop("_bs_block")
-
-    source_columns = index.meta().get("source_columns")
-    if source_columns:
-        out = out.select(*[c for c in source_columns if c in out.columns])
-    # physical -> logical names at the edge (identity when unmapped)
-    out = index.rename_to_logical(out)
+    # the projection drops engine columns and maps physical -> logical names
+    out = data.filter(pred).select(*_plan_pieces(index, columns)[1])
+    if isinstance(surviving, list) and len(surviving) == 1 and not index.meta().get("external", False):
+        out = out.coalesce(1)
 
     if with_stats:
         return out, stats

@@ -53,9 +53,10 @@ from __future__ import annotations
 import json
 import threading
 import time
+from contextlib import contextmanager
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import IndexConfig
@@ -715,36 +716,57 @@ def carried_meta(parent_meta: dict, for_append: bool = False) -> dict:
     return out
 
 
-# Spark's task cap for a distributed listing job (default 10000: one task
-# per path); read_parquet lowers it for the duration of one read
+# Spark lists up to this many paths serially on the driver, more (and
+# more subdirectories of one path) in a distributed job of one task per
+# path, up to the cap
+_LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
 _LISTING_PARALLELISM = "spark.sql.sources.parallelPartitionDiscovery.parallelism"
-_LISTING_LOCK = threading.Lock()
+# re-entrant: read_parquet may run inside capped_listing
+_LISTING_LOCK = threading.RLock()
 
 
-def read_parquet(spark: SparkSession, paths, reader=None) -> DataFrame:
-    """``(reader or spark.read).parquet(*paths)`` with the file listing
-    capped at one Spark task per core.
-
-    The reader lists its paths eagerly: up to 32 on the driver, more in
-    one distributed job of one task per path by default, so its cost
-    followed the index (0.98 s at 137 block dirs, 20.1 s at 5,000;
-    local[4] on a 4-CPU host).  Capped, it stays one job — object stores
-    keep their parallel listing — of at most ``defaultParallelism``
-    tasks.  The session conf is set under a module lock for the call and
-    then restored, or unset, even when the read raises."""
-    reader = spark.read if reader is None else reader
+@contextmanager
+def capped_listing(spark: SparkSession):
+    """Cap Spark's distributed file listing at one task per core while
+    the block runs: under a module lock, set the session's listing
+    parallelism to min(current, ``defaultParallelism``) and restore it,
+    or unset it, on exit — also when the block raises."""
     conf = spark.conf
     with _LISTING_LOCK:
         prev = conf.get(_LISTING_PARALLELISM, None)
         cap = min(int(conf.get(_LISTING_PARALLELISM)), spark.sparkContext.defaultParallelism)
         conf.set(_LISTING_PARALLELISM, str(cap))
         try:
-            return reader.parquet(*paths)
+            yield
         finally:
             if prev is None:
                 conf.unset(_LISTING_PARALLELISM)
             else:
                 conf.set(_LISTING_PARALLELISM, prev)
+
+
+def read_parquet(spark: SparkSession, paths, reader=None) -> DataFrame:
+    """``(reader or spark.read).parquet(*paths)`` for a list of LEAF paths
+    (files, or directories of files: block dirs, manifest segments), with
+    the file listing capped at one Spark task per core.
+
+    The reader lists its paths eagerly: up to
+    ``parallelPartitionDiscovery.threshold`` (32) serially on the
+    driver, more in one distributed job of one task per path by default,
+    so its cost followed the index (0.98 s at 137 block dirs, 20.1 s at
+    5,000; local[4] on a 4-CPU host).  Past the threshold the read runs
+    under :func:`capped_listing`: still one job — object stores keep
+    their parallel listing — of at most ``defaultParallelism`` tasks.
+    Up to it the cap would change nothing, so the read leaves the conf
+    alone (a point search reads one block dir).  A directory with more
+    subdirectories than the threshold is listed by a distributed job
+    whatever the path count: read such a tree root under
+    :func:`capped_listing` directly."""
+    reader = spark.read if reader is None else reader
+    if len(paths) <= int(spark.conf.get(_LISTING_THRESHOLD)):
+        return reader.parquet(*paths)
+    with capped_listing(spark):
+        return reader.parquet(*paths)
 
 
 @dataclass
@@ -1012,25 +1034,27 @@ class BloomIndex:
         inv = {p: l for l, p in m.items()}
         return [inv[p] for p in cols if p in inv]
 
-    def rename_to_logical(self, df: DataFrame) -> DataFrame:
-        """Physical-named frame -> logical-named projection: mapped
-        columns alias to their logical name, retired (dropped) physicals
-        are excluded, anything else (internal columns) passes through.
-        Identity no-op when the table has no mapping."""
-        m = self.meta().get("column_mapping")
-        if not m:
-            return df
+    def logical_projection(self, columns) -> list[Column]:
+        """Select list taking physical ``columns`` to logical names:
+        mapped columns alias to their logical name, retired (dropped)
+        physicals are excluded, anything else (internal columns) passes
+        through."""
+        m = self.meta().get("column_mapping") or {}
         inv = {p: l for l, p in m.items()}
         retired = set(self.meta().get("retired_columns") or [])
-        cols = []
-        for c in df.columns:
-            if c in inv:
-                cols.append(F.col(c).alias(inv[c]))
-            elif c in retired:
-                continue
-            else:
-                cols.append(F.col(c))
-        return df.select(*cols)
+        return [
+            F.col(c).alias(inv[c]) if c in inv else F.col(c)
+            for c in columns
+            if c in inv or c not in retired
+        ]
+
+    def rename_to_logical(self, df: DataFrame) -> DataFrame:
+        """Physical-named frame -> logical-named projection
+        (:meth:`logical_projection`).  Identity no-op when the table has
+        no mapping."""
+        if not self.meta().get("column_mapping"):
+            return df
+        return df.select(*self.logical_projection(df.columns))
 
     def meta(self) -> dict:
         m = getattr(self, "_meta", None)

@@ -181,3 +181,54 @@ def test_time_travel_before_the_dv_commit_reads_the_deleted_rows(spark, idx, dv_
     assert _rows(search(spark, before, PY_NEEDLE)) == _rows(search(spark, idx, PY_NEEDLE))
     assert search(spark, before, PY_NEEDLE).count() > 0
     assert search(spark, current, PY_NEEDLE).count() == 0
+
+
+# -- one-block searches are one partition -----------------------------------
+
+
+def _path_query(path: str):
+    return new_query().field_token("path", path).build()
+
+
+def _one_block_path(index, rows) -> str:
+    """The first of ``rows``' paths whose lookup keeps exactly one block."""
+    for r in rows:
+        if len(search_mod.prune_blocks(index, _path_query(r.path))) == 1:
+            return r.path
+    raise AssertionError("no one-block path lookup")
+
+
+def test_one_block_search_runs_one_job(spark, idx):
+    p = _one_block_path(idx, search(spark, idx, QUERIES[0]).collect())
+    last_id = _job_counter(spark)
+    search(spark, idx, _path_query(p)).count()  # warm
+
+    out = search(spark, idx, _path_query(p))
+    assert "Exchange" not in out.groupBy().count()._jdf.queryExecution().executedPlan().toString()
+    before = last_id()
+    assert out.count() == 1
+    assert last_id() == before + 1
+    before = last_id()
+    assert [r.path for r in out.collect()] == [p]
+    assert last_id() == before + 1
+
+
+def test_multi_block_search_keeps_the_scan_partitioning(spark, idx):
+    surv = search_mod.prune_blocks(idx, QUERIES[0])
+    n = scan_blocks(idx, surv).rdd.getNumPartitions()
+    assert len(surv) > 1 and n > 1
+    assert search(spark, idx, QUERIES[0]).rdd.getNumPartitions() == n
+
+
+def test_one_block_search_on_a_dv_block_drops_deleted_rows(spark, idx, dv_idx):
+    deleted = search(spark, idx, PY_NEEDLE).collect()
+    p = _one_block_path(dv_idx, deleted)
+    surv = search_mod.prune_blocks(dv_idx, _path_query(p))
+    assert {d for d, _ in surv} <= dv_idx.dv_data_paths()
+    assert search(spark, idx, _path_query(p)).count() == 1
+    assert search(spark, dv_idx, _path_query(p)).count() == 0
+    # the block's live rows are still found
+    dead = {r.path for r in deleted}
+    live = [r.path for r in scan_blocks(dv_idx, surv).select("path").collect()]
+    assert live and not dead.intersection(live)
+    assert [r.path for r in search(spark, dv_idx, _path_query(live[0])).collect()] == [live[0]]

@@ -119,3 +119,36 @@ def test_concurrent_scans_leave_the_conf_unchanged(spark, many, restore_conf):
             assert spark.conf.get(KEY, None) == value
     finally:
         sys.setswitchinterval(interval)
+
+
+def test_reads_up_to_the_threshold_leave_the_conf_alone(spark, many, restore_conf, monkeypatch):
+    """Spark lists up to ``parallelPartitionDiscovery.threshold`` paths
+    serially on the driver, where the cap changes nothing: such reads
+    write no conf and start no listing job."""
+    idx, surv = many
+    threshold = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    spark.conf.unset(KEY)
+    writes = []
+    conf = type(spark.conf)
+    for name in ("set", "unset"):
+        write = getattr(conf, name)
+        monkeypatch.setattr(
+            conf, name, lambda self, *a, _w=write, _n=name: (writes.append((_n, a)), _w(self, *a))[1]
+        )
+    assert _new_jobs(spark, lambda: scan_blocks(idx, surv[:32])) == []
+    assert writes == [] and spark.conf.get(KEY, None) is None
+
+    # the threshold is the session's: below it the capped listing job runs
+    prev = spark.conf.get(threshold, None)
+    spark.conf.set(threshold, "8")
+    try:
+        writes.clear()
+        jobs = _new_jobs(spark, lambda: scan_blocks(idx, surv[:20]))
+        assert len(jobs) == 1 and sum(jobs[0]) <= spark.sparkContext.defaultParallelism
+        assert [w[0] for w in writes] == ["set", "unset"]
+    finally:
+        if prev is None:
+            spark.conf.unset(threshold)
+        else:
+            spark.conf.set(threshold, prev)
+    assert spark.conf.get(KEY, None) is None
