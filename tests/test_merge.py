@@ -269,13 +269,24 @@ def test_distributed_planner_matches_local_1m(spark):
     )
     assert plan_block_merge(sl, 1000) == local2
 
-    dist = _plan_mapping_df(
-        spark.createDataFrame(pdf).repartition(32),
-        ["file_id", "partition_id", "expected_items", "fpr"],
-        plan_block_merge,
-        "block_id, merged",
-        max_block_rows=1000,
-    ).toPandas()
+    # the 1M-row frame crosses Python <-> JVM through Arrow (row-by-row
+    # pickling spent about a minute on it)
+    arrow = "spark.sql.execution.arrow.pyspark.enabled"
+    prev = spark.conf.get(arrow, None)
+    spark.conf.set(arrow, "true")
+    try:
+        dist = _plan_mapping_df(
+            spark.createDataFrame(pdf).repartition(32),
+            ["file_id", "partition_id", "expected_items", "fpr"],
+            plan_block_merge,
+            "block_id, merged",
+            max_block_rows=1000,
+        ).toPandas()
+    finally:
+        if prev is None:
+            spark.conf.unset(arrow)
+        else:
+            spark.conf.set(arrow, prev)
     assert len(local) > 100_000  # the synthetic shape actually merges
     assert dict(zip(dist["block_id"], dist["merged"])) == local
 

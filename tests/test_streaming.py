@@ -4,6 +4,7 @@ commit, bloom_tree_engine_test.go:123-292); replayed batches are no-ops
 (exactly-once watermark)."""
 
 import os
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -558,6 +559,15 @@ def test_streaming_exact_dedup_matches_batch(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    # pending processing-time timeouts keep the query running no-data
+    # batches, so it neither terminates nor reports "all available
+    # processed": wait until it has read the 50 source rows, then stop it
+    try:
+        deadline = time.monotonic() + 120
+        while sum(p["numInputRows"] for p in q.recentProgress) < 50:
+            assert q.exception() is None and time.monotonic() < deadline
+            time.sleep(0.2)
+    finally:
+        q.stop()
     got = spark.table("sdd_ttl").count()
     assert got > 0
