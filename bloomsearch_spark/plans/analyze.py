@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 from ..sketches.hll import HLL, merge_serialized
 from ..sources import fs as fsx
 from ..sources import manifest as mf
+from ..sources import segments as seg
 from ..sources.manifest import BloomIndex
 from .search import scan_blocks
 
@@ -230,8 +231,7 @@ def analyze(
 
     version_guess, _ = mf.next_version_dir(root)
     seg_name = f"{version_guess}-analyze-{uuid.uuid4().hex[:8]}"
-    seg_dir = mf.segment_dir(root, seg_name)
-    stats.write.mode("overwrite").parquet(fsx.join(seg_dir, "colstats.parquet"))
+    seg.write_segment(mf.segment_dir(root, seg_name), {"colstats": stats})
     meta = index.meta()
     refs = index.table_refs()
 

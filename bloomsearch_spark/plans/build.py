@@ -44,33 +44,49 @@ Scale notes (100 TB / 1000 executors):
 from __future__ import annotations
 
 import os
-import time
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..config import IndexConfig
 from ..operators.blockindex import rollup_file_entry
 from ..sources import fs as fsx
 from ..sources import manifest as mf
+from ..sources import segments as seg
 from ..tokenizer import get_tokenizer, register_tokenizer
 
 # staging rows are BLOCK rows (block_id set) or, on the map path, completed
 # FILE rows (block_id null, file blooms + block_count set) — files never
 # span tasks there, so file rollup happens in-task and the ~MB-scale
 # file-bloom partials never serialize per block nor shuffle
-STAGING_SCHEMA = (
-    "file_id string, block_id string, partition_id string, "
-    "data_path string, "
-    "row_count long, token_count long, byte_size long, block_count long, "
-    "minmax_min map<string,long>, minmax_max map<string,long>, "
-    "expected_items long, fpr double, "
-    "field_bloom binary, token_bloom binary, fieldtoken_bloom binary, "
-    "file_expected_items long, file_fpr double, "
-    "file_field_bloom binary, file_token_bloom binary, file_fieldtoken_bloom binary"
+STAGING_PA_SCHEMA = pa.schema(
+    [
+        ("file_id", pa.string()),
+        ("block_id", pa.string()),
+        ("partition_id", pa.string()),
+        ("data_path", pa.string()),
+        ("row_count", pa.int64()),
+        ("token_count", pa.int64()),
+        ("byte_size", pa.int64()),
+        ("block_count", pa.int64()),
+        ("minmax_min", pa.map_(pa.string(), pa.int64())),
+        ("minmax_max", pa.map_(pa.string(), pa.int64())),
+        ("expected_items", pa.int64()),
+        ("fpr", pa.float64()),
+        ("field_bloom", pa.binary()),
+        ("token_bloom", pa.binary()),
+        ("fieldtoken_bloom", pa.binary()),
+        ("file_expected_items", pa.int64()),
+        ("file_fpr", pa.float64()),
+        ("file_field_bloom", pa.binary()),
+        ("file_token_bloom", pa.binary()),
+        ("file_fieldtoken_bloom", pa.binary()),
+    ]
 )
+STAGING_SCHEMA = from_arrow_schema(STAGING_PA_SCHEMA)
 
 _CODEC = {"none": None, "snappy": "snappy", "zstd": "zstd"}
 
@@ -128,6 +144,30 @@ def _row_hash(df: DataFrame):
     return F.xxhash64(F.to_json(F.struct(*df.columns)))
 
 
+def stage_keys(df: DataFrame, cfg: IndexConfig) -> DataFrame:
+    """``df`` plus the columns the flush kernels key on: ``partition_id``
+    (NULL partition values coalesce to "": a NULL slug would yield NULL
+    file/block ids, and the manifest's block_id filter would drop rows
+    whose data landed in an unreachable dir) and, with ``cfg.sha_col``,
+    ``content_sha``."""
+    d = df.withColumn(
+        "partition_id",
+        F.coalesce(F.expr(cfg.partition_expr).cast("string"), F.lit("")),
+    )
+    if cfg.sha_col:
+        d = d.withColumn("content_sha", F.sha2(F.col(cfg.sha_col).cast("string"), 256))
+    return d
+
+
+def stage_rows(d: DataFrame, cfg: IndexConfig, data_dir: str, tag: str, staging: str) -> None:
+    """Flush ``d``'s rows (with :func:`stage_keys` columns) as block files
+    under ``data_dir`` through the zero-shuffle map kernel, and write
+    their staging rows to ``staging``."""
+    d.mapInArrow(_make_map_build_fn(cfg, data_dir, tag), STAGING_SCHEMA).write.mode(
+        "overwrite"
+    ).parquet(staging)
+
+
 def assign_blocks(df: DataFrame, cfg: IndexConfig, build_tag: str) -> DataFrame:
     """Deterministic, window-free block/file assignment.
 
@@ -135,17 +175,7 @@ def assign_blocks(df: DataFrame, cfg: IndexConfig, build_tag: str) -> DataFrame:
     a row hash scatters rows uniformly across that partition's blocks.
     Deterministic => identical assignment on re-run (resume safety).
     """
-    # NULL partition values coalesce to "" like the map path (build_index
-    # line ~440): without it the slug concat yields NULL file_id/block_id
-    # and those rows would be silently dropped by the manifest's
-    # isNotNull filter while their data landed in an unreachable dir
-    d = df.withColumn(
-        "partition_id",
-        F.coalesce(F.expr(cfg.partition_expr).cast("string"), F.lit("")),
-    )
-    if cfg.sha_col:
-        d = d.withColumn("content_sha", F.sha2(F.col(cfg.sha_col).cast("string"), 256))
-
+    d = stage_keys(df, cfg)
     if cfg.block_expr is not None:
         d = d.withColumn("_block_seq", F.expr(cfg.block_expr).cast("long"))
     else:
@@ -230,32 +260,6 @@ def _slug(partition_id: str) -> str:
     safe = re.sub(r"[^A-Za-z0-9_.-]", "_", str(partition_id)[:32])
     h = hashlib.sha1(str(partition_id).encode()).hexdigest()[:8].upper()
     return f"{safe}-{h}"
-
-
-STAGING_PA_SCHEMA = pa.schema(
-    [
-        ("file_id", pa.string()),
-        ("block_id", pa.string()),
-        ("partition_id", pa.string()),
-        ("data_path", pa.string()),
-        ("row_count", pa.int64()),
-        ("token_count", pa.int64()),
-        ("byte_size", pa.int64()),
-        ("block_count", pa.int64()),
-        ("minmax_min", pa.map_(pa.string(), pa.int64())),
-        ("minmax_max", pa.map_(pa.string(), pa.int64())),
-        ("expected_items", pa.int64()),
-        ("fpr", pa.float64()),
-        ("field_bloom", pa.binary()),
-        ("token_bloom", pa.binary()),
-        ("fieldtoken_bloom", pa.binary()),
-        ("file_expected_items", pa.int64()),
-        ("file_fpr", pa.float64()),
-        ("file_field_bloom", pa.binary()),
-        ("file_token_bloom", pa.binary()),
-        ("file_fieldtoken_bloom", pa.binary()),
-    ]
-)
 
 
 def _make_map_build_fn(
@@ -401,111 +405,6 @@ def _make_map_build_fn(
 
 def _stage_done(path: str) -> bool:
     return fsx.exists(fsx.join(path, "_SUCCESS"))
-
-
-# Driver-side segment writes apply while the staging output stays under
-# this many bytes (env-overridable): a small batch's blocks/files/lineage
-# tables are manifest-sized, and three Spark jobs re-reading the staging
-# parquet cost ~0.6-0.9 s of pure fixed latency where one pyarrow read +
-# three atomic writes cost ~50 ms (guide §5: the driver SHOULD do
-# manifest-sized work).  Big batches (a 100 TB build's staging is GBs)
-# keep the distributed writes.
-DRIVER_SEGMENT_MAX_BYTES = int(
-    os.environ.get("BLOOMSEARCH_DRIVER_SEGMENT_MAX_BYTES", str(256 << 20))
-)
-
-_SEG_WRITE_KW = {"compression": "snappy", "write_page_checksum": True}
-
-
-def _write_segments_driver(
-    seg_dir: str, staging: str, cfg: IndexConfig, build_id: str, source_desc: str
-) -> bool:
-    """Write the build's {blocks,files,lineage} segment tables DRIVER-SIDE
-    from one pyarrow read of the staging parquet — zero Spark jobs.
-
-    Returns False (caller falls back to the Spark writes) for the
-    clustered path (its file rollup spans tasks), for staging outputs
-    over ``DRIVER_SEGMENT_MAX_BYTES``, or when the driver cannot read the
-    root through pyarrow.  Content parity with the Spark path: same
-    columns/types (read back under the same explicit schemas), blocks
-    sorted by partition_id with small row groups so the pushed partition
-    prefilter still prunes at row-group granularity, and per-table
-    _SUCCESS markers so a resumed build skips completed tables exactly
-    like the Spark path."""
-    if cfg.block_expr is not None:
-        return False
-    try:
-        files = fsx.list_parquet_files(staging)
-        if not files:
-            return False  # empty dir shape is the Spark path's business
-        fs0, _ = fsx.resolve(staging)
-        total = 0
-        for f in files:
-            _, p = fsx.resolve(f)
-            info = fs0.get_file_info([p])[0]
-            total += info.size or 0
-        if total > DRIVER_SEGMENT_MAX_BYTES:
-            return False
-        st = fsx.read_parquet_dir(staging)
-        import pyarrow.compute as pc
-
-        is_block = pc.is_valid(st["block_id"])
-        blocks = st.filter(is_block).select(
-            [
-                "file_id", "block_id", "partition_id", "data_path",
-                "row_count", "token_count", "byte_size",
-                "minmax_min", "minmax_max", "expected_items", "fpr",
-                "field_bloom", "token_bloom", "fieldtoken_bloom",
-            ]
-        ).sort_by("partition_id")
-        frows = st.filter(pc.invert(is_block))
-        files_tbl = pa.table(
-            {
-                "file_id": frows["file_id"],
-                "partition_id": frows["partition_id"],
-                "block_count": frows["block_count"],
-                "row_count": frows["row_count"],
-                "token_count": frows["token_count"],
-                "byte_size": frows["byte_size"],
-                "minmax_min": frows["minmax_min"],
-                "minmax_max": frows["minmax_max"],
-                "expected_items": frows["file_expected_items"],
-                "fpr": frows["file_fpr"],
-                "field_bloom": frows["file_field_bloom"],
-                "token_bloom": frows["file_token_bloom"],
-                "fieldtoken_bloom": frows["file_fieldtoken_bloom"],
-            }
-        )
-        n = blocks.num_rows
-        now = time.time()
-        lineage = pa.table(
-            {
-                "build_id": pa.array([build_id] * n, pa.string()),
-                "file_id": blocks["file_id"],
-                "block_id": blocks["block_id"],
-                "partition_id": blocks["partition_id"],
-                "source_desc": pa.array([source_desc] * n, pa.string()),
-                "rows_indexed": blocks["row_count"],
-                "tokens_inserted": blocks["token_count"],
-                "op": pa.array(["build"] * n, pa.string()),
-                "committed_at": pa.array([now] * n, pa.float64()),
-            }
-        )
-        for name, tbl in (
-            ("blocks", blocks), ("files", files_tbl), ("lineage", lineage)
-        ):
-            out = fsx.join(seg_dir, f"{name}.parquet")
-            if _stage_done(out):
-                continue  # resumed build: this table already committed
-            fsx.delete_dir(out)  # a partial prior attempt must not mix in
-            fsx.write_parquet_atomic(
-                out, tbl, "part-0.parquet",
-                row_group_size=4096, **_SEG_WRITE_KW,
-            )
-            fsx.write_bytes_atomic(fsx.join(out, "_SUCCESS"), b"")
-        return True
-    except Exception:
-        return False  # any driver-side surprise: the Spark path is always sound
 
 
 def _estimate_rows(spark: SparkSession, df: DataFrame) -> int:
@@ -691,14 +590,7 @@ def build_index(
             )
     else:
         # default map-only path: zero data shuffle (see module docstring)
-        d = df.withColumn(
-            "partition_id",
-            F.coalesce(F.expr(cfg.partition_expr).cast("string"), F.lit("")),
-        )
-        if cfg.sha_col:
-            d = d.withColumn(
-                "content_sha", F.sha2(F.col(cfg.sha_col).cast("string"), 256)
-            )
+        d = stage_keys(df, cfg)
         if cfg.cluster_input:
             # one salted repartition: same-partition rows land together in
             # task-sized salt buckets -> full blocks, no hot task on skew.
@@ -728,13 +620,7 @@ def build_index(
             salt = F.pmod(_row_hash(df), F.lit(want))
             d = d.repartition(want, F.col("partition_id"), salt)
         if not _stage_done(staging):
-            (
-                d.mapInArrow(
-                    _make_map_build_fn(cfg, data_dir, build_id), STAGING_SCHEMA
-                )
-                .write.mode("overwrite")
-                .parquet(staging)
-            )
+            stage_rows(d, cfg, data_dir, build_id, staging)
 
     if cons and ran_staging:
         # violation counters rode the staging job (zero extra scans);
@@ -752,79 +638,45 @@ def build_index(
     if cons and mode == "overwrite":
         meta_extra = {**(meta_extra or {}), "constraints": cons}
 
-    st = spark.read.parquet(staging)
-
-    new_blocks = st.filter(F.col("block_id").isNotNull()).select(
-        "file_id", "block_id", "partition_id", "data_path", "row_count", "token_count",
-        "byte_size", "minmax_min", "minmax_max", "expected_items", "fpr",
-        "field_bloom", "token_bloom", "fieldtoken_bloom",
-    )
-    if cfg.block_expr is None:
-        # map path: the tasks already emitted one completed file row per
-        # file (files are task-local) — a pure projection, no shuffle and
-        # no re-read of MB-scale file-bloom partials
-        new_files = st.filter(F.col("block_id").isNull()).select(
-            "file_id", "partition_id", "block_count", "row_count", "token_count",
-            "byte_size", "minmax_min", "minmax_max",
-            F.col("file_expected_items").alias("expected_items"),
-            F.col("file_fpr").alias("fpr"),
-            F.col("file_field_bloom").alias("field_bloom"),
-            F.col("file_token_bloom").alias("token_bloom"),
-            F.col("file_fieldtoken_bloom").alias("fieldtoken_bloom"),
-        )
-    else:
-        # clustered path: a file's blocks span tasks -> grouped OR-rollup
-        new_files = st.groupBy("file_id").applyInPandas(rollup_file_entry, mf.FILES_SCHEMA)
-    new_lineage = st.filter(F.col("block_id").isNotNull()).select(
-        F.lit(build_id).alias("build_id"),
-        "file_id", "block_id", "partition_id",
-        F.lit(source_desc).alias("source_desc"),
-        F.col("row_count").alias("rows_indexed"),
-        F.col("token_count").alias("tokens_inserted"),
-        F.lit("build").alias("op"),
-        F.lit(time.time()).alias("committed_at"),
-    )
-
-    # cluster the new blocks by partition_id: the partition prefilter is
-    # a PUSHED parquet filter on each segment's blocks file (PLANS.md §1),
-    # so clustering turns it into row-group pruning — at 10^7 blocks a
-    # partition query reads only its slice of each segment
-    new_blocks = new_blocks.repartition("partition_id").sortWithinPartitions(
-        "partition_id"
-    )
     # DELTA commit: only this batch's manifest rows are written, as one
     # immutable segment — an append never rewrites the existing manifest
     # (O(batch) bytes per commit; the delta MetaStore.Update contract,
     # meta_store.go:8-22).
+    if cfg.block_expr is None:
+        # map path: the tasks already emitted one completed file row per
+        # file (files are task-local) — a pure projection, no shuffle and
+        # no re-read of MB-scale file-bloom partials
+        st = seg.read(spark, staging, STAGING_SCHEMA)
+        new_blocks, new_files = seg.split_staging(st)
+    else:
+        # clustered path: a file's blocks span tasks -> grouped OR-rollup
+        st = spark.read.schema(STAGING_SCHEMA).parquet(staging)
+        new_blocks, _ = seg.split_staging(st)
+        new_files = st.groupBy("file_id").applyInPandas(rollup_file_entry, mf.FILES_SCHEMA)
+    new_lineage = seg.lineage_of(new_blocks, build_id, "build", source_desc)
+    if isinstance(new_blocks, DataFrame):
+        # cluster the new blocks by partition_id: the partition prefilter
+        # is a PUSHED parquet filter on each segment's blocks file
+        # (PLANS.md §1), so clustering turns it into row-group pruning —
+        # at 10^7 blocks a partition query reads only its slice of each
+        # segment (the Arrow face sorts in split_staging)
+        new_blocks = new_blocks.repartition("partition_id").sortWithinPartitions(
+            "partition_id"
+        )
     seg_name = f"{attempt}-build"
-    seg_dir = mf.segment_dir(root, seg_name)
-    if not _write_segments_driver(seg_dir, staging, cfg, build_id, source_desc):
-        # big batch (or driver cannot read the root / clustered path):
-        # the three writes are independent manifest-sized Spark jobs;
-        # submit them concurrently from driver threads so the
-        # post-staging fixed cost is max(job) instead of sum(jobs) — part
-        # of the build's NON-parallel term in the scaling fit (BENCH.md §2)
-        from concurrent.futures import ThreadPoolExecutor
-
-        def _write(arg):
-            name, d = arg
-            out = fsx.join(seg_dir, f"{name}.parquet")
-            if not _stage_done(out):
-                d.write.mode("overwrite").parquet(out)
-
-        with ThreadPoolExecutor(max_workers=3) as ex:
-            list(
-                ex.map(
-                    _write,
-                    (("blocks", new_blocks), ("files", new_files), ("lineage", new_lineage)),
-                )
-            )
+    seg.write_segment(
+        mf.segment_dir(root, seg_name),
+        {
+            "blocks": new_blocks,
+            "files": new_files,
+            "lineage": new_lineage,
+        },
+    )
 
     # finalize runs inside the commit lock, O(meta.json) work only: reads
     # the FRESH predecessor (an append adapts to whatever committed since
     # the build started), unions table lists, records bloom-param
-    # uniformity (lets queries compile the pure-JVM probe without touching
-    # the manifest), carries the stream watermark — shared with the
+    # uniformity, carries the stream watermark — shared with the
     # DataSource writer (manifest.build_commit_finalize)
     # the source schema rides in meta so a fully-empty index (empty build,
     # expire-everything) can still answer queries with a typed empty frame

@@ -30,7 +30,6 @@ Mechanics:
 from __future__ import annotations
 
 import os
-import time
 
 import pandas as pd
 import pyarrow as pa
@@ -43,6 +42,7 @@ from ..config import IndexConfig
 from ..operators.blockindex import BlockAccumulator, rollup_file_entry
 from ..sources import fs as fsx
 from ..sources import manifest as mf
+from ..sources import segments as seg
 from .build import STAGING_PA_SCHEMA, STAGING_SCHEMA, _slug, _stage_done
 
 
@@ -170,22 +170,8 @@ def build_external_index(
             .parquet(staging)
         )
 
-    st = spark.read.parquet(staging)
-    new_blocks = st.select(
-        "file_id", "block_id", "partition_id", "data_path", "row_count",
-        "token_count", "byte_size", "minmax_min", "minmax_max",
-        "expected_items", "fpr", "field_bloom", "token_bloom", "fieldtoken_bloom",
-    )
-    new_files = st.groupBy("file_id").applyInPandas(rollup_file_entry, mf.FILES_SCHEMA)
-    new_lineage = st.select(
-        F.lit(version).alias("build_id"),
-        "file_id", "block_id", "partition_id",
-        F.lit(source_desc).alias("source_desc"),
-        F.col("row_count").alias("rows_indexed"),
-        F.col("token_count").alias("tokens_inserted"),
-        F.lit("build-external").alias("op"),
-        F.lit(time.time()).alias("committed_at"),
-    )
+    st = spark.read.schema(STAGING_SCHEMA).parquet(staging)
+    new_blocks, _ = seg.split_staging(st)
     # per-attempt nonce (see merge._commit): a racing committer sharing the
     # version guess must not overwrite a committed immutable segment.  The
     # heavy staging above stays deterministic (resume); re-writing the
@@ -193,11 +179,15 @@ def build_external_index(
     import uuid as _uuid
 
     seg_name = f"{version}-external-{_uuid.uuid4().hex[:8]}"
-    seg_dir = mf.segment_dir(root, seg_name)
-    for name, data in (("blocks", new_blocks), ("files", new_files), ("lineage", new_lineage)):
-        out = fsx.join(seg_dir, f"{name}.parquet")
-        if not _stage_done(out):
-            data.write.mode("overwrite").parquet(out)
+    seg.write_segment(
+        mf.segment_dir(root, seg_name),
+        {
+            "blocks": new_blocks,
+            # a source file's blocks span tasks -> grouped OR-rollup
+            "files": st.groupBy("file_id").applyInPandas(rollup_file_entry, mf.FILES_SCHEMA),
+            "lineage": seg.lineage_of(new_blocks, version, "build-external", source_desc),
+        },
+    )
 
     def finalize(prev_version: str | None) -> str:
         v = mf.version_after(prev_version)

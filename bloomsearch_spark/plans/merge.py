@@ -43,7 +43,6 @@ superseded manifest).
 
 from __future__ import annotations
 
-import time
 import uuid
 from dataclasses import dataclass
 
@@ -55,6 +54,7 @@ from pyspark.sql.window import Window
 from .. import bloom
 from ..sources import fs as fsx
 from ..sources import manifest as mf
+from ..sources import segments as seg
 from ..sources.manifest import BloomIndex
 
 # restore's pre-flight existence sweep runs driver-side (threaded stats,
@@ -664,7 +664,7 @@ def optimize_zorder(
         raise ValueError("optimize_zorder rewrites block data; external "
                          "indexes are zero-copy — rebuild instead")
     _refuse_shallow_clone(index, "optimize_zorder")
-    from .build import STAGING_SCHEMA, _make_map_build_fn
+    from .build import STAGING_SCHEMA, stage_keys, stage_rows
     from .colmap import _map_prefilter
     from .search import scan_blocks
 
@@ -706,41 +706,15 @@ def optimize_zorder(
         .sortWithinPartitions("_bs_z")
         .drop("_bs_z")
     )
-    d = ordered.withColumn(
-        "partition_id",
-        F.coalesce(F.expr(cfg.partition_expr).cast("string"), F.lit("")),
-    )
-    if cfg.sha_col:
-        d = d.withColumn(
-            "content_sha", F.sha2(F.col(cfg.sha_col).cast("string"), 256)
-        )
     version_guess, _ = mf.next_version_dir(index.root)
     tag = f"{version_guess}-z{uuid.uuid4().hex[:8]}"
     scratch = mf.staging_root(index.root, tag)
     staging = fsx.join(scratch, "staging.parquet")
-    (
-        d.mapInArrow(
-            _make_map_build_fn(cfg, fsx.join(index.root, "data"), tag),
-            STAGING_SCHEMA,
-        )
-        .write.mode("overwrite")
-        .parquet(staging)
+    stage_rows(
+        stage_keys(ordered, cfg), cfg, fsx.join(index.root, "data"), tag, staging
     )
-    st = spark.read.parquet(staging)
-    new_blocks = st.filter(F.col("block_id").isNotNull()).select(
-        "file_id", "block_id", "partition_id", "data_path", "row_count",
-        "token_count", "byte_size", "minmax_min", "minmax_max",
-        "expected_items", "fpr", "field_bloom", "token_bloom",
-        "fieldtoken_bloom",
-    )
-    new_files = st.filter(F.col("block_id").isNull()).select(
-        "file_id", "partition_id", "block_count", "row_count", "token_count",
-        "byte_size", "minmax_min", "minmax_max",
-        F.col("file_expected_items").alias("expected_items"),
-        F.col("file_fpr").alias("fpr"),
-        F.col("file_field_bloom").alias("field_bloom"),
-        F.col("file_token_bloom").alias("token_bloom"),
-        F.col("file_fieldtoken_bloom").alias("fieldtoken_bloom"),
+    new_blocks, new_files = seg.split_staging(
+        spark.read.schema(STAGING_SCHEMA).parquet(staging)
     )
     if untouched is not None:
         # scoped rewrite: out-of-scope blocks pass through verbatim; a
@@ -1121,12 +1095,15 @@ def _mint_dv_delta(
     version_guess: str,
     seg_dir: str,
     op: str,
+    inserts: dict | None = None,
 ) -> tuple[int, int]:
     """Aggregate matched ``(block_id, _bs_pos, _bs_fname)`` rows into ONE
-    deletion-vector delta segment (``dvs.parquet`` + the op's
-    ``lineage.parquet`` rows under ``seg_dir``) — shared by the dv delete
-    and the dv upsert.  Returns ``(rows_deleted, dv_blocks)``; writes
-    nothing when no row matched.
+    deletion-vector delta segment (``dvs`` + the op's ``lineage`` rows
+    under ``seg_dir``) — shared by the dv delete and the dv upsert.
+    Returns ``(rows_deleted, dv_blocks)``; writes nothing when no row
+    matched.  ``inserts`` (a dv upsert's staged ``blocks``/``files``/
+    ``lineage`` tables) are written into the same segment, their lineage
+    rows after the delta's.
 
     ``matched`` must come from a MASKED scan (``scan_blocks(...,
     with_pos=True)``), which is what makes deltas disjoint: an
@@ -1164,32 +1141,19 @@ def _mint_dv_delta(
                 "single-part, so this index was modified out-of-band.  Use "
                 "the rewrite path (use_deletion_vectors=False)"
             )
-        # both segment tables project the PERSISTED plan — two independent
-        # manifest-sized jobs, submitted concurrently (guide §2.6), same
-        # discipline as _commit's blocks∥files writes
-        from concurrent.futures import ThreadPoolExecutor
-
-        def _w_dvs():
-            plan.select(
-                "block_id", "data_path", "positions", "dv_count"
-            ).write.mode("overwrite").parquet(fsx.join(seg_dir, "dvs.parquet"))
-
-        def _w_lin():
-            plan.select(
-                F.lit(version_guess).alias("build_id"),
-                "file_id",
-                "block_id",
-                "partition_id",
-                F.lit(op).alias("source_desc"),
-                (-F.col("dv_count")).cast("long").alias("rows_indexed"),
-                F.lit(0).cast("long").alias("tokens_inserted"),
-                F.lit(op).alias("op"),
-                F.lit(time.time()).alias("committed_at"),
-            ).write.mode("overwrite").parquet(fsx.join(seg_dir, "lineage.parquet"))
-
-        with ThreadPoolExecutor(max_workers=2) as ex:
-            fd, fl = ex.submit(_w_dvs), ex.submit(_w_lin)
-            fd.result(), fl.result()
+        lineage = seg.lineage_of(
+            plan, version_guess, op, rows=-F.col("dv_count"), tokens=0
+        )
+        if inserts:
+            lineage = seg.union(index.spark, lineage, inserts["lineage"])
+        seg.write_segment(
+            seg_dir,
+            {
+                **(inserts or {}),
+                "dvs": plan.select("block_id", "data_path", "positions", "dv_count"),
+                "lineage": lineage,
+            },
+        )
         return nd, nb
     finally:
         plan.unpersist()
@@ -1627,7 +1591,7 @@ def _upsert_keys_impl(
         normalize_constraints,
         raise_on_failures,
     )
-    from .build import STAGING_SCHEMA, _make_map_build_fn
+    from .build import STAGING_SCHEMA, stage_keys, stage_rows
     from .search import candidate_blocks, scan_blocks
 
     # the table's CHECK constraints gate the inserts; a drop-action
@@ -1669,28 +1633,7 @@ def _upsert_keys_impl(
     data = scan_blocks(index, surviving, with_pos=use_deletion_vectors)
     version_guess, _ = mf.next_version_dir(index.root)
     plan = None
-    seg_name = seg_dir = None
-    if use_deletion_vectors:
-        # merge-on-read delete half: matched positions -> ONE dvs delta
-        # (shared minting kernel with delete_where's dv path)
-        seg_name = f"{version_guess}-upsert_dv-{uuid.uuid4().hex[:8]}"
-        seg_dir = mf.segment_dir(index.root, seg_name)
-        nd = nb = 0
-        if "block_id" in data.columns:  # empty index scans have no blocks
-            kj = (
-                F.broadcast(keys)
-                if len(collected) <= max_pruned_keys
-                else keys
-            )
-            matched = data.join(
-                kj, data[key_field] == kj["_bs_key"], "left_semi"
-            ).select("block_id", "_bs_pos", "_bs_fname")
-            nd, nb = _mint_dv_delta(
-                index, matched, version_guess, seg_dir, op="upsert_dv"
-            )
-        stats.rows_deleted = nd
-        stats.dv_blocks = stats.candidate_blocks = nb
-    else:
+    if not use_deletion_vectors:
         # exact key match as a distributed join marker (broadcast for small
         # key batches); NULL keys never match (join semantics)
         selected = data.select(*[c for c in data.columns if c != "data_path"])
@@ -1709,27 +1652,14 @@ def _upsert_keys_impl(
     # build_index (new block dirs + completed per-task file rows), into a
     # scratch dir so downstream actions never re-run the side-effecting map
     tag = f"{version_guess}-u{uuid.uuid4().hex[:8]}"
-    d = source_df.withColumn(
-        "partition_id",
-        F.coalesce(F.expr(cfg.partition_expr).cast("string"), F.lit("")),
-    )
-    if cfg.sha_col:
-        d = d.withColumn(
-            "content_sha", F.sha2(F.col(cfg.sha_col).cast("string"), 256)
-        )
     scratch = mf.staging_root(index.root, tag)
     staging = fsx.join(scratch, "staging.parquet")
-    (
-        d.mapInArrow(
-            _make_map_build_fn(cfg, fsx.join(index.root, "data"), tag),
-            STAGING_SCHEMA,
-        )
-        .write.mode("overwrite")
-        .parquet(staging)
+    stage_rows(
+        stage_keys(source_df, cfg), cfg, fsx.join(index.root, "data"), tag, staging
     )
     if cons:
         # counters rode the staging job; fail-action violations abort
-        # BEFORE commit (scratch + any minted dv segment stay unreachable)
+        # BEFORE commit (scratch stays unreachable)
         viol = collect_violations(cons_obs, cons)
         try:
             raise_on_failures(viol, cons)
@@ -1740,29 +1670,43 @@ def _upsert_keys_impl(
             raise
         if viol:
             meta_extra = {**(meta_extra or {}), "constraint_violations": viol}
-    st = spark.read.parquet(staging)
-    staged_blocks = st.filter(F.col("block_id").isNotNull()).select(
-        "file_id", "block_id", "partition_id", "data_path", "row_count",
-        "token_count", "byte_size", "minmax_min", "minmax_max",
-        "expected_items", "fpr", "field_bloom", "token_bloom",
-        "fieldtoken_bloom",
-    )
-    staged_files = st.filter(F.col("block_id").isNull()).select(
-        "file_id", "partition_id", "block_count", "row_count", "token_count",
-        "byte_size", "minmax_min", "minmax_max",
-        F.col("file_expected_items").alias("expected_items"),
-        F.col("file_fpr").alias("fpr"),
-        F.col("file_field_bloom").alias("field_bloom"),
-        F.col("file_token_bloom").alias("token_bloom"),
-        F.col("file_fieldtoken_bloom").alias("fieldtoken_bloom"),
-    )
+    # staging footer rows: file rows only ever accompany block rows, so
+    # zero total rows ⟺ zero staged blocks — no Spark job unless the
+    # driver cannot read the staging dir
+    staged_rows = fsx.driver_rows(staging)
+    if staged_rows is None:
+        staged_rows = spark.read.schema(STAGING_SCHEMA).parquet(staging).limit(1).count()
+    staged_empty = staged_rows == 0
 
-    try:
-        # staging footer rows: file rows only ever accompany block rows,
-        # so zero total rows ⟺ zero staged blocks — no Spark job needed
-        staged_empty = fsx.parquet_dir_rows(staging) == 0
-    except Exception:
-        staged_empty = staged_blocks.limit(1).count() == 0
+    if use_deletion_vectors:
+        # merge-on-read delete half: matched positions -> ONE dvs delta
+        # (shared minting kernel with delete_where's dv path), written
+        # with the staged inserts as one APPEND-SHAPED segment
+        seg_name = f"{version_guess}-upsert_dv-{uuid.uuid4().hex[:8]}"
+        seg_dir = mf.segment_dir(index.root, seg_name)
+        staged_blocks, staged_files = seg.split_staging(
+            seg.read(spark, staging, STAGING_SCHEMA)
+        )
+        inserts = {
+            "blocks": staged_blocks,
+            "files": staged_files,
+            "lineage": seg.lineage_of(staged_blocks, version_guess, "upsert_dv"),
+        }
+        nd = nb = 0
+        if "block_id" in data.columns:  # empty index scans have no blocks
+            kj = (
+                F.broadcast(keys)
+                if len(collected) <= max_pruned_keys
+                else keys
+            )
+            matched = data.join(
+                kj, data[key_field] == kj["_bs_key"], "left_semi"
+            ).select("block_id", "_bs_pos", "_bs_fname")
+            nd, nb = _mint_dv_delta(
+                index, matched, version_guess, seg_dir, "upsert_dv", inserts
+            )
+        stats.rows_deleted = nd
+        stats.dv_blocks = stats.candidate_blocks = nb
     if stats.rows_deleted == 0 and staged_empty:
         # nothing matched, nothing to insert: commit NOTHING (a CDC
         # stream's empty/irrelevant micro-batch must not churn versions)
@@ -1777,24 +1721,8 @@ def _upsert_keys_impl(
         # APPEND-SHAPED commit: parent blocks/files referenced verbatim +
         # this one segment (staged inserts, the dv delta, both lineages) —
         # O(batch) manifest bytes, zero old-block data bytes
-        staged_blocks.write.mode("overwrite").parquet(
-            fsx.join(seg_dir, "blocks.parquet")
-        )
-        staged_files.write.mode("overwrite").parquet(
-            fsx.join(seg_dir, "files.parquet")
-        )
-        # insert-lineage rows APPEND to the dv delta's (created if absent)
-        staged_blocks.select(
-            F.lit(version_guess).alias("build_id"),
-            "file_id",
-            "block_id",
-            "partition_id",
-            F.lit("upsert_dv").alias("source_desc"),
-            F.col("row_count").alias("rows_indexed"),
-            F.col("token_count").alias("tokens_inserted"),
-            F.lit("upsert_dv").alias("op"),
-            F.lit(time.time()).alias("committed_at"),
-        ).write.mode("append").parquet(fsx.join(seg_dir, "lineage.parquet"))
+        if nd == 0:
+            seg.write_segment(seg_dir, inserts)  # else the mint wrote them
         meta = index.meta()
         refs = index.table_refs()
         prev_dvs = index.dvs_refs()
@@ -1837,6 +1765,9 @@ def _upsert_keys_impl(
         fsx.delete_dir(scratch)
         return out_ix, stats
 
+    staged_blocks, staged_files = seg.split_staging(
+        spark.read.schema(STAGING_SCHEMA).parquet(staging)
+    )
     new_blocks = _apply_rewrites(blocks, plan, stats.candidate_blocks).unionByName(
         staged_blocks
     )
@@ -1998,9 +1929,9 @@ def restore(
                 paths = sorted(
                     {
                         p
-                        for seg in target.table_paths("blocks")
+                        for sp in target.table_paths("blocks")
                         for p in fsx.read_parquet_dir(
-                            seg, columns=["data_path"]
+                            sp, columns=["data_path"]
                         )["data_path"].to_pylist()
                     }
                 )
@@ -2012,32 +1943,36 @@ def restore(
 
                 with ThreadPoolExecutor(max_workers=32) as ex2:
                     missing = [m for m in ex2.map(_gone, paths) if m]
-            except Exception:
-                missing = None  # driver cannot read the root: go distributed
+            except OSError:
+                missing = None  # the store refused the driver: go distributed
         if missing is None:
 
-            def _check(it):
+            def _check(rows):
                 from ..sources import fs as _fsx
 
-                for pdf in it:
-                    miss = []
-                    for rel in pdf["data_path"]:
-                        p = rel if ext else _fsx.join(data_dir, rel)
-                        if not _fsx.exists(p):
-                            miss.append(rel)
-                    yield pd.DataFrame({"data_path": miss})
+                # one summary per task: the missing count and up to 3
+                # example paths — a fully-vacuumed huge manifest must not
+                # collect every missing path to the driver
+                n, examples = 0, []
+                for (rel,) in rows:
+                    p = rel if ext else _fsx.join(data_dir, rel)
+                    if not _fsx.exists(p):
+                        n += 1
+                        examples = sorted([*examples, rel])[:3]
+                yield n, examples
 
-            gone = (
+            # an RDD shuffle: one job (AQE would run a DataFrame shuffle's
+            # map stage as a job of its own); at most one Python task per
+            # core (see vacuum)
+            summary = (
                 target.blocks()
                 .select("data_path")
-                # at most one Python task per core (see vacuum)
-                .repartition(min(32, spark.sparkContext.defaultParallelism))
-                .mapInPandas(_check, "data_path string")
+                .rdd.repartition(min(32, spark.sparkContext.defaultParallelism))
+                .mapPartitions(_check)
+                .collect()
             )
-            # bounded: a fully-vacuumed huge manifest must not collect
-            # every missing path to the driver — 4 examples + a count
-            missing = [r.data_path for r in gone.limit(4).collect()]
-            n_gone = gone.count() if len(missing) > 3 else len(missing)
+            n_gone = sum(n for n, _ in summary)
+            missing = sorted(e for _, examples in summary for e in examples)
         else:
             n_gone = len(missing)
         if missing:
@@ -2288,126 +2223,18 @@ def _commit(
     # vacuum_manifest, never corruption.
     seg_name = f"{version_guess}-{op}-{uuid.uuid4().hex[:8]}"
     seg_dir = mf.segment_dir(root, seg_name)
-    # blocks/files segments are independent manifest-sized jobs: submit
-    # them from driver threads so the commit's fixed cost is max(job)
-    # instead of sum(jobs) — same discipline as the build's segment writes
-    # (plans/build.py; guide §2.6 overlap-independent-jobs)
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as ex:
-        fb = ex.submit(
-            lambda: new_blocks.write.mode("overwrite").parquet(
-                fsx.join(seg_dir, "blocks.parquet")
-            )
-        )
-        ff = ex.submit(
-            lambda: new_files.write.mode("overwrite").parquet(
-                fsx.join(seg_dir, "files.parquet")
-            )
-        )
-        fb.result(), ff.result()
+    seg.write_segment(seg_dir, {"blocks": new_blocks, "files": new_files})
     # lineage DELTA: this op's rows only — parent segments are referenced.
-    # Derived from the already-committed blocks segment; for segments
-    # under the driver byte gate that is one pyarrow read + one atomic
-    # write (zero Spark jobs), else one Spark job over the read-back.
-    if _write_lineage_driver(seg_dir, version_guess, op):
-        version = _finalize_commit(
-            spark, index, seg_name, op, meta_extra, carry_dvs
-        )
-        out = mf.BloomIndex(spark, root, version)
-        stats.files_after = _manifest_count(out, "files")
-        stats.blocks_after = _manifest_count(out, "blocks")
-        return out, stats
-    committed_blocks = spark.read.schema(mf.BLOCKS_SCHEMA).parquet(
-        fsx.join(seg_dir, "blocks.parquet")
+    # Derived from the just-committed blocks segment (its final ids).
+    committed = seg.read(
+        spark, fsx.join(seg_dir, "blocks.parquet"), mf.BLOCKS_SCHEMA,
+        seg.LINEAGE_SOURCE_COLUMNS,
     )
-
-    committed_blocks.select(
-        F.lit(version_guess).alias("build_id"),
-        "file_id",
-        "block_id",
-        "partition_id",
-        F.lit(op).alias("source_desc"),
-        F.col("row_count").alias("rows_indexed"),
-        F.col("token_count").alias("tokens_inserted"),
-        F.lit(op).alias("op"),
-        F.lit(time.time()).alias("committed_at"),
-    ).write.mode("overwrite").parquet(fsx.join(seg_dir, "lineage.parquet"))
-
-    version = _finalize_commit(spark, index, seg_name, op, meta_extra, carry_dvs)
-    out = mf.BloomIndex(spark, root, version)
-    stats.files_after = _manifest_count(out, "files")
-    stats.blocks_after = _manifest_count(out, "blocks")
-    return out, stats
-
-
-def _write_lineage_driver(seg_dir: str, build_id: str, op: str) -> bool:
-    """Derive the commit's lineage DELTA driver-side from the
-    just-written blocks segment: one pyarrow column read + one atomic
-    write, zero Spark jobs.  Applies under the same byte gate as the
-    build's driver-side segment writes; returns False (caller runs the
-    Spark read-back + write) for big segments or driver-unreadable
-    roots."""
-    import pyarrow as pa
-
-    from .build import DRIVER_SEGMENT_MAX_BYTES, _SEG_WRITE_KW
-
-    blocks_dir = fsx.join(seg_dir, "blocks.parquet")
-    try:
-        files = fsx.list_parquet_files(blocks_dir)
-        if not files:
-            return False
-        fs0, _ = fsx.resolve(blocks_dir)
-        total = 0
-        for f in files:
-            _, p = fsx.resolve(f)
-            total += fs0.get_file_info([p])[0].size or 0
-        if total > DRIVER_SEGMENT_MAX_BYTES:
-            return False
-        btbl = fsx.read_parquet_dir(
-            blocks_dir,
-            columns=["file_id", "block_id", "partition_id",
-                     "row_count", "token_count"],
-        )
-        n = btbl.num_rows
-        lineage = pa.table(
-            {
-                "build_id": pa.array([build_id] * n, pa.string()),
-                "file_id": btbl["file_id"],
-                "block_id": btbl["block_id"],
-                "partition_id": btbl["partition_id"],
-                "source_desc": pa.array([op] * n, pa.string()),
-                "rows_indexed": btbl["row_count"],
-                "tokens_inserted": btbl["token_count"],
-                "op": pa.array([op] * n, pa.string()),
-                "committed_at": pa.array([time.time()] * n, pa.float64()),
-            }
-        )
-        out = fsx.join(seg_dir, "lineage.parquet")
-        fsx.delete_dir(out)
-        fsx.write_parquet_atomic(out, lineage, "part-0.parquet", **_SEG_WRITE_KW)
-        fsx.write_bytes_atomic(fsx.join(out, "_SUCCESS"), b"")
-        return True
-    except Exception:
-        return False
-
-
-def _finalize_commit(
-    spark: SparkSession,
-    index: BloomIndex,
-    seg_name: str,
-    op: str,
-    meta_extra: dict | None,
-    carry_dvs: bool,
-) -> str:
-    """Publish a maintenance op's segment as the new version (shared by
-    the driver-side and Spark lineage paths of ``_commit``)."""
-    root = index.root
+    seg.write_segment(seg_dir, {"lineage": seg.lineage_of(committed, version_guess, op)})
     meta = index.meta()
 
     def finalize(prev_version: str | None) -> str:
         version = mf.version_after(prev_version)
-        vdir = fsx.join(root, "manifest", version)
         tables = {
             "blocks": [mf.segment_ref(seg_name, "blocks")],
             "files": [mf.segment_ref(seg_name, "files")],
@@ -2422,7 +2249,7 @@ def _finalize_commit(
         if index.colstats_refs():
             tables["colstats"] = index.colstats_refs()
         mf.write_meta(
-            vdir,
+            fsx.join(root, "manifest", version),
             index.config,
             extra={
                 "build_id": version,
@@ -2435,7 +2262,11 @@ def _finalize_commit(
         )
         return version
 
-    return mf.publish_commit(root, finalize, expected=index.version)
+    version = mf.publish_commit(root, finalize, expected=index.version)
+    out = mf.BloomIndex(spark, root, version)
+    stats.files_after = _manifest_count(out, "files")
+    stats.blocks_after = _manifest_count(out, "blocks")
+    return out, stats
 
 
 def vacuum(
@@ -2649,32 +2480,22 @@ def fold_manifest(
     version_guess, _ = mf.next_version_dir(root)
     seg_name = f"{version_guess}-fold-{uuid.uuid4().hex[:8]}"  # see _commit
     seg_dir = mf.segment_dir(root, seg_name)
-    (
-        index.blocks(cache=False)
-        .repartition("partition_id")
-        .sortWithinPartitions("partition_id")
-        .write.mode("overwrite")
-        .parquet(fsx.join(seg_dir, "blocks.parquet"))
-    )
-    index.files(cache=False).write.mode("overwrite").parquet(
-        fsx.join(seg_dir, "files.parquet")
-    )
-    index.lineage().write.mode("overwrite").parquet(
-        fsx.join(seg_dir, "lineage.parquet")
-    )
+    blocks = index.blocks(cache=False)
+    tables = {
+        "blocks": blocks.repartition("partition_id").sortWithinPartitions(
+            "partition_id"
+        ),
+        "files": index.files(cache=False),
+        "lineage": index.lineage(),
+    }
     # deletion vectors fold too: per-block UNION of the delta positions
     # (deltas are disjoint — see DVS_SCHEMA), orphan rows for blocks a
     # rewrite/expire already dropped are semi-joined away.  An all-orphan
     # result folds back to the clean no-DV state (no ref at all).
-    fold_dvs = False
     dvs = index.dvs(cache=False)
     if dvs is not None:
-        (
-            dvs.join(
-                index.blocks(cache=False).select("data_path"),
-                "data_path",
-                "left_semi",
-            )
+        tables["dvs"] = (
+            dvs.join(blocks.select("data_path"), "data_path", "left_semi")
             .groupBy("block_id", "data_path")
             .agg(F.flatten(F.collect_list("positions")).alias("positions"))
             .select(
@@ -2683,25 +2504,21 @@ def fold_manifest(
                 "positions",
                 F.size("positions").cast("long").alias("dv_count"),
             )
-            .write.mode("overwrite")
-            .parquet(fsx.join(seg_dir, "dvs.parquet"))
         )
-        fold_dvs = fsx.parquet_dir_rows(fsx.join(seg_dir, "dvs.parquet")) > 0
     # ANALYZE column stats fold the same way: rows for live (block_id,
     # data_path) pairs re-segment; orphans from rewritten blocks drop.
-    fold_cs = False
     cs = index.colstats(cache=False)
     if cs is not None:
-        (
-            cs.join(
-                index.blocks(cache=False).select("block_id", "data_path"),
-                ["block_id", "data_path"],
-                "left_semi",
-            )
-            .write.mode("overwrite")
-            .parquet(fsx.join(seg_dir, "colstats.parquet"))
+        tables["colstats"] = cs.join(
+            blocks.select("block_id", "data_path"),
+            ["block_id", "data_path"],
+            "left_semi",
         )
-        fold_cs = fsx.parquet_dir_rows(fsx.join(seg_dir, "colstats.parquet")) > 0
+    seg.write_segment(seg_dir, tables)
+    fold_dvs, fold_cs = (
+        t in tables and fsx.parquet_dir_rows(fsx.join(seg_dir, f"{t}.parquet")) > 0
+        for t in ("dvs", "colstats")
+    )
     meta = index.meta()
 
     def finalize(prev_version: str | None) -> str:

@@ -1871,11 +1871,10 @@ class BloomSearchArrowWriter(DataSourceArrowWriter):
         """Assemble the tasks' staging rows into ONE delta manifest segment
         and publish it — shared by the batch commit and (with a per-batch
         segment name + replay watermark) the streaming commit."""
-        import time
-
         import pyarrow as pa
 
         from ..plans.build import STAGING_PA_SCHEMA
+        from . import segments as seg
 
         tables = [
             pa.ipc.open_stream(pa.BufferReader(m.ipc)).read_all()
@@ -1887,53 +1886,15 @@ class BloomSearchArrowWriter(DataSourceArrowWriter):
         )
         if skip_if_empty and len(st) == 0:
             return
-        is_block = pa.compute.is_valid(st.column("block_id"))
-        blocks = st.filter(is_block).select(
-            [
-                "file_id", "block_id", "partition_id", "data_path", "row_count",
-                "token_count", "byte_size", "minmax_min", "minmax_max",
-                "expected_items", "fpr", "field_bloom", "token_bloom",
-                "fieldtoken_bloom",
-            ]
-        ).sort_by("partition_id")
-        frows = st.filter(pa.compute.invert(is_block))
-        files = pa.table(
+        blocks, files = seg.split_staging(st)
+        seg.write_segment(
+            mf.segment_dir(self.root, seg_name),
             {
-                "file_id": frows.column("file_id"),
-                "partition_id": frows.column("partition_id"),
-                "block_count": frows.column("block_count"),
-                "row_count": frows.column("row_count"),
-                "token_count": frows.column("token_count"),
-                "byte_size": frows.column("byte_size"),
-                "minmax_min": frows.column("minmax_min"),
-                "minmax_max": frows.column("minmax_max"),
-                "expected_items": frows.column("file_expected_items"),
-                "fpr": frows.column("file_fpr"),
-                "field_bloom": frows.column("file_field_bloom"),
-                "token_bloom": frows.column("file_token_bloom"),
-                "fieldtoken_bloom": frows.column("file_fieldtoken_bloom"),
-            }
+                "blocks": blocks,
+                "files": files,
+                "lineage": seg.lineage_of(blocks, self.build_id, "build", source_desc),
+            },
         )
-        now = time.time()
-        nb = len(blocks)
-        lineage = pa.table(
-            {
-                "build_id": pa.array([self.build_id] * nb, pa.string()),
-                "file_id": blocks.column("file_id"),
-                "block_id": blocks.column("block_id"),
-                "partition_id": blocks.column("partition_id"),
-                "source_desc": pa.array([source_desc] * nb, pa.string()),
-                "rows_indexed": blocks.column("row_count"),
-                "tokens_inserted": blocks.column("token_count"),
-                "op": pa.array(["build"] * nb, pa.string()),
-                "committed_at": pa.array([now] * nb, pa.float64()),
-            }
-        )
-        seg_dir = mf.segment_dir(self.root, seg_name)
-        for name, tbl in (("blocks", blocks), ("files", files), ("lineage", lineage)):
-            fsx.write_parquet_atomic(
-                fsx.join(seg_dir, f"{name}.parquet"), tbl, "part-0.parquet"
-            )
         mf.publish_commit(
             self.root,
             mf.build_commit_finalize(

@@ -370,6 +370,22 @@ def parquet_dir_rows(dir_uri: str) -> int:
     return total
 
 
+def driver_rows(dir_uri: str) -> int | None:
+    """:func:`parquet_dir_rows`, or None when the driver cannot read
+    ``dir_uri`` — no pyarrow filesystem for its URI, or the store failed
+    or refused the driver (an ``OSError``, e.g. credentials only in
+    Spark's Hadoop conf) — so the caller falls back to a Spark job.  Any
+    other error (a corrupt footer, a bug) raises."""
+    try:
+        resolve(dir_uri)
+    except (ValueError, NotImplementedError):
+        return None
+    try:
+        return parquet_dir_rows(dir_uri)
+    except OSError:
+        return None
+
+
 def list_parquet_files(dir_uri: str) -> list[str]:
     """URIs (``dir_uri``-joined, so they stay resolvable in any process)
     of the ``*.parquet`` files directly under ``dir_uri``; [] if missing."""

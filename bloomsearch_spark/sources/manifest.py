@@ -878,11 +878,8 @@ class BloomIndex:
         Spark job; cached per handle — versions are immutable).  Segments
         are immutable row-append-free parquet, so summing footer
         ``num_rows`` equals ``count()`` exactly.  Returns None when the
-        driver cannot read the root through pyarrow — no pyarrow
-        filesystem for its URI, or the store refuses the driver (e.g.
-        credentials only in Spark's Hadoop conf) — and callers fall back
-        to a ``count()`` job.  Any other error (a corrupt footer, a bug)
-        raises."""
+        driver cannot read the root (:func:`fs.driver_rows`), and
+        callers fall back to a ``count()`` job."""
         cache = getattr(self, "_table_rows", None)
         if cache is None:
             cache = self._table_rows = {}
@@ -891,12 +888,10 @@ class BloomIndex:
                 fsx.resolve(self.root)
             except (ValueError, NotImplementedError):
                 return None  # no pyarrow filesystem for this URI
-            try:
-                cache[name] = sum(
-                    fsx.parquet_dir_rows(p) for p in self.table_paths(name)
-                )
-            except OSError:
-                return None  # the store failed or refused the driver
+            rows = [fsx.driver_rows(p) for p in self.table_paths(name)]
+            if None in rows:
+                return None
+            cache[name] = sum(rows)
         return cache[name]
 
     def unpersist(self) -> None:

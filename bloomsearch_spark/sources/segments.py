@@ -1,0 +1,229 @@
+"""The one writer of manifest delta segments.
+
+A commit is one immutable O(batch) segment under ``manifest/segments/``
+(the reference's ``MetaStore.Update`` delta contract, meta_store.go:8-22):
+a ``blocks``/``files``/``lineage`` table each, plus ``dvs`` for
+deletion-vector deltas.  Everything about that format that more than one
+commit path needs lives here, each with an Arrow face (driver-side,
+manifest-sized inputs) and a Spark face (staging too large for the
+driver — a 100 TB build's staging is GBs):
+
+- the staging -> blocks/files column map (:func:`split_staging`);
+- the lineage rows, in ``LINEAGE_SCHEMA`` order (:func:`lineage_of`);
+- the gate that picks the face (:func:`read`): the footer
+  ``total_uncompressed_size`` of the column chunks the commit reads —
+  what the driver would hold decoded — against
+  :data:`DRIVER_SEGMENT_MAX_BYTES`;
+- the write (:func:`write_segment`): per-table ``_SUCCESS`` resume
+  markers, Arrow tables as one atomic snappy file with page checksums and
+  small row groups, DataFrames as concurrent Spark jobs.
+"""
+
+from __future__ import annotations
+
+import time
+from concurrent.futures import ThreadPoolExecutor
+
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from . import fs as fsx
+
+# Manifest-sized work belongs on the driver: one pyarrow read + atomic
+# writes cost ~50 ms where one Spark job per table costs ~0.2-0.3 s of
+# fixed latency.  Past this many decoded bytes the Spark face runs.
+DRIVER_SEGMENT_MAX_BYTES = 256 << 20
+
+# staging column -> segment column; staging rows are block rows (block_id
+# set) or, on the map path, completed file rows (block_id null)
+BLOCK_COLUMNS = (
+    "file_id", "block_id", "partition_id", "data_path",
+    "row_count", "token_count", "byte_size",
+    "minmax_min", "minmax_max", "expected_items", "fpr",
+    "field_bloom", "token_bloom", "fieldtoken_bloom",
+)
+FILE_COLUMNS = {
+    "file_id": "file_id",
+    "partition_id": "partition_id",
+    "block_count": "block_count",
+    "row_count": "row_count",
+    "token_count": "token_count",
+    "byte_size": "byte_size",
+    "minmax_min": "minmax_min",
+    "minmax_max": "minmax_max",
+    "expected_items": "file_expected_items",
+    "fpr": "file_fpr",
+    "field_bloom": "file_field_bloom",
+    "token_bloom": "file_token_bloom",
+    "fieldtoken_bloom": "file_fieldtoken_bloom",
+}
+# the blocks columns a lineage delta reads
+LINEAGE_SOURCE_COLUMNS = (
+    "file_id", "block_id", "partition_id", "row_count", "token_count",
+)
+
+_WRITE_KW = {
+    "compression": "snappy",
+    "write_page_checksum": True,
+    # small row groups: the blocks are clustered by partition_id, so the
+    # pushed partition prefilter prunes at row-group granularity
+    "row_group_size": 4096,
+}
+
+
+def read(spark: SparkSession, path: str, schema, columns=None) -> pa.Table | DataFrame:
+    """Read the parquet dir ``path`` (``columns`` of it, default all) as
+    an Arrow table when the driver can hold it, else as a DataFrame with
+    ``schema`` (a DDL string or ``StructType``).
+
+    The Spark face runs past :data:`DRIVER_SEGMENT_MAX_BYTES` of footer
+    uncompressed bytes, and when the driver cannot read the path: no
+    pyarrow filesystem for its URI, or an ``OSError`` from the store.
+    Any other error (a corrupt footer, a bug) raises."""
+    try:
+        fs, _ = fsx.resolve(path)
+    except (ValueError, NotImplementedError):
+        return _spark_read(spark, path, schema, columns)
+    try:
+        parts = fsx.list_parquet_files(path)
+        if parts and _decoded_bytes(fs, parts, columns) <= DRIVER_SEGMENT_MAX_BYTES:
+            return fsx.read_parquet_dir(path, columns=columns)
+    except OSError:
+        pass  # the store failed or refused the driver
+    return _spark_read(spark, path, schema, columns)
+
+
+def _decoded_bytes(fs, parts: list[str], columns) -> int:
+    want = None if columns is None else set(columns)
+    total = 0
+    for uri in parts:
+        md = pq.read_metadata(fsx.resolve(uri)[1], filesystem=fs)
+        for g in range(md.num_row_groups):
+            rg = md.row_group(g)
+            for c in range(rg.num_columns):
+                chunk = rg.column(c)
+                if want is None or chunk.path_in_schema.split(".")[0] in want:
+                    total += chunk.total_uncompressed_size
+    return total
+
+
+def _spark_read(spark: SparkSession, path: str, schema, columns) -> DataFrame:
+    df = spark.read.schema(schema).parquet(path)
+    return df if columns is None else df.select(*columns)
+
+
+def split_staging(st: pa.Table | DataFrame):
+    """``(blocks, files)`` segment tables of a staging table, same face
+    as ``st``.  The Arrow face sorts blocks by ``partition_id`` (row-group
+    pruning for the partition prefilter); the Spark face leaves ordering
+    to the caller."""
+    if isinstance(st, pa.Table):
+        is_block = pc.is_valid(st["block_id"])
+        blocks = st.filter(is_block).select(list(BLOCK_COLUMNS)).sort_by("partition_id")
+        frows = st.filter(pc.invert(is_block))
+        files = pa.table({seg: frows[src] for seg, src in FILE_COLUMNS.items()})
+        return blocks, files
+    blocks = st.filter(F.col("block_id").isNotNull()).select(*BLOCK_COLUMNS)
+    files = st.filter(F.col("block_id").isNull()).select(
+        *[F.col(src).alias(seg) for seg, src in FILE_COLUMNS.items()]
+    )
+    return blocks, files
+
+
+def lineage_of(
+    blocks: pa.Table | DataFrame,
+    build_id: str,
+    op: str,
+    source_desc: str | None = None,
+    rows=None,
+    tokens=None,
+) -> pa.Table | DataFrame:
+    """The lineage rows of one commit, one per row of ``blocks``, in
+    ``LINEAGE_SCHEMA`` order and the same face as ``blocks``.
+
+    ``rows``/``tokens`` default to the blocks' ``row_count``/
+    ``token_count``; a deletion-vector delta passes its own (an Arrow
+    array or Spark Column of the negated ``dv_count``, and ``0``).
+    ``source_desc`` defaults to ``op``."""
+    desc = op if source_desc is None else source_desc
+    now = time.time()
+    if isinstance(blocks, pa.Table):
+        n = blocks.num_rows
+
+        def const(v, t):
+            return pa.array([v] * n, t)
+
+        def num(v, default):
+            if v is None:
+                return blocks[default]
+            return const(v, pa.int64()) if isinstance(v, int) else v
+
+        return pa.table(
+            {
+                "build_id": const(build_id, pa.string()),
+                "file_id": blocks["file_id"],
+                "block_id": blocks["block_id"],
+                "partition_id": blocks["partition_id"],
+                "source_desc": const(desc, pa.string()),
+                "rows_indexed": num(rows, "row_count"),
+                "tokens_inserted": num(tokens, "token_count"),
+                "op": const(op, pa.string()),
+                "committed_at": const(now, pa.float64()),
+            }
+        )
+
+    def col(v, default) -> Column:
+        if v is None:
+            return F.col(default)
+        return v if isinstance(v, Column) else F.lit(v)
+
+    return blocks.select(
+        F.lit(build_id).alias("build_id"),
+        "file_id",
+        "block_id",
+        "partition_id",
+        F.lit(desc).alias("source_desc"),
+        col(rows, "row_count").cast("long").alias("rows_indexed"),
+        col(tokens, "token_count").cast("long").alias("tokens_inserted"),
+        F.lit(op).alias("op"),
+        F.lit(now).alias("committed_at"),
+    )
+
+
+def union(spark: SparkSession, df: DataFrame, tbl: pa.Table | DataFrame) -> DataFrame:
+    """``df`` plus the rows of ``tbl``, a table of either face."""
+    return df.unionByName(spark.createDataFrame(tbl) if isinstance(tbl, pa.Table) else tbl)
+
+
+def write_segment(seg_dir: str, tables: dict) -> None:
+    """Write ``{name: pa.Table | DataFrame}`` as ``<seg_dir>/<name>.parquet``.
+
+    A table whose ``_SUCCESS`` marker exists is skipped (a resumed commit
+    already wrote it).  Arrow tables are written on the driver: one atomic
+    part file, then the marker.  DataFrames are written by Spark (which
+    writes the marker), as concurrent jobs: manifest-sized jobs are fixed
+    latency, so a commit pays max(job), not sum(jobs)."""
+    dfs = []
+    for name, tbl in tables.items():
+        out = fsx.join(seg_dir, f"{name}.parquet")
+        if fsx.exists(fsx.join(out, "_SUCCESS")):
+            continue
+        if isinstance(tbl, pa.Table):
+            fsx.delete_dir(out)  # a partial prior attempt must not mix in
+            # drop schema metadata: a table read from Spark-written parquet
+            # carries Spark's row schema of THAT file, which Spark's schema
+            # inference would then report for this one
+            fsx.write_parquet_atomic(
+                out, tbl.replace_schema_metadata(None), "part-0.parquet", **_WRITE_KW
+            )
+            fsx.write_bytes_atomic(fsx.join(out, "_SUCCESS"), b"")
+        else:
+            dfs.append((out, tbl))
+    if dfs:
+        with ThreadPoolExecutor(max_workers=len(dfs)) as ex:
+            futures = [ex.submit(df.write.mode("overwrite").parquet, out) for out, df in dfs]
+            for f in futures:
+                f.result()

@@ -84,7 +84,11 @@ def streaming_exact_dedup(
     constant-size per fingerprint; ``state_ttl_ms`` opts into
     processing-time expiry for unbounded corpora (the
     ``dropDuplicatesWithinWatermark`` state-bounding trade: a duplicate
-    arriving after its fingerprint expired re-registers as new).
+    arriving after its fingerprint expired re-registers as new).  A
+    ``state_ttl_ms`` query never terminates under
+    ``trigger(availableNow=True)``: pending processing-time timeouts keep
+    it running no-data batches, so neither ``awaitTermination()`` nor
+    ``processAllAvailable()`` returns — the caller must ``stop()`` it.
     """
     from ..functions.text import fingerprint
 

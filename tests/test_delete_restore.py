@@ -26,6 +26,8 @@ from bloomsearch_spark import (
     search,
     vacuum,
 )
+from bloomsearch_spark.plans import merge as merge_mod
+from bloomsearch_spark.sources import fs as fsx
 from bloomsearch_spark.sources import manifest as mf
 from bloomsearch_spark.sources.synthetic import generate_df, generate_pdf
 
@@ -220,6 +222,54 @@ def test_restore_keeps_stream_watermark(spark, tmp_root):
     assert out.meta()["last_stream_batch"] == 7
 
 
+def _raising(exc):
+    def f(*_a, **_k):
+        raise exc
+
+    return f
+
+
+def test_restore_sweep_falls_back_only_when_the_driver_cannot_read(
+    spark, tmp_root, monkeypatch
+):
+    """The driver existence sweep hands over to the distributed check on
+    a store error only; any other error raises."""
+    from tests.test_prune_engine import _job_counter
+
+    idx1 = build_index(spark, generate_df(spark, 200), tmp_root, CFG)
+    idx2 = build_index(
+        spark, generate_df(spark, 100, seed=7), tmp_root, CFG, mode="append"
+    )
+    monkeypatch.setattr(fsx, "read_parquet_dir", _raising(RuntimeError("a bug")))
+    with pytest.raises(RuntimeError, match="a bug"):
+        restore(spark, idx2, version=idx1.version)
+    monkeypatch.setattr(fsx, "read_parquet_dir", _raising(PermissionError("denied")))
+    last_id = _job_counter(spark)
+    before = last_id()
+    out = restore(spark, idx2, version=idx1.version)
+    assert last_id() > before  # the distributed check ran
+    assert out.blocks().count() == idx1.blocks().count()
+
+
+def test_restore_distributed_check_is_one_job(spark, tmp_root, monkeypatch):
+    """Past RESTORE_DRIVER_CHECK_MAX the existence check is one Spark job
+    that returns the missing count and at most 3 example paths."""
+    from tests.test_prune_engine import _job_counter
+
+    idx1 = build_index(spark, generate_df(spark, 400), tmp_root, CFG)
+    gone = sorted(r.data_path for r in idx1.blocks().collect())
+    idx2 = build_index(spark, generate_df(spark, 100, seed=7), tmp_root, CFG)
+    assert vacuum(idx2) > 0 and len(gone) > 3
+    monkeypatch.setattr(merge_mod, "RESTORE_DRIVER_CHECK_MAX", 0)
+    last_id = _job_counter(spark)
+    before = last_id()
+    with pytest.raises(ValueError) as err:
+        restore(spark, idx2, version=idx1.version)
+    assert last_id() == before + 1
+    assert f": {len(gone)} of its block data dirs were vacuumed" in str(err.value)
+    assert f"(e.g. {gone[:3]})" in str(err.value)
+
+
 # ---------------------------------------------------------------------------
 # changefeed CDC across delete/restore
 
@@ -340,6 +390,34 @@ def test_upsert_keys_one_commit_replaces_and_inserts(spark, tmp_root):
     assert old_row["path"] not in set(
         still[still["commit"] == old_row["commit"]]["path"]
     )
+
+
+def test_upsert_staged_rows_fall_back_only_when_the_driver_cannot_read(
+    spark, tmp_root, monkeypatch
+):
+    """The staged-row footer count falls back to a count() job on a store
+    error only; any other error raises."""
+    from bloomsearch_spark import upsert_keys
+
+    idx = build_index(spark, generate_df(spark, 400), tmp_root, CFG)
+    src = spark.createDataFrame(_upsert_source(n_upd=5, n_new=2))
+    real = fsx.parquet_dir_rows
+
+    def on_staging(exc):
+        def f(d):
+            if "/staging/" in d:
+                raise exc
+            return real(d)
+
+        return f
+
+    monkeypatch.setattr(fsx, "parquet_dir_rows", on_staging(RuntimeError("a bug")))
+    with pytest.raises(RuntimeError, match="a bug"):
+        upsert_keys(spark, idx, src, key_field="path")
+    monkeypatch.setattr(fsx, "parquet_dir_rows", on_staging(PermissionError("denied")))
+    out, stats = upsert_keys(spark, idx, src, key_field="path")
+    assert stats.rows_deleted == 5
+    assert search(spark, out, new_query().token("upserted_marker").build()).count() == 7
 
 
 def test_upsert_large_batch_full_scan_same_result(spark, tmp_root):

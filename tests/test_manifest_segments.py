@@ -544,60 +544,6 @@ def test_append_refuses_schema_drift(spark, tmp_root):
     assert [(r.doc_id, r.content) for r in out] == [(300, "delta tok7")]
 
 
-def test_driver_segment_writes_match_spark_path(spark, tmp_root, tmp_path):
-    """Small builds write their {blocks,files,lineage} segment tables
-    driver-side (one pyarrow pass, zero Spark jobs — r07); the rows,
-    types and downstream query results must be IDENTICAL to the
-    distributed Spark writes the big-batch path still uses."""
-    import bloomsearch_spark.plans.build as B
-
-    df = generate_df(spark, 600)
-    cfg = IndexConfig(
-        indexed_fields=("repo", "path", "content"),
-        partition_expr="lang",
-        minmax_fields=(),
-        max_block_rows=100,
-        blocks_per_file=2,
-    )
-    r1 = str(tmp_path / "driver_seg")
-    r2 = str(tmp_path / "spark_seg")
-    build_index(spark, df, r1, cfg)  # under the byte gate: driver path
-    old = B.DRIVER_SEGMENT_MAX_BYTES
-    try:
-        B.DRIVER_SEGMENT_MAX_BYTES = 0  # force the distributed writes
-        build_index(spark, df, r2, cfg)
-    finally:
-        B.DRIVER_SEGMENT_MAX_BYTES = old
-
-    a, b = BloomIndex.load(spark, r1), BloomIndex.load(spark, r2)
-    assert a.blocks().schema == b.blocks().schema
-    assert a.files().schema == b.files().schema
-    rows = lambda df_, key: [r.asDict() for r in df_.orderBy(key).collect()]
-    assert rows(a.blocks(), "block_id") == rows(b.blocks(), "block_id")
-    assert rows(a.files(), "file_id") == rows(b.files(), "file_id")
-    la = [
-        {k: v for k, v in r.asDict().items() if k != "committed_at"}
-        for r in a.lineage().orderBy("block_id").collect()
-    ]
-    lb = [
-        {k: v for k, v in r.asDict().items() if k != "committed_at"}
-        for r in b.lineage().orderBy("block_id").collect()
-    ]
-    assert la == lb
-    q = new_query().field_token("content", "needle_alpha").build()
-    assert sorted(r.path for r in search(spark, a, q).collect()) == sorted(
-        r.path for r in search(spark, b, q).collect()
-    )
-    # appends compose on top of a driver-written segment
-    n_before = a.blocks().count()
-    build_index(
-        spark, generate_df(spark, 100), r1, cfg, mode="append", source_desc="a2"
-    )
-    a2 = BloomIndex.load(spark, r1)
-    assert a2.blocks().count() > n_before
-    assert search(spark, a2, q).count() >= search(spark, a, q).count()
-
-
 def test_table_rows_falls_back_only_when_the_driver_cannot_read(spark, tmp_root, monkeypatch):
     """Footer counts return None (the count() fallback) only for a root
     the driver has no pyarrow filesystem for, or a store error; a corrupt

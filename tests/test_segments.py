@@ -1,0 +1,226 @@
+"""The one segment writer (``sources/segments.py``).
+
+Every commit writes its manifest delta segment through one module, which
+picks the Arrow face (driver-side) or the Spark face from the footer size
+of what it reads.  Pins:
+
+- parity: each commit op writes identical blocks/files/lineage rows
+  (``committed_at`` aside), column types and query results on the driver
+  face and on the forced Spark face;
+- DSv2 writer segments carry page checksums and small row groups, like
+  every other driver-written segment;
+- Spark jobs per commit op, on the 2,000-row synthetic table with
+  ``max_block_rows=100`` and ``blocks_per_file=2`` on local[4].
+"""
+
+import uuid
+
+import pyarrow.parquet as pq
+import pytest
+
+from bloomsearch_spark import (
+    BloomIndex,
+    IndexConfig,
+    build_external_index,
+    build_index,
+    delete_where,
+    new_query,
+    search,
+    upsert_keys,
+)
+from bloomsearch_spark.plans import merge as merge_mod
+from bloomsearch_spark.sources import fs as fsx
+from bloomsearch_spark.sources import segments as seg
+from bloomsearch_spark.sources.synthetic import generate_df, generate_pdf
+from tests.test_prune_engine import _job_counter
+
+N = 2_000
+CFG = IndexConfig(
+    indexed_fields=("repo", "path", "lang", "content"),
+    partition_expr="lang",
+    max_block_rows=100,
+    blocks_per_file=2,
+    sha_col="content",
+)
+OPS = ("build", "append", "delete", "dv_delete", "upsert", "upsert_dv")
+QUERIES = [
+    new_query().token("needle_alpha").build(),
+    new_query().token("needle_beta").build(),
+    new_query().token("upserted_marker").build(),
+    new_query().field("content").build(),
+]
+# ceilings: the Spark jobs each op took before segment writes went through
+# one module (same table and config, local[4]), except upsert_dv, whose
+# three serial staged-segment writes (19 jobs then) now run on the driver
+MAX_JOBS = {
+    "build": 2, "append": 2, "delete": 13, "dv_delete": 9,
+    "upsert": 20, "upsert_dv": 16, "external": 8, "dsv2_write": 1,
+}
+
+
+class _SeqUUID:
+    """Deterministic ``uuid4`` for the commit nonces, so two runs of one
+    op chain mint the same segment names, block ids and data paths."""
+
+    def __init__(self):
+        self.n = 0
+
+    def uuid4(self):
+        self.n += 1
+        return uuid.UUID(int=self.n)
+
+
+def _upsert_src(spark, lo: int, hi: int):
+    pdf = generate_pdf(N).iloc[lo:hi].copy()
+    pdf["content"] = [f"upserted_marker row{i}" for i in range(lo, hi)]
+    return spark.createDataFrame(pdf)
+
+
+def _state(spark, ix: BloomIndex) -> dict:
+    def rows(df, drop=()):
+        out = [
+            {k: v for k, v in r.asDict().items() if k not in drop}
+            for r in df.collect()
+        ]
+        return sorted(out, key=lambda d: tuple(str(d[k]) for k in sorted(d)))
+
+    def types(name):
+        return [
+            [(f.name, f.dataType) for f in spark.read.parquet(p).schema]
+            for p in ix.table_paths(name)
+        ]
+
+    return {
+        "blocks": rows(ix.blocks(cache=False)),
+        "files": rows(ix.files(cache=False)),
+        "lineage": rows(ix.lineage(), drop=("committed_at",)),
+        "dvs": [sorted(r.asDict().items()) for r in ix.dvs().collect()]
+        if ix.dvs_refs() else [],
+        "types": {t: types(t) for t in ("blocks", "files", "lineage")},
+        "results": [
+            sorted(tuple(r) for r in search(spark, ix, q).collect())
+            for q in QUERIES
+        ],
+    }
+
+
+def _run_chain(spark, root: str) -> tuple[dict, dict]:
+    """Build, append, rewrite delete, DV delete, upsert and DV upsert on
+    one root; returns each op's resulting state and Spark job count."""
+    last_id = _job_counter(spark)
+    base = generate_df(spark, N)
+    more = generate_df(spark, 200, seed=7)
+    src1, src2 = _upsert_src(spark, 0, 20), _upsert_src(spark, 20, 40)
+    alpha_py = new_query().token("needle_alpha").field_token("lang", "py").build()
+    steps = {
+        "build": lambda ix: build_index(spark, base, root, CFG),
+        "append": lambda ix: build_index(spark, more, root, CFG, mode="append"),
+        "delete": lambda ix: delete_where(spark, ix, alpha_py)[0],
+        "dv_delete": lambda ix: delete_where(
+            spark, ix, QUERIES[1], use_deletion_vectors=True
+        )[0],
+        "upsert": lambda ix: upsert_keys(spark, ix, src1, "path")[0],
+        "upsert_dv": lambda ix: upsert_keys(
+            spark, ix, src2, "path", use_deletion_vectors=True
+        )[0],
+    }
+    states, jobs, ix = {}, {}, None
+    for op in OPS:
+        before = last_id()
+        ix = steps[op](ix)
+        jobs[op] = last_id() - before
+        states[op] = _state(spark, BloomIndex.load(spark, root))
+    return states, jobs
+
+
+@pytest.fixture(scope="module")
+def chains(spark, tmp_path_factory):
+    out = {}
+    for face in ("driver", "spark"):
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(merge_mod, "uuid", _SeqUUID())
+            if face == "spark":
+                mp.setattr(seg, "DRIVER_SEGMENT_MAX_BYTES", 0)
+            out[face] = _run_chain(spark, str(tmp_path_factory.mktemp(face)))
+    return out
+
+
+@pytest.mark.parametrize("op", OPS)
+def test_driver_and_spark_faces_write_identical_segments(chains, op):
+    driver, spark_face = chains["driver"][0][op], chains["spark"][0][op]
+    assert driver["blocks"] and driver["results"][3]
+    for key in ("blocks", "files", "lineage", "dvs", "types", "results"):
+        assert driver[key] == spark_face[key], key
+
+
+def test_jobs_per_commit_op(spark, chains, tmp_path):
+    jobs = dict(chains["driver"][1])
+    last_id = _job_counter(spark)
+
+    src = str(tmp_path / "src")
+    generate_df(spark, N).write.parquet(src)
+    before = last_id()
+    build_external_index(spark, src, str(tmp_path / "ext"), CFG)
+    jobs["external"] = last_id() - before
+
+    df = generate_df(spark, N)
+    before = last_id()
+    _dsv2_write(spark, df, str(tmp_path / "ds"))
+    jobs["dsv2_write"] = last_id() - before
+
+    over = {op: (n, MAX_JOBS[op]) for op, n in jobs.items() if n > MAX_JOBS[op]}
+    assert not over, over
+
+
+def _dsv2_write(spark, df, root: str) -> None:
+    from bloomsearch_spark.sources.datasource import BloomSearchDataSource
+
+    spark.dataSource.register(BloomSearchDataSource)
+    (
+        df.write.format("bloomsearch")
+        .option("root", root)
+        .option("indexed_fields", "repo,path,lang,content")
+        .option("partition_col", "lang")
+        .option("max_block_rows", "100")
+        .option("blocks_per_file", "2")
+        .mode("overwrite").save()
+    )
+
+
+def _first_page_has_crc(path: str) -> bool:
+    """Whether the first page header of the file's first column chunk
+    carries the optional ``crc`` field (PageHeader field 4; fields 1-3
+    are the required i32 type and sizes, thrift compact encoding)."""
+    col = pq.ParquetFile(path).metadata.row_group(0).column(0)
+    off = col.dictionary_page_offset if col.has_dictionary_page else col.data_page_offset
+    with open(path, "rb") as f:
+        f.seek(off)
+        buf = f.read(64)
+    pos = field = 0
+    while True:
+        head = buf[pos]
+        pos += 1
+        field += head >> 4
+        if field >= 4:
+            return field == 4 and head & 0x0F == 5  # i32
+        while buf[pos] & 0x80:  # skip the varint value
+            pos += 1
+        pos += 1
+
+
+def test_dsv2_segments_have_checksums_and_small_row_groups(spark, tmp_path):
+    root = str(tmp_path / "ds")
+    _dsv2_write(spark, generate_df(spark, N), root)
+    ix = BloomIndex.load(spark, root)
+    built = build_index(spark, generate_df(spark, 200), str(tmp_path / "b"), CFG)
+    (bpart,) = fsx.list_parquet_files(built.table_paths("blocks")[0])
+    assert _first_page_has_crc(fsx.resolve(bpart)[1])  # the reference layout
+    for name in ("blocks", "files", "lineage"):
+        (seg_dir,) = ix.table_paths(name)
+        assert fsx.exists(fsx.join(seg_dir, "_SUCCESS"))
+        (part,) = fsx.list_parquet_files(seg_dir)
+        local = fsx.resolve(part)[1]
+        md = pq.ParquetFile(local).metadata
+        assert md.num_rows > 0
+        assert all(md.row_group(g).num_rows <= 4096 for g in range(md.num_row_groups))
+        assert _first_page_has_crc(local), name
