@@ -42,7 +42,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sketches.hll import HLL, merge_serialized
-from ..sources import fs as fsx
 from ..sources import manifest as mf
 from ..sources import segments as seg
 from ..sources.manifest import BloomIndex
@@ -232,42 +231,16 @@ def analyze(
     version_guess, _ = mf.next_version_dir(root)
     seg_name = f"{version_guess}-analyze-{uuid.uuid4().hex[:8]}"
     seg.write_segment(mf.segment_dir(root, seg_name), {"colstats": stats})
-    meta = index.meta()
-    refs = index.table_refs()
-
-    def finalize(prev_version: str | None) -> str:
-        version = mf.version_after(prev_version)
-        tables = {t: list(rs) for t, rs in refs.items() if t != "colstats"}
-        tables["colstats"] = [mf.segment_ref(seg_name, "colstats")]
-        mf.write_meta(
-            fsx.join(root, "manifest", version),
-            index.config,
-            extra={
-                "build_id": version,
-                "source_desc": f"analyze of {index.version}",
-                "parent_version": index.version,
-                "analyzed_columns": list(columns),
-                "tables": tables,
-                **{
-                    k: meta[k]
-                    for k in (
-                        "source_columns", "source_schema", "uniform_params",
-                        "external", "data_dir_override",
-                    )
-                    if meta.get(k) is not None
-                },
-                **mf.carried_meta(meta, for_append=True),
-            },
-        )
-        return version
-
     try:
-        v = mf.publish_commit(root, finalize, expected=index.version)
+        return mf.commit_child(
+            index, "analyze",
+            tables={"colstats": [mf.segment_ref(seg_name, "colstats")]},
+            meta={"analyzed_columns": list(columns)},
+        )
     except mf.CommitConflict:
         if conflict_retries <= 0:
             raise
         return analyze(spark, root, columns, p, conflict_retries - 1)
-    return BloomIndex(spark, root, v)
 
 
 def approx_distinct_meta(

@@ -54,6 +54,7 @@ from ..query import (
     Query,
     RegexExpr,
 )
+from ..sources import manifest as mf
 from ..sources.manifest import BloomIndex
 
 _IDENT = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
@@ -123,7 +124,7 @@ def rename_column(
     The physical name (parquet columns, bloom/zone-map keys) never
     changes; queries and results speak the new logical name immediately,
     across ALL historical blocks."""
-    from .merge import _commit_table_property, _retry_conflicts
+    from .merge import _retry_conflicts
 
     if conflict_retries:
         return _retry_conflicts(
@@ -147,11 +148,8 @@ def rename_column(
         )
     _refuse_constrained(index, old, "rename")
     new_map = {(new if l == old else l): p for l, p in mapping.items()}
-    return _commit_table_property(
-        spark,
-        index,
-        {"column_mapping": new_map},
-        f"rename_column {old} -> {new}",
+    return mf.commit_child(
+        index, f"rename_column {old} -> {new}", meta={"column_mapping": new_map}
     )
 
 
@@ -166,7 +164,7 @@ def drop_column(
     read) until natural rewrite churn retires them; the physical name is
     recorded in ``retired_columns`` so a re-added same-named logical
     column gets a fresh physical name."""
-    from .merge import _commit_table_property, _retry_conflicts
+    from .merge import _retry_conflicts
 
     if conflict_retries:
         return _retry_conflicts(
@@ -217,12 +215,7 @@ def drop_column(
         sch = _json.loads(sj)
         sch["fields"] = [f for f in sch["fields"] if f.get("name") != phys]
         updates["source_schema"] = _json.dumps(sch)
-    return _commit_table_property(
-        spark,
-        index,
-        updates,
-        f"drop_column {name}",
-    )
+    return mf.commit_child(index, f"drop_column {name}", meta=updates)
 
 
 # ---------------------------------------------------------------------------

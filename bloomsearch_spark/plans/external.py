@@ -189,27 +189,18 @@ def build_external_index(
         },
     )
 
-    def finalize(prev_version: str | None) -> str:
-        v = mf.version_after(prev_version)
-        mf.write_meta(
-            fsx.join(root, "manifest", v),
-            cfg,
-            extra={
-                "build_id": version,
-                "source_desc": source_desc,
-                "source_columns": list(df.columns),
-                "source_schema": df.schema.json(),
-                "external": True,
-                "uniform_params": {
-                    "blocks": [cfg.max_block_rows, cfg.block_fpr],
-                    "files": [cfg.file_expected_items, cfg.file_fpr],
-                },
-                "tables": {t: [mf.segment_ref(seg_name, t)] for t in mf.TABLES},
-            },
-        )
-        return v
-
-    committed = mf.publish_commit(root, finalize)
+    committed = mf.publish_meta(root, cfg, {
+        "build_id": version,
+        "source_desc": source_desc,
+        "source_columns": list(df.columns),
+        "source_schema": df.schema.json(),
+        "external": True,
+        "uniform_params": {
+            "blocks": [cfg.max_block_rows, cfg.block_fpr],
+            "files": [cfg.file_expected_items, cfg.file_fpr],
+        },
+        "tables": {t: [mf.segment_ref(seg_name, t)] for t in mf.TABLES},
+    })
     fsx.delete_dir(scratch)
     return mf.BloomIndex(spark, root, committed)
 

@@ -268,36 +268,36 @@ def merge_files(
         max_files_per_merge=max_files_per_merge,
         max_file_bytes=max_file_bytes,
     ).persist()
-    n_mapped = map_df.count()
-    if n_mapped == 0:
-        map_df.unpersist()
-        stats.files_after = stats.files_before
-        return index, stats
-    stats.groups_merged = map_df.select("new_file_id").distinct().count()
+    try:
+        n_mapped = map_df.count()
+        if n_mapped == 0:
+            stats.files_after = stats.files_before
+            return index, stats
+        stats.groups_merged = map_df.select("new_file_id").distinct().count()
 
-    # the repoint joins the bitset-heavy manifest against the (id -> id)
-    # mapping: broadcast the mapping when it is small (the common case) so
-    # the multi-MB bloom columns never shuffle; above the threshold fall
-    # back to a shuffle join (an unconditional broadcast would be
-    # driver-unbounded — ADVICE r03)
-    map_side = F.broadcast(map_df) if n_mapped <= 1_000_000 else map_df
+        # the repoint joins the bitset-heavy manifest against the (id -> id)
+        # mapping: broadcast the mapping when it is small (the common case) so
+        # the multi-MB bloom columns never shuffle; above the threshold fall
+        # back to a shuffle join (an unconditional broadcast would be
+        # driver-unbounded — ADVICE r03)
+        map_side = F.broadcast(map_df) if n_mapped <= 1_000_000 else map_df
 
-    def repoint(df: DataFrame) -> DataFrame:
-        return (
-            df.join(map_side, "file_id", "left")
-            .withColumn("file_id", F.coalesce("new_file_id", "file_id"))
-            .drop("new_file_id")
+        def repoint(df: DataFrame) -> DataFrame:
+            return (
+                df.join(map_side, "file_id", "left")
+                .withColumn("file_id", F.coalesce("new_file_id", "file_id"))
+                .drop("new_file_id")
+            )
+
+        new_blocks = repoint(blocks)
+        new_files = repoint(files).groupBy("file_id").applyInPandas(
+            _merge_file_group, mf.FILES_SCHEMA
         )
-
-    new_blocks = repoint(blocks)
-    new_files = repoint(files).groupBy("file_id").applyInPandas(
-        _merge_file_group, mf.FILES_SCHEMA
-    )
-    out = _commit(
-        spark, index, new_blocks, new_files, op="merge", stats=stats
-    )
-    map_df.unpersist()
-    return out
+        return _commit(
+            spark, index, new_blocks, new_files, op="merge", stats=stats
+        )
+    finally:
+        map_df.unpersist()
 
 
 # ---------------------------------------------------------------------------
@@ -473,40 +473,42 @@ def compact_blocks(
         "block_id, merged",
         max_block_rows=target,
     ).persist()
-    stats.blocks_rewritten = map_df.count()
-    if stats.blocks_rewritten == 0:
-        map_df.unpersist()
-        stats.blocks_after = stats.blocks_before
-        return index, stats
-    stats.groups_merged = map_df.select("merged").distinct().count()
+    try:
+        stats.blocks_rewritten = map_df.count()
+        if stats.blocks_rewritten == 0:
+            stats.blocks_after = stats.blocks_before
+            return index, stats
+        stats.groups_merged = map_df.select("merged").distinct().count()
 
-    # small mapping (common): broadcast so block bitsets don't shuffle
-    map_side = (
-        F.broadcast(map_df) if stats.blocks_rewritten <= 1_000_000 else map_df
-    )
-    staged = (
-        blocks.join(map_side, "block_id", "left")
-        .withColumn("merge_block_id", F.coalesce("merged", "block_id"))
-        .drop("merged")
-    )
-    # deletion-vector masks ride the plan as a per-block positions array:
-    # consolidation purges DV'd rows physically (and the merged block's
-    # fresh id detaches the old mask); singletons keep their carried ref
-    dv_agg = index.dv_agg()
-    if dv_agg is not None:
-        staged = staged.join(dv_agg, "data_path", "left")
-    else:
-        staged = staged.withColumn(
-            "dv_positions", F.lit(None).cast("array<long>")
+        # small mapping (common): broadcast so block bitsets don't shuffle
+        map_side = (
+            F.broadcast(map_df) if stats.blocks_rewritten <= 1_000_000 else map_df
         )
-    from .build import codec_kwargs
+        staged = (
+            blocks.join(map_side, "block_id", "left")
+            .withColumn("merge_block_id", F.coalesce("merged", "block_id"))
+            .drop("merged")
+        )
+        # deletion-vector masks ride the plan as a per-block positions array:
+        # consolidation purges DV'd rows physically (and the merged block's
+        # fresh id detaches the old mask); singletons keep their carried ref
+        dv_agg = index.dv_agg()
+        if dv_agg is not None:
+            staged = staged.join(dv_agg, "data_path", "left")
+        else:
+            staged = staged.withColumn(
+                "dv_positions", F.lit(None).cast("array<long>")
+            )
+        from .build import codec_kwargs
 
-    new_blocks = staged.groupBy("merge_block_id").applyInPandas(
-        _make_consolidate_fn(index.data_dir, codec_kwargs(cfg)), mf.BLOCKS_SCHEMA
-    )
-    out = _commit(spark, index, new_blocks, index.files(), op="compact", stats=stats)
-    map_df.unpersist()
-    return out
+        new_blocks = staged.groupBy("merge_block_id").applyInPandas(
+            _make_consolidate_fn(index.data_dir, codec_kwargs(cfg)), mf.BLOCKS_SCHEMA
+        )
+        return _commit(
+            spark, index, new_blocks, index.files(), op="compact", stats=stats
+        )
+    finally:
+        map_df.unpersist()
 
 
 # ---------------------------------------------------------------------------
@@ -683,65 +685,69 @@ def optimize_zorder(
         from ..query import compile_prefilter
 
         scoped = blocks.filter(compile_prefilter(where)).persist()
-        n_scoped = scoped.count()
-        if n_scoped == 0:  # nothing in scope: no empty commit
-            scoped.unpersist()
-            stats.blocks_after = stats.blocks_before
-            stats.files_after = stats.files_before
-            return index, stats
-        untouched = blocks.join(
-            scoped.select("block_id"), "block_id", "left_anti"
-        )
-    source_columns = index.meta().get("source_columns") or []
-    rows = scan_blocks(index, scoped).select(*source_columns)
-    n_rows = int(
-        scoped.agg(F.sum("row_count").alias("n")).collect()[0]["n"] or 0
-    )
-    per_task = max(1, cfg.max_block_rows * cfg.blocks_per_file)
-    n_parts = max(1, -(-n_rows // per_task))
-    z = zorder_column(rows, cols, bits=bits)
-    ordered = (
-        rows.withColumn("_bs_z", z)
-        .repartitionByRange(n_parts, "_bs_z")
-        .sortWithinPartitions("_bs_z")
-        .drop("_bs_z")
-    )
     version_guess, _ = mf.next_version_dir(index.root)
     tag = f"{version_guess}-z{uuid.uuid4().hex[:8]}"
     scratch = mf.staging_root(index.root, tag)
-    staging = fsx.join(scratch, "staging.parquet")
-    stage_rows(
-        stage_keys(ordered, cfg), cfg, fsx.join(index.root, "data"), tag, staging
-    )
-    new_blocks, new_files = seg.split_staging(
-        spark.read.schema(STAGING_SCHEMA).parquet(staging)
-    )
-    if untouched is not None:
-        # scoped rewrite: out-of-scope blocks pass through verbatim; a
-        # file row survives while ANY of its blocks does (its bloom
-        # over-covers the rewritten-away blocks — conservative, sound)
-        cols14 = [f.name for f in new_blocks.schema.fields]
-        new_blocks = new_blocks.unionByName(untouched.select(*cols14))
-        live_files = untouched.select("file_id").distinct()
-        new_files = new_files.unionByName(
-            index.files().join(F.broadcast(live_files), "file_id", "left_semi")
+    try:
+        if where is not None:
+            n_scoped = scoped.count()
+            if n_scoped == 0:  # nothing in scope: no empty commit
+                stats.blocks_after = stats.blocks_before
+                stats.files_after = stats.files_before
+                return index, stats
+            untouched = blocks.join(
+                scoped.select("block_id"), "block_id", "left_anti"
+            )
+        source_columns = index.meta().get("source_columns") or []
+        rows = scan_blocks(index, scoped).select(*source_columns)
+        n_rows = int(
+            scoped.agg(F.sum("row_count").alias("n")).collect()[0]["n"] or 0
         )
-        stats.blocks_rewritten = n_scoped
-    else:
-        stats.blocks_rewritten = stats.blocks_before
-    # a FULL rewrite rebuilds every block from a DV-MASKED scan: deleted
-    # rows are physically gone, so the DV refs must NOT carry (they index
-    # positions of the dead layout).  A SCOPED rewrite keeps out-of-scope
-    # blocks alive — their masks must carry (the rewritten blocks' refs
-    # orphan harmlessly; fold cleans them).
-    out = _commit(
-        spark, index, new_blocks, new_files, op="zorder", stats=stats,
-        carry_dvs=untouched is not None,
-    )
-    if untouched is not None:
-        scoped.unpersist()
-    fsx.delete_dir(scratch)
-    return out
+        per_task = max(1, cfg.max_block_rows * cfg.blocks_per_file)
+        n_parts = max(1, -(-n_rows // per_task))
+        z = zorder_column(rows, cols, bits=bits)
+        ordered = (
+            rows.withColumn("_bs_z", z)
+            .repartitionByRange(n_parts, "_bs_z")
+            .sortWithinPartitions("_bs_z")
+            .drop("_bs_z")
+        )
+        staging = fsx.join(scratch, "staging.parquet")
+        stage_rows(
+            stage_keys(ordered, cfg), cfg, fsx.join(index.root, "data"),
+            tag, staging,
+        )
+        new_blocks, new_files = seg.split_staging(
+            spark.read.schema(STAGING_SCHEMA).parquet(staging)
+        )
+        if untouched is not None:
+            # scoped rewrite: out-of-scope blocks pass through verbatim; a
+            # file row survives while ANY of its blocks does (its bloom
+            # over-covers the rewritten-away blocks — conservative, sound)
+            cols14 = [f.name for f in new_blocks.schema.fields]
+            new_blocks = new_blocks.unionByName(untouched.select(*cols14))
+            live_files = untouched.select("file_id").distinct()
+            new_files = new_files.unionByName(
+                index.files().join(
+                    F.broadcast(live_files), "file_id", "left_semi"
+                )
+            )
+            stats.blocks_rewritten = n_scoped
+        else:
+            stats.blocks_rewritten = stats.blocks_before
+        # a FULL rewrite rebuilds every block from a DV-MASKED scan:
+        # deleted rows are physically gone, so the DV refs must NOT carry
+        # (they index positions of the dead layout).  A SCOPED rewrite
+        # keeps out-of-scope blocks alive — their masks must carry (the
+        # rewritten blocks' refs orphan harmlessly; fold cleans them).
+        return _commit(
+            spark, index, new_blocks, new_files, op="zorder", stats=stats,
+            carry_dvs=untouched is not None,
+        )
+    finally:
+        if where is not None:
+            scoped.unpersist()
+        fsx.delete_dir(scratch)
 
 
 # ---------------------------------------------------------------------------
@@ -911,18 +917,22 @@ def delete_where(
         *[c for c in data.columns if c != "data_path"]
     ).withColumn("_bs_del", pred)
     plan = _rewrite_plan(index, marked).persist()
-    _rewrite_stats(plan, stats)
-    if stats.rows_deleted == 0:
+    try:
+        _rewrite_stats(plan, stats)
+        if stats.rows_deleted == 0:
+            stats.blocks_after = stats.blocks_before
+            stats.files_after = stats.files_before
+            return index, stats
+        new_blocks = _apply_rewrites(blocks, plan, stats.candidate_blocks)
+        live_files = new_blocks.select("file_id").distinct()
+        new_files = index.files().join(
+            F.broadcast(live_files), "file_id", "left_semi"
+        )
+        return _commit(
+            spark, index, new_blocks, new_files, op="delete", stats=stats
+        )
+    finally:
         plan.unpersist()
-        stats.blocks_after = stats.blocks_before
-        stats.files_after = stats.files_before
-        return index, stats
-    new_blocks = _apply_rewrites(blocks, plan, stats.candidate_blocks)
-    live_files = new_blocks.select("file_id").distinct()
-    new_files = index.files().join(F.broadcast(live_files), "file_id", "left_semi")
-    out = _commit(spark, index, new_blocks, new_files, op="delete", stats=stats)
-    plan.unpersist()
-    return out
 
 
 def _delete_where_dv(
@@ -972,42 +982,12 @@ def _delete_where_dv(
     # conflict_retries re-plan.
     base, cur_seg = index, seg_name
     for _ in range(6):
-        meta = base.meta()
-        refs = base.table_refs()
-        prev_dvs = base.dvs_refs()
-
-        def finalize(
-            prev_version: str | None,
-            _refs=refs, _dvs=prev_dvs, _meta=meta, _seg=cur_seg, _base=base,
-        ) -> str:
-            version = mf.version_after(prev_version)
-            tables = {
-                "blocks": list(_refs["blocks"]),
-                "files": list(_refs["files"]),
-                "lineage": list(_refs["lineage"])
-                + [mf.segment_ref(_seg, "lineage")],
-                "dvs": list(_dvs) + [mf.segment_ref(_seg, "dvs")],
-            }
-            if _base.colstats_refs():
-                tables["colstats"] = _base.colstats_refs()
-            mf.write_meta(
-                fsx.join(index.root, "manifest", version),
-                index.config,
-                extra={
-                    "build_id": version,
-                    "source_desc": f"delete_dv of {_base.version}",
-                    "parent_version": _base.version,
-                    "tables": tables,
-                    **mf.carried_meta(_meta),
-                },
-            )
-            return version
-
         try:
-            v = mf.publish_commit(
-                index.root, finalize, expected=base.version
-            )
-            return mf.BloomIndex(spark, index.root, v), stats
+            return mf.commit_child(base, "delete_dv", tables={
+                "lineage": [*base.table_refs()["lineage"],
+                            mf.segment_ref(cur_seg, "lineage")],
+                "dvs": [*base.dvs_refs(), mf.segment_ref(cur_seg, "dvs")],
+            }), stats
         except mf.CommitConflict:
             fresh = mf.BloomIndex.load(spark, index.root)
             rb = _rebase_dv_delta(spark, base, fresh, cur_seg)
@@ -1159,47 +1139,6 @@ def _mint_dv_delta(
         plan.unpersist()
 
 
-def _commit_table_property(
-    spark: SparkSession, index: BloomIndex, updates: dict, op: str
-) -> BloomIndex:
-    """Metadata-only table-property commit: every parent segment is
-    referenced verbatim (zero data/manifest-row bytes), only the named
-    meta keys change.  A falsy update value REMOVES the key."""
-    meta = index.meta()
-    refs = index.table_refs()
-
-    def finalize(prev_version: str | None) -> str:
-        version = mf.version_after(prev_version)
-        extra = {
-            "build_id": version,
-            "source_desc": f"{op} of {index.version}",
-            "parent_version": index.version,
-            "tables": {t: list(rs) for t, rs in refs.items()},
-            **{
-                k: meta[k]
-                for k in (
-                    "source_columns", "source_schema", "uniform_params",
-                    "external", "data_dir_override",
-                )
-                if meta.get(k) is not None
-            },
-            **mf.carried_meta(meta, for_append=True),
-        }
-        for k, v in updates.items():
-            if v:
-                extra[k] = v
-            else:
-                extra.pop(k, None)
-        mf.write_meta(
-            fsx.join(index.root, "manifest", version), index.config,
-            extra=extra,
-        )
-        return version
-
-    v = mf.publish_commit(index.root, finalize, expected=index.version)
-    return mf.BloomIndex(spark, index.root, v)
-
-
 def add_constraint(
     spark: SparkSession,
     index: BloomIndex,
@@ -1252,8 +1191,9 @@ def add_constraint(
                 "with action='drop'/'warn' (forward-only gate)"
             )
     cons.update(new)
-    return _commit_table_property(
-        spark, index, {"constraints": cons}, f"add_constraint {name}"
+    # metadata-only: every parent segment is referenced verbatim
+    return mf.commit_child(
+        index, f"add_constraint {name}", meta={"constraints": cons}
     )
 
 
@@ -1278,8 +1218,8 @@ def drop_constraint(
             f"no constraint named {name!r}; have {sorted(cons)}"
         )
     cons.pop(name)
-    return _commit_table_property(
-        spark, index, {"constraints": cons}, f"drop_constraint {name}"
+    return mf.commit_child(
+        index, f"drop_constraint {name}", meta={"constraints": cons or None}
     )
 
 
@@ -1337,20 +1277,22 @@ def purge_deletion_vectors(
         .drop("_bs_pos", "_bs_fname", "data_path")
     )
     plan = _rewrite_plan(index, marked).persist()
-    _rewrite_stats(plan, stats)
-    if stats.rows_deleted == 0:  # orphan-only masks: nothing to purge
+    try:
+        _rewrite_stats(plan, stats)
+        if stats.rows_deleted == 0:  # orphan-only masks: nothing to purge
+            stats.blocks_after = stats.blocks_before
+            return index, stats
+        new_blocks = _apply_rewrites(blocks, plan, stats.candidate_blocks)
+        live_files = new_blocks.select("file_id").distinct()
+        new_files = index.files().join(
+            F.broadcast(live_files), "file_id", "left_semi"
+        )
+        return _commit(
+            spark, index, new_blocks, new_files, op="purge_dv", stats=stats,
+            carry_dvs=False,
+        )
+    finally:
         plan.unpersist()
-        stats.blocks_after = stats.blocks_before
-        return index, stats
-    new_blocks = _apply_rewrites(blocks, plan, stats.candidate_blocks)
-    live_files = new_blocks.select("file_id").distinct()
-    new_files = index.files().join(F.broadcast(live_files), "file_id", "left_semi")
-    out = _commit(
-        spark, index, new_blocks, new_files, op="purge_dv", stats=stats,
-        carry_dvs=False,
-    )
-    plan.unpersist()
-    return out
 
 
 def _rewrite_plan(index: BloomIndex, marked: DataFrame) -> DataFrame:
@@ -1585,7 +1527,6 @@ def _upsert_keys_impl(
     if key_field not in src_cols:
         raise ValueError(f"key field {key_field!r} not in source columns")
     from ..operators.constraints import (
-        ConstraintViolation,
         collect_violations,
         enforce_constraints,
         normalize_constraints,
@@ -1632,158 +1573,133 @@ def _upsert_keys_impl(
     )
     data = scan_blocks(index, surviving, with_pos=use_deletion_vectors)
     version_guess, _ = mf.next_version_dir(index.root)
-    plan = None
-    if not use_deletion_vectors:
-        # exact key match as a distributed join marker (broadcast for small
-        # key batches); NULL keys never match (join semantics)
-        selected = data.select(*[c for c in data.columns if c != "data_path"])
-        kmark = keys.withColumn("_bs_del", F.lit(True))
-        if len(collected) <= max_pruned_keys:
-            kmark = F.broadcast(kmark)
-        marked = (
-            selected.join(kmark, selected[key_field] == kmark["_bs_key"], "left")
-            .drop("_bs_key")
-            .withColumn("_bs_del", F.coalesce("_bs_del", F.lit(False)))
-        )
-        plan = _rewrite_plan(index, marked).persist()
-        _rewrite_stats(plan, stats)
-
-    # stage the source rows through the SAME zero-shuffle flush kernel as
-    # build_index (new block dirs + completed per-task file rows), into a
-    # scratch dir so downstream actions never re-run the side-effecting map
     tag = f"{version_guess}-u{uuid.uuid4().hex[:8]}"
     scratch = mf.staging_root(index.root, tag)
-    staging = fsx.join(scratch, "staging.parquet")
-    stage_rows(
-        stage_keys(source_df, cfg), cfg, fsx.join(index.root, "data"), tag, staging
-    )
-    if cons:
-        # counters rode the staging job; fail-action violations abort
-        # BEFORE commit (scratch stays unreachable)
-        viol = collect_violations(cons_obs, cons)
-        try:
-            raise_on_failures(viol, cons)
-        except ConstraintViolation:
-            if plan is not None:
-                plan.unpersist()
-            fsx.delete_dir(scratch)
-            raise
-        if viol:
-            meta_extra = {**(meta_extra or {}), "constraint_violations": viol}
-    # staging footer rows: file rows only ever accompany block rows, so
-    # zero total rows ⟺ zero staged blocks — no Spark job unless the
-    # driver cannot read the staging dir
-    staged_rows = fsx.driver_rows(staging)
-    if staged_rows is None:
-        staged_rows = spark.read.schema(STAGING_SCHEMA).parquet(staging).limit(1).count()
-    staged_empty = staged_rows == 0
+    plan = None
+    try:
+        if not use_deletion_vectors:
+            # exact key match as a distributed join marker (broadcast for
+            # small key batches); NULL keys never match (join semantics)
+            selected = data.select(
+                *[c for c in data.columns if c != "data_path"]
+            )
+            kmark = keys.withColumn("_bs_del", F.lit(True))
+            if len(collected) <= max_pruned_keys:
+                kmark = F.broadcast(kmark)
+            marked = (
+                selected.join(
+                    kmark, selected[key_field] == kmark["_bs_key"], "left"
+                )
+                .drop("_bs_key")
+                .withColumn("_bs_del", F.coalesce("_bs_del", F.lit(False)))
+            )
+            plan = _rewrite_plan(index, marked).persist()
+            _rewrite_stats(plan, stats)
 
-    if use_deletion_vectors:
-        # merge-on-read delete half: matched positions -> ONE dvs delta
-        # (shared minting kernel with delete_where's dv path), written
-        # with the staged inserts as one APPEND-SHAPED segment
-        seg_name = f"{version_guess}-upsert_dv-{uuid.uuid4().hex[:8]}"
-        seg_dir = mf.segment_dir(index.root, seg_name)
-        staged_blocks, staged_files = seg.split_staging(
-            seg.read(spark, staging, STAGING_SCHEMA)
+        # stage the source rows through the SAME zero-shuffle flush kernel
+        # as build_index (new block dirs + completed per-task file rows),
+        # into a scratch dir so downstream actions never re-run the
+        # side-effecting map
+        staging = fsx.join(scratch, "staging.parquet")
+        stage_rows(
+            stage_keys(source_df, cfg), cfg, fsx.join(index.root, "data"),
+            tag, staging,
         )
-        inserts = {
-            "blocks": staged_blocks,
-            "files": staged_files,
-            "lineage": seg.lineage_of(staged_blocks, version_guess, "upsert_dv"),
-        }
-        nd = nb = 0
-        if "block_id" in data.columns:  # empty index scans have no blocks
-            kj = (
-                F.broadcast(keys)
-                if len(collected) <= max_pruned_keys
-                else keys
+        if cons:
+            # counters rode the staging job; fail-action violations abort
+            # BEFORE commit (scratch stays unreachable)
+            viol = collect_violations(cons_obs, cons)
+            raise_on_failures(viol, cons)
+            if viol:
+                meta_extra = {**(meta_extra or {}), "constraint_violations": viol}
+        # staging footer rows: file rows only ever accompany block rows, so
+        # zero total rows ⟺ zero staged blocks — no Spark job unless the
+        # driver cannot read the staging dir
+        staged_rows = fsx.driver_rows(staging)
+        if staged_rows is None:
+            staged_rows = (
+                spark.read.schema(STAGING_SCHEMA).parquet(staging)
+                .limit(1).count()
             )
-            matched = data.join(
-                kj, data[key_field] == kj["_bs_key"], "left_semi"
-            ).select("block_id", "_bs_pos", "_bs_fname")
-            nd, nb = _mint_dv_delta(
-                index, matched, version_guess, seg_dir, "upsert_dv", inserts
+        staged_empty = staged_rows == 0
+
+        if use_deletion_vectors:
+            # merge-on-read delete half: matched positions -> ONE dvs delta
+            # (shared minting kernel with delete_where's dv path), written
+            # with the staged inserts as one APPEND-SHAPED segment
+            seg_name = f"{version_guess}-upsert_dv-{uuid.uuid4().hex[:8]}"
+            seg_dir = mf.segment_dir(index.root, seg_name)
+            staged_blocks, staged_files = seg.split_staging(
+                seg.read(spark, staging, STAGING_SCHEMA)
             )
-        stats.rows_deleted = nd
-        stats.dv_blocks = stats.candidate_blocks = nb
-    if stats.rows_deleted == 0 and staged_empty:
-        # nothing matched, nothing to insert: commit NOTHING (a CDC
-        # stream's empty/irrelevant micro-batch must not churn versions)
+            inserts = {
+                "blocks": staged_blocks,
+                "files": staged_files,
+                "lineage": seg.lineage_of(
+                    staged_blocks, version_guess, "upsert_dv"
+                ),
+            }
+            nd = nb = 0
+            if "block_id" in data.columns:  # empty index scans have no blocks
+                kj = (
+                    F.broadcast(keys)
+                    if len(collected) <= max_pruned_keys
+                    else keys
+                )
+                matched = data.join(
+                    kj, data[key_field] == kj["_bs_key"], "left_semi"
+                ).select("block_id", "_bs_pos", "_bs_fname")
+                nd, nb = _mint_dv_delta(
+                    index, matched, version_guess, seg_dir, "upsert_dv", inserts
+                )
+            stats.rows_deleted = nd
+            stats.dv_blocks = stats.candidate_blocks = nb
+        if stats.rows_deleted == 0 and staged_empty:
+            # nothing matched, nothing to insert: commit NOTHING (a CDC
+            # stream's empty/irrelevant micro-batch must not churn versions)
+            stats.blocks_after = stats.blocks_before
+            stats.files_after = stats.files_before
+            return index, stats
+
+        if use_deletion_vectors:
+            # APPEND-SHAPED commit: parent blocks/files referenced verbatim
+            # + this one segment (staged inserts, the dv delta, both
+            # lineages) — O(batch) manifest bytes, zero old-block data bytes
+            if nd == 0:
+                seg.write_segment(seg_dir, inserts)  # else the mint wrote them
+            refs = index.table_refs()
+            tables = {
+                t: [*refs[t], mf.segment_ref(seg_name, t)] for t in mf.TABLES
+            }
+            if nd:
+                tables["dvs"] = [
+                    *index.dvs_refs(), mf.segment_ref(seg_name, "dvs")
+                ]
+            out_ix = mf.commit_child(index, "upsert_dv", tables, meta_extra)
+            stats.blocks_after = _manifest_count(out_ix, "blocks")
+            stats.files_after = _manifest_count(out_ix, "files")
+            return out_ix, stats
+
+        staged_blocks, staged_files = seg.split_staging(
+            spark.read.schema(STAGING_SCHEMA).parquet(staging)
+        )
+        new_blocks = _apply_rewrites(
+            blocks, plan, stats.candidate_blocks
+        ).unionByName(staged_blocks)
+        live_files = new_blocks.select("file_id").distinct()
+        new_files = (
+            index.files()
+            .join(F.broadcast(live_files), "file_id", "left_semi")
+            .unionByName(staged_files)
+        )
+        return _commit(
+            spark, index, new_blocks, new_files, op="upsert", stats=stats,
+            meta_extra=meta_extra,
+        )
+    finally:
         if plan is not None:
             plan.unpersist()
         fsx.delete_dir(scratch)
-        stats.blocks_after = stats.blocks_before
-        stats.files_after = stats.files_before
-        return index, stats
-
-    if use_deletion_vectors:
-        # APPEND-SHAPED commit: parent blocks/files referenced verbatim +
-        # this one segment (staged inserts, the dv delta, both lineages) —
-        # O(batch) manifest bytes, zero old-block data bytes
-        if nd == 0:
-            seg.write_segment(seg_dir, inserts)  # else the mint wrote them
-        meta = index.meta()
-        refs = index.table_refs()
-        prev_dvs = index.dvs_refs()
-        nd = stats.rows_deleted
-
-        def finalize(prev_version: str | None) -> str:
-            version = mf.version_after(prev_version)
-            tables = {
-                "blocks": list(refs["blocks"])
-                + [mf.segment_ref(seg_name, "blocks")],
-                "files": list(refs["files"])
-                + [mf.segment_ref(seg_name, "files")],
-                "lineage": list(refs["lineage"])
-                + [mf.segment_ref(seg_name, "lineage")],
-            }
-            if prev_dvs or nd:
-                tables["dvs"] = list(prev_dvs) + (
-                    [mf.segment_ref(seg_name, "dvs")] if nd else []
-                )
-            if index.colstats_refs():
-                tables["colstats"] = index.colstats_refs()
-            mf.write_meta(
-                fsx.join(index.root, "manifest", version),
-                index.config,
-                extra={
-                    "build_id": version,
-                    "source_desc": f"upsert_dv of {index.version}",
-                    "parent_version": index.version,
-                    "tables": tables,
-                    **mf.carried_meta(meta),
-                    **(meta_extra or {}),
-                },
-            )
-            return version
-
-        v = mf.publish_commit(index.root, finalize, expected=index.version)
-        out_ix = mf.BloomIndex(spark, index.root, v)
-        stats.blocks_after = _manifest_count(out_ix, "blocks")
-        stats.files_after = _manifest_count(out_ix, "files")
-        fsx.delete_dir(scratch)
-        return out_ix, stats
-
-    staged_blocks, staged_files = seg.split_staging(
-        spark.read.schema(STAGING_SCHEMA).parquet(staging)
-    )
-    new_blocks = _apply_rewrites(blocks, plan, stats.candidate_blocks).unionByName(
-        staged_blocks
-    )
-    live_files = new_blocks.select("file_id").distinct()
-    new_files = (
-        index.files()
-        .join(F.broadcast(live_files), "file_id", "left_semi")
-        .unionByName(staged_files)
-    )
-    out = _commit(
-        spark, index, new_blocks, new_files, op="upsert", stats=stats,
-        meta_extra=meta_extra,
-    )
-    plan.unpersist()
-    fsx.delete_dir(scratch)
-    return out
 
 
 def apply_changes_batch(
@@ -1983,70 +1899,40 @@ def restore(
                 "every version you want restorable"
             )
 
-    root = index.root
     t_refs = target.table_refs()
-    t_meta = target.meta()
-    cur_meta = index.meta()
-
-    def finalize(prev_version: str | None) -> str:
-        v = mf.version_after(prev_version)
-        extra = {
-            "build_id": v,
+    return mf.commit_child(
+        index, "restore",
+        tables={
+            "blocks": t_refs["blocks"],
+            "files": t_refs["files"],
+            # FULL lineage: history is never truncated by a rollback, so
+            # CURRENT's lineage refs carry.  The TARGET's deletion vectors
+            # travel back with it — restoring to a pre-DV version drops the
+            # mask (rows were live then), restoring to a post-DV version
+            # keeps exactly its mask; carrying CURRENT's refs instead would
+            # delete rows the restored snapshot never deleted
+            "dvs": t_refs.get("dvs", []),
+            # the TARGET's ANALYZE stats travel back with its block set
+            "colstats": t_refs.get("colstats", []),
+        },
+        meta={
+            # the TARGET's identity replaces CURRENT's: the restored state
+            # answers queries exactly as the target version did.  That
+            # covers source columns/schema, uniform params and the
+            # external / data dir flags; CHECK constraints (a restore to a
+            # pre-constraint version drops the gate); and the column
+            # mapping (a restore to a pre-rename version answers with the
+            # old logical names, and a pre-drop restore re-activates the
+            # column — the physical bytes never left)
+            **dict.fromkeys(mf.carried_meta(index.meta())),
+            **mf.carried_meta(target.meta()),
+            # ...except CURRENT's replay watermark: never rewound
+            "last_stream_batch": index.meta().get("last_stream_batch"),
             "source_desc": f"restore of {target.version}",
-            "parent_version": index.version,
             "restored_version": target.version,
-            "tables": {
-                "blocks": list(t_refs["blocks"]),
-                "files": list(t_refs["files"]),
-                # FULL lineage: history is never truncated by a rollback
-                "lineage": list(index.table_refs()["lineage"]),
-                # the TARGET's deletion vectors travel back with it —
-                # restoring to a pre-DV version drops the mask (rows
-                # were live then), restoring to a post-DV version keeps
-                # exactly its mask; carrying CURRENT's refs instead
-                # would delete rows the restored snapshot never deleted
-                **(
-                    {"dvs": list(t_refs["dvs"])} if t_refs.get("dvs") else {}
-                ),
-                # the TARGET's ANALYZE stats travel back with its block set
-                **(
-                    {"colstats": list(t_refs["colstats"])}
-                    if t_refs.get("colstats")
-                    else {}
-                ),
-            },
-            # target identity: the restored state answers queries exactly
-            # as the target version did
-            **{
-                k: t_meta[k]
-                for k in (
-                    "source_columns", "source_schema", "uniform_params",
-                    "external", "data_dir_override",
-                )
-                if k in t_meta
-            },
-            # CURRENT's replay watermark only — never rewound
-            **mf.carried_meta(cur_meta, for_append=True),
-        }
-        # CHECK constraints are table identity too: the TARGET's travel
-        # back (a restore to a pre-constraint version drops the gate) —
-        # carried_meta above would otherwise keep CURRENT's
-        extra.pop("constraints", None)
-        if "constraints" in t_meta:
-            extra["constraints"] = t_meta["constraints"]
-        # column mapping identity travels with the target the same way: a
-        # restore to a pre-rename version answers with the old logical
-        # names, and a pre-drop restore re-activates the column (the
-        # physical bytes never left)
-        for k in ("column_mapping", "retired_columns"):
-            extra.pop(k, None)
-            if k in t_meta:
-                extra[k] = t_meta[k]
-        mf.write_meta(fsx.join(root, "manifest", v), target.config, extra=extra)
-        return v
-
-    new_v = mf.publish_commit(root, finalize, expected=index.version)
-    return BloomIndex(spark, root, new_v)
+        },
+        config=target.config,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -2143,38 +2029,18 @@ def clone(
         if not copied:
             raise RuntimeError("deep clone copied zero block files")
 
-    def finalize(prev_version):
-        v = mf.version_after(prev_version)  # v1 — fresh root
-        extra = {
-            "build_id": v,
-            "source_desc": f"clone of {index.root}@{target.version}",
-            "cloned_from": {"root": index.root, "version": target.version},
-            "tables": {
-                t: list(refs[t])
-                for t in (
-                    *mf.TABLES,
-                    *(["dvs"] if refs.get("dvs") else []),
-                    *(["colstats"] if refs.get("colstats") else []),
-                )
-            },
-            **{
-                k: t_meta[k]
-                for k in (
-                    "source_columns", "source_schema", "uniform_params",
-                    "external", "last_stream_batch", "constraints",
-                    "column_mapping", "retired_columns",
-                )
-                if k in t_meta
-            },
-        }
-        if shallow and not external:
-            # target.data_dir already resolves a clone-of-a-clone's
-            # override to the ORIGINAL source data dir
-            extra["data_dir_override"] = target.data_dir
-        mf.write_meta(fsx.join(new_root, "manifest", v), target.config, extra=extra)
-        return v
-
-    new_v = mf.publish_commit(new_root, finalize)
+    new_v = mf.publish_meta(new_root, target.config, {  # v1 — fresh root
+        **mf.carried_meta(t_meta),
+        "source_desc": f"clone of {index.root}@{target.version}",
+        "cloned_from": {"root": index.root, "version": target.version},
+        "tables": {t: rs for t, rs in refs.items() if rs},
+        # shallow: target.data_dir already resolves a clone-of-a-clone's
+        # override to the ORIGINAL source data dir; deep: the clone owns
+        # its copied blocks
+        "data_dir_override": (
+            target.data_dir if shallow and not external else None
+        ),
+    })
     return BloomIndex(spark, new_root, new_v)
 
 
@@ -2208,8 +2074,8 @@ def _commit(
     blocks/files segment) plus a lineage DELTA holding only this op's
     provenance rows; the new version references the parent's lineage
     segments unchanged, so history is never recopied (the r03 unbounded
-    lineage-rewrite fix).  Published through ``publish_commit`` with
-    ``expected=parent``: if anything (a streaming append, another
+    lineage-rewrite fix).  Published through ``commit_child`` (with
+    ``expected=parent``): if anything (a streaming append, another
     maintenance op) committed since this op's snapshot, folding from the
     stale snapshot would silently DROP that commit — CommitConflict is
     raised instead and the caller re-plans from the fresh version."""
@@ -2231,39 +2097,19 @@ def _commit(
         seg.LINEAGE_SOURCE_COLUMNS,
     )
     seg.write_segment(seg_dir, {"lineage": seg.lineage_of(committed, version_guess, op)})
-    meta = index.meta()
-
-    def finalize(prev_version: str | None) -> str:
-        version = mf.version_after(prev_version)
-        tables = {
-            "blocks": [mf.segment_ref(seg_name, "blocks")],
-            "files": [mf.segment_ref(seg_name, "files")],
-            "lineage": index.table_refs()["lineage"]
-            + [mf.segment_ref(seg_name, "lineage")],
-        }
-        if carry_dvs and index.dvs_refs():
-            tables["dvs"] = index.dvs_refs()
-        # ANALYZE stats carry like DVs: rows key by (block_id, data_path),
-        # so survivors stay covered; rows for rewritten blocks are
-        # orphan-but-harmless (they join nothing) and fold prunes them
-        if index.colstats_refs():
-            tables["colstats"] = index.colstats_refs()
-        mf.write_meta(
-            fsx.join(root, "manifest", version),
-            index.config,
-            extra={
-                "build_id": version,
-                "source_desc": f"{op} of {index.version}",
-                "parent_version": index.version,
-                "tables": tables,
-                **mf.carried_meta(meta),
-                **(meta_extra or {}),
-            },
-        )
-        return version
-
-    version = mf.publish_commit(root, finalize, expected=index.version)
-    out = mf.BloomIndex(spark, root, version)
+    # ANALYZE stats (like carried DVs) stay referenced: rows key by
+    # (block_id, data_path), so survivors stay covered; rows for rewritten
+    # blocks are orphan-but-harmless (they join nothing) and fold prunes
+    # them
+    tables = {
+        "blocks": [mf.segment_ref(seg_name, "blocks")],
+        "files": [mf.segment_ref(seg_name, "files")],
+        "lineage": [*index.table_refs()["lineage"],
+                    mf.segment_ref(seg_name, "lineage")],
+    }
+    if not carry_dvs:
+        tables["dvs"] = []
+    out = mf.commit_child(index, op, tables, meta_extra)
     stats.files_after = _manifest_count(out, "files")
     stats.blocks_after = _manifest_count(out, "blocks")
     return out, stats
@@ -2519,30 +2365,12 @@ def fold_manifest(
         t in tables and fsx.parquet_dir_rows(fsx.join(seg_dir, f"{t}.parquet")) > 0
         for t in ("dvs", "colstats")
     )
-    meta = index.meta()
-
-    def finalize(prev_version: str | None) -> str:
-        version = mf.version_after(prev_version)
-        tables = {t: [mf.segment_ref(seg_name, t)] for t in mf.TABLES}
-        if fold_dvs:
-            tables["dvs"] = [mf.segment_ref(seg_name, "dvs")]
-        if fold_cs:
-            tables["colstats"] = [mf.segment_ref(seg_name, "colstats")]
-        mf.write_meta(
-            fsx.join(root, "manifest", version),
-            index.config,
-            extra={
-                "build_id": version,
-                "source_desc": f"fold of {index.version}",
-                "parent_version": index.version,
-                "tables": tables,
-                **mf.carried_meta(meta),
-            },
-        )
-        return version
-
-    version = mf.publish_commit(root, finalize, expected=index.version)
-    return mf.BloomIndex(spark, root, version)
+    return mf.commit_child(index, "fold", {
+        **{t: [mf.segment_ref(seg_name, t)] for t in mf.TABLES},
+        # an all-orphan result folds back to no table at all
+        "dvs": [mf.segment_ref(seg_name, "dvs")] if fold_dvs else [],
+        "colstats": [mf.segment_ref(seg_name, "colstats")] if fold_cs else [],
+    })
 
 
 def vacuum_manifest(

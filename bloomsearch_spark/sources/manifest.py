@@ -302,7 +302,13 @@ def retained_versions(root: str) -> list[str]:
     cur = current_version(root)
     if cur is None:
         raise FileNotFoundError(f"no committed manifest under {root}")
-    cur_n = int(cur[1:])
+    return committed_versions(root, cur)
+
+
+def committed_versions(root: str, current: str) -> list[str]:
+    """Version dir names numbered at or below ``current`` (the CURRENT
+    name the caller resolved), ascending."""
+    cur_n = int(current[1:])
     return [
         n
         for n in fsx.list_subdirs(_manifest_dir(root))
@@ -478,21 +484,17 @@ def build_commit_finalize(
         # retention (vacuum_manifest keeps it small), never by the index.
         if prev_version is not None:
             mine = {ref for refs in seg_tables.values() for ref in refs}
-            mdir = _manifest_dir(root)
-            cur_n = int(prev_version[1:])
-            for vdir_name in fsx.list_subdirs(mdir):
-                # only COMMITTED history (numbers <= CURRENT): a crashed
-                # pre-swap attempt's dir is numbered past CURRENT, and
-                # treating it as committed would wedge the legitimate
-                # crash-RESUME of this very build behind a false conflict
-                if not vdir_name.startswith("v"):
-                    continue
+            # only COMMITTED history (numbers <= CURRENT): a crashed
+            # pre-swap attempt's dir is numbered past CURRENT, and treating
+            # it as committed would wedge the legitimate crash-RESUME of
+            # this very build behind a false conflict
+            for vdir_name in committed_versions(root, prev_version):
                 try:
-                    if int(vdir_name[1:]) > cur_n:
-                        continue
                     refs = BloomIndex(None, root, vdir_name).table_refs()
-                except Exception:
-                    continue  # partial/foreign dir: not a committed version
+                except FileNotFoundError:
+                    continue  # no meta.json: never committed, or vacuumed
+                # any other read error propagates: a skipped check could
+                # re-reference a committed segment (double-counted rows)
                 if mine & {ref for rs in refs.values() for ref in rs}:
                     raise CommitConflict(
                         f"segment {seg_name!r} is already referenced by "
@@ -714,6 +716,74 @@ def carried_meta(parent_meta: dict, for_append: bool = False) -> dict:
             # (empty) local data dir
             out["data_dir_override"] = parent_meta["data_dir_override"]
     return out
+
+
+def publish_meta(
+    root: str, config: IndexConfig, meta: dict, expected=_UNSET
+) -> str:
+    """Publish ``meta`` as the next version's meta.json through
+    :func:`publish_commit` — every commit whose meta does not depend on the
+    predecessor read inside the lock: child commits (``expected`` = their
+    parent, so the predecessor IS the parent) and fresh-root commits
+    (clone, the external build, the synthetic manifest).  ``build_id``
+    defaults to the committed version name; a ``None`` value drops its key.
+    Returns the committed version name."""
+    meta = {k: v for k, v in meta.items() if v is not None}
+
+    def finalize(prev_version: str | None) -> str:
+        version = version_after(prev_version)
+        write_meta(
+            fsx.join(_manifest_dir(root), version),
+            config,
+            extra={"build_id": version, **meta},
+        )
+        return version
+
+    return publish_commit(root, finalize, expected)
+
+
+def commit_child(
+    parent: "BloomIndex",
+    op: str,
+    tables: dict | None = None,
+    meta: dict | None = None,
+    config: IndexConfig | None = None,
+) -> "BloomIndex":
+    """Commit a child version of ``parent`` — the ONE commit path of every
+    op that derives its new state from a snapshot (maintenance rewrites,
+    deletes, upserts, the metadata-only ALTERs, analyze, fold, restore):
+
+    - ``tables`` overlays ``parent.table_refs()``; a table mapped to
+      ``[]`` is dropped;
+    - ``meta`` overlays :func:`carried_meta` of the parent's meta; a
+      ``None`` value drops the key;
+    - ``source_desc = "{op} of {parent.version}"`` and ``parent_version``
+      are stamped before the overlay (the changefeed and ``history()``
+      classify commits by them — keep the spelling);
+    - published with ``expected=parent.version``: a commit that raced in
+      since the snapshot raises :class:`CommitConflict` (callers re-plan),
+      so everything is computed here, outside the lock, as plain data.
+
+    ``config`` defaults to the parent's.  Returns the committed handle."""
+    refs = dict(parent.table_refs())
+    for name, rs in (tables or {}).items():
+        if rs:
+            refs[name] = list(rs)
+        else:
+            refs.pop(name, None)
+    version = publish_meta(
+        parent.root,
+        config or parent.config,
+        {
+            **carried_meta(parent.meta()),
+            "source_desc": f"{op} of {parent.version}",
+            "parent_version": parent.version,
+            **(meta or {}),
+            "tables": refs,
+        },
+        expected=parent.version,
+    )
+    return BloomIndex(parent.spark, parent.root, version)
 
 
 # Spark lists up to this many paths serially on the driver, more (and

@@ -245,25 +245,15 @@ def synthesize_probe_manifest(
         file_expected_items=file_expected,
     )
 
-    def finalize(prev):
-        v = mf.version_after(prev)
-        mf.write_meta(
-            fsx.join(root, "manifest", v),
-            cfg,
-            extra={
-                "build_id": v,
-                "source_desc": "synthetic-probe-manifest",
-                "source_columns": ["text"],
-                "uniform_params": {
-                    "blocks": [block_expected, fpr],
-                    "files": [file_expected, fpr],
-                },
-                "tables": {t: [mf.segment_ref(seg, t)] for t in mf.TABLES},
-            },
-        )
-        return v
-
-    v = mf.publish_commit(root, finalize)
+    v = mf.publish_meta(root, cfg, {
+        "source_desc": "synthetic-probe-manifest",
+        "source_columns": ["text"],
+        "uniform_params": {
+            "blocks": [block_expected, fpr],
+            "files": [file_expected, fpr],
+        },
+        "tables": {t: [mf.segment_ref(seg, t)] for t in mf.TABLES},
+    })
     return mf.BloomIndex(spark, root, v)
 
 
