@@ -236,17 +236,6 @@ def merge(a: np.ndarray, b: np.ndarray) -> np.ndarray:
     return np.bitwise_or(a, b)
 
 
-def merge_serialized(raws: list[bytes | None]) -> bytes | None:
-    """OR-merge a list of serialized bitsets; ignores nulls; None if all null."""
-    acc: np.ndarray | None = None
-    for raw in raws:
-        if raw is None or len(raw) == 0:
-            continue
-        bs = np.frombuffer(raw, dtype=np.uint8)
-        acc = bs.copy() if acc is None else merge(acc, bs)
-    return None if acc is None else acc.tobytes()
-
-
 def fill_ratio(bitset: np.ndarray) -> float:
     """Fraction of set bits — surfaced as a metric because real FPR degrades
     silently when a filter holds more distinct items than sized for

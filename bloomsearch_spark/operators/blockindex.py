@@ -329,43 +329,3 @@ def _minmax_maps(pdf: pd.DataFrame, cfg: IndexConfig) -> tuple[dict, dict]:
                 lo, hi = _widen_float_bounds(float(s.min()), float(s.max()))
         mn_map[f], mx_map[f] = minmax_coerce(lo, hi)
     return mn_map, mx_map
-
-
-def rollup_file_entry(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-    """Grouped-map body: OR-merge one file's block partials into the
-    file-level manifest row (M4/M5 semantics: bitwise-OR blooms,
-    union-widen minmax; bloom_tree_engine.go:1401-1446).
-
-    Associative + idempotent, so Spark partial aggregation / stage retry /
-    checkpoint replay recombine identically.
-    """
-    (file_id,) = key
-    mn_map: dict[str, int] = {}
-    mx_map: dict[str, int] = {}
-    for m in pdf["minmax_min"]:
-        for f, v in (m or {}).items():
-            mn_map[f] = min(mn_map.get(f, v), v)
-    for m in pdf["minmax_max"]:
-        for f, v in (m or {}).items():
-            mx_map[f] = max(mx_map.get(f, v), v)
-    return pd.DataFrame(
-        [
-            {
-                "file_id": file_id,
-                "partition_id": pdf["partition_id"].iloc[0],
-                "block_count": len(pdf),
-                "row_count": int(pdf["row_count"].sum()),
-                "token_count": int(pdf["token_count"].sum()),
-                "byte_size": int(pdf["byte_size"].sum()),
-                "minmax_min": mn_map,
-                "minmax_max": mx_map,
-                "expected_items": int(pdf["file_expected_items"].iloc[0]),
-                "fpr": float(pdf["file_fpr"].iloc[0]),
-                "field_bloom": bloom.merge_serialized(list(pdf["file_field_bloom"])),
-                "token_bloom": bloom.merge_serialized(list(pdf["file_token_bloom"])),
-                "fieldtoken_bloom": bloom.merge_serialized(
-                    list(pdf["file_fieldtoken_bloom"])
-                ),
-            }
-        ]
-    )

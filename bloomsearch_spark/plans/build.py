@@ -7,26 +7,30 @@ buffer rows per partition, flush a data block when the row-group cap hits):
     source_df
       -> withColumn(partition_id = <user partition expr>)         (W2)
       -> withColumn(content_sha = sha2(sha_col, 256))             (W11 invariant)
-      -> mapInPandas (ZERO data shuffle):                         (W3-W9)
+      -> mapInArrow (ZERO data shuffle):                          (W3-W9)
            per input task: buffer rows by partition_id; every
            max_block_rows rows flush one data block — 3 block blooms +
-           3 file-partial blooms + minmax + the block's own Parquet file
-           (temp + atomic rename); one staging/manifest row per block
-      -> rollup groupBy(file_id): OR file partials -> files.parquet
-         (M4-shaped; shuffles only manifest rows, 1 per ~10k-row block)
-      -> write blocks/files/lineage parquet into an uncommitted version dir
+           minmax + the block's own Parquet file (temp + atomic
+           rename); one staging row per block, and one completed file
+           row per file (files are task-local: the file blooms OR
+           in-task, M4)
+      -> staging through the segment gate (sources/segments.py): blocks
+         and files are a projection of it; Arrow on the driver up to
+         DRIVER_SEGMENT_MAX_BYTES, else Spark
+      -> write blocks/files/lineage as one immutable manifest segment
       -> atomically swap manifest/CURRENT                          (W12)
 
 When ``cfg.block_expr`` is set (user-controlled clustering, e.g. tight
 zone maps per doc_id or date buckets for TTL), the build instead
 hash/expr-assigns rows to blocks and does ONE full-data shuffle
-(groupBy(block).applyInArrow) to co-locate each block's rows.
+(groupBy(block).applyInArrow) to co-locate each block's rows.  A file's
+blocks then span tasks, so its file row is the manifest-row fold
+(``segments.fold``) of its block rows, on whichever face the gate picks.
 
 Scale notes (100 TB / 1000 executors):
 - the default path moves zero row bytes between executors: each task reads
-  its input split once and writes its blocks locally; only block manifest
-  rows (a few KB each) shuffle for the file rollup.  At 100 TB the
-  clustered path would shuffle 100 TB; the map path shuffles ~MBs.
+  its input split once and writes its blocks locally, and no manifest row
+  shuffles either.  At 100 TB the clustered path would shuffle 100 TB.
 - skew-proof by construction: blocks are flushed per task at a fixed row
   cap, so a partition holding 30% of all rows simply produces
   proportionally many equal-size blocks — no hot reducer exists at all
@@ -52,7 +56,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..config import IndexConfig
-from ..operators.blockindex import rollup_file_entry
 from ..sources import fs as fsx
 from ..sources import manifest as mf
 from ..sources import segments as seg
@@ -642,17 +645,12 @@ def build_index(
     # immutable segment — an append never rewrites the existing manifest
     # (O(batch) bytes per commit; the delta MetaStore.Update contract,
     # meta_store.go:8-22).
-    if cfg.block_expr is None:
-        # map path: the tasks already emitted one completed file row per
-        # file (files are task-local) — a pure projection, no shuffle and
-        # no re-read of MB-scale file-bloom partials
-        st = seg.read(spark, staging, STAGING_SCHEMA)
-        new_blocks, new_files = seg.split_staging(st)
-    else:
-        # clustered path: a file's blocks span tasks -> grouped OR-rollup
-        st = spark.read.schema(STAGING_SCHEMA).parquet(staging)
-        new_blocks, _ = seg.split_staging(st)
-        new_files = st.groupBy("file_id").applyInPandas(rollup_file_entry, mf.FILES_SCHEMA)
+    # map path: the tasks emitted one completed file row per file (files
+    # are task-local); clustered path: a file's blocks span tasks, so its
+    # file row is the fold of their rows
+    new_blocks, new_files = seg.split_staging(
+        seg.read(spark, staging, STAGING_SCHEMA), rollup=cfg.block_expr is not None
+    )
     new_lineage = seg.lineage_of(new_blocks, build_id, "build", source_desc)
     if isinstance(new_blocks, DataFrame):
         # cluster the new blocks by partition_id: the partition prefilter

@@ -12,10 +12,12 @@ the build moves only manifest rows.
 Mechanics:
 
 - ``input_file_name()`` tags rows with their source file (constant per
-  split, JVM-side).  One mapInArrow pass accumulates per-(file, partition)
+  split, JVM-side).  One mapInArrow pass stages per-(file, partition)
   partial blooms/minmax/counts; a source file larger than one input split
-  yields several partials, which OR-merge in a manifest-sized grouped
-  rollup (bloom merge associativity doing its job).
+  yields several partials.  At the segment step the manifest-row fold
+  (``segments.fold``) ORs partials into blocks and blocks into files
+  (bloom merge associativity doing its job), on the driver when the
+  staging passes the segment gate, else as Spark grouped maps.
 - file-level grouping: blocks of one source *directory* x partition form a
   logical file (Iceberg data dirs group naturally).
 - query-side (plans/search.py): pruned scan reads the surviving source
@@ -31,15 +33,14 @@ from __future__ import annotations
 
 import os
 
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .. import bloom
 from ..config import IndexConfig
-from ..operators.blockindex import BlockAccumulator, rollup_file_entry
+from ..operators.blockindex import BlockAccumulator
 from ..sources import fs as fsx
 from ..sources import manifest as mf
 from ..sources import segments as seg
@@ -110,29 +111,6 @@ def _make_external_fn(cfg: IndexConfig, build_tag: str):
     return fn
 
 
-def _merge_partials(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-    """OR-merge partials of one block that was split across input tasks
-    (associative + idempotent — safe under retry/replay)."""
-    out = pdf.iloc[:1].copy()
-    if len(pdf) > 1:
-        mn: dict[str, int] = {}
-        mx: dict[str, int] = {}
-        for m in pdf["minmax_min"]:
-            for f2, v in (m or {}).items():
-                mn[f2] = min(mn.get(f2, v), v)
-        for m in pdf["minmax_max"]:
-            for f2, v in (m or {}).items():
-                mx[f2] = max(mx.get(f2, v), v)
-        out["row_count"] = int(pdf["row_count"].sum())
-        out["token_count"] = int(pdf["token_count"].sum())
-        out["minmax_min"] = [mn]
-        out["minmax_max"] = [mx]
-        for fld in ("field_bloom", "token_bloom", "fieldtoken_bloom",
-                    "file_field_bloom", "file_token_bloom", "file_fieldtoken_bloom"):
-            out[fld] = bloom.merge_serialized(list(pdf[fld]))
-    return out
-
-
 def build_external_index(
     spark: SparkSession,
     source: str | list[str] | DataFrame,
@@ -162,16 +140,15 @@ def build_external_index(
     scratch = mf.staging_root(root, f"{version}-external")
     staging = fsx.join(scratch, "staging.parquet")
     if not _stage_done(staging):
-        (
-            d.mapInArrow(_make_external_fn(cfg, version), STAGING_SCHEMA)
-            .groupBy("block_id", "partition_id")
-            .applyInPandas(_merge_partials, STAGING_SCHEMA)
-            .write.mode("overwrite")
-            .parquet(staging)
-        )
+        d.mapInArrow(_make_external_fn(cfg, version), STAGING_SCHEMA).write.mode(
+            "overwrite"
+        ).parquet(staging)
 
-    st = spark.read.schema(STAGING_SCHEMA).parquet(staging)
-    new_blocks, _ = seg.split_staging(st)
+    # a source file read by several input splits staged one partial per
+    # split: fold partials into blocks, then blocks into files
+    new_blocks, new_files = seg.split_staging(
+        seg.fold(seg.read(spark, staging, STAGING_SCHEMA), "block_id"), rollup=True
+    )
     # per-attempt nonce (see merge._commit): a racing committer sharing the
     # version guess must not overwrite a committed immutable segment.  The
     # heavy staging above stays deterministic (resume); re-writing the
@@ -183,8 +160,7 @@ def build_external_index(
         mf.segment_dir(root, seg_name),
         {
             "blocks": new_blocks,
-            # a source file's blocks span tasks -> grouped OR-rollup
-            "files": st.groupBy("file_id").applyInPandas(rollup_file_entry, mf.FILES_SCHEMA),
+            "files": new_files,
             "lineage": seg.lineage_of(new_blocks, version, "build-external", source_desc),
         },
     )
@@ -242,7 +218,7 @@ def verify_external_integrity(spark: SparkSession, index: mf.BloomIndex) -> int:
         return blocks.count()
     try:
         src = spark.read.option("ignoreMissingFiles", "true").parquet(*live_dirs)
-    except Exception:
+    except AnalysisException:
         # dirs exist but hold no readable parquet (all source files gone):
         # schema inference fails — every block is a mismatch, not a crash
         return blocks.count()

@@ -12,17 +12,19 @@ which commit a new manifest version atomically (readers never see a
 partial state):
 
 - **metadata-only file merge** (the common case): file-level blooms with
-  equal (m, k) OR together distributively — ``groupBy(new_file_id).
-  applyInPandas`` over the *files manifest* (1 row per file, so this
-  touches no row data at all).  Block rows are re-pointed to the merged
+  equal (m, k) OR together distributively — the manifest-row fold
+  (``segments.fold``) as a ``groupBy(new_file_id).applyInArrow`` over
+  the *files manifest* (1 row per file, so this touches no row data at
+  all).  Block rows are re-pointed to the merged
   file_id; their ``data_path`` keeps referencing the original block
   directory, so **zero bytes of row data move** — strictly cheaper than
   the reference's byte-copy (copyDataBlock :1762-1786).
 - **block consolidation** (``compact_blocks``): small blocks of the same
   (partition, bloom params) whose combined rows fit ``max_block_rows``
-  are rewritten into one block directory; their block blooms merge by
-  bitwise OR (M4) and minmax maps union-widen (M5) — no re-tokenization,
-  unlike the reference's row-streaming re-index.
+  are rewritten into one block directory; their block rows fold
+  (``segments.fold``: block blooms bitwise-OR, M4; minmax maps
+  union-widen, M5) — no re-tokenization, unlike the reference's
+  row-streaming re-index.
 
 Plus ``expire_blocks`` (M9, TTL/prefilter-based expiry), ``vacuum`` (M8
 tombstoning: delete block dirs no longer referenced by CURRENT), and the
@@ -51,7 +53,6 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .. import bloom
 from ..sources import fs as fsx
 from ..sources import manifest as mf
 from ..sources import segments as seg
@@ -146,38 +147,6 @@ def plan_file_merge(
         nbytes += row_bytes
     _close()
     return mapping
-
-
-def _merge_file_group(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-    """Grouped-map: OR one merged file's member file-rows together (M4/M5)."""
-    (file_id,) = key
-    mn_map: dict[str, int] = {}
-    mx_map: dict[str, int] = {}
-    for m in pdf["minmax_min"]:
-        for f, v in (m or {}).items():
-            mn_map[f] = min(mn_map.get(f, v), v)
-    for m in pdf["minmax_max"]:
-        for f, v in (m or {}).items():
-            mx_map[f] = max(mx_map.get(f, v), v)
-    return pd.DataFrame(
-        [
-            {
-                "file_id": file_id,
-                "partition_id": pdf["partition_id"].iloc[0],
-                "block_count": int(pdf["block_count"].sum()),
-                "row_count": int(pdf["row_count"].sum()),
-                "token_count": int(pdf["token_count"].sum()),
-                "byte_size": int(pdf["byte_size"].sum()),
-                "minmax_min": mn_map,
-                "minmax_max": mx_map,
-                "expected_items": int(pdf["expected_items"].iloc[0]),
-                "fpr": float(pdf["fpr"].iloc[0]),
-                "field_bloom": bloom.merge_serialized(list(pdf["field_bloom"])),
-                "token_bloom": bloom.merge_serialized(list(pdf["token_bloom"])),
-                "fieldtoken_bloom": bloom.merge_serialized(list(pdf["fieldtoken_bloom"])),
-            }
-        ]
-    )
 
 
 def _plan_mapping_df(
@@ -290,9 +259,7 @@ def merge_files(
             )
 
         new_blocks = repoint(blocks)
-        new_files = repoint(files).groupBy("file_id").applyInPandas(
-            _merge_file_group, mf.FILES_SCHEMA
-        )
+        new_files = seg.fold(repoint(files), "file_id")
         return _commit(
             spark, index, new_blocks, new_files, op="merge", stats=stats
         )
@@ -347,71 +314,51 @@ def plan_block_merge(
 
 
 def _make_consolidate_fn(data_dir: str, codec_kw: dict):
-    def fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        block_id = key[0]
-        if len(pdf) == 1:  # singleton group: pass the manifest row through
+    """applyInArrow body of one merge group: rewrite its blocks' live rows
+    into one block dir; the block row is the fold of the members' rows
+    with the rewritten block's ``row_count``/``byte_size``/``data_path``."""
+    import numpy as np
+    import pyarrow as pa
+
+    def _read_masked(p, pos):
+        t = fsx.read_parquet_dir(fsx.join(data_dir, p))
+        # deletion-vector purge: a consolidated block materializes only
+        # LIVE rows (merge-on-read becomes copy-on-write here), and its
+        # fresh block_id detaches the old mask
+        if pos is not None and len(pos):
+            m = np.ones(len(t), dtype=bool)
+            m[np.asarray(pos, dtype=np.int64)] = False
+            t = t.filter(pa.array(m))
+        return t
+
+    def fn(tbl):
+        rows = tbl.select(list(seg.BLOCK_COLUMNS))
+        if tbl.num_rows == 1:  # singleton group: pass the manifest row through
             # (its deletion vector, if any, still applies — the commit
             # carries the dvs refs and the block keeps its id/data_path)
-            return pdf.drop(columns=["merge_block_id", "dv_positions"])
-        file_id = pdf["file_id"].iloc[0]
-        rel = fsx.join(f"file_id={file_id}", f"block_id={block_id}")
-        import numpy as np
-        import pyarrow as pa
-
-        def _read_masked(p, pos):
-            t = fsx.read_parquet_dir(fsx.join(data_dir, p))
-            # deletion-vector purge: a consolidated block materializes
-            # only LIVE rows (merge-on-read becomes copy-on-write here),
-            # and its fresh block_id detaches the old mask
-            if pos is not None and len(pos):
-                m = np.ones(len(t), dtype=bool)
-                m[np.asarray(pos, dtype=np.int64)] = False
-                t = t.filter(pa.array(m))
-            return t
-
-        tbl = pa.concat_tables(
+            return rows
+        data = pa.concat_tables(
             [
                 _read_masked(p, pos)
-                for p, pos in zip(pdf["data_path"], pdf["dv_positions"])
+                for p, pos in zip(
+                    tbl["data_path"].to_pylist(), tbl["dv_positions"].to_pylist()
+                )
             ],
             promote_options="default",
         )
-        if len(tbl) == 0:  # every member row was DV-deleted: drop the block
-            return pdf.iloc[0:0].drop(columns=["merge_block_id", "dv_positions"])
+        if len(data) == 0:  # every member row was DV-deleted: drop the block
+            return rows.slice(0, 0)
+        block_id = tbl["merge_block_id"][0].as_py()
+        rel = fsx.join(f"file_id={rows['file_id'][0].as_py()}", f"block_id={block_id}")
         byte_size = fsx.write_parquet_atomic(
-            fsx.join(data_dir, rel), tbl, "part-0.parquet", **codec_kw
+            fsx.join(data_dir, rel), data, "part-0.parquet", **codec_kw
         )
-
-        mn_map: dict[str, int] = {}
-        mx_map: dict[str, int] = {}
-        for m in pdf["minmax_min"]:
-            for f, v in (m or {}).items():
-                mn_map[f] = min(mn_map.get(f, v), v)
-        for m in pdf["minmax_max"]:
-            for f, v in (m or {}).items():
-                mx_map[f] = max(mx_map.get(f, v), v)
-        return pd.DataFrame(
-            [
-                {
-                    "file_id": file_id,
-                    "block_id": block_id,
-                    "partition_id": pdf["partition_id"].iloc[0],
-                    "data_path": rel,
-                    "row_count": int(len(tbl)),
-                    "token_count": int(pdf["token_count"].sum()),
-                    "byte_size": byte_size,
-                    "minmax_min": mn_map,
-                    "minmax_max": mx_map,
-                    "expected_items": int(pdf["expected_items"].iloc[0]),
-                    "fpr": float(pdf["fpr"].iloc[0]),
-                    "field_bloom": bloom.merge_serialized(list(pdf["field_bloom"])),
-                    "token_bloom": bloom.merge_serialized(list(pdf["token_bloom"])),
-                    "fieldtoken_bloom": bloom.merge_serialized(
-                        list(pdf["fieldtoken_bloom"])
-                    ),
-                }
-            ]
-        )
+        i = rows.schema.get_field_index("block_id")
+        out = seg.fold(rows.set_column(i, "block_id", tbl["merge_block_id"]), "block_id")
+        for name, v in (("row_count", len(data)), ("byte_size", byte_size), ("data_path", rel)):
+            i = out.schema.get_field_index(name)
+            out = out.set_column(i, out.field(i), pa.array([v], out.field(i).type))
+        return out
 
     return fn
 
@@ -501,7 +448,7 @@ def compact_blocks(
             )
         from .build import codec_kwargs
 
-        new_blocks = staged.groupBy("merge_block_id").applyInPandas(
+        new_blocks = staged.groupBy("merge_block_id").applyInArrow(
             _make_consolidate_fn(index.data_dir, codec_kwargs(cfg)), mf.BLOCKS_SCHEMA
         )
         return _commit(
@@ -2237,9 +2184,10 @@ def fsck(
     ``repair=True``, commit a manifest version that drops them so reads
     stop failing on missing files.
 
-    Returns ``(index, missing)`` — ``missing`` is a DataFrame of the
-    absent ``data_path`` values (empty = healthy); with ``repair=True``
-    and any damage, ``index`` is the repaired version.  The existence
+    Returns ``(index, missing)`` — ``missing`` is a lazy, uncached
+    DataFrame of the absent ``data_path`` values (empty = healthy; each
+    action re-runs the check); with ``repair=True`` and any damage,
+    ``index`` is the repaired version.  The existence
     check is DISTRIBUTED (one stat per block dir on executors, manifest
     paths never collected), the same shape as restore()'s vacuum guard.
 
@@ -2279,22 +2227,27 @@ def fsck(
         # at most one Python task per core (see vacuum)
         .repartition(min(32, spark.sparkContext.defaultParallelism))
         .mapInPandas(_check, "data_path string")
-        .persist()
     )
-    if not repair or missing.count() == 0:
+    if not repair:
         return index, missing
-
-    blocks = index.blocks(cache=False)
-    stats = DeleteStats()
-    stats.blocks_before = _manifest_count(index, "blocks")
-    stats.files_before = _manifest_count(index, "files")
-    new_blocks = blocks.join(missing, "data_path", "left_anti")
-    live_files = new_blocks.select("file_id").distinct()
-    new_files = index.files(cache=False).join(
-        F.broadcast(live_files), "file_id", "left_semi"
-    )
-    out, _ = _commit(spark, index, new_blocks, new_files, op="fsck", stats=stats)
-    return out, missing
+    # the repair reads the check twice (count, anti-join); the persist
+    # lives only as long as the commit that uses it
+    missing.persist()
+    try:
+        if missing.count() == 0:
+            return index, missing
+        stats = DeleteStats()
+        stats.blocks_before = _manifest_count(index, "blocks")
+        stats.files_before = _manifest_count(index, "files")
+        new_blocks = index.blocks(cache=False).join(missing, "data_path", "left_anti")
+        live_files = new_blocks.select("file_id").distinct()
+        new_files = index.files(cache=False).join(
+            F.broadcast(live_files), "file_id", "left_semi"
+        )
+        out, _ = _commit(spark, index, new_blocks, new_files, op="fsck", stats=stats)
+        return out, missing
+    finally:
+        missing.unpersist()
 
 
 # ---------------------------------------------------------------------------

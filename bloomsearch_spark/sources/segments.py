@@ -9,6 +9,12 @@ manifest-sized inputs) and a Spark face (staging too large for the
 driver — a 100 TB build's staging is GBs):
 
 - the staging -> blocks/files column map (:func:`split_staging`);
+- the manifest-row fold (:func:`fold`): the one associative rollup of
+  block or file rows — counters sum, minmax maps union-widen (M5),
+  equal-size blooms bitwise-OR (M4); bloom_tree_engine.go:1401-1446.
+  Every rollup runs it: a build's file rows from its block rows, an
+  external build's block rows from split-spanning partials, merged file
+  rows, consolidated block rows;
 - the lineage rows, in ``LINEAGE_SCHEMA`` order (:func:`lineage_of`);
 - the gate that picks the face (:func:`read`): the footer
   ``total_uncompressed_size`` of the column chunks the commit reads —
@@ -24,12 +30,14 @@ from __future__ import annotations
 import time
 from concurrent.futures import ThreadPoolExecutor
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import bloom
 from . import fs as fsx
 
 # Manifest-sized work belongs on the driver: one pyarrow read + atomic
@@ -60,6 +68,9 @@ FILE_COLUMNS = {
     "token_bloom": "file_token_bloom",
     "fieldtoken_bloom": "file_fieldtoken_bloom",
 }
+# the counters :func:`fold` sums; ``*bloom`` columns OR, the minmax maps
+# widen, every other column is constant per group
+SUM_COLUMNS = ("row_count", "token_count", "byte_size", "block_count")
 # the blocks columns a lineage delta reads
 LINEAGE_SOURCE_COLUMNS = (
     "file_id", "block_id", "partition_id", "row_count", "token_count",
@@ -115,22 +126,131 @@ def _spark_read(spark: SparkSession, path: str, schema, columns) -> DataFrame:
     return df if columns is None else df.select(*columns)
 
 
-def split_staging(st: pa.Table | DataFrame):
+def split_staging(st: pa.Table | DataFrame, rollup: bool = False):
     """``(blocks, files)`` segment tables of a staging table, same face
     as ``st``.  The Arrow face sorts blocks by ``partition_id`` (row-group
     pruning for the partition prefilter); the Spark face leaves ordering
-    to the caller."""
+    to the caller.
+
+    The map build's staging carries its completed file rows (files are
+    task-local there).  With ``rollup`` the staging holds block rows only
+    — a file's blocks span tasks (the clustered and external builds) —
+    and the files are the :func:`fold` of those rows' file-level columns,
+    one block each."""
     if isinstance(st, pa.Table):
         is_block = pc.is_valid(st["block_id"])
         blocks = st.filter(is_block).select(list(BLOCK_COLUMNS)).sort_by("partition_id")
-        frows = st.filter(pc.invert(is_block))
+        if rollup:
+            frows = st.select(list(FILE_COLUMNS.values()))
+            frows = fold(frows.set_column(
+                frows.schema.get_field_index("block_count"), "block_count",
+                pa.array(np.ones(st.num_rows, np.int64)),
+            ), "file_id")
+        else:
+            frows = st.filter(pc.invert(is_block))
         files = pa.table({seg: frows[src] for seg, src in FILE_COLUMNS.items()})
         return blocks, files
     blocks = st.filter(F.col("block_id").isNotNull()).select(*BLOCK_COLUMNS)
-    files = st.filter(F.col("block_id").isNull()).select(
-        *[F.col(src).alias(seg) for seg, src in FILE_COLUMNS.items()]
-    )
+    if rollup:
+        frows = fold(st.select(*[
+            F.lit(1).cast("long").alias(c) if c == "block_count" else c
+            for c in FILE_COLUMNS.values()
+        ]), "file_id")
+    else:
+        frows = st.filter(F.col("block_id").isNull())
+    files = frows.select(*[F.col(src).alias(seg) for seg, src in FILE_COLUMNS.items()])
     return blocks, files
+
+
+def fold(rows: pa.Table | DataFrame, key: str) -> pa.Table | DataFrame:
+    """The manifest-row fold: one row per distinct ``key`` of ``rows``
+    (block, file or staging rows), same face and schema as ``rows``.
+
+    - :data:`SUM_COLUMNS` are summed;
+    - ``minmax_min``/``minmax_max`` maps union-widen (per field the min /
+      max; int64 values stay exact; a null map adds no field);
+    - the ``*bloom`` bitset columns OR (a null or empty bitset adds no
+      bit; a group with none stays null); bitsets of different sizes in
+      one group raise ``ValueError`` (M4: only equal-(m, k) filters merge);
+    - every other column is constant per group and keeps the first row's
+      value.
+
+    Associative and order-free, so a retried task, a replayed stage or a
+    re-fold of folded rows gives the same rows.  The Arrow face works on
+    the driver; the Spark face runs the same function as the
+    ``groupBy(key).applyInArrow`` body, one group per call."""
+    if isinstance(rows, DataFrame):
+        def body(tbl):
+            return fold(tbl, key)
+
+        return rows.groupBy(key).applyInArrow(body, rows.schema)
+    n = rows.num_rows
+    if n == 0:
+        return rows
+    codes = pc.dictionary_encode(
+        rows[key].combine_chunks(), null_encoding="encode"
+    ).indices.to_numpy()
+    order = np.argsort(codes, kind="stable")
+    srt = rows.take(pa.array(order))
+    starts = np.flatnonzero(np.r_[True, codes[order][1:] != codes[order][:-1]])
+    gid = np.repeat(np.arange(len(starts)), np.diff(np.r_[starts, n]))
+    out = []
+    for field in rows.schema:
+        col = srt[field.name].combine_chunks()
+        if field.name in SUM_COLUMNS:
+            vals = pc.fill_null(col, 0).to_numpy()
+            out.append(pa.array(np.add.reduceat(vals, starts), field.type))
+        elif field.name in ("minmax_min", "minmax_max"):
+            how = "min" if field.name == "minmax_min" else "max"
+            out.append(_widen(col, gid, len(starts), how))
+        elif field.name.endswith("bloom"):
+            out.append(_or_bitsets(col, gid, len(starts)))
+        else:
+            out.append(col.take(pa.array(starts)))
+    return pa.Table.from_arrays(out, schema=rows.schema)
+
+
+def _widen(col: pa.MapArray, gid: np.ndarray, n_groups: int, how: str) -> pa.MapArray:
+    """Per group, the union of the rows' minmax maps: ``how`` ("min" /
+    "max") of each field's values, fields in first-seen order."""
+    lens = np.diff(col.offsets.to_numpy())  # a null map spans no entries
+    ent = pa.table({"g": np.repeat(gid, lens), "k": col.keys, "v": col.items})
+    agg = ent.group_by(["g", "k"], use_threads=False).aggregate([("v", how)])
+    g = agg["g"].to_numpy()
+    order = np.argsort(g, kind="stable")
+    offs = np.r_[0, np.cumsum(np.bincount(g, minlength=n_groups))].astype(np.int32)
+    return pa.MapArray.from_arrays(
+        pa.array(offs),
+        agg["k"].combine_chunks().take(pa.array(order)),
+        agg[f"v_{how}"].combine_chunks().take(pa.array(order)),
+        type=col.type,
+    )
+
+
+def _or_bitsets(col: pa.BinaryArray, gid: np.ndarray, n_groups: int) -> pa.Array:
+    """Per group, the bitwise OR of the rows' serialized bitsets, one
+    bitset size at a time."""
+    lens = pc.fill_null(pc.binary_length(col), 0).to_numpy().astype(np.int64)
+    pieces, where, k = [], np.full(n_groups, -1, np.int64), 0
+    for nbytes in np.unique(lens[lens > 0]):
+        rows = lens == nbytes
+        _, mat = bloom.bitset_matrix(col.filter(pa.array(rows)), int(nbytes))
+        g = gid[rows]
+        first = np.flatnonzero(np.r_[True, g[1:] != g[:-1]])
+        if (where[g[first]] >= 0).any():  # the group has another size too
+            raise ValueError("cannot merge bloom filters of different sizes in one group")
+        merged = np.ascontiguousarray(np.bitwise_or.reduceat(mat, first, axis=0))
+        offs = (np.arange(len(first) + 1) * int(nbytes)).astype(
+            np.int64 if pa.types.is_large_binary(col.type) else np.int32
+        )
+        pieces.append(pa.Array.from_buffers(
+            col.type, len(first), [None, pa.py_buffer(offs), pa.py_buffer(merged)]
+        ))
+        where[g[first]] = np.arange(k, k + len(first))
+        k += len(first)
+    if not pieces:
+        return pa.nulls(n_groups, col.type)
+    return pa.concat_arrays(pieces).take(pa.array(where, mask=where < 0))
 
 
 def lineage_of(

@@ -94,15 +94,6 @@ def test_merge_algebra_associative_commutative_idempotent():
     assert (left == replayed).all()
 
 
-def test_merge_serialized_skips_nulls():
-    p = BloomParams(100, 0.01)
-    a = bloom.new_bitset(p)
-    bloom.insert(a, ["q"], p)
-    out = bloom.merge_serialized([None, a.tobytes(), b"", a.tobytes()])
-    assert out == a.tobytes()
-    assert bloom.merge_serialized([None, b""]) is None
-
-
 def test_probe_many_null_bitset_cannot_disqualify():
     p = BloomParams(100, 0.01)
     a = bloom.new_bitset(p)

@@ -197,6 +197,25 @@ def test_verify_all_sources_deleted_counts_not_crashes(spark, tmp_path):
     assert verify_external_integrity(spark, idx) == n
 
 
+def test_verify_propagates_unexpected_read_errors(spark, source_dir, ext_index, monkeypatch):
+    """Only a source dir with no readable parquet counts as 'every block
+    mismatches'; any other error from the source read propagates."""
+    from pyspark.sql import DataFrameReader
+
+    from bloomsearch_spark.plans.external import verify_external_integrity
+
+    real = DataFrameReader.parquet
+
+    def flaky(self, *paths, **kw):
+        if any(source_dir in str(p) for p in paths):
+            raise RuntimeError("source read broke")
+        return real(self, *paths, **kw)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", flaky)
+    with pytest.raises(RuntimeError, match="source read broke"):
+        verify_external_integrity(spark, ext_index)
+
+
 def test_external_verify_with_space_in_path(spark, tmp_path):
     """r03 review fix: input_file_name() percent-encodes URIs; the
     driver-side dir existence stat must decode before stat'ing, or an

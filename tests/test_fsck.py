@@ -94,3 +94,20 @@ def test_fsck_repair_then_maintenance_ok(spark, tmp_root):
     assert est.count() == 1  # one analyzed column, full coverage over live
     fold_manifest(spark, repaired)
     assert approx_distinct_meta(spark, tmp_root).count() == 1
+
+
+@pytest.mark.parametrize("repair", [False, True])
+def test_fsck_leaves_nothing_cached(spark, tmp_root, repair):
+    """The existence check is persisted only for the repair commit that
+    reads it twice: either mode leaves the session's CacheManager as it
+    found it, and the returned frame still lists the missing paths."""
+    idx = build_index(spark, generate_df(spark, 300), tmp_root, CFG)
+    victim = idx.blocks().select("data_path").first()[0]
+    shutil.rmtree(fsx.join(idx.data_dir, victim))
+    spark.catalog.clearCache()
+    out, missing = fsck(spark, idx, repair=repair)
+    assert (out.version != idx.version) == repair
+    idx.unpersist()
+    out.unpersist()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert [r.data_path for r in missing.collect()] == [victim]

@@ -4,7 +4,9 @@ Every commit writes its manifest delta segment through one module, which
 picks the Arrow face (driver-side) or the Spark face from the footer size
 of what it reads.  Pins:
 
-- parity: each commit op writes identical blocks/files/lineage rows
+- parity: each commit op — and each op whose rows come from the
+  manifest-row fold (clustered and external builds, ``merge_files``,
+  ``compact_blocks``) — writes identical blocks/files/lineage rows
   (``committed_at`` aside), column types and query results on the driver
   face and on the forced Spark face;
 - DSv2 writer segments carry page checksums and small row groups, like
@@ -15,6 +17,7 @@ of what it reads.  Pins:
 
 import uuid
 
+import numpy as np
 import pyarrow.parquet as pq
 import pytest
 
@@ -23,7 +26,9 @@ from bloomsearch_spark import (
     IndexConfig,
     build_external_index,
     build_index,
+    compact_blocks,
     delete_where,
+    merge_files,
     new_query,
     search,
     upsert_keys,
@@ -43,6 +48,7 @@ CFG = IndexConfig(
     sha_col="content",
 )
 OPS = ("build", "append", "delete", "dv_delete", "upsert", "upsert_dv")
+FOLD_OPS = ("clustered", "merge_files", "compact_blocks", "external")
 QUERIES = [
     new_query().token("needle_alpha").build(),
     new_query().token("needle_beta").build(),
@@ -51,10 +57,14 @@ QUERIES = [
 ]
 # ceilings: the Spark jobs each op took before segment writes went through
 # one module (same table and config, local[4]), except upsert_dv, whose
-# three serial staged-segment writes (19 jobs then) now run on the driver
+# three serial staged-segment writes (19 jobs then) now run on the driver;
+# the map build and append (one staging job, segments on the driver); and
+# the clustered and external builds (7 each while their file rollups were
+# Spark grouped maps), whose rollups now run on the driver
 MAX_JOBS = {
-    "build": 2, "append": 2, "delete": 13, "dv_delete": 9,
-    "upsert": 20, "upsert_dv": 16, "external": 8, "dsv2_write": 1,
+    "build": 1, "append": 1, "delete": 13, "dv_delete": 9,
+    "upsert": 20, "upsert_dv": 16, "dsv2_write": 1,
+    "clustered": 2, "external": 2, "merge_files": 14, "compact_blocks": 12,
 }
 
 
@@ -133,35 +143,67 @@ def _run_chain(spark, root: str) -> tuple[dict, dict]:
     return states, jobs
 
 
-@pytest.fixture(scope="module")
-def chains(spark, tmp_path_factory):
+def _run_fold_chain(spark, root: str, src: str) -> tuple[dict, dict]:
+    """A clustered build, ``merge_files`` and ``compact_blocks`` on it,
+    and an external build of ``src``; each op's state and Spark jobs."""
+    last_id = _job_counter(spark)
+    docs = spark.createDataFrame(generate_pdf(N).assign(doc_id=np.arange(N)))
+    clustered = IndexConfig.from_dict({**CFG.to_dict(), "block_expr": "doc_id % 8"})
+    steps = {
+        "clustered": lambda ix: build_index(spark, docs, f"{root}/c", clustered),
+        "merge_files": lambda ix: merge_files(spark, ix)[0],
+        "compact_blocks": lambda ix: compact_blocks(spark, ix)[0],
+        "external": lambda ix: build_external_index(spark, src, f"{root}/x", CFG),
+    }
+    states, jobs, ix = {}, {}, None
+    for op in FOLD_OPS:
+        before = last_id()
+        ix = steps[op](ix)
+        jobs[op] = last_id() - before
+        states[op] = _state(spark, BloomIndex.load(spark, ix.root))
+    return states, jobs
+
+
+def _both_faces(run) -> dict:
     out = {}
     for face in ("driver", "spark"):
         with pytest.MonkeyPatch.context() as mp:
             mp.setattr(merge_mod, "uuid", _SeqUUID())
             if face == "spark":
                 mp.setattr(seg, "DRIVER_SEGMENT_MAX_BYTES", 0)
-            out[face] = _run_chain(spark, str(tmp_path_factory.mktemp(face)))
+            out[face] = run(face)
     return out
 
 
-@pytest.mark.parametrize("op", OPS)
-def test_driver_and_spark_faces_write_identical_segments(chains, op):
-    driver, spark_face = chains["driver"][0][op], chains["spark"][0][op]
+@pytest.fixture(scope="module")
+def chains(spark, tmp_path_factory):
+    return _both_faces(lambda face: _run_chain(spark, str(tmp_path_factory.mktemp(face))))
+
+
+@pytest.fixture(scope="module")
+def fold_chains(spark, tmp_path_factory):
+    src = str(tmp_path_factory.mktemp("src"))
+    generate_df(spark, N).write.mode("overwrite").parquet(src)
+    return _both_faces(
+        lambda face: _run_fold_chain(spark, str(tmp_path_factory.mktemp(face)), src)
+    )
+
+
+@pytest.mark.parametrize("op", OPS + FOLD_OPS)
+def test_driver_and_spark_faces_write_identical_segments(chains, fold_chains, op):
+    both = chains if op in OPS else fold_chains
+    driver, spark_face = both["driver"][0][op], both["spark"][0][op]
     assert driver["blocks"] and driver["results"][3]
+    prev = {"merge_files": "clustered", "compact_blocks": "merge_files"}.get(op)
+    if prev:  # the maintenance op merged something
+        assert driver != both["driver"][0][prev]
     for key in ("blocks", "files", "lineage", "dvs", "types", "results"):
         assert driver[key] == spark_face[key], key
 
 
-def test_jobs_per_commit_op(spark, chains, tmp_path):
-    jobs = dict(chains["driver"][1])
+def test_jobs_per_commit_op(spark, chains, fold_chains, tmp_path):
+    jobs = {**chains["driver"][1], **fold_chains["driver"][1]}
     last_id = _job_counter(spark)
-
-    src = str(tmp_path / "src")
-    generate_df(spark, N).write.parquet(src)
-    before = last_id()
-    build_external_index(spark, src, str(tmp_path / "ext"), CFG)
-    jobs["external"] = last_id() - before
 
     df = generate_df(spark, N)
     before = last_id()
