@@ -426,7 +426,7 @@ def _estimate_rows(spark: SparkSession, df: DataFrame) -> int:
     try:
         files = df.inputFiles()
         resolved = [fsx.resolve(f) for f in files]  # one URI parser (fs.py)
-    except Exception:
+    except (ValueError, NotImplementedError):  # a URI pyarrow cannot resolve
         resolved = []
     local = [p for fs, p in resolved if fsx._is_local(fs)]
     if local and len(local) == len(resolved):
@@ -438,7 +438,7 @@ def _estimate_rows(spark: SparkSession, df: DataFrame) -> int:
             sbytes = sum(os.path.getsize(p) for p in sample)
             tbytes = sum(os.path.getsize(p) for p in local)
             return max(1, int(srows * (tbytes / max(1, sbytes))))
-        except Exception:
+        except (OSError, pa.ArrowInvalid):  # an unreadable footer: count instead
             pass
     # in-memory / non-local source: deterministic exact count (see docstring)
     return max(1, df.count())

@@ -45,12 +45,19 @@ superseded manifest).
 
 from __future__ import annotations
 
+import os
+import posixpath
 import uuid
 from dataclasses import dataclass
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.types import AtomicType
 from pyspark.sql.window import Window
 
 from ..sources import fs as fsx
@@ -317,9 +324,6 @@ def _make_consolidate_fn(data_dir: str, codec_kw: dict):
     """applyInArrow body of one merge group: rewrite its blocks' live rows
     into one block dir; the block row is the fold of the members' rows
     with the rewritten block's ``row_count``/``byte_size``/``data_path``."""
-    import numpy as np
-    import pyarrow as pa
-
     def _read_masked(p, pos):
         t = fsx.read_parquet_dir(fsx.join(data_dir, p))
         # deletion-vector purge: a consolidated block materializes only
@@ -718,12 +722,6 @@ class DeleteStats:
     dv_blocks: int = 0  # blocks that gained a deletion-vector delta
 
 
-_DELETE_PLAN_SCHEMA = (
-    "file_id string, block_id string, new_block_id string, "
-    "new_data_path string, new_rows long, new_bytes long, n_deleted long"
-)
-
-
 def _manifest_count(index: BloomIndex, name: str) -> int:
     """Manifest-table row count WITHOUT a Spark job: parquet footer sums
     (exact — segments are immutable, one row per block/file).  Falls back
@@ -739,50 +737,371 @@ def _manifest_count(index: BloomIndex, name: str) -> int:
     return df.count()
 
 
-def _make_delete_fn(data_dir: str, codec_kw: dict, nonce: str, drop_cols: tuple):
-    import pyarrow as _pa
+# The row-mutation kernel of delete_where and upsert_keys (both modes)
+# and purge_deletion_vectors (PLANS.md §6): a map-only match over the
+# pruned, DV-masked scan whose per-task partials union per block, then a
+# map-only rewrite of each touched block from its dir; the manifest half
+# commits through ``segments`` on the face its gate picks.
+_POS = pa.list_(pa.int64())
+_PARTIAL = pa.schema([
+    ("block_id", pa.string()), ("fname", pa.string()),
+    ("positions", _POS), ("n_seen", pa.int64()),
+])
+# per scanned block: the part files with matches and their sorted
+# positions, the matched and the scanned rows (n_seen -1: not scanned, a
+# purge — whose files are [None]: the block's single part file)
+_TOUCHED = pa.schema([
+    ("block_id", pa.string()), ("files", pa.list_(pa.string())),
+    ("hits", pa.list_(_POS)), ("n_hits", pa.int64()), ("n_seen", pa.int64()),
+])
+_REWRITE = pa.schema([*_TOUCHED, ("data_path", pa.string()), ("dv", _POS)])
+_PLAN = pa.schema([
+    ("block_id", pa.string()), ("new_block_id", pa.string()),
+    ("new_data_path", pa.string()), ("new_rows", pa.int64()),
+    ("new_bytes", pa.int64()), ("n_deleted", pa.int64()),
+])
+_KEY_COLUMNS = ["block_id", "file_id", "partition_id", "data_path", "row_count"]
 
-    plan_pa_schema = _pa.schema(
-        [
-            ("file_id", _pa.string()), ("block_id", _pa.string()),
-            ("new_block_id", _pa.string()), ("new_data_path", _pa.string()),
-            ("new_rows", _pa.int64()), ("new_bytes", _pa.int64()),
-            ("n_deleted", _pa.int64()),
-        ]
+
+def _offsets(col) -> tuple[np.ndarray, np.ndarray]:
+    """``(offsets, values)`` of a list column: row i is
+    ``values[offsets[i]:offsets[i + 1]]``."""
+    a = col.combine_chunks() if isinstance(col, pa.ChunkedArray) else col
+    return a.offsets.to_numpy(), a.values.to_numpy(zero_copy_only=False)
+
+
+def _match_partials(dv: dict):
+    """Match's map body: per (block, part file) a task saw, the positions
+    of its ``_bs_hit`` rows and its row count, after dropping the rows at
+    the ``dv`` positions of their block (``block_id -> positions``)."""
+
+    def body(batches):
+        keys, seen, hits = ["block_id", "_bs_fname"], {}, {}
+        for b in batches:
+            t = pa.Table.from_batches([b])
+            masked = set(dv).intersection(pc.unique(t["block_id"]).to_pylist())
+            if masked:
+                keep, pos = np.ones(t.num_rows, bool), t["_bs_pos"].to_numpy()
+                for bid in masked:
+                    rows = np.flatnonzero(pc.equal(t["block_id"], bid).to_numpy())
+                    keep[rows[np.isin(pos[rows], dv[bid])]] = False
+                t = t.filter(pa.array(keep))
+            n = t.group_by(keys).aggregate([("_bs_pos", "count")])
+            for k in zip(*(n[c].to_pylist() for c in (*keys, "_bs_pos_count"))):
+                seen[k[:2]] = seen.get(k[:2], 0) + k[2]
+            g = t.filter(pc.fill_null(t["_bs_hit"], False)).group_by(keys)
+            g = g.aggregate([("_bs_pos", "list")])
+            offs, vals = _offsets(g["_bs_pos_list"])
+            for i, k in enumerate(zip(g["block_id"].to_pylist(), g["_bs_fname"].to_pylist())):
+                hits.setdefault(k, []).append(vals[offs[i]:offs[i + 1]])
+        none = [np.empty(0, np.int64)]
+        yield pa.RecordBatch.from_pydict({
+            "block_id": [k[0] for k in seen], "fname": [k[1] for k in seen],
+            "positions": [np.concatenate(hits.get(k, none)) for k in seen],
+            "n_seen": list(seen.values()),
+        }, schema=_PARTIAL)
+
+    return body
+
+
+def _union_partials(tbl: pa.Table) -> pa.Table:
+    """One ``_TOUCHED`` row per block of match's partials: positions
+    union per part file, row counts sum — the driver face's union and the
+    Spark face's ``applyInArrow`` body."""
+    acc = {}
+    offs, vals = _offsets(tbl["positions"])
+    cols = (tbl[c].to_pylist() for c in ("block_id", "fname", "n_seen"))
+    for i, (bid, f, n) in enumerate(zip(*cols)):
+        files, seen = acc.get(bid, ({}, 0))
+        acc[bid] = files, seen + n
+        if offs[i + 1] > offs[i]:
+            files.setdefault(f, []).append(vals[offs[i]:offs[i + 1]])
+    hits = [
+        {f: np.unique(np.concatenate(p)) for f, p in sorted(files.items())}
+        for files, _ in acc.values()
+    ]
+    return pa.table({
+        "block_id": list(acc),
+        "files": [list(h) for h in hits],
+        "hits": [list(h.values()) for h in hits],
+        "n_hits": [sum(map(len, h.values())) for h in hits],
+        "n_seen": [seen for _, seen in acc.values()],
+    }, schema=_TOUCHED)
+
+
+def _driver_candidates(blocks, surviving):
+    """The candidates' manifest rows when match runs on the driver face —
+    the manifest came to the driver and the candidates' rows, at 8 bytes
+    a position, fit the segment gate — else None.  ``surviving`` is a
+    ``(data_path, partition_id)`` list, or a manifest slice (every row)."""
+    if not isinstance(blocks, pa.Table):
+        return None
+    if not isinstance(surviving, DataFrame):
+        paths = pa.array([p for p, _ in surviving], pa.string())
+        blocks = blocks.filter(pc.is_in(blocks["data_path"], value_set=paths))
+    rows = pc.sum(blocks["row_count"]).as_py() or 0
+    return blocks if rows * 8 <= seg.DRIVER_SEGMENT_MAX_BYTES else None
+
+
+def _match(index: BloomIndex, surviving, blocks, mark, scratch: str):
+    """Match the candidates ``surviving`` (``blocks``: the manifest):
+    ``mark`` adds a boolean ``_bs_hit`` to their scan with positions.
+    Returns the ``_TOUCHED`` rows, or None for a fully empty index.  On
+    the driver face the map body masks the candidates' DV positions
+    itself (no anti-join, so no shuffle, before it) and the partials
+    union on the driver; else the scan is masked by the anti-join and
+    the union is a grouped map written to and read from ``scratch``."""
+    from .search import scan_blocks
+
+    cand = _driver_candidates(blocks, surviving)
+    data = scan_blocks(index, surviving, with_pos=True, mask=cand is None)
+    if "block_id" not in data.columns:
+        return None
+    dv = {}
+    if cand is not None and index.dvs_refs():
+        dv = _dv_positions(index, cand["block_id"].to_pylist())
+    hit = F.coalesce(F.col("_bs_hit"), F.lit(False)).alias("_bs_hit")
+    parts = mark(data).select("block_id", "_bs_fname", "_bs_pos", hit).mapInArrow(
+        _match_partials(dv), from_arrow_schema(_PARTIAL)
     )
+    if cand is not None:
+        return _union_partials(parts.toArrow())
+    out, schema = fsx.join(scratch, "touched.parquet"), from_arrow_schema(_TOUCHED)
+    parts.groupBy("block_id").applyInArrow(_union_partials, schema).write.parquet(out)
+    return index.spark.read.schema(schema).parquet(out)
 
-    def fn(key, tbl):
-        import pyarrow as pa
-        import pyarrow.compute as pc
 
-        fid, bid = key[0], key[1]
-        mask = pc.fill_null(tbl.column("_bs_del"), False)
-        n_del = pc.sum(pc.cast(mask, pa.int64())).as_py() or 0
-        row = {
-            "file_id": fid, "block_id": bid, "new_block_id": None,
-            "new_data_path": None, "new_rows": None, "new_bytes": None,
-            "n_deleted": int(n_del),
-        }
-        if n_del:
-            kept = tbl.filter(pc.invert(mask)).drop_columns(list(drop_cols))
-            if len(kept):
-                # the dir MUST follow file_id=<fid>/block_id=<bid> with
-                # the MANIFEST ids — scan_blocks' huge-survivor path
-                # reconstructs data_path from the hive dirs
-                new_bid = f"{bid}-{nonce}"
-                rel = fsx.join(f"file_id={fid}", f"block_id={new_bid}")
-                size = fsx.write_parquet_atomic(
-                    fsx.join(data_dir, rel), kept, "part-0.parquet", **codec_kw
-                )
-                row.update(
-                    new_block_id=new_bid, new_data_path=rel,
-                    new_rows=len(kept), new_bytes=int(size),
-                )
-            else:
-                row.update(new_rows=0)  # fully deleted: drop the block
-        return pa.Table.from_pylist([row], schema=plan_pa_schema)
+def _dv_positions(index: BloomIndex, ids, refs=None) -> dict:
+    """``block_id -> sorted positions`` of the blocks ``ids`` in the dvs
+    segments ``refs`` (default: the version's), read with Arrow."""
+    from ..operators.probe import _manifest_batches
+
+    mdir = fsx.join(index.root, "manifest")
+    paths = [fsx.join(mdir, r) for r in (index.dvs_refs() if refs is None else refs)]
+    want, out = pa.array(sorted(ids), pa.string()), {}
+    for b in _manifest_batches(paths, ["block_id", "positions"]):
+        b = b.filter(pc.is_in(b["block_id"], value_set=want))
+        offs, vals = _offsets(b["positions"])
+        for i, bid in enumerate(b["block_id"].to_pylist()):
+            out.setdefault(bid, []).append(vals[offs[i]:offs[i + 1]])
+    return {bid: np.unique(np.concatenate(p)) for bid, p in out.items()}
+
+
+def _rewrite_rows(index: BloomIndex, touched, blocks):
+    """Rewrite's ``_REWRITE`` input: the ``touched`` rows with each
+    block's data_path and DV positions."""
+    if isinstance(touched, pa.Table) and isinstance(blocks, pa.Table):
+        at = pc.index_in(touched["block_id"], value_set=blocks["block_id"])
+        touched = touched.append_column("data_path", blocks["data_path"].take(at))
+        touched = touched.filter(pc.is_valid(at))  # as the Spark face's join
+        ids = touched["block_id"].to_pylist()
+        dv = _dv_positions(index, [b for b, n in zip(ids, touched["n_hits"].to_pylist()) if n])
+        return touched.append_column("dv", pa.array([dv.get(b) for b in ids], _POS))
+    spark = index.spark
+    out = seg.frame(spark, touched).join(
+        seg.frame(spark, blocks).select("block_id", "data_path"), "block_id"
+    )
+    dvs, dv = index.dvs(), F.lit(None).cast("array<long>").alias("dv")
+    if dvs is not None:
+        per_block = dvs.groupBy("block_id").agg(F.flatten(F.collect_list("positions")).alias("dv"))
+        out, dv = out.join(per_block, "block_id", "left"), "dv"
+    return out.select(*_TOUCHED.names, "data_path", dv)
+
+
+def _rewrite_fn(index: BloomIndex, nonce: str):
+    """Rewrite's map body: the ``_PLAN`` row of each ``_REWRITE`` row.
+    A block without matches passes through; one whose every scanned row
+    matched drops unread; any other is read part file by part file, loses
+    its matched and DV'd positions and is written under a fresh dir with
+    the columns a Spark scan of it returns (the committed union schema,
+    null-filled and widened)."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from .build import codec_kwargs
+    from .search import _block_read_schema
+
+    data_dir, codec_kw = index.data_dir, codec_kwargs(index.config)
+    st = _block_read_schema(index)
+    want = None if st is None else to_arrow_schema(st)
+
+    def conform(t: pa.Table) -> pa.Table:
+        if want is None:
+            return t
+        have = set(t.column_names)
+        cols = {f.name: t[f.name] if f.name in have else pa.nulls(len(t), f.type) for f in want}
+        return pa.table(cols).cast(want)
+
+    def one(r: dict) -> dict:
+        out = {**dict.fromkeys(_PLAN.names), "block_id": r["block_id"], "n_deleted": r["n_hits"]}
+        if not r["n_hits"] or r["n_hits"] == r["n_seen"]:
+            return {**out, "new_rows": 0 if r["n_hits"] else None}
+        hits, parts, n_deleted = dict(zip(r["files"], r["hits"])), [], 0
+        for uri in fsx.list_parquet_files(fsx.join(data_dir, r["data_path"])):
+            t = fsx.read_parquet_file(uri)
+            keep = np.ones(len(t), dtype=bool)
+            pos = hits.get(posixpath.basename(uri), hits.get(None, []))
+            keep[np.asarray(pos, np.int64)] = False
+            n_deleted += len(t) - int(keep.sum())
+            keep[np.asarray(r["dv"] or [], np.int64)] = False
+            parts.append(conform(t.filter(pa.array(keep))))
+        kept = pa.concat_tables(parts, promote_options="default")
+        out.update(n_deleted=n_deleted, new_rows=len(kept))
+        if len(kept):
+            # under the block's file_id=<fid> dir: scan_blocks' huge-survivor
+            # path reconstructs data_path from the hive dirs
+            bid = f"{r['block_id']}-{nonce}"
+            rel = fsx.join(posixpath.dirname(r["data_path"]), f"block_id={bid}")
+            size = fsx.write_parquet_atomic(
+                fsx.join(data_dir, rel), kept, "part-0.parquet", **codec_kw
+            )
+            out.update(new_block_id=bid, new_data_path=rel, new_bytes=size)
+        return out
+
+    def fn(batches):
+        for b in batches:
+            yield pa.RecordBatch.from_pylist([one(r) for r in b.to_pylist()], schema=_PLAN)
 
     return fn
+
+
+def _rewrite(index: BloomIndex, rows, nonce: str) -> pa.Table:
+    """Rewrite ``_REWRITE`` ``rows``: their ``_PLAN`` rows, collected.  On
+    the driver face only the blocks to be read go to the Spark job, spread
+    over ``defaultParallelism`` partitions."""
+    fn = _rewrite_fn(index, nonce)
+    if isinstance(rows, DataFrame):
+        return rows.mapInArrow(fn, from_arrow_schema(_PLAN)).toArrow().cast(_PLAN)
+    read = pc.and_(pc.greater(rows["n_hits"], 0), pc.not_equal(rows["n_hits"], rows["n_seen"]))
+    plan = pa.Table.from_batches(fn(rows.filter(pc.invert(read)).to_batches()), _PLAN)
+    todo = rows.filter(read)
+    if todo.num_rows:
+        spark = index.spark
+        step = -(-todo.num_rows // spark.sparkContext.defaultParallelism)
+        todo = spark.createDataFrame(
+            pa.Table.from_batches(todo.to_batches(max_chunksize=step)), from_arrow_schema(_REWRITE)
+        )
+        plan = pa.concat_tables([plan, _rewrite(index, todo, nonce)])
+    return plan
+
+
+def _plan_stats(plan: pa.Table, stats: "DeleteStats") -> None:
+    touched = pc.greater(plan["n_deleted"], 0)
+    stats.candidate_blocks = plan.num_rows
+    stats.rows_deleted = pc.sum(plan["n_deleted"]).as_py() or 0
+    written = pc.and_(touched, pc.is_valid(plan["new_data_path"]))
+    stats.blocks_rewritten = pc.sum(written).as_py() or 0
+    stats.blocks_dropped = (pc.sum(touched).as_py() or 0) - stats.blocks_rewritten
+
+
+def _apply_rewrites(blocks, plan: pa.Table):
+    """Old block rows -> post-rewrite block rows: untouched rows pass
+    through verbatim, rewritten blocks re-point (id/path/rows/bytes;
+    blooms and zone maps carried — conservative supersets), fully-deleted
+    blocks leave.  One Arrow body for both faces: the plan is
+    manifest-sized and rides the Spark face's closure."""
+    changed = plan.filter(pc.greater(plan["n_deleted"], 0))
+    repoint = (
+        ("block_id", "new_block_id"), ("data_path", "new_data_path"),
+        ("row_count", "new_rows"), ("byte_size", "new_bytes"),
+    )
+
+    def body(t: pa.Table) -> pa.Table:
+        at = pc.index_in(t["block_id"], value_set=changed["block_id"])
+        gone = pc.fill_null(pc.equal(changed["new_rows"].take(at), 0), False)
+        for old, new in repoint:
+            i = t.schema.get_field_index(old)
+            t = t.set_column(i, t.field(i), pc.coalesce(changed[new].take(at), t[old]))
+        return t.filter(pc.invert(gone))
+
+    if isinstance(blocks, pa.Table):
+        return body(blocks).sort_by("partition_id")
+    return blocks.mapInArrow(
+        lambda it: (b for t in it for b in body(pa.Table.from_batches([t])).to_batches()),
+        blocks.schema,
+    )
+
+
+def _commit_rewrites(
+    spark: SparkSession, index: BloomIndex, blocks, plan: pa.Table, op: str,
+    stats: "DeleteStats", staged: tuple | None = None, **kw,
+):
+    """Commit a rewrite ``plan`` over the manifest ``blocks`` (plus an
+    upsert's ``staged`` (blocks, files) inserts).  The files table is the
+    parent's rows whose file_id a block keeps: while no block dropped
+    that is every row, so the parent's files segments stay referenced
+    (the staged files append as one more) instead of being rewritten."""
+    new_blocks = _apply_rewrites(blocks, plan)
+    new_files = None if staged is None else staged[1]
+    if staged is not None:
+        new_blocks = seg.union(spark, new_blocks, staged[0])
+    if stats.blocks_dropped:
+        files = seg.read(spark, index.table_paths("files"), mf.FILES_SCHEMA)
+        if isinstance(files, pa.Table) and isinstance(new_blocks, pa.Table):
+            live = pc.is_in(files["file_id"], value_set=pc.unique(new_blocks["file_id"]))
+            files = files.filter(live)
+        else:
+            live = seg.frame(spark, new_blocks).select("file_id").distinct()
+            files = seg.frame(spark, files).join(F.broadcast(live), "file_id", "left_semi")
+        new_files = files if new_files is None else seg.union(spark, files, new_files)
+        return _commit(spark, index, new_blocks, new_files, op, stats, **kw)
+    return _commit(spark, index, new_blocks, new_files, op, stats, carry_files=True, **kw)
+
+
+def _write_dv_delta(
+    index: BloomIndex, touched, blocks, version_guess: str, seg_dir: str,
+    op: str, inserts: dict | None = None,
+) -> tuple[int, int]:
+    """Write match's ``touched`` rows as ONE deletion-vector delta segment
+    (``dvs`` + the op's ``lineage`` rows; a dv upsert's staged ``inserts``
+    tables ride along, their lineage after the delta's) and return
+    ``(rows_deleted, dv_blocks)``; nothing is written when nothing
+    matched.  ``touched`` comes from a MASKED scan, so deltas are
+    disjoint and a block's mask is the union of its rows.  data_path,
+    file_id and partition_id come from the manifest ``blocks`` (a
+    metadata-only merge keeps a block's ORIGINAL file_id in its dir)."""
+    if isinstance(touched, pa.Table) and isinstance(blocks, pa.Table):
+        t = touched.filter(pc.greater(touched["n_hits"], 0))
+        nd, nb = pc.sum(t["n_hits"]).as_py() or 0, t.num_rows
+        nf = pc.max(pc.list_value_length(t["files"])).as_py() or 0
+        m = blocks.take(pc.index_in(t["block_id"], value_set=blocks["block_id"]))
+        dvs = pa.table({
+            "block_id": t["block_id"], "data_path": m["data_path"],
+            "positions": pc.list_flatten(t["hits"]), "dv_count": t["n_hits"],
+        })
+        rows = pc.negate(t["n_hits"])
+    else:
+        keys = seg.frame(index.spark, blocks).select(*_KEY_COLUMNS[:4])
+        m = seg.frame(index.spark, touched).filter(F.col("n_hits") > 0).join(keys, "block_id")
+        nd, nb, nf = (
+            int(v or 0)
+            for v in m.agg(F.sum("n_hits"), F.count(F.lit(1)), F.max(F.size("files"))).first()
+        )
+        dvs = m.select(
+            "block_id", "data_path", F.col("hits")[0].alias("positions"),
+            F.col("n_hits").alias("dv_count"),
+        )
+        rows = -F.col("n_hits")
+    if nd == 0:
+        return 0, 0
+    if nf > 1:
+        raise RuntimeError(
+            "deletion vectors index file-relative row positions and "
+            "require single-part block dirs; a block dir with multiple "
+            "parquet parts was found — engine-written blocks are always "
+            "single-part, so this index was modified out-of-band.  Use "
+            "the rewrite path (use_deletion_vectors=False)"
+        )
+    lineage = seg.lineage_of(m, version_guess, op, rows=rows, tokens=0)
+    if inserts:
+        lineage = seg.union(index.spark, lineage, inserts["lineage"])
+    seg.write_segment(seg_dir, {**(inserts or {}), "dvs": dvs, "lineage": lineage})
+    return nd, nb
+
+
+def _scratch(index: BloomIndex) -> str:
+    """A staging dir for a Spark-face match, named without the commit
+    nonce source ``uuid`` (one draw per commit, seeded in parity runs)."""
+    return mf.staging_root(index.root, f"m{os.urandom(6).hex()}")
 
 
 def delete_where(
@@ -796,41 +1115,34 @@ def delete_where(
     ``search`` takes — the ``DELETE FROM ... WHERE`` analog), by rewriting
     only the blocks that actually contain matches.
 
-    Scale shape: the bloom hierarchy prunes to candidate blocks first, so
-    only data proportional to the match surface is read; one shuffle
-    groups CANDIDATE rows by block (each group bounded by
-    ``max_block_rows``); blocks where the exact verify matches nothing
-    pass through untouched (original dir, zero writes), fully-matched
-    blocks are dropped from the manifest, and partially-matched blocks
-    are rewritten under a fresh block dir (immutable dirs — time travel
-    and lagging changefeed consumers keep reading the old one until
-    vacuum).  Rewritten blocks KEEP their blooms/zone maps: both only
-    ever over-approximate (blooms disqualify, minmax widens), so pruning
-    stays sound and deletion costs no re-tokenization; a later
-    ``compact_blocks``/rebuild re-tightens them.
+    Scale shape: the bloom hierarchy prunes to candidate blocks, and one
+    map-only job matches the candidates' rows (reading only the verify
+    columns), its per-task partials unioned per block; one more map job
+    rewrites each touched block from its dir — no shuffle.  Blocks
+    without a match pass through untouched, fully-matched blocks leave
+    the manifest unread, partially-matched blocks are rewritten under a
+    fresh block dir (immutable dirs — time travel and lagging changefeed
+    consumers keep reading the old one until vacuum).  Rewritten blocks
+    KEEP their blooms/zone maps (conservative supersets: pruning stays
+    sound, deletion costs no re-tokenization; ``compact_blocks`` or a
+    rebuild re-tightens them).  The manifest half runs on the driver under
+    the segment gate.
 
     Commits via the maintenance protocol (``expected=`` snapshot,
     ``CommitConflict`` on interleaved commits, ``conflict_retries`` to
     re-plan).  A match-nothing delete commits NOTHING and returns the
     input handle.  To a changefeed the commit is delete-the-old-block +
     insert-the-rewritten-block events (``change_events`` required
-    mid-feed — apply deletes first); plain feeds refuse, same as
-    expire/overwrite.  Reference analog: the Go engine has TTL/partition
-    expiry only (bloom_tree_engine.go:1374+); row-level predicate delete
-    is the Delta-shaped surface its training-pipeline users expect.
+    mid-feed); plain feeds refuse, same as expire/overwrite.  The Go
+    reference has TTL/partition expiry only (bloom_tree_engine.go:1374+).
 
     ``use_deletion_vectors=True`` switches to MERGE-ON-READ (the Delta
-    deletion-vector analog): instead of rewriting matched blocks, the
-    commit records the matched row POSITIONS as an inline manifest delta
-    (``dvs`` table, ``sources/manifest.py::DVS_SCHEMA``) that every read
-    path masks out.  Cost shape: the commit writes O(matched positions)
-    manifest bytes and ZERO data bytes — at 100 TB a selective delete is
-    metadata-speed instead of match-surface-rewrite-speed; reads pay one
-    small anti-join until a later ``compact_blocks`` /
-    ``optimize_zorder`` purges the masks physically.  DV deletes also
-    work on SHALLOW CLONES (the mask lives in the clone's manifest;
-    source bytes untouched) — the one row-level mutation a zero-copy
-    fork supports.
+    deletion-vector analog): the matched row POSITIONS become an inline
+    ``dvs`` manifest delta (``sources/manifest.py::DVS_SCHEMA``) that every
+    read path masks out — O(matched positions) manifest bytes, ZERO data
+    bytes; reads pay the mask until ``compact_blocks``/``optimize_zorder``/
+    ``purge_deletion_vectors`` purges it.  DV deletes also work on SHALLOW
+    CLONES — the one row-level mutation a zero-copy fork supports.
     """
     if conflict_retries:
         return _retry_conflicts(
@@ -844,79 +1156,60 @@ def delete_where(
             "rewrite); use expire_blocks for block-granular expiry"
         )
     from .colmap import translate_query
+    from .search import candidate_blocks, verify_predicate
 
     query = translate_query(index, query)  # logical -> physical names
-    if use_deletion_vectors:
-        return _delete_where_dv(spark, index, query)
-    _refuse_shallow_clone(index, "delete_where")
-    from .search import candidate_blocks, scan_blocks, verify_predicate
-
+    if not use_deletion_vectors:
+        _refuse_shallow_clone(index, "delete_where")
     stats = DeleteStats()
-    blocks = index.blocks()
-    stats.blocks_before = _manifest_count(index, "blocks")
-    stats.files_before = _manifest_count(index, "files")
-
+    stats.blocks_before = stats.blocks_after = _manifest_count(index, "blocks")
+    stats.files_before = stats.files_after = _manifest_count(index, "files")
     surviving = candidate_blocks(index, query)
-    data = scan_blocks(index, surviving)
-    pred = verify_predicate(index, query, data.columns)
 
-    marked = data.select(
-        *[c for c in data.columns if c != "data_path"]
-    ).withColumn("_bs_del", pred)
-    plan = _rewrite_plan(index, marked).persist()
+    def mark(data: DataFrame) -> DataFrame:
+        return data.withColumn("_bs_hit", verify_predicate(index, query, data.columns))
+
+    if use_deletion_vectors:
+        return _delete_where_dv(spark, index, surviving, mark, stats)
+    nonce = f"d{uuid.uuid4().hex[:8]}"
+    blocks = seg.read(spark, index.table_paths("blocks"), mf.BLOCKS_SCHEMA)
+    scratch = _scratch(index)
     try:
-        _rewrite_stats(plan, stats)
-        if stats.rows_deleted == 0:
-            stats.blocks_after = stats.blocks_before
-            stats.files_after = stats.files_before
-            return index, stats
-        new_blocks = _apply_rewrites(blocks, plan, stats.candidate_blocks)
-        live_files = new_blocks.select("file_id").distinct()
-        new_files = index.files().join(
-            F.broadcast(live_files), "file_id", "left_semi"
-        )
-        return _commit(
-            spark, index, new_blocks, new_files, op="delete", stats=stats
-        )
+        touched = _match(index, surviving, blocks, mark, scratch)
+        if touched is None:
+            return index, stats  # fully-empty index: nothing can match
+        plan = _rewrite(index, _rewrite_rows(index, touched, blocks), nonce)
     finally:
-        plan.unpersist()
+        fsx.delete_dir(scratch)
+    _plan_stats(plan, stats)
+    if stats.rows_deleted == 0:
+        return index, stats
+    return _commit_rewrites(spark, index, blocks, plan, "delete", stats)
 
 
 def _delete_where_dv(
-    spark: SparkSession, index: BloomIndex, query
+    spark: SparkSession, index: BloomIndex, surviving, mark, stats: DeleteStats,
 ) -> tuple[BloomIndex, DeleteStats]:
     """Merge-on-read DELETE (``delete_where(use_deletion_vectors=True)``):
-    record matched row POSITIONS as a disjoint ``dvs`` manifest delta
-    instead of rewriting blocks.
-
-    Plan shape: the same bloom-pruned candidate scan as the rewrite path,
-    read WITH file positions (``_metadata.row_index``) and with existing
-    DV masks applied — so an already-deleted position can never re-match,
-    which is what makes the deltas disjoint and their union the live
-    mask.  One manifest-sized aggregation groups matched positions per
-    block; the commit references the parent's blocks/files segments
-    verbatim and appends ONE dvs segment + a lineage delta — zero data
-    bytes move at any table size."""
-    from .search import candidate_blocks, scan_blocks, verify_predicate
-
-    stats = DeleteStats()
-    blocks = index.blocks()
-    stats.blocks_before = stats.blocks_after = _manifest_count(index, "blocks")
-    stats.files_before = stats.files_after = _manifest_count(index, "files")
-
-    surviving = candidate_blocks(index, query)
-    data = scan_blocks(index, surviving, with_pos=True)
-    if "block_id" not in data.columns:
-        return index, stats  # fully-empty index: nothing can match
-    pred = verify_predicate(index, query, data.columns)
-    matched = data.filter(pred).select("block_id", "_bs_pos", "_bs_fname")
-
+    the rewrite path's match — over DV-masked rows, so an already-deleted
+    position can never re-match, deltas are disjoint and their union is
+    the live mask — whose positions become a ``dvs`` delta.  The commit
+    references the parent's blocks/files segments verbatim and appends ONE
+    dvs segment + a lineage delta: zero data bytes move."""
     version_guess, _ = mf.next_version_dir(index.root)
     seg_name = f"{version_guess}-delete_dv-{uuid.uuid4().hex[:8]}"
     seg_dir = mf.segment_dir(index.root, seg_name)
-    nd, nb = _mint_dv_delta(
-        index, matched, version_guess, seg_dir, op="delete_dv"
-    )
+    blocks = seg.read(spark, index.table_paths("blocks"), mf.BLOCKS_SCHEMA, _KEY_COLUMNS)
+    scratch = _scratch(index)
+    try:
+        touched = _match(index, surviving, blocks, mark, scratch)
+        nd = nb = 0
+        if touched is not None:  # else a fully empty index
+            nd, nb = _write_dv_delta(
+                index, touched, blocks, version_guess, seg_dir, "delete_dv"
+            )
+    finally:
+        fsx.delete_dir(scratch)
     stats.rows_deleted = nd
     stats.dv_blocks = stats.candidate_blocks = nb
     if nd == 0:
@@ -937,7 +1230,7 @@ def _delete_where_dv(
             }), stats
         except mf.CommitConflict:
             fresh = mf.BloomIndex.load(spark, index.root)
-            rb = _rebase_dv_delta(spark, base, fresh, cur_seg)
+            rb = _rebase_dv_delta(base, fresh, cur_seg)
             if rb is None:
                 raise  # un-rebasable: outer conflict_retries re-plans
             cur_seg, nd2, nb2 = rb
@@ -954,136 +1247,54 @@ def _delete_where_dv(
     )
 
 
-def _rebase_dv_delta(
-    spark: SparkSession, base: BloomIndex, fresh: BloomIndex, seg_name: str
-):
+def _rebase_dv_delta(base: BloomIndex, fresh: BloomIndex, seg_name: str):
     """Re-target an already-minted dv delta (planned against ``base``) at
     ``fresh`` after losing a commit race — WITHOUT re-scanning data.
 
     Sound iff every masked block is still live in ``fresh`` under the
-    SAME data dir: then the matched rows still sit at the same
-    file-relative positions, and the race was an append / a disjoint or
-    overlapping dv delete / a metadata-only merge.  Overlap with dvs
-    segments the racers added is SUBTRACTED (serializing our delete
-    after theirs), preserving the disjoint-deltas invariant.  Any
-    rewrite/expire/restore/fold that touched our blocks (dir moved, ref
-    list rewritten) returns None — positions may have been remapped, the
-    caller must re-plan from scratch.  This is snapshot-isolation
-    serialization: rows appended by the racers are NOT re-matched (our
-    delete serializes before the append), exactly the rewrite path's
-    re-plan-free contract under Delta-style WriteSerializable.
+    SAME data dir: the matched rows still sit at the same file-relative
+    positions (the race was an append, a dv delete or a metadata-only
+    merge).  Positions the racers' new dvs segments already mask are
+    SUBTRACTED (our delete serializes after theirs; deltas stay
+    disjoint); rows they appended are not re-matched (it serializes
+    before an append — snapshot isolation, as the rewrite path).  Any
+    rewrite/expire/restore/fold of our blocks returns None: the caller
+    re-plans.  Reads the delta segments and our blocks' fresh manifest
+    rows with Arrow on the driver.  Returns ``(new_seg_name,
+    rows_deleted, dv_blocks)`` with a fresh segment written (the old one
+    is vacuum-reclaimable garbage), or None when un-rebasable."""
+    from ..operators.probe import _manifest_batches
 
-    Returns ``(new_seg_name, rows_deleted, dv_blocks)`` with a fresh
-    segment written (the old one becomes vacuum-reclaimable garbage), or
-    None when un-rebasable."""
     base_dvs = set(base.dvs_refs())
     fresh_dvs = fresh.dvs_refs()
     if base_dvs - set(fresh_dvs):
         return None  # fold/restore rewrote the dvs ref list wholesale
-    mdir = fsx.join(base.root, "manifest")
-    delta = spark.read.schema(mf.DVS_SCHEMA).parquet(
-        fsx.join(mf.segment_dir(base.root, seg_name), "dvs.parquet")
+    mine = fsx.read_parquet_dir(fsx.join(mf.segment_dir(base.root, seg_name), "dvs.parquet"))
+    ids = mine["block_id"].to_pylist()
+    want = pa.array(ids, pa.string())
+    live = pa.Table.from_batches(
+        [b.filter(pc.is_in(b["block_id"], value_set=want))
+         for b in _manifest_batches(fresh.table_paths("blocks"), _KEY_COLUMNS)],
+        pa.schema([(c, pa.int64() if c == "row_count" else pa.string()) for c in _KEY_COLUMNS]),
     )
-    live = fresh.blocks().select("block_id", F.col("data_path").alias("_dp"))
-    moved = (
-        delta.join(live, "block_id", "left")
-        .filter(F.col("_dp").isNull() | (F.col("_dp") != F.col("data_path")))
-        .limit(1)
-        .count()
-    )
-    if moved:
-        return None
-    added = [r for r in fresh_dvs if r not in base_dvs]
-    mine = delta.select(
-        "block_id", "data_path", F.explode("positions").alias("_bs_pos")
-    )
-    if added:
-        theirs = (
-            spark.read.schema(mf.DVS_SCHEMA)
-            .parquet(*[fsx.join(mdir, r) for r in added])
-            .select("block_id", F.explode("positions").alias("_bs_pos"))
-        )
-        mine = mine.join(theirs, ["block_id", "_bs_pos"], "left_anti")
-    matched = mine.select(
-        "block_id", "_bs_pos", F.lit(None).cast("string").alias("_bs_fname")
-    )
+    at = pc.index_in(want, value_set=live["block_id"])
+    if at.null_count or not pc.all(pc.equal(live["data_path"].take(at), mine["data_path"])).as_py():
+        return None  # a block left the manifest or moved dirs
+    theirs = _dv_positions(fresh, ids, [r for r in fresh_dvs if r not in base_dvs])
+    offs, vals = _offsets(mine["positions"])
+    touched = _union_partials(pa.table({
+        "block_id": ids, "fname": pa.nulls(len(ids), pa.string()),
+        "positions": [
+            np.setdiff1d(vals[offs[i]:offs[i + 1]], theirs.get(b, [])) for i, b in enumerate(ids)
+        ],
+        "n_seen": [-1] * len(ids),
+    }, schema=_PARTIAL))
     version_guess, _ = mf.next_version_dir(base.root)
     new_seg = f"{version_guess}-delete_dv-{uuid.uuid4().hex[:8]}"
-    nd, nb = _mint_dv_delta(
-        fresh, matched, version_guess,
-        mf.segment_dir(base.root, new_seg), op="delete_dv",
+    nd, nb = _write_dv_delta(
+        fresh, touched, live, version_guess, mf.segment_dir(base.root, new_seg), "delete_dv"
     )
     return new_seg, nd, nb
-
-
-def _mint_dv_delta(
-    index: BloomIndex,
-    matched: DataFrame,
-    version_guess: str,
-    seg_dir: str,
-    op: str,
-    inserts: dict | None = None,
-) -> tuple[int, int]:
-    """Aggregate matched ``(block_id, _bs_pos, _bs_fname)`` rows into ONE
-    deletion-vector delta segment (``dvs`` + the op's ``lineage`` rows
-    under ``seg_dir``) — shared by the dv delete and the dv upsert.
-    Returns ``(rows_deleted, dv_blocks)``; writes nothing when no row
-    matched.  ``inserts`` (a dv upsert's staged ``blocks``/``files``/
-    ``lineage`` tables) are written into the same segment, their lineage
-    rows after the delta's.
-
-    ``matched`` must come from a MASKED scan (``scan_blocks(...,
-    with_pos=True)``), which is what makes deltas disjoint: an
-    already-deleted position can never re-match, so a block's live mask
-    is the plain union of its rows across segments."""
-    blocks = index.blocks()
-    plan = (
-        matched.groupBy("block_id")
-        .agg(
-            F.sort_array(F.collect_list("_bs_pos")).alias("positions"),
-            F.count(F.lit(1)).cast("long").alias("dv_count"),
-            F.count_distinct("_bs_fname").alias("n_files"),
-        )
-        # true data_path from the manifest — NOT reconstructed from the
-        # hive ids: after a metadata-only merge a block's dir keeps its
-        # ORIGINAL file_id in the path
-        .join(blocks.select("block_id", "file_id", "partition_id", "data_path"),
-              "block_id")
-        .persist()
-    )
-    try:
-        agg = plan.agg(
-            F.sum("dv_count").alias("nd"),
-            F.count(F.lit(1)).alias("nb"),
-            F.max("n_files").alias("nf"),
-        ).collect()[0]
-        nd, nb = int(agg["nd"] or 0), int(agg["nb"] or 0)
-        if nd == 0:
-            return 0, 0
-        if int(agg["nf"] or 0) > 1:
-            raise RuntimeError(
-                "deletion vectors index file-relative row positions and "
-                "require single-part block dirs; a block dir with multiple "
-                "parquet parts was found — engine-written blocks are always "
-                "single-part, so this index was modified out-of-band.  Use "
-                "the rewrite path (use_deletion_vectors=False)"
-            )
-        lineage = seg.lineage_of(
-            plan, version_guess, op, rows=-F.col("dv_count"), tokens=0
-        )
-        if inserts:
-            lineage = seg.union(index.spark, lineage, inserts["lineage"])
-        seg.write_segment(
-            seg_dir,
-            {
-                **(inserts or {}),
-                "dvs": plan.select("block_id", "data_path", "positions", "dv_count"),
-                "lineage": lineage,
-            },
-        )
-        return nd, nb
-    finally:
-        plan.unpersist()
 
 
 def add_constraint(
@@ -1183,121 +1394,80 @@ def purge_deletion_vectors(
     Why a dedicated op: ``compact_blocks`` purges only blocks small
     enough to join a merge group and ``optimize_zorder`` rewrites the
     WHOLE table — a full-sized block whose mask has grown heavy is
-    reached by neither.  Cost shape: reads/writes exactly the DV'd
-    blocks' bytes (bounded by mask spread, never table size); untouched
-    blocks pass through verbatim.  Blooms/zone maps are carried
-    (conservative supersets — pruning stays sound); a fully-masked block
-    drops from the manifest.  To the changefeed the commit is a
-    reorganization (rows unchanged — the purged rows were already dead
-    at the previous version): nothing is emitted, plain feeds pass.
-    Shallow clones refuse (their block dirs belong to the source); run
-    the purge on the source or deep-clone first."""
-    from .search import scan_blocks
-
+    reached by neither.  Cost shape: the row-mutation kernel's rewrite
+    job alone, over the DV'd blocks with their masks as the positions to
+    drop — reads/writes exactly their bytes; other blocks pass through
+    verbatim.  Blooms/zone maps are carried (conservative supersets); a
+    fully-masked block drops from the manifest.  To the changefeed the
+    commit is a reorganization (the purged rows were already dead):
+    nothing is emitted, plain feeds pass.  Shallow clones refuse (their
+    block dirs belong to the source)."""
     if conflict_retries:
         return _retry_conflicts(
             spark, index, conflict_retries,
             lambda ix: purge_deletion_vectors(spark, ix, 0),
         )
     stats = DeleteStats()
-    blocks = index.blocks()
     stats.blocks_before = _manifest_count(index, "blocks")
     stats.files_before = stats.files_after = _manifest_count(index, "files")
-    dv = index.dv_positions()
-    if dv is None:
+    if not index.dvs_refs():
         stats.blocks_after = stats.blocks_before
         return index, stats
     _refuse_shallow_clone(index, "purge_deletion_vectors")
 
-    surviving = blocks.join(
-        dv.select("data_path").distinct(), "data_path", "left_semi"
-    )
-    # UNMASKED scan with positions: the rewrite kernel subtracts the dead
-    # rows itself (``_bs_del`` = position is in the block's mask), so the
-    # written block = live rows exactly — same kernel, same dir-nonce
-    # race-safety as delete_where's rewrite path
-    data = scan_blocks(index, surviving, with_pos=True, mask=False)
-    dead = dv.select("block_id", "_bs_pos").withColumn("_bs_del", F.lit(True))
-    marked = (
-        data.join(dead, ["block_id", "_bs_pos"], "left")
-        .withColumn("_bs_del", F.coalesce("_bs_del", F.lit(False)))
-        .drop("_bs_pos", "_bs_fname", "data_path")
-    )
-    plan = _rewrite_plan(index, marked).persist()
-    try:
-        _rewrite_stats(plan, stats)
-        if stats.rows_deleted == 0:  # orphan-only masks: nothing to purge
-            stats.blocks_after = stats.blocks_before
-            return index, stats
-        new_blocks = _apply_rewrites(blocks, plan, stats.candidate_blocks)
-        live_files = new_blocks.select("file_id").distinct()
-        new_files = index.files().join(
-            F.broadcast(live_files), "file_id", "left_semi"
-        )
-        return _commit(
-            spark, index, new_blocks, new_files, op="purge_dv", stats=stats,
-            carry_dvs=False,
-        )
-    finally:
-        plan.unpersist()
-
-
-def _rewrite_plan(index: BloomIndex, marked: DataFrame) -> DataFrame:
-    """Shared block-rewrite kernel (delete_where / upsert_keys):
-    ``marked`` = candidate scan rows + a boolean ``_bs_del`` column (+ the
-    hive file_id/block_id); groups by block and rewrites blocks with
-    matches under fresh immutable dirs (per-attempt nonce: racing
-    committers never write the same dir — the loser's dirs are
-    vacuum-reclaimable orphans)."""
-    from .build import codec_kwargs
-
+    # the rewrite alone, with each DV'd block's mask as the positions to
+    # drop: the dvs rows are its partials (not scanned: n_seen -1, and one
+    # part file per block); rows of blocks a rewrite already dropped join
+    # no live block and fall away
     nonce = f"d{uuid.uuid4().hex[:8]}"
-    return marked.groupBy("file_id", "block_id").applyInArrow(
-        _make_delete_fn(
-            index.data_dir, codec_kwargs(index.config), nonce,
-            ("_bs_del", "file_id", "block_id"),
-        ),
-        _DELETE_PLAN_SCHEMA,
-    )
+    blocks = seg.read(spark, index.table_paths("blocks"), mf.BLOCKS_SCHEMA)
+    dvs = seg.read(spark, index.table_paths("dvs"), mf.DVS_SCHEMA, ["block_id", "positions"])
+    if isinstance(dvs, pa.Table):
+        n = dvs.num_rows
+        parts = dvs.append_column("fname", pa.nulls(n, pa.string()))
+        touched = _union_partials(parts.append_column("n_seen", pa.array([-1] * n, pa.int64())))
+    else:
+        parts = dvs.select(
+            "block_id", F.lit(None).cast("string").alias("fname"), "positions",
+            F.lit(-1).cast("long").alias("n_seen"),
+        )
+        touched = parts.groupBy("block_id").applyInArrow(
+            _union_partials, from_arrow_schema(_TOUCHED)
+        )
+    rows = _rewrite_rows(index, touched, blocks)
+    plan = _rewrite(index, rows, nonce)
+    _plan_stats(plan, stats)
+    if stats.rows_deleted == 0:  # orphan-only masks: nothing to purge
+        stats.blocks_after = stats.blocks_before
+        return index, stats
+    return _commit_rewrites(spark, index, blocks, plan, "purge_dv", stats, carry_dvs=False)
 
 
-def _rewrite_stats(plan: DataFrame, stats: "DeleteStats") -> None:
-    agg = plan.agg(
-        F.count("*").alias("cand"),
-        F.sum("n_deleted").alias("deleted"),
-        F.sum((F.col("n_deleted") > 0).cast("long")).alias("touched"),
-        F.sum(
-            ((F.col("n_deleted") > 0) & F.col("new_data_path").isNotNull()).cast("long")
-        ).alias("rewritten"),
-    ).collect()[0]
-    stats.candidate_blocks = int(agg["cand"] or 0)
-    stats.rows_deleted = int(agg["deleted"] or 0)
-    stats.blocks_rewritten = int(agg["rewritten"] or 0)
-    stats.blocks_dropped = int((agg["touched"] or 0) - (agg["rewritten"] or 0))
+def _distinct_keys(keys: DataFrame, cap: int) -> pa.Array | None:
+    """The distinct values of ``keys``' one column in one Spark job, or
+    None for a nested key type (left to a Spark ``distinct``).  Each task
+    sends at most ``cap + 1`` of its distinct keys, so a result longer
+    than ``cap`` means only "more than ``cap``".  Floats compare the way
+    Spark's equality does: -0.0 is 0.0 and NaN is one value."""
+    if not isinstance(keys.schema[0].dataType, AtomicType):
+        return None
 
+    def distinct(a):
+        if pa.types.is_floating(a.type):
+            a = pc.if_else(pc.equal(a, 0), pa.scalar(0, a.type), a)
+        return pc.unique(a)
 
-def _apply_rewrites(blocks: DataFrame, plan: DataFrame, n_candidates: int) -> DataFrame:
-    """Old blocks manifest -> post-rewrite manifest: untouched rows pass
-    through verbatim, rewritten blocks re-point (id/path/rows/bytes;
-    blooms and zone maps carried — conservative supersets), fully-deleted
-    blocks leave."""
-    changed = plan.filter(F.col("n_deleted") > 0).select(
-        "block_id", "new_block_id", "new_data_path", "new_rows", "new_bytes"
-    )
-    side = F.broadcast(changed) if n_candidates <= 1_000_000 else changed
-    joined = blocks.join(side, "block_id", "left")
-    kept = joined.filter(F.col("new_rows").isNull() | (F.col("new_rows") > 0))
-    return kept.select(
-        "file_id",
-        F.coalesce("new_block_id", "block_id").alias("block_id"),
-        "partition_id",
-        F.coalesce("new_data_path", "data_path").alias("data_path"),
-        F.coalesce("new_rows", "row_count").alias("row_count"),
-        "token_count",  # carried upper bound (blooms stay conservative)
-        F.coalesce("new_bytes", "byte_size").alias("byte_size"),
-        "minmax_min", "minmax_max", "expected_items", "fpr",
-        "field_bloom", "token_bloom", "fieldtoken_bloom",
-    )
+    def body(batches):
+        seen = None
+        for b in batches:
+            col = b.column(0)
+            seen = distinct(col if seen is None else pa.concat_arrays([seen, col]))
+            if len(seen) > cap:
+                break
+        if seen is not None:
+            yield pa.RecordBatch.from_arrays([seen[:cap + 1]], names=["_bs_key"])
+
+    return distinct(keys.mapInArrow(body, keys.schema).toArrow()["_bs_key"].combine_chunks())
 
 
 def _key_prune_query(index: BloomIndex, key_field: str, values: list):
@@ -1355,19 +1525,19 @@ def upsert_keys(
     deleted, then every source row is inserted — atomically, as a single
     manifest version (no window where the keys are missing).
 
-    Scale shape: when the key batch is small (``max_pruned_keys``) and
-    the key field is bloom-indexed, candidate blocks come from the bloom
+    Scale shape: one job collects the distinct keys (each task sends at
+    most ``max_pruned_keys + 1``).  When the batch is that small and the
+    key field is bloom-indexed, candidate blocks come from the bloom
     hierarchy — a CDC-apply upsert of K keys reads only the blocks whose
     blooms admit one of them, which Delta's MERGE (file-stats pruning
-    only) cannot do for high-cardinality keys.  Larger batches fall back
-    to a full candidate scan with the key match as a distributed join —
-    Delta-MERGE-equivalent cost.  Matching is EXACT column equality
-    (null-safe: a NULL key never matches); blooms only prune.  The
-    rewrite kernel, immutability, bloom/zone-map conservatism, commit
-    protocol, and CDC contract (delete-the-removed + insert-the-added,
-    ``change_events`` required mid-feed) are shared with ``delete_where``.
-    Returns ``(index, DeleteStats)`` — ``rows_deleted`` counts replaced
-    rows; the insert count is ``source_df``'s row count.
+    only) cannot do — and the key match is a broadcast join; larger
+    batches scan every block with a shuffle join.  Matching is EXACT
+    column equality (a NULL key never matches); blooms only prune.  The
+    match/rewrite kernel, immutability, bloom/zone-map conservatism,
+    commit protocol and CDC contract (delete-the-removed +
+    insert-the-added, ``change_events`` required mid-feed) are shared
+    with ``delete_where``.  Returns ``(index, DeleteStats)`` —
+    ``rows_deleted`` counts replaced rows.
 
     ``delete_keys_df`` (one ``key_field`` column) names extra keys to
     delete WITHOUT re-inserting — the CDC-apply primitive: one commit
@@ -1377,15 +1547,12 @@ def upsert_keys(
 
     ``use_deletion_vectors=True`` makes the DELETE half merge-on-read
     (the Delta ``MERGE ... WITH DVs`` analog): matched rows become a
-    ``dvs`` position delta instead of block rewrites, and the commit is
-    APPEND-SHAPED — parent blocks/files segments referenced verbatim plus
-    ONE new segment (staged inserts + dv delta + lineage), so a CDC-apply
-    stream of small batches costs O(batch) manifest bytes per commit
-    instead of O(manifest) folded rewrites, and ZERO old-block data bytes.
-    Reads pay the mask anti-join until compact/zorder/
-    ``purge_deletion_vectors`` purges.  The changefeed classifies the
-    commit as dv-deletes + inserts (``change_events`` required when keys
-    matched)."""
+    ``dvs`` position delta, and the commit is APPEND-SHAPED — parent
+    blocks/files segments referenced verbatim plus ONE new segment
+    (staged inserts + dv delta + lineage): O(batch) manifest bytes per
+    CDC-apply commit and ZERO old-block data bytes.  The changefeed
+    classifies it as dv-deletes + inserts (``change_events`` required
+    when keys matched)."""
     if conflict_retries:
         return _retry_conflicts(
             spark, index, conflict_retries,
@@ -1480,7 +1647,7 @@ def _upsert_keys_impl(
         raise_on_failures,
     )
     from .build import STAGING_SCHEMA, stage_keys, stage_rows
-    from .search import candidate_blocks, scan_blocks
+    from .search import candidate_blocks
 
     # the table's CHECK constraints gate the inserts; a drop-action
     # violating row also loses its DELETE (its key comes from the
@@ -1495,7 +1662,6 @@ def _upsert_keys_impl(
         source_df, cons_obs = enforce_constraints(source_df, cons)
 
     stats = DeleteStats()
-    blocks = index.blocks()
     stats.blocks_before = _manifest_count(index, "blocks")
     stats.files_before = _manifest_count(index, "files")
 
@@ -1508,40 +1674,40 @@ def _upsert_keys_impl(
         keys = keys.unionByName(
             delete_keys_df.select(F.col(key_field).alias("_bs_key"))
         )
-    keys = keys.distinct()
-    collected = keys.limit(max_pruned_keys + 1).collect()
+    batch = _distinct_keys(keys, max_pruned_keys)
+    pruned = batch is not None and len(batch) <= max_pruned_keys
     prune_q = (
-        _key_prune_query(index, key_field, [r._bs_key for r in collected])
-        if len(collected) <= max_pruned_keys
-        else None
+        _key_prune_query(index, key_field, batch.to_pylist()) if pruned else None
     )
     surviving = (
-        candidate_blocks(index, prune_q) if prune_q is not None else blocks
+        candidate_blocks(index, prune_q) if prune_q is not None else index.blocks()
     )
-    data = scan_blocks(index, surviving, with_pos=use_deletion_vectors)
     version_guess, _ = mf.next_version_dir(index.root)
     tag = f"{version_guess}-u{uuid.uuid4().hex[:8]}"
     scratch = mf.staging_root(index.root, tag)
-    plan = None
+    blocks = seg.read(
+        spark, index.table_paths("blocks"), mf.BLOCKS_SCHEMA,
+        _KEY_COLUMNS if use_deletion_vectors else None,
+    )
+    # exact key match as a join marker (broadcast for small key batches);
+    # NULL keys never match (join semantics)
+    if pruned:
+        kside = F.broadcast(spark.createDataFrame(pa.table({"_bs_key": batch}), keys.schema))
+    else:
+        kside = keys.distinct()
+
+    def mark(data: DataFrame) -> DataFrame:
+        joined = data.join(kside, data[key_field] == kside["_bs_key"], "left")
+        return joined.withColumn("_bs_hit", F.col("_bs_key").isNotNull())
+
     try:
+        touched = _match(index, surviving, blocks, mark, scratch)
         if not use_deletion_vectors:
-            # exact key match as a distributed join marker (broadcast for
-            # small key batches); NULL keys never match (join semantics)
-            selected = data.select(
-                *[c for c in data.columns if c != "data_path"]
-            )
-            kmark = keys.withColumn("_bs_del", F.lit(True))
-            if len(collected) <= max_pruned_keys:
-                kmark = F.broadcast(kmark)
-            marked = (
-                selected.join(
-                    kmark, selected[key_field] == kmark["_bs_key"], "left"
-                )
-                .drop("_bs_key")
-                .withColumn("_bs_del", F.coalesce("_bs_del", F.lit(False)))
-            )
-            plan = _rewrite_plan(index, marked).persist()
-            _rewrite_stats(plan, stats)
+            nonce = f"d{uuid.uuid4().hex[:8]}"
+            plan = pa.table({c: [] for c in _PLAN.names}, schema=_PLAN)
+            if touched is not None:
+                plan = _rewrite(index, _rewrite_rows(index, touched, blocks), nonce)
+            _plan_stats(plan, stats)
 
         # stage the source rows through the SAME zero-shuffle flush kernel
         # as build_index (new block dirs + completed per-task file rows),
@@ -1587,17 +1753,9 @@ def _upsert_keys_impl(
                 ),
             }
             nd = nb = 0
-            if "block_id" in data.columns:  # empty index scans have no blocks
-                kj = (
-                    F.broadcast(keys)
-                    if len(collected) <= max_pruned_keys
-                    else keys
-                )
-                matched = data.join(
-                    kj, data[key_field] == kj["_bs_key"], "left_semi"
-                ).select("block_id", "_bs_pos", "_bs_fname")
-                nd, nb = _mint_dv_delta(
-                    index, matched, version_guess, seg_dir, "upsert_dv", inserts
+            if touched is not None:
+                nd, nb = _write_dv_delta(
+                    index, touched, blocks, version_guess, seg_dir, "upsert_dv", inserts
                 )
             stats.rows_deleted = nd
             stats.dv_blocks = stats.candidate_blocks = nb
@@ -1627,25 +1785,11 @@ def _upsert_keys_impl(
             stats.files_after = _manifest_count(out_ix, "files")
             return out_ix, stats
 
-        staged_blocks, staged_files = seg.split_staging(
-            spark.read.schema(STAGING_SCHEMA).parquet(staging)
-        )
-        new_blocks = _apply_rewrites(
-            blocks, plan, stats.candidate_blocks
-        ).unionByName(staged_blocks)
-        live_files = new_blocks.select("file_id").distinct()
-        new_files = (
-            index.files()
-            .join(F.broadcast(live_files), "file_id", "left_semi")
-            .unionByName(staged_files)
-        )
-        return _commit(
-            spark, index, new_blocks, new_files, op="upsert", stats=stats,
-            meta_extra=meta_extra,
+        staged = seg.split_staging(seg.read(spark, staging, STAGING_SCHEMA))
+        return _commit_rewrites(
+            spark, index, blocks, plan, "upsert", stats, staged, meta_extra=meta_extra
         )
     finally:
-        if plan is not None:
-            plan.unpersist()
         fsx.delete_dir(scratch)
 
 
@@ -1999,14 +2143,19 @@ def clone(
 def _commit(
     spark: SparkSession,
     index: BloomIndex,
-    new_blocks: DataFrame,
-    new_files: DataFrame,
+    new_blocks: pa.Table | DataFrame,
+    new_files: pa.Table | DataFrame | None,
     op: str,
     stats: MergeStats,
     meta_extra: dict | None = None,
     carry_dvs: bool = True,
+    carry_files: bool = False,
 ) -> tuple[BloomIndex, MergeStats]:
     """Commit a maintenance op's output as a new manifest version.
+
+    ``carry_files``: the parent's files segments stay referenced and
+    ``new_files`` (None: nothing) appends to them as one more segment —
+    for an op that dropped no file.
 
     ``carry_dvs``: deletion-vector segment refs carry to the new version
     by default — maintenance ops that keep any UN-rewritten block alive
@@ -2036,10 +2185,11 @@ def _commit(
     # vacuum_manifest, never corruption.
     seg_name = f"{version_guess}-{op}-{uuid.uuid4().hex[:8]}"
     seg_dir = mf.segment_dir(root, seg_name)
-    seg.write_segment(seg_dir, {"blocks": new_blocks, "files": new_files})
+    tables = {"blocks": new_blocks, "files": new_files}
+    seg.write_segment(seg_dir, {t: v for t, v in tables.items() if v is not None})
     # lineage DELTA: this op's rows only — parent segments are referenced.
-    # Derived from the just-committed blocks segment (its final ids).
-    committed = seg.read(
+    # Derived from the committed block rows (their final ids).
+    committed = new_blocks if isinstance(new_blocks, pa.Table) else seg.read(
         spark, fsx.join(seg_dir, "blocks.parquet"), mf.BLOCKS_SCHEMA,
         seg.LINEAGE_SOURCE_COLUMNS,
     )
@@ -2048,9 +2198,10 @@ def _commit(
     # (block_id, data_path), so survivors stay covered; rows for rewritten
     # blocks are orphan-but-harmless (they join nothing) and fold prunes
     # them
+    files = [mf.segment_ref(seg_name, "files")] if new_files is not None else []
     tables = {
         "blocks": [mf.segment_ref(seg_name, "blocks")],
-        "files": [mf.segment_ref(seg_name, "files")],
+        "files": [*index.table_refs()["files"], *files] if carry_files else files,
         "lineage": [*index.table_refs()["lineage"],
                     mf.segment_ref(seg_name, "lineage")],
     }

@@ -212,9 +212,9 @@ def _apply_dv_mask(
     skipped; ``keys=None`` (the data-root semi-join scan) masks whenever
     the version has DVs.  ``with_pos=True`` keeps ``_bs_pos`` (the
     file-relative row position) and ``_bs_fname`` on the output — the
-    dv-delete write path needs them to mint new deltas.  ``mask=False``
-    skips the anti-join (internal: the DV PURGE rewrite needs the dead
-    rows in-frame to subtract them itself)."""
+    row-mutation match needs them to name the rows it deletes.
+    ``mask=False`` skips the anti-join (internal: the match masks in its
+    own map body, so no shuffle comes before it)."""
     dv = None
     if mask and (keys is None or not index.dv_data_paths().isdisjoint(keys)):
         dv = index.dv_positions()
@@ -252,7 +252,7 @@ def scan_blocks(
 
     ``surviving`` is :func:`prune_blocks`' ``(data_path, partition_id)``
     list, or a slice of the block manifest DataFrame (the maintenance
-    callers: analyze, compaction, DV purge, integrity checks).  A slice's
+    callers: analyze, upserts past ``max_pruned_keys``, integrity checks).  A slice's
     path collect is bounded at MAX_COLLECTED_BLOCKS (+1 overflow
     sentinel); past it the scan reads the data root and prunes through a
     broadcast semi-join instead.
@@ -262,7 +262,7 @@ def scan_blocks(
     every returned row set (merge-on-read) — by an anti-join only when a
     scanned block carries DVs, see :func:`_apply_dv_mask`; ``with_pos=True``
     additionally keeps the file-relative row position / file name columns
-    (internal: the dv-delete writer).  ``with_block=True`` keeps a
+    (internal: the row-mutation match).  ``with_block=True`` keeps a
     ``_bs_block`` block-identity column on external scans (internal: the
     scan stats; internal blocks carry ``file_id`` / ``block_id``)."""
     spark = index.spark

@@ -137,11 +137,14 @@ def register_cas_commit_lock(
             else:
                 try:
                     cur = _json.loads(data)
-                except Exception:
-                    cur = {"owner": "?", "expires": float("inf")}
-                if not cur.get("owner") or cur.get("expires", 0) < _time.time():
-                    if put_if(lock, claim, etag):  # released/expired: take over
-                        break
+                    free = not cur.get("owner") or cur.get("expires", 0) < _time.time()
+                except (ValueError, AttributeError):
+                    # undecodable JSON or text, or not an object: an
+                    # unreadable lease names no holder, so it never expires
+                    # — treat it as released rather than wedge the root
+                    free = True
+                if free and put_if(lock, claim, etag):  # released/expired: take over
+                    break
             if _time.monotonic() >= deadline:
                 raise CommitLockTimeout(
                     f"commit lease at {lock} not acquired within {timeout}s"
@@ -159,8 +162,8 @@ def register_cas_commit_lock(
                             _json.dumps({"owner": "", "expires": 0}).encode(),
                             etag,
                         )
-                except Exception:
-                    pass  # lease expiry reclaims it
+                except (ValueError, AttributeError):
+                    pass  # not our lease any more; its holder releases it
 
     register_commit_lock(scheme, lease)
 
@@ -315,9 +318,8 @@ def write_parquet_atomic(dir_uri: str, table, filename: str, **write_kwargs) -> 
 
 def read_parquet_dir(dir_uri: str, filter=None, columns=None):
     """Concatenate every ``*.parquet`` file in a directory (skipping
-    temp/hidden names) into one Arrow table.  Page CRCs are always
-    verified (files without stored checksums verify vacuously): block
-    consolidation must never OR corrupt bytes into a merged block.
+    temp/hidden names) into one Arrow table, each read by
+    :func:`read_parquet_file`.
 
     ``filter``: optional pyarrow dataset Expression, pushed into the
     parquet read (row-group statistics pruning + row filtering) — the
@@ -325,31 +327,36 @@ def read_parquet_dir(dir_uri: str, filter=None, columns=None):
     into the read (column-chunk I/O pruning); filter columns need not be
     in it."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
     fs, d = resolve(dir_uri)
     infos = fs.get_file_info(pafs.FileSelector(d, recursive=False))
     names = sorted(
-        i.path
+        i.base_name
         for i in infos
         if i.type == pafs.FileType.File
         and i.base_name.endswith(".parquet")
         and not i.base_name.startswith(".")
     )
+    return pa.concat_tables(
+        [read_parquet_file(join(dir_uri, n), filter, columns) for n in names],
+        promote_options="default",
+    )
+
+
+def read_parquet_file(uri: str, filter=None, columns=None):
+    """One parquet file as an Arrow table (``filter``/``columns`` as in
+    :func:`read_parquet_dir`).  Page CRCs are always verified (files
+    without stored checksums verify vacuously): block consolidation and
+    rewrites must never carry corrupt bytes into a new block."""
+    import pyarrow.parquet as pq
+
+    fs, p = resolve(uri)
     kw = {}
     if filter is not None:
         kw["filters"] = filter
     if columns is not None:
         kw["columns"] = list(columns)
-    return pa.concat_tables(
-        [
-            pq.read_table(
-                p, filesystem=fs, page_checksum_verification=True, **kw
-            )
-            for p in names
-        ],
-        promote_options="default",
-    )
+    return pq.read_table(p, filesystem=fs, page_checksum_verification=True, **kw)
 
 
 def parquet_dir_rows(dir_uri: str) -> int:

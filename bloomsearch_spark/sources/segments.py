@@ -85,26 +85,31 @@ _WRITE_KW = {
 }
 
 
-def read(spark: SparkSession, path: str, schema, columns=None) -> pa.Table | DataFrame:
-    """Read the parquet dir ``path`` (``columns`` of it, default all) as
-    an Arrow table when the driver can hold it, else as a DataFrame with
+def read(spark: SparkSession, path, schema, columns=None) -> pa.Table | DataFrame:
+    """Read the parquet dir ``path`` — or the union of a list of dirs, a
+    manifest table's segments — (``columns`` of it, default all) as an
+    Arrow table when the driver can hold it, else as a DataFrame with
     ``schema`` (a DDL string or ``StructType``).
 
     The Spark face runs past :data:`DRIVER_SEGMENT_MAX_BYTES` of footer
     uncompressed bytes, and when the driver cannot read the path: no
     pyarrow filesystem for its URI, or an ``OSError`` from the store.
     Any other error (a corrupt footer, a bug) raises."""
+    paths = [path] if isinstance(path, str) else list(path)
     try:
-        fs, _ = fsx.resolve(path)
+        fs, _ = fsx.resolve(paths[0])
     except (ValueError, NotImplementedError):
-        return _spark_read(spark, path, schema, columns)
+        return _spark_read(spark, paths, schema, columns)
     try:
-        parts = fsx.list_parquet_files(path)
+        parts = [p for d in paths for p in fsx.list_parquet_files(d)]
         if parts and _decoded_bytes(fs, parts, columns) <= DRIVER_SEGMENT_MAX_BYTES:
-            return fsx.read_parquet_dir(path, columns=columns)
+            return pa.concat_tables(
+                [fsx.read_parquet_dir(d, columns=columns) for d in paths],
+                promote_options="default",
+            )
     except OSError:
         pass  # the store failed or refused the driver
-    return _spark_read(spark, path, schema, columns)
+    return _spark_read(spark, paths, schema, columns)
 
 
 def _decoded_bytes(fs, parts: list[str], columns) -> int:
@@ -121,8 +126,8 @@ def _decoded_bytes(fs, parts: list[str], columns) -> int:
     return total
 
 
-def _spark_read(spark: SparkSession, path: str, schema, columns) -> DataFrame:
-    df = spark.read.schema(schema).parquet(path)
+def _spark_read(spark: SparkSession, paths: list[str], schema, columns) -> DataFrame:
+    df = spark.read.schema(schema).parquet(*paths)
     return df if columns is None else df.select(*columns)
 
 
@@ -313,9 +318,17 @@ def lineage_of(
     )
 
 
-def union(spark: SparkSession, df: DataFrame, tbl: pa.Table | DataFrame) -> DataFrame:
-    """``df`` plus the rows of ``tbl``, a table of either face."""
-    return df.unionByName(spark.createDataFrame(tbl) if isinstance(tbl, pa.Table) else tbl)
+def frame(spark: SparkSession, tbl: pa.Table | DataFrame) -> DataFrame:
+    """``tbl`` as a DataFrame: an Arrow table lifted to the Spark face."""
+    return spark.createDataFrame(tbl) if isinstance(tbl, pa.Table) else tbl
+
+
+def union(spark: SparkSession, a: pa.Table | DataFrame, b: pa.Table | DataFrame):
+    """The rows of ``a`` and then of ``b``: an Arrow table (``a``'s
+    schema) when both are Arrow, else a DataFrame."""
+    if isinstance(a, pa.Table) and isinstance(b, pa.Table):
+        return pa.concat_tables([a, b.select(a.column_names).cast(a.schema)])
+    return frame(spark, a).unionByName(frame(spark, b))
 
 
 def write_segment(seg_dir: str, tables: dict) -> None:

@@ -1,5 +1,5 @@
-"""Row parity of the manifest rollups between this checkout and an older
-revision, both in one JVM.
+"""Row parity of the manifest rollups and the row mutations between this
+checkout and an older revision, both in one JVM.
 
 Extracts ``<rev>:bloomsearch_spark`` with ``git archive`` as the package
 ``bloomsearch_parent`` (``scripts/search_ab_bench.py``'s ``extract``) and
@@ -13,16 +13,20 @@ a ``--rows``-row synthetic table:
   groups, read whole;
 - ``external_split``: the same build with the file read in many input
   splits (``spark.sql.files.maxPartitionBytes``), so its blocks fold
-  from per-split partials.
+  from per-split partials;
+- a DV-carrying mutation chain on a map build: ``dv_delete`` (a
+  deletion-vector delete), ``delete`` (a rewrite delete of blocks the DV
+  delete masked), ``upsert``, ``upsert_dv`` and ``purge``
+  (``purge_deletion_vectors``).
 
 The commit nonces (``plans.merge.uuid``) are seeded on both sides, so
 both mint the same segment, block and data-path names.  For each op and
-face it diffs every blocks/files/lineage row (``committed_at`` ignored,
-minmax maps compared as dicts) and the rows of a few searches: between
-the two packages, and between the two faces of this checkout.  It prints
-the Spark jobs each op took per side and face.  The last stdout line is
-one JSON object with the same figures; the exit status is 1 on any
-difference.
+face it diffs every blocks/files/lineage/dvs row (``committed_at``
+ignored, minmax maps compared as dicts), the mutation's ``DeleteStats``
+and the rows of a few searches: between the two packages, and between
+the two faces of this checkout.  It prints the Spark jobs each op took
+per side and face.  The last stdout line is one JSON object with the
+same figures; the exit status is 1 on any difference.
 
 Usage: python scripts/manifest_parity.py --parent <git-rev>
        [--rows 2000] [--cpus 4]
@@ -31,6 +35,7 @@ Usage: python scripts/manifest_parity.py --parent <git-rev>
 from __future__ import annotations
 
 import argparse
+import dataclasses
 import importlib
 import json
 import os
@@ -41,7 +46,9 @@ import uuid
 
 from search_ab_bench import ALIAS, ROOT, extract
 
-OPS = ("clustered", "merge_files", "compact_blocks", "external", "external_split")
+FOLD_OPS = ("clustered", "merge_files", "compact_blocks", "external", "external_split")
+MUTATION_OPS = ("dv_delete", "delete", "upsert", "upsert_dv", "purge")
+OPS = FOLD_OPS + MUTATION_OPS
 FACES = ("driver", "spark")
 SPLIT_BYTES = "16k"  # several input splits per source file at 2,000 rows
 
@@ -122,7 +129,7 @@ def compare(spark, args, work: str) -> int:
     for face in FACES:
         for side, bs in pkgs.items():
             root = os.path.join(work, f"{side}-{face}")
-            got[side, face] = run_ops(spark, bs, face, df, src, root, last_job)
+            got[side, face] = run_ops(spark, bs, face, df, src, root, last_job, args)
 
     report, failed = {}, False
     for op in OPS:
@@ -155,7 +162,7 @@ def job_counter(spark):
     return last_id
 
 
-def run_ops(spark, bs, face: str, df, src: str, root: str, last_job) -> dict:
+def run_ops(spark, bs, face: str, df, src: str, root: str, last_job, args) -> dict:
     """``{op: (state, spark_jobs)}`` of the op chain through package ``bs``."""
     seg = importlib.import_module(f"{bs.__name__}.sources.segments")
     merge = importlib.import_module(f"{bs.__name__}.plans.merge")
@@ -181,20 +188,44 @@ def run_ops(spark, bs, face: str, df, src: str, root: str, last_job) -> dict:
         finally:
             spark.conf.set("spark.sql.files.maxPartitionBytes", conf)
 
+    def upsert_src(lo, hi):
+        import numpy as np
+
+        from bloomsearch_spark.sources.synthetic import generate_pdf
+
+        pdf = generate_pdf(args.rows).iloc[lo:hi].copy()
+        pdf["content"] = [f"upserted_marker row{i}" for i in range(lo, hi)]
+        return spark.createDataFrame(pdf.assign(doc_id=np.arange(lo, hi, dtype=np.int64)))
+
+    beta = bs.new_query().token("needle_beta").build()
+    alpha = bs.new_query().token("needle_alpha").build()
     steps = {
         "clustered": lambda ix: bs.build_index(spark, df, f"{root}/c", clustered),
         "merge_files": lambda ix: bs.merge_files(spark, ix)[0],
         "compact_blocks": lambda ix: bs.compact_blocks(spark, ix)[0],
         "external": lambda ix: bs.build_external_index(spark, src, f"{root}/x", external),
         "external_split": split_build,
+        "dv_delete": lambda ix: bs.delete_where(spark, ix, beta, use_deletion_vectors=True),
+        "delete": lambda ix: bs.delete_where(spark, ix, alpha),
+        "upsert": lambda ix: bs.upsert_keys(spark, ix, upsert_src(0, 20), "path"),
+        "upsert_dv": lambda ix: bs.upsert_keys(
+            spark, ix, upsert_src(20, 40), "path", use_deletion_vectors=True
+        ),
+        "purge": lambda ix: bs.purge_deletion_vectors(spark, ix),
     }
     out, ix = {}, None
     try:
         for op in OPS:
+            if op == MUTATION_OPS[0]:
+                ix = bs.build_index(spark, df, f"{root}/m", external)
             before = last_job()
             ix = steps[op](ix)
             jobs = last_job() - before
-            out[op] = (state(spark, bs, bs.BloomIndex.load(spark, ix.root)), jobs)
+            stats = None
+            if isinstance(ix, tuple):  # a mutation: (index, DeleteStats)
+                ix, stats = ix[0], sorted(dataclasses.asdict(ix[1]).items())
+            st = state(spark, bs, bs.BloomIndex.load(spark, ix.root))
+            out[op] = ({**st, "stats": stats}, jobs)
     finally:
         seg.DRIVER_SEGMENT_MAX_BYTES, merge.uuid = saved
     return out
@@ -210,6 +241,8 @@ def state(spark, bs, ix) -> dict:
 
     queries = {
         "needle_alpha": bs.new_query().token("needle_alpha").build(),
+        "needle_beta": bs.new_query().token("needle_beta").build(),
+        "upserted": bs.new_query().token("upserted_marker").build(),
         "lang_py": bs.new_query().field_token("lang", "py").build(),
         "all": bs.new_query().build(),
     }
@@ -217,6 +250,7 @@ def state(spark, bs, ix) -> dict:
         "blocks": rows(ix.blocks(cache=False)),
         "files": rows(ix.files(cache=False)),
         "lineage": rows(ix.lineage(), drop=("committed_at",)),
+        "dvs": rows(ix.dvs(cache=False)) if ix.dvs_refs() else [],
         **{
             f"search:{name}": sorted(tuple(r) for r in bs.search(spark, ix, q).collect())
             for name, q in queries.items()

@@ -98,7 +98,7 @@ OPS = (
 # metadata-only ALTERs and restore read footers and meta.json on the driver
 JOBS = {
     "add_constraint": 0, "drop_constraint": 0, "rename_column": 0,
-    "restore": 0, "analyze": 6, "fold": 9,
+    "restore": 0, "analyze": 5, "fold": 9,
 }
 
 
@@ -282,6 +282,20 @@ def test_jobs_per_metadata_commit(chain):
     _, steps = chain
     jobs = {op: steps[op][2] for op in JOBS}
     assert jobs == JOBS
+
+
+@pytest.mark.parametrize("op", ["delete", "upsert", "upsert_dv", "delete_dv", "purge"])
+def test_row_mutations_write_one_part_per_table(chain, op):
+    """On the driver face a row mutation assembles its manifest tables in
+    Arrow: each table of the segment it adds is one part file."""
+    _, steps = chain
+    parent, child, _ = steps[op]
+    old = {r for refs in parent.meta()["tables"].values() for r in refs}
+    new = [r for refs in child.meta()["tables"].values() for r in refs if r not in old]
+    assert {r.rsplit("/", 1)[1] for r in new} >= {"lineage.parquet"}
+    for ref in new:
+        parts = fsx.list_parquet_files(fsx.join(child.root, "manifest", ref))
+        assert len(parts) == 1, ref
 
 
 # ---------------------------------------------------------------------------

@@ -125,3 +125,57 @@ def test_resolve_forms():
     # silently scattering bytes across executor-local disks (r04 review)
     with pytest.raises(ValueError, match="single-slash"):
         fsx.resolve("hdfs:/nn/path")
+
+
+@pytest.mark.parametrize(
+    "body", [b"not json", b"\xff\xfe", b"[1, 2]", b"42"],
+    ids=["bad-json", "bad-utf8", "list", "number"],
+)
+def test_cas_lease_takes_over_an_unreadable_lease(body):
+    """A lease object that is not a JSON object names no holder and never
+    expires: acquiring takes it over (conditional put on its etag)
+    instead of waiting out the timeout, and the release frees it."""
+    import json
+
+    store = {"casbad://idx.lock": (body, 1)}
+
+    def get(path):
+        return store.get(path, (None, None))
+
+    def put_if(path, data, etag):
+        if store.get(path, (None, None))[1] != etag:
+            return False
+        store[path] = (data, (etag or 0) + 1)
+        return True
+
+    fsx.register_cas_commit_lock("casbad", get, put_if, poll=0.001, timeout=2.0)
+    try:
+        with fsx.commit_lock("casbad://idx"):
+            assert json.loads(store["casbad://idx.lock"][0])["owner"]
+        assert json.loads(store["casbad://idx.lock"][0])["owner"] == ""
+    finally:
+        fsx.unregister_commit_lock("casbad")
+
+
+def test_row_estimate_propagates_unexpected_footer_errors(spark, tmp_path, monkeypatch):
+    """The build's footer row estimate falls back to a count only for an
+    unreadable footer; any other error in the footer read propagates."""
+    from bloomsearch_spark.plans import build
+
+    src = str(tmp_path / "src")
+    generate_df(spark, 200).write.parquet(src)
+    df = spark.read.parquet(src)
+    assert build._estimate_rows(spark, df) == 200
+
+    def corrupt(path):
+        raise pa.ArrowInvalid("Parquet magic bytes not found")
+
+    monkeypatch.setattr(build.pq, "read_metadata", corrupt)
+    assert build._estimate_rows(spark, df) == 200  # the count fallback
+
+    def bug(path):
+        raise RuntimeError("bug in the footer read")
+
+    monkeypatch.setattr(build.pq, "read_metadata", bug)
+    with pytest.raises(RuntimeError, match="bug in the footer read"):
+        build._estimate_rows(spark, df)
