@@ -45,6 +45,8 @@ from ..sources import fs as fsx
 # driver-held surviving-block list bound for the DataSource; past this the
 # planner switches to the distributed manifest-slice fallback
 MAX_DRIVER_BLOCKS = 1_000_000
+# the prune joins small manifest batches up to this many rows
+PRUNE_BATCH_ROWS = 65_536
 
 _FILTER_COL = {"field": "field_bloom", "token": "token_bloom", "fieldtoken": "fieldtoken_bloom"}
 BLOOM_COLS = tuple(_FILTER_COL.values())
@@ -255,9 +257,37 @@ def _manifest_batches(paths: list[str], columns: list[str]) -> Iterator:
         for part in fsx.list_parquet_files(p):
             fs, local = fsx.resolve(part)
             with pq.ParquetFile(local, filesystem=fs) as pf:
-                avail = [c for c in columns if c in pf.schema_arrow.names]
+                names = set(pf.schema_arrow.names)
+                avail = [c for c in columns if c in names]
                 for batch in pf.iter_batches(columns=avail, use_threads=False):
                     yield with_columns(batch, columns)
+
+
+def _coalesced(batches: Iterator, rows: int) -> Iterator:
+    """``batches`` with consecutive same-schema batches joined up to
+    ``rows`` rows: the prune's per-batch cost (a pandas conversion, the
+    prefilter and probe calls) then follows the manifest's rows, not its
+    part-file count — small segments (appends, a mutation's slices) each
+    yield a small batch."""
+    import pyarrow as pa
+
+    def joined(buf):
+        if len(buf) == 1:
+            return buf[0]
+        return pa.Table.from_batches(buf).combine_chunks().to_batches()[0]
+
+    buf: list = []
+    n = 0
+    for batch in batches:
+        if not batch.num_rows:
+            continue
+        if buf and (n + batch.num_rows > rows or batch.schema != buf[0].schema):
+            yield joined(buf)
+            buf, n = [], 0
+        buf.append(batch)
+        n += batch.num_rows
+    if buf:
+        yield joined(buf)
 
 
 def block_columns(query: Query) -> list[str]:
@@ -358,7 +388,8 @@ def prune_blocks_driver(
         stats.total_files = stats.files_after_file_bloom = n
 
     out: list[tuple[str, str]] | None = []
-    for batch in _manifest_batches(paths["blocks"], ["file_id", *block_columns(query)]):
+    batches = _manifest_batches(paths["blocks"], ["file_id", *block_columns(query)])
+    for batch in _coalesced(batches, PRUNE_BATCH_ROWS):
         surv = prune_batch(batch, query, files, stats)
         if out is None:
             continue  # stats mode past the bound: count, hold nothing

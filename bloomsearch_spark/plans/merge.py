@@ -45,15 +45,18 @@ superseded manifest).
 
 from __future__ import annotations
 
+import functools
 import os
 import posixpath
 import uuid
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
+from pyspark import inheritable_thread_target
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
@@ -1006,6 +1009,10 @@ def _apply_rewrites(blocks, plan: pa.Table):
     )
 
     def body(t: pa.Table) -> pa.Table:
+        # one chunk a column: pyarrow 16's coalesce of chunked arrays whose
+        # chunks do not line up returns zeros for some rows, and the rows
+        # of several segments, concatenated, need not line up
+        t = t.combine_chunks()
         at = pc.index_in(t["block_id"], value_set=changed["block_id"])
         gone = pc.fill_null(pc.equal(changed["new_rows"].take(at), 0), False)
         for old, new in repoint:
@@ -1026,25 +1033,65 @@ def _commit_rewrites(
     stats: "DeleteStats", staged: tuple | None = None, **kw,
 ):
     """Commit a rewrite ``plan`` over the manifest ``blocks`` (plus an
-    upsert's ``staged`` (blocks, files) inserts).  The files table is the
-    parent's rows whose file_id a block keeps: while no block dropped
-    that is every row, so the parent's files segments stay referenced
-    (the staged files append as one more) instead of being rewritten."""
-    new_blocks = _apply_rewrites(blocks, plan)
+    upsert's ``staged`` (blocks, files) inserts).
+
+    Only the parent's blocks segments that hold a changed block are
+    copied: their rows, rewritten, and the staged block rows are written
+    as slices (:func:`segments.write_slices`); every other blocks segment
+    stays referenced.  The files table is the parent's rows whose file_id
+    a block keeps: while no block dropped that is every row, so the
+    parent's files segments stay referenced (the staged files append as
+    one more) instead of being rewritten."""
+    changed = plan.filter(pc.greater(plan["n_deleted"], 0))["block_id"].combine_chunks()
+    refs, paths = index.table_refs()["blocks"], index.table_paths("blocks")
+    hit = _segments_holding(spark, paths, changed, isinstance(blocks, pa.Table))
+    copied = [p for p, h in zip(paths, hit) if h]
+    kept = [p for p, h in zip(paths, hit) if not h]
+    new_blocks = _apply_rewrites(seg.read(spark, copied, mf.BLOCKS_SCHEMA), plan) if copied else None
     new_files = None if staged is None else staged[1]
     if staged is not None:
-        new_blocks = seg.union(spark, new_blocks, staged[0])
+        new_blocks = staged[0] if new_blocks is None else seg.union(spark, new_blocks, staged[0])
+    kw["kept_blocks"] = [r for r, h in zip(refs, hit) if not h]
     if stats.blocks_dropped:
         files = seg.read(spark, index.table_paths("files"), mf.FILES_SCHEMA)
-        if isinstance(files, pa.Table) and isinstance(new_blocks, pa.Table):
-            live = pc.is_in(files["file_id"], value_set=pc.unique(new_blocks["file_id"]))
-            files = files.filter(live)
+        live = (
+            new_blocks.select(["file_id"]) if isinstance(new_blocks, pa.Table)
+            else new_blocks.select("file_id")
+        )
+        if kept:
+            live = seg.union(spark, live, seg.read(spark, kept, mf.BLOCKS_SCHEMA, ["file_id"]))
+        if isinstance(files, pa.Table) and isinstance(live, pa.Table):
+            files = files.filter(pc.is_in(files["file_id"], value_set=pc.unique(live["file_id"])))
         else:
-            live = seg.frame(spark, new_blocks).select("file_id").distinct()
+            live = seg.frame(spark, live).distinct()
             files = seg.frame(spark, files).join(F.broadcast(live), "file_id", "left_semi")
         new_files = files if new_files is None else seg.union(spark, files, new_files)
         return _commit(spark, index, new_blocks, new_files, op, stats, **kw)
     return _commit(spark, index, new_blocks, new_files, op, stats, carry_files=True, **kw)
+
+
+def _segments_holding(
+    spark: SparkSession, paths: list[str], ids: pa.Array, driver: bool,
+) -> list[bool]:
+    """Whether each blocks segment dir of ``paths`` holds a block of
+    ``ids``: a ``block_id`` read per dir on the driver, else one Spark
+    job over the dirs tagged by position."""
+    if len(ids) == 0:
+        return [False] * len(paths)
+    if driver:
+        return [
+            bool(pc.any(pc.is_in(
+                fsx.read_parquet_dir(p, columns=["block_id"])["block_id"], value_set=ids
+            )).as_py())
+            for p in paths
+        ]
+    tagged = functools.reduce(DataFrame.unionByName, [
+        spark.read.schema(mf.BLOCKS_SCHEMA).parquet(p).select(F.lit(i).alias("_seg"), "block_id")
+        for i, p in enumerate(paths)
+    ])
+    keys = F.broadcast(spark.createDataFrame(pa.table({"block_id": ids})))
+    hit = {r[0] for r in tagged.join(keys, "block_id", "left_semi").select("_seg").distinct().collect()}
+    return [i in hit for i in range(len(paths))]
 
 
 def _write_dv_delta(
@@ -1700,6 +1747,21 @@ def _upsert_keys_impl(
         joined = data.join(kside, data[key_field] == kside["_bs_key"], "left")
         return joined.withColumn("_bs_hit", F.col("_bs_key").isNotNull())
 
+    # stage the source rows through the SAME zero-shuffle flush kernel
+    # as build_index (new block dirs + completed per-task file rows),
+    # into a scratch dir so downstream actions never re-run the
+    # side-effecting map.  The staging job needs nothing the match
+    # computes, so with a pruned key batch it runs beside the match and
+    # the rewrite: the match then reads the collected keys, not the
+    # source, and the key collect has read every source row, so the
+    # staging job reads the persisted copy.
+    staging = fsx.join(scratch, "staging.parquet")
+
+    def stage() -> None:
+        stage_rows(stage_keys(source_df, cfg), cfg, fsx.join(index.root, "data"), tag, staging)
+
+    pool = ThreadPoolExecutor(max_workers=1)
+    staged_job = pool.submit(inheritable_thread_target(spark)(stage)) if pruned else None
     try:
         touched = _match(index, surviving, blocks, mark, scratch)
         if not use_deletion_vectors:
@@ -1709,15 +1771,10 @@ def _upsert_keys_impl(
                 plan = _rewrite(index, _rewrite_rows(index, touched, blocks), nonce)
             _plan_stats(plan, stats)
 
-        # stage the source rows through the SAME zero-shuffle flush kernel
-        # as build_index (new block dirs + completed per-task file rows),
-        # into a scratch dir so downstream actions never re-run the
-        # side-effecting map
-        staging = fsx.join(scratch, "staging.parquet")
-        stage_rows(
-            stage_keys(source_df, cfg), cfg, fsx.join(index.root, "data"),
-            tag, staging,
-        )
+        if staged_job is None:
+            stage()
+        else:
+            staged_job.result()
         if cons:
             # counters rode the staging job; fail-action violations abort
             # BEFORE commit (scratch stays unreachable)
@@ -1790,6 +1847,7 @@ def _upsert_keys_impl(
             spark, index, blocks, plan, "upsert", stats, staged, meta_extra=meta_extra
         )
     finally:
+        pool.shutdown()  # a failed match waits out the staging job first
         fsx.delete_dir(scratch)
 
 
@@ -1942,8 +2000,6 @@ def restore(
                         )["data_path"].to_pylist()
                     }
                 )
-                from concurrent.futures import ThreadPoolExecutor
-
                 def _gone(rel):
                     p = rel if ext else fsx.join(data_dir, rel)
                     return None if fsx.exists(p) else rel
@@ -2150,8 +2206,15 @@ def _commit(
     meta_extra: dict | None = None,
     carry_dvs: bool = True,
     carry_files: bool = False,
+    kept_blocks: list[str] | None = None,
 ) -> tuple[BloomIndex, MergeStats]:
     """Commit a maintenance op's output as a new manifest version.
+
+    ``kept_blocks``: a row mutation's commit — the parent's blocks refs
+    it left untouched stay referenced, and ``new_blocks`` (the rows of
+    the segments it copied, plus its inserts) is written as slices
+    (:func:`segments.write_slices`), so the next mutation copies only
+    the slices it changes.
 
     ``carry_files``: the parent's files segments stay referenced and
     ``new_files`` (None: nothing) appends to them as one more segment —
@@ -2167,7 +2230,8 @@ def _commit(
 
     Writes ONE segment: the transformed blocks/files (a maintenance op's
     output IS the folded manifest — its segment replaces every prior
-    blocks/files segment) plus a lineage DELTA holding only this op's
+    blocks/files segment; a row mutation's slices replace only the
+    segments it copied) plus a lineage DELTA holding only this op's
     provenance rows; the new version references the parent's lineage
     segments unchanged, so history is never recopied (the r03 unbounded
     lineage-rewrite fix).  Published through ``commit_child`` (with
@@ -2185,14 +2249,30 @@ def _commit(
     # vacuum_manifest, never corruption.
     seg_name = f"{version_guess}-{op}-{uuid.uuid4().hex[:8]}"
     seg_dir = mf.segment_dir(root, seg_name)
-    tables = {"blocks": new_blocks, "files": new_files}
+    blocks_ref = mf.segment_ref(seg_name, "blocks")
+    slices = [] if kept_blocks is None else seg.write_slices(
+        seg_dir, "blocks", new_blocks, seg.slice_rows(stats.blocks_before)
+    )
+    block_refs = [*(kept_blocks or []), *(f"{blocks_ref}/{s}" for s in slices)]
+    written = [fsx.join(seg_dir, "blocks.parquet", s) for s in slices]
+    tables = {"files": new_files}
+    if not block_refs:  # not sliced, or no block left anywhere
+        tables["blocks"] = new_blocks
+        block_refs, written = [blocks_ref], [fsx.join(seg_dir, "blocks.parquet")]
     seg.write_segment(seg_dir, {t: v for t, v in tables.items() if v is not None})
     # lineage DELTA: this op's rows only — parent segments are referenced.
-    # Derived from the committed block rows (their final ids).
-    committed = new_blocks if isinstance(new_blocks, pa.Table) else seg.read(
-        spark, fsx.join(seg_dir, "blocks.parquet"), mf.BLOCKS_SCHEMA,
-        seg.LINEAGE_SOURCE_COLUMNS,
-    )
+    # Derived from the committed block rows (their final ids): every block
+    # of the version, in the segments it kept as in the slices it wrote.
+    cols = list(seg.LINEAGE_SOURCE_COLUMNS)
+    if isinstance(new_blocks, pa.Table):
+        committed = new_blocks.select(cols)
+    elif written:
+        committed = seg.read(spark, written, mf.BLOCKS_SCHEMA, cols)
+    else:  # a sliced commit that kept no row it copied
+        committed = new_blocks.select(*cols)
+    if kept_blocks:
+        kept = [fsx.join(root, "manifest", r) for r in kept_blocks]
+        committed = seg.union(spark, seg.read(spark, kept, mf.BLOCKS_SCHEMA, cols), committed)
     seg.write_segment(seg_dir, {"lineage": seg.lineage_of(committed, version_guess, op)})
     # ANALYZE stats (like carried DVs) stay referenced: rows key by
     # (block_id, data_path), so survivors stay covered; rows for rewritten
@@ -2200,7 +2280,7 @@ def _commit(
     # them
     files = [mf.segment_ref(seg_name, "files")] if new_files is not None else []
     tables = {
-        "blocks": [mf.segment_ref(seg_name, "blocks")],
+        "blocks": block_refs,
         "files": [*index.table_refs()["files"], *files] if carry_files else files,
         "lineage": [*index.table_refs()["lineage"],
                     mf.segment_ref(seg_name, "lineage")],
@@ -2589,7 +2669,8 @@ def maintain(
 ) -> dict:
     """One-call housekeeping — the ``OPTIMIZE`` analog: merge small
     files, optionally compact undersized blocks (``compact_rows``), fold
-    the manifest once its segment list exceeds ``fold_threshold``, and
+    the manifest once its blocks table spans more than ``fold_threshold``
+    commit segments (a mutation's slices count once), and
     (opt-in) vacuum metadata + data honoring the time-travel retention
     window.  Each step re-resolves CURRENT and retries on
     :class:`CommitConflict` up to ``conflict_retries`` times — racing
@@ -2691,7 +2772,7 @@ def maintain(
             )
             out["analyzed"] = True
     idx = BloomIndex.load(spark, root)  # racing commits may have landed
-    if len(idx.table_refs()["blocks"]) > fold_threshold:
+    if mf.segment_count(idx.table_refs()["blocks"]) > fold_threshold:
         fold_manifest(spark, idx, conflict_retries=conflict_retries)
         out["folded"] = True
     if run_vacuum:

@@ -164,6 +164,12 @@ def segment_ref(name: str, table: str) -> str:
     return f"segments/{name}/{table}.parquet"
 
 
+def segment_count(refs: list[str]) -> int:
+    """Commit segments among one table's refs: the slices a row mutation
+    wrote (``segments/<name>/blocks.parquet/slice=<i>``) count once."""
+    return len({r.split("/", 2)[1] if r.startswith("segments/") else r for r in refs})
+
+
 def staging_root(root: str, tag: str) -> str:
     """Scratch dir for a build attempt's heavy intermediate stages.
     Deterministic per (root, tag): a crashed build re-resolves the same

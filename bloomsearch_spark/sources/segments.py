@@ -22,12 +22,17 @@ driver — a 100 TB build's staging is GBs):
   :data:`DRIVER_SEGMENT_MAX_BYTES`;
 - the write (:func:`write_segment`): per-table ``_SUCCESS`` resume
   markers, Arrow tables as one atomic snappy file with page checksums and
-  small row groups, DataFrames as concurrent Spark jobs.
+  small row groups, DataFrames as concurrent Spark jobs;
+- the sliced write of a row mutation's block rows (:func:`write_slices`):
+  one table dir per slice, each its own segment ref, so the next mutation
+  copies only the slices it changes and keeps the rest referenced.
 """
 
 from __future__ import annotations
 
+import math
 import time
+import zlib
 from concurrent.futures import ThreadPoolExecutor
 
 import numpy as np
@@ -83,6 +88,15 @@ _WRITE_KW = {
     # pushed partition prefilter prunes at row-group granularity
     "row_group_size": 4096,
 }
+
+# A row mutation writes its block rows as slices (:func:`write_slices`) of
+# about ``max(SLICE_ROWS, blocks / MAX_SLICES)`` rows, a row going to
+# slice ``crc32(file_id) % n``: the next mutation copies only the slices
+# that hold a changed block, and a rewritten block keeps its file_id, so
+# it stays in its slice.  A version then references about MAX_SLICES
+# slices at most, whatever its mutation history.
+SLICE_ROWS = 16
+MAX_SLICES = 64
 
 
 def read(spark: SparkSession, path, schema, columns=None) -> pa.Table | DataFrame:
@@ -346,12 +360,7 @@ def write_segment(seg_dir: str, tables: dict) -> None:
             continue
         if isinstance(tbl, pa.Table):
             fsx.delete_dir(out)  # a partial prior attempt must not mix in
-            # drop schema metadata: a table read from Spark-written parquet
-            # carries Spark's row schema of THAT file, which Spark's schema
-            # inference would then report for this one
-            fsx.write_parquet_atomic(
-                out, tbl.replace_schema_metadata(None), "part-0.parquet", **_WRITE_KW
-            )
+            _write_part(out, tbl)
             fsx.write_bytes_atomic(fsx.join(out, "_SUCCESS"), b"")
         else:
             dfs.append((out, tbl))
@@ -360,3 +369,62 @@ def write_segment(seg_dir: str, tables: dict) -> None:
             futures = [ex.submit(df.write.mode("overwrite").parquet, out) for out, df in dfs]
             for f in futures:
                 f.result()
+
+
+def _write_part(dir_uri: str, tbl: pa.Table) -> None:
+    """``tbl`` as the one part file of ``dir_uri``.  Min/max statistics
+    are kept for the flat columns only: those of a bloom bitset (or a
+    nested column) prune nothing and cost a bitset-sized footer entry."""
+    # drop schema metadata: a table read from Spark-written parquet
+    # carries Spark's row schema of THAT file, which Spark's schema
+    # inference would then report for this one
+    stats = [
+        f.name for f in tbl.schema
+        if not pa.types.is_nested(f.type) and not f.name.endswith("bloom")
+    ]
+    fsx.write_parquet_atomic(
+        dir_uri, tbl.replace_schema_metadata(None), "part-0.parquet",
+        write_statistics=stats, **_WRITE_KW,
+    )
+
+
+def slice_rows(blocks: int) -> int:
+    """Rows a slice aims at in a version of ``blocks`` blocks."""
+    return max(SLICE_ROWS, math.ceil(blocks / MAX_SLICES))
+
+
+def write_slices(seg_dir: str, name: str, tbl: pa.Table | DataFrame, rows: int) -> list[str]:
+    """Write the block rows ``tbl`` as ``len(tbl) // rows`` slices (at
+    least one, at most :data:`MAX_SLICES`) under
+    ``<seg_dir>/<name>.parquet/`` and return their dir names,
+    ``slice=<i>``, in slice order.  Nothing is written for an empty
+    ``tbl``.
+
+    Both faces cut the same slices: an Arrow table is written on the
+    driver, one atomic part file a slice sorted by ``partition_id``; a
+    DataFrame by one ``partitionBy`` job, after a count and a distinct
+    job.  A ``_SUCCESS`` marker in the table dir skips the write, as in
+    :func:`write_segment`."""
+    out = fsx.join(seg_dir, f"{name}.parquet")
+    done = fsx.exists(fsx.join(out, "_SUCCESS"))
+    if isinstance(tbl, pa.Table):
+        k = max(1, min(MAX_SLICES, tbl.num_rows // rows))
+        ids = pc.fill_null(tbl["file_id"], "")
+        uniq = pc.unique(ids)
+        crc = pa.array([zlib.crc32(f.encode()) % k for f in uniq.to_pylist()], pa.int64())
+        slot = crc.take(pc.index_in(ids, value_set=uniq))
+        present = [int(i) for i in np.unique(slot.to_numpy())]
+        if present and not done:
+            fsx.delete_dir(out)  # a partial prior attempt must not mix in
+            for i in present:
+                part = tbl.filter(pc.equal(slot, i)).sort_by("partition_id")
+                _write_part(fsx.join(out, f"slice={i}"), part)
+            fsx.write_bytes_atomic(fsx.join(out, "_SUCCESS"), b"")
+    else:
+        k = max(1, min(MAX_SLICES, tbl.count() // rows))
+        crc = F.crc32(F.coalesce(F.col("file_id"), F.lit("")).cast("binary"))
+        df = tbl.withColumn("slice", (crc % k).cast("int"))
+        present = sorted(r[0] for r in df.select("slice").distinct().collect())
+        if present and not done:
+            df.write.mode("overwrite").partitionBy("slice").parquet(out)
+    return [f"slice={i}" for i in present]

@@ -130,14 +130,14 @@ def stream_build(
             return
         if fold_every is not None:
             if state["nsegs"] is None:
-                state["nsegs"] = len(
+                state["nsegs"] = mf.segment_count(
                     mf.BloomIndex.load(spark, root).table_refs()["blocks"]
                 )
             else:
                 state["nsegs"] += 1
             if state["nsegs"] >= fold_every:
                 idx = mf.BloomIndex.load(spark, root)  # re-sync + snapshot
-                state["nsegs"] = len(idx.table_refs()["blocks"])
+                state["nsegs"] = mf.segment_count(idx.table_refs()["blocks"])
                 if state["nsegs"] < fold_every:
                     return  # someone else folded meanwhile
                 from ..plans.merge import fold_manifest

@@ -19,6 +19,7 @@ version.
 """
 
 import shutil
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -326,6 +327,30 @@ def test_failed_commit_releases_persisted_plans(spark, tmp_path, monkeypatch, op
         run()
     ix.unpersist()
     assert _cache_empty(spark)
+
+
+def test_upsert_match_failure_waits_out_the_staging_job(spark, tmp_path, monkeypatch):
+    """An upsert of a pruned key batch stages its rows beside the match.
+    When the match fails, the op re-raises only after the staging job
+    has finished, and the scratch dir it wrote goes with it."""
+    from bloomsearch_spark.plans import build as build_mod
+
+    ix = build_index(spark, _frame(spark, 0, 600), str(tmp_path), CFG)
+    real, staged = build_mod.stage_rows, []
+
+    def slow_stage(*a, **k):
+        time.sleep(1.0)  # still running when the match fails
+        real(*a, **k)
+        staged.append(a[-1])
+
+    def failed_match(*a, **k):
+        raise RuntimeError("match failed")
+
+    monkeypatch.setattr(build_mod, "stage_rows", slow_stage)
+    monkeypatch.setattr(merge_mod, "_match", failed_match)
+    with pytest.raises(RuntimeError, match="match failed"):
+        upsert_keys(spark, ix, _frame(spark, 0, 20, "up"), "k")
+    assert staged and not fsx.exists(staged[0])
 
 
 # ---------------------------------------------------------------------------

@@ -19,6 +19,7 @@ of what it reads.  Pins:
 import uuid
 
 import numpy as np
+import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
@@ -221,6 +222,98 @@ def test_jobs_per_commit_op(spark, chains, fold_chains, tmp_path):
         if n > MAX_JOBS[op] or (op in EXACT_JOBS and n != MAX_JOBS[op])
     }
     assert not off, off
+
+
+# ---------------------------------------------------------------------------
+# sliced row-mutation commits
+
+SLICED_OPS = ("build", "delete", "upsert", "delete_again")
+
+
+def _run_sliced_chain(spark, root: str) -> dict:
+    """Build, a rewrite delete, an upsert and a second delete; each op's
+    state plus its version's blocks refs."""
+    base, src = generate_df(spark, N), _upsert_src(spark, 0, 20)
+    steps = {
+        "build": lambda ix: build_index(spark, base, root, CFG),
+        "delete": lambda ix: delete_where(spark, ix, QUERIES[0])[0],
+        "upsert": lambda ix: upsert_keys(spark, ix, src, "path")[0],
+        "delete_again": lambda ix: delete_where(spark, ix, QUERIES[1])[0],
+    }
+    out, ix = {}, None
+    for op in SLICED_OPS:
+        ix = steps[op](ix)
+        fresh = BloomIndex.load(spark, root)
+        out[op] = {**_state(spark, fresh), "refs": fresh.table_refs()["blocks"]}
+    return out
+
+
+@pytest.fixture(scope="module")
+def sliced_chains(spark, tmp_path_factory):
+    """The chain with 2-row slices on both faces, and with one slice a
+    commit on the driver face."""
+    out = {}
+    for name, rows in (("driver", 2), ("spark", 2), ("one_slice", 10**9)):
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(merge_mod, "uuid", _SeqUUID())
+            mp.setattr(seg, "SLICE_ROWS", rows)
+            if name == "spark":
+                mp.setattr(seg, "DRIVER_SEGMENT_MAX_BYTES", 0)
+            out[name] = _run_sliced_chain(spark, str(tmp_path_factory.mktemp(name)))
+    return out
+
+
+@pytest.mark.parametrize("op", SLICED_OPS[1:])
+def test_sliced_commits_keep_the_rows(sliced_chains, op):
+    """Slices change where block rows live, not which rows: 2-row slices
+    read back the blocks, files, lineage and query results of one-slice
+    commits, and both faces cut the same slices."""
+    driver, spark_face, one = (sliced_chains[k][op] for k in ("driver", "spark", "one_slice"))
+    assert len(driver["refs"]) > len(one["refs"])
+    for key in ("blocks", "files", "lineage", "dvs", "results"):
+        assert driver[key] == one[key], key
+    for key in ("blocks", "files", "lineage", "dvs", "types", "results", "refs"):
+        assert driver[key] == spark_face[key], key
+
+
+def test_mutation_copies_only_the_slices_it_changes(sliced_chains):
+    """A delete replaces only the slices that held a block it changed;
+    every other blocks ref of its parent stays referenced."""
+    parent, child = sliced_chains["driver"]["upsert"], sliced_chains["driver"]["delete_again"]
+    gone = set(parent["refs"]) - set(child["refs"])
+    changed = {b["data_path"] for b in parent["blocks"]} - {b["data_path"] for b in child["blocks"]}
+    assert 1 <= len(gone) <= len(changed)
+    assert len(gone) < len(parent["refs"]) / 2
+
+
+def test_rewrite_repoints_rows_of_unaligned_chunks():
+    """The manifest half of a rewrite keeps every untouched row as it
+    was, whatever the chunk layout of the rows it reads: here its
+    ``block_id`` is one chunk and its counters five, as when the rows of
+    several segments are concatenated."""
+    ids = [f"b{i}" for i in range(13)]
+    rows = [[80, 63], [88, 86, 100, 3, 80], [88], [82, 87, 84], [61, 96]]
+    blocks = pa.Table.from_arrays(
+        [
+            pa.chunked_array([ids]),
+            pa.chunked_array([[f"d/{b}" for b in ids]]),
+            pa.chunked_array([["p"] * 13]),
+            pa.chunked_array(rows, pa.int64()),
+            pa.chunked_array(rows, pa.int64()),
+        ],
+        names=["block_id", "data_path", "partition_id", "row_count", "byte_size"],
+    )
+    hit = ["b1", "b4", "b7", "b10", "b11", "b12"]
+    plan = pa.table({
+        "block_id": hit, "new_block_id": [f"{b}x" for b in hit],
+        "new_data_path": [f"d/{b}x" for b in hit], "new_rows": [61, 97, 83, 81, 59, 92],
+        "new_bytes": [1] * 6, "n_deleted": [1] * 6,
+    }, schema=merge_mod._PLAN)
+    out = {r["block_id"]: r for r in merge_mod._apply_rewrites(blocks, plan).to_pylist()}
+    flat = [n for chunk in rows for n in chunk]
+    want = {b: n for b, n in zip(ids, flat) if b not in hit}
+    assert {b: r["row_count"] for b, r in out.items() if not b.endswith("x")} == want
+    assert out["b1x"]["row_count"] == 61 and out["b1x"]["data_path"] == "d/b1x"
 
 
 def _dsv2_write(spark, df, root: str) -> None:
